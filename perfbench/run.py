@@ -2,7 +2,8 @@
 
     python3 perfbench/run.py --workload backfill --seed 1 --seconds 8 --trace 0
 
-Runs from the root of a checkout, in one process at ``local[<cores>]``.
+Runs from the root of a checkout, in one process at ``local[<slots>]``
+(half the cores: see ``SLOTS``).
 Phases: session start, seeded input generation, preload and warm-up (all
 in ``setup_s``); rounds of ingest for ``--seconds``; read mixes; untimed
 final-state checks against the DuckDB oracle. With ``--trace 0`` the last
@@ -27,7 +28,14 @@ import time
 import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-CORES = os.cpu_count() or 4
+CORES = len(os.sched_getaffinity(0))
+# Spark task slots. The driver JVM's own threads (scheduler, GC, JIT), the
+# Python client and the Python UDF workers run beside the tasks; with a
+# slot per core they oversubscribe the cores, and every stage then waits
+# for its slowest task whenever the host steals a core. On a 4-core VM, 2
+# slots ingested and read about as fast as 4 in interleaved runs, with a
+# narrower run-to-run spread.
+SLOTS = max(1, CORES // 2)
 DRIVER_MEM = "2g"  # fits a 15 GB host shared with other work
 
 
@@ -88,8 +96,8 @@ def start_session(workdir: str, trace: bool):
     paths = [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep) if p]
     os.environ["PYTHONPATH"] = os.pathsep.join([ROOT] + [p for p in paths if p != ROOT])
     return get_spark(
-        app_name="perfbench", master=f"local[{CORES}]",
-        shuffle_partitions=CORES, extra_conf=conf,
+        app_name="perfbench", master=f"local[{SLOTS}]",
+        shuffle_partitions=SLOTS, extra_conf=conf,
     )
 
 
@@ -155,12 +163,12 @@ def stop_session(spark) -> None:
 
 def measure(wl, seconds: float, tracer) -> tuple[list[dict], list[tuple]]:
     """Rounds until ``seconds`` have passed (at least the workload's
-    minimum, and whole round cycles), then reads."""
+    minimum, at most the input it staged), then reads."""
     rounds, reads = [], []
     deadline = time.perf_counter() + seconds
     i = 0
     while not wl.exhausted() and (
-        i < wl.min_rounds or time.perf_counter() < deadline or i % wl.round_cycle
+        i < wl.min_rounds or time.perf_counter() < deadline
     ):
         if tracer is not None:
             tracer.round = i
@@ -173,7 +181,7 @@ def measure(wl, seconds: float, tracer) -> tuple[list[dict], list[tuple]]:
     if tracer is not None:
         tracer.round = "reads"
     if not wl.reads_every_round:
-        for k in range(3):  # 12 reads: the median rests on point lookups
+        for k in range(2):  # the median rests on the key lookups
             reads += wl.read_mix(i + k)
     return rounds, reads
 
@@ -280,7 +288,7 @@ def _run(workload_cls, workdir: str, seed: int, seconds: float, trace: bool,
 
         evdir = os.path.join(workdir, "eventlog")
         evlog = read_event_log(evdir, [wl.log_path])
-        metrics = layer_metrics(tracer, rounds, evlog, CORES, evdir)
+        metrics = layer_metrics(tracer, rounds, evlog, SLOTS, evdir)
         metrics["odata_feed.parse_rows_per_s"] = (parse_rate, "1/s")
         metrics["host.cpu_probe_s"] = (statistics.median(probes), "s")
         metrics["host.steal_ratio"] = (steal, "ratio")

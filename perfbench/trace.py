@@ -245,7 +245,7 @@ def _median(xs) -> float:
     return float(statistics.median(xs)) if xs else 0.0
 
 
-def layer_metrics(tracer: Tracer, rounds: list[dict], evlog: dict, cores: int,
+def layer_metrics(tracer: Tracer, rounds: list[dict], evlog: dict, slots: int,
                   evdir: str) -> dict:
     """Per-layer metrics over the measured rounds (round ids 0..n-1).
 
@@ -334,7 +334,7 @@ def layer_metrics(tracer: Tracer, rounds: list[dict], evlog: dict, cores: int,
         "stats.skip_ratio": (1.0 - opened / total_files if total_files else 0.0, "ratio"),
         "schema.evolve_s": (per_round("schema.evolve_schema"), "s"),
         "spark.task_cpu_s": (task_s / n, "s"),
-        "spark.core_busy": (task_s / (wall * cores) if wall else 0.0, "ratio"),
+        "spark.core_busy": (task_s / (wall * slots) if wall else 0.0, "ratio"),
         "spark.shuffle_bytes": (sum(t["shuffle_bytes"] for t in win_tasks) / n, "bytes"),
         "spark.spill_bytes": (sum(t["spill_bytes"] for t in win_tasks) / n, "bytes"),
         "spark.task_skew": (max(biggest) / med if med else 0.0, "ratio"),

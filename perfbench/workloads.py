@@ -29,12 +29,12 @@ class Workload:
     name = ""
     reads_every_round = False
     num_buckets = 8
-    # the measured rounds end on a multiple of this, so every run holds
-    # whole cycles of a periodic engine action (auto-compaction)
-    round_cycle = 1
     # at least this many measured rounds, so a run's percentiles rest on
     # the same round count whether the host is fast or slow
     min_rounds = 2
+    # key lookups in each measured read mix (plus one sha lookup and one
+    # change feed); warm-up mixes run two
+    mix_points = 3
 
     def __init__(self, spark, workdir: str, seed: int, scale: float = 1.0,
                  tracer=None):
@@ -114,14 +114,17 @@ class Workload:
             rec["files_total"] = sum(len(v) for v in table.manifest["buckets"].values())
         return shape, elapsed, ok
 
-    def read_mix(self, i: int) -> list[tuple[str, float, bool]]:
-        """Two key lookups, one commit-sha lookup, one change feed."""
+    def read_mix(self, i: int, points: int | None = None) -> list[tuple[str, float, bool]]:
+        """``points`` key lookups (default ``mix_points``), one commit-sha
+        lookup, one change feed. Mix ``i`` takes the ``i``-th run of picks
+        from the lookup sample."""
         from sap_spark.plans.lake import LakeTable
 
         path = self.table_path()
-        picks = [self.lookups[(3 * i + k) % len(self.lookups)] for k in range(3)]
+        n = (self.mix_points if points is None else points) + 1
+        picks = [self.lookups[(n * i + k) % len(self.lookups)] for k in range(n)]
         out = []
-        for p in picks[:2]:
+        for p in picks[:-1]:
             def point(p=p):
                 df = LakeTable(self.spark, path).read(
                     where=f"repo = '{p['repo']}' AND path = '{p['path']}'"
@@ -132,7 +135,7 @@ class Workload:
                 )
                 return ok, df
             out.append(self._timed_read("point", point))
-        for p in picks[2:]:
+        for p in picks[-1:]:
             def sha(p=p):
                 df = LakeTable(self.spark, path).read(where=f"commit = '{p['commit']}'")
                 rows = df.collect()
@@ -180,11 +183,12 @@ class _Replay(Workload):
         return rec
 
     def warm_up(self) -> None:
-        """One unmeasured replay and read mix: compiles every plan shape the
-        measured rounds and reads run. Its table joins the fingerprint
-        checks."""
+        """One unmeasured replay and two read mixes: compiles every plan
+        shape the measured rounds and reads run (read latency still falls
+        over the second mix). Its table joins the fingerprint checks."""
         self._replay()
-        self.read_mix(0)
+        for k in range(2):
+            self.read_mix(k, points=2)
 
     def table_path(self) -> str:
         return self.path("tables", f"r{self.replays - 1}")
@@ -214,8 +218,8 @@ class Backfill(_Replay):
 
     def setup(self) -> None:
         inputs.write_change_log(
-            self.spark, self.log_path, self.seed, n_events=self.n(100_000, 2_000),
-            n_keys=self.n(8_000, 400), events_per_token=self.n(12_500, 250),
+            self.spark, self.log_path, self.seed, n_events=self.n(64_000, 2_000),
+            n_keys=self.n(8_000, 400), events_per_token=self.n(8_000, 250),
         )
         self.events = inputs.tree_rows(self.log_path)
         self.log_bytes = inputs.tree_bytes(self.log_path)
@@ -317,7 +321,12 @@ class Trickle(Workload):
         )
         for w in range(self.warmup_rounds):
             self.round(-1 - w)
-        self.read_mix(0)
+            if self.reads_every_round:
+                # lookups from the sample's end: the measured mixes take
+                # theirs from its start
+                self.read_mix(-1 - w, points=2)
+        if not self.reads_every_round:
+            self.read_mix(0, points=2)
 
     def exhausted(self) -> bool:
         return self.landed >= len(self.tokens)
@@ -348,14 +357,22 @@ class MorServing(Trickle):
     merge_mode = "mor"
     reads_every_round = True
     # auto-compaction fires every second round; the warm-up is one full
-    # cycle, so measured rounds start right after a compaction
-    warmup_rounds = round_cycle = 2
+    # cycle with its read mixes, so measured rounds start right after a
+    # compaction with both read states (one delta file, compacted) warm
+    compact_every = warmup_rounds = 2
+    # exactly three measured rounds (one delta file, compacted, one delta
+    # file): two thirds of the reads see one table state, so the median
+    # read falls inside that state's latencies, not in the gap between two
+    min_rounds = max_rounds = 3
+    # a serving mix is mostly key lookups: four per round keep the median
+    # read a key lookup whichever sha lookup or change feed runs slow
+    mix_points = 4
 
     def table_kwargs(self) -> dict:
         return {"bloom_columns": ["commit"]}
 
     def pipeline_kwargs(self) -> dict:
-        return {"auto_compact_delta_files": self.round_cycle}
+        return {"auto_compact_delta_files": self.compact_every}
 
 
 WORKLOADS = {w.name: w for w in (Backfill, Trickle, MorServing, ODataBackfill)}
