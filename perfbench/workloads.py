@@ -215,6 +215,9 @@ class _Replay(Workload):
 
 class Backfill(_Replay):
     name = "backfill"
+    # two mixes on the last table: ten key lookups put the median read in
+    # the middle of the key lookups, away from the sha and change reads
+    mix_points = 5
 
     def setup(self) -> None:
         inputs.write_change_log(
