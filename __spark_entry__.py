@@ -70,8 +70,8 @@ _EVENTS_AS_CHANGELOG_SQL = """
 
 
 def _cdc_lww_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LWW fold (max_by aggregation path) + delete filter: the engine's
-    fold_changes/replay semantics keyed on user_id."""
+    """LWW fold (winner selection + broadcast payload fetch) + delete
+    filter: the engine's fold_changes/replay semantics keyed on user_id."""
     from sap_spark.config import EngineConfig
     from sap_spark.operators.dedup import replay
 
@@ -82,13 +82,14 @@ def _cdc_lww_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         payload_columns=("event_type", "value", "ts"),
     ).validate()
     log = _events_as_changelog(spark, sf_dir)
-    out = replay(log, cfg, strategy="fetch")
+    out = replay(log, cfg)
     return out.select("key", "event_type", F.round("value", 6).alias("value"), "ts")
 
 
 def _cdc_lww_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same fold via the salted two-level row_number window (north_star
-    machinery); must agree with the aggregation path and the oracle."""
+    machinery, the fold a hot-key batch flips to); must agree with the
+    fetch fold and the oracle."""
     from sap_spark.config import EngineConfig
     from sap_spark.operators.dedup import lww_window
 
@@ -99,7 +100,7 @@ def _cdc_lww_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         salt_partitions=4,
     ).validate()
     log = _events_as_changelog(spark, sf_dir)
-    folded = lww_window(log, cfg, salted=True)
+    folded = lww_window(log, cfg)
     return folded.where(F.col("op") != "D").select(
         "key", "event_seq", "op", F.round("value", 6).alias("value")
     )

@@ -149,9 +149,6 @@ def bench_cdc_replay(spark, cores: int, n_events: int, log_path: str | None = No
             spark, cfg, table, log_path,
             checkpoint_dir=f"{workdir}/ckpt",
             max_files_per_trigger=BENCH_MFT * FILES_PER_TOKEN,
-            # default: the pipeline's own default (auto since round 5);
-            # the knob exists to A/B the probe at protocol scale
-            strategy=os.environ.get("SPARK_GRAFT_STRATEGY", "auto"),
             pipeline_id="bench",
         )
         window_start_ms = time.time() * 1000

@@ -150,7 +150,6 @@ def run_ingest(args, spark=None) -> dict:
         spark, cfg, table, args.log,
         checkpoint_dir=args.checkpoint,
         max_files_per_trigger=args.max_files_per_trigger,
-        strategy=args.strategy,
         pipeline_id=args.pipeline_id,
         dead_letter_dir=args.dead_letter_dir,
         auto_compact_delta_files=args.auto_compact_deltas,
@@ -619,11 +618,6 @@ def main(argv: list[str] | None = None) -> None:
     i.add_argument("--buckets", type=int, default=None,
                    help="table hash buckets; omit to derive from log size "
                         "(~payload/256MB, min 8)")
-    i.add_argument("--strategy", default="auto",
-                   choices=["fetch", "agg", "window", "window_salted", "auto"],
-                   help="LWW fold strategy; auto (default) = fetch with a "
-                        "per-batch hot-key probe that flips to window_salted "
-                        "past hot_key_threshold events on one key")
     i.add_argument("--merge-mode", default=None, choices=["cow", "mor"],
                    help="cow (default for new tables): rewrite touched "
                         "buckets per merge (read-optimal); mor: append "

@@ -48,18 +48,15 @@ class EngineConfig:
     payload_columns: tuple[str, ...] = ("commit", "lang", "content")
     num_buckets: int = 32
     salt_partitions: int = 8
-    # strategy="auto" (streaming/pipeline.ingest_batch) flips a batch from
-    # the fetch fold to the salted-window fold when any single key carries
-    # at least this many events — the point where bounding every exchange
-    # explicitly (per-(key, salt) window partitions) beats relying on
-    # partial-aggregation behavior under adversarial skew. The probe reads
-    # the already-persisted payload-pruned winner scan, so it costs one
-    # tiny job over O(distinct keys) rows.
+    # The pipeline runs one fold (streaming/pipeline.ingest_batch) and
+    # flips a batch from the fetch fold to the salted-window fold at
+    # runtime when any single key carries at least this many surviving
+    # events — the point where bounding every exchange explicitly
+    # (per-(key, salt) window partitions) beats relying on
+    # partial-aggregation behavior under adversarial skew. The count rides
+    # the epoch's bucket-discovery agg over the persisted, payload-pruned
+    # winner scan, so measuring it costs no extra job.
     hot_key_threshold: int = 2_000_000
-    # broadcast the LWW winner set in the fetch-fold (operators/dedup.py
-    # lww_fetch); winners are O(distinct keys per batch) ~100 B rows. Flip
-    # off for giant backfill batches whose key set exceeds broadcast size.
-    broadcast_winners: bool = True
     shuffle_partitions: int | None = None
     extra_spark_conf: dict = field(default_factory=dict)
 

@@ -4,8 +4,6 @@ training-data-pipeline operators (exact/near dedup, similarity search)."""
 from sap_spark.operators.dedup import (
     drop_cancelled,
     lww_window,
-    lww_agg,
-    lww_fetch,
     fold_changes,
     replay,
 )
@@ -29,8 +27,6 @@ from sap_spark.operators.textdedup import (
 __all__ = [
     "drop_cancelled",
     "lww_window",
-    "lww_agg",
-    "lww_fetch",
     "fold_changes",
     "replay",
     "asof_join",

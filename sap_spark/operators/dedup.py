@@ -21,31 +21,29 @@ The final state of a key is the state after applying its events in order:
    event with the largest ``event_seq`` — so the sequential fold reduces
    to a per-key argmax, which distributes.
 
-Three equivalent implementations are provided:
+One fold implements it (``fold_changes``; the pipeline's
+``streaming/pipeline.ingest_batch`` runs the same phases):
 
-- ``lww_fetch`` (default) — winner-selection over (key, seq, token) only,
-  then a broadcast join fetches the winning payloads. Payload bytes are
-  never aggregated or shuffled; measured ~3x faster than the single-pass
-  agg on content-heavy rows and the only variant whose memory traffic is
-  O(keys), not O(events·payload).
-- ``lww_window`` — the row_number() window over (key, order desc) with
-  optional **two-level salting** for hot-key skew (a single hot (repo,path)
-  cannot be split by AQE inside Window.partitionBy; salting must be
-  explicit). This is the canonical CDC-dedup shape. Both window levels run
-  over a payload-pruned (key…, event_seq, delta_token) projection — payload
-  bytes never enter the window sorts — and winners fetch their payloads via
-  the same broadcast probe the fetch fold uses.
-- ``lww_agg`` — groupBy(key).agg(max_by(payload, event_seq)): hash
-  aggregation with **map-side partial aggregation**, so a hot key is
-  pre-combined per map partition before the shuffle — skew-resistant by
-  construction; but every payload rides through the agg buffers and the
-  shuffle, which is memory-bandwidth-bound on content-sized rows.
-  Duplicate deliveries tie on event_seq with identical payloads, so
-  max_by remains deterministic.
+- phase A, ``lww_winners`` — ``groupBy(key).agg(max(event_seq))`` over a
+  payload-pruned scan of the surviving events: O(distinct keys) rows of
+  ~100 B, map-side partially aggregated, so a hot key is pre-combined
+  before the shuffle;
+- phase B, ``fetch_winner_payloads`` — a broadcast hash probe of the
+  winner set materializes exactly the winning deliveries, payload
+  included. Payload bytes never enter the winner aggregation; they cross
+  the wire once, in the exchange the MERGE needs anyway.
 
-All strategies pin the same tie-break: equal ``event_seq`` (a duplicate
-delivery) resolves to the **largest** ``delta_token`` — the latest
-delivery wins, deterministically and identically across strategies.
+Skew is handled where it is detected, at runtime: the pipeline's winner
+scan also counts surviving events per key, and a batch whose hottest key
+reaches ``cfg.hot_key_threshold`` folds through ``lww_window`` instead —
+a two-level salted row_number window over a payload-pruned projection
+whose every exchange is explicitly bounded (a single hot key cannot be
+split by AQE inside ``Window.partitionBy``; salting must be explicit).
+Its winners fetch their payloads through the same broadcast probe.
+
+Both pin the same tie-break: equal ``event_seq`` (a duplicate delivery)
+resolves to the **largest** ``delta_token`` — the latest delivery wins,
+deterministically.
 
 The reference implements none of this (it is a pass-through batch source,
 SURVEY.md §2.5); these operators are the engine's extension required by
@@ -77,33 +75,14 @@ def fold_output_columns(events: DataFrame, cfg: EngineConfig) -> list[str]:
     token/rocancel/cancel-seq envelope columns are checkpoint labels,
     not state, and must be stripped BEFORE the merge's schema-evolution
     gate sees the frame. One definition shared by :func:`fold_changes`
-    and the pipeline's fetch/auto path (streaming/pipeline.ingest_batch)
-    so the kept-column set cannot drift between them."""
+    and the pipeline's fold (streaming/pipeline.ingest_batch) so the
+    kept-column set cannot drift between them."""
     return [
         *cfg.key_columns,
         cfg.order_column,
         cfg.op_column,
         *_payload_cols(events, cfg),
     ]
-
-
-def salted_repartition(
-    events: DataFrame, cfg: EngineConfig, num_partitions: int | None = None
-) -> DataFrame:
-    """Salted repartition-by-primary-key (north_star machinery).
-
-    Plain `repartition(keys)` sends every event of a hot (repo, path) to
-    ONE partition — a straggler at Zipf skew. Salting by
-    pmod(xxhash64(order_column), salt_partitions) spreads each key over
-    salt_partitions partitions while keeping co-location windows small.
-    Downstream two-level LWW (lww_window salted=True) or hash aggregation
-    remains correct because neither requires all rows of a key in one
-    partition. Use before window-shaped pipelines; the default agg path
-    doesn't need it (map-side combine already defuses skew).
-    """
-    n = num_partitions or events.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    salt = F.pmod(F.xxhash64(F.col(cfg.order_column)), F.lit(cfg.salt_partitions))
-    return events.repartition(int(n), *[F.col(k) for k in cfg.key_columns], salt)
 
 
 def cancelled_seqs(events: DataFrame, cfg: EngineConfig) -> DataFrame | None:
@@ -141,7 +120,7 @@ def drop_cancelled(
     # replay, while the incremental path — the same events split across
     # epochs — would keep it, and the two north-star paths would diverge
     # on lax foreign logs. Filtering SURVIVORS here lets the latest
-    # *valid* event win in every strategy. The filter deliberately sits
+    # *valid* event win in either fold. The filter deliberately sits
     # AFTER the cancelled-seq derivation: a rocancel row is never applied
     # regardless of its own op, but its cancel_seq must still erase its
     # target even if a lax log left the rocancel row's op null. With a
@@ -166,29 +145,26 @@ def drop_cancelled(
     )
 
 
-def lww_window(
-    events: DataFrame,
-    cfg: EngineConfig,
-    salted: bool = False,
-) -> DataFrame:
-    """Last-writer-wins via row_number window; optional two-level salting.
+def lww_window(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Last-writer-wins via a two-level salted row_number window — the
+    fold a batch flips to when one key is hot (streaming/pipeline
+    ingest_batch), and the contract query ``cdc_lww_window_salted``.
 
-    Salted form (north_star machinery): level 1 partitions by
-    (key..., salt) where salt = pmod(xxhash64(event_seq), salt_partitions),
-    producing ≤1 winner per (key, salt); level 2 re-deduplicates the ≤
-    salt_partitions winners per key exactly. Salting derives from the
-    *order column*, never the key, so it cannot break LWW ordering: every
-    salt bucket's winner is a true candidate and level 2 picks the global
-    max. Duplicate deliveries (equal event_seq) tie-break on the **largest**
-    delta_token — the same order lww_fetch/lww_agg pin.
+    Level 1 partitions by (key..., salt) where salt =
+    pmod(xxhash64(event_seq), salt_partitions), producing ≤1 winner per
+    (key, salt); level 2 re-deduplicates the ≤ salt_partitions winners per
+    key exactly. Salting derives from the *order column*, never the key,
+    so it cannot break LWW ordering: every salt bucket's winner is a true
+    candidate and level 2 picks the global max. Duplicate deliveries
+    (equal event_seq) tie-break on the **largest** delta_token — the same
+    order the fetch fold pins.
 
     Payload pruning: both window levels run over a slim
-    (key…, event_seq, delta_token) projection only — in the salted form a
-    content blob would otherwise cross TWO shuffle+sorts before losers are
-    discarded, which made this the memory-bandwidth-bound worst of the four
-    strategies. Winners (O(distinct keys) slim rows) then fetch their
-    payloads through the same broadcast hash probe as the fetch fold, so
-    the payload bytes move exactly once, map-side.
+    (key…, event_seq, delta_token) projection only — a content blob would
+    otherwise cross TWO shuffle+sorts before losers are discarded.
+    Winners (O(distinct keys) slim rows) then fetch their payloads through
+    the same broadcast hash probe as the fetch fold, so the payload bytes
+    move exactly once, map-side.
     """
     keys = list(cfg.key_columns)
     seq, tok = cfg.order_column, cfg.token_column
@@ -202,87 +178,14 @@ def lww_window(
         )
 
     slim_cols = [*keys, seq] + ([tok] if has_tok else [])
-    slim = events.select(*slim_cols)
-    if salted:
-        salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(cfg.salt_partitions)).cast("int")
-        slim = pick_one(slim.withColumn("__salt", salt), keys + ["__salt"]).drop(
-            "__salt"
-        )
+    salt = F.pmod(F.xxhash64(F.col(seq)), F.lit(cfg.salt_partitions)).cast("int")
+    slim = events.select(*slim_cols).withColumn("__salt", salt)
+    slim = pick_one(slim, keys + ["__salt"]).drop("__salt")
     winners = pick_one(slim, keys)
 
     if set(events.columns) <= set(slim_cols):
         return winners  # no payload columns to fetch
     return _fetch_payloads(events, winners.select(*keys, seq), cfg)
-
-
-def lww_agg(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Last-writer-wins via hash aggregation (the scale-preferred path).
-
-    max_by(struct(op, payload...), event_seq) with map-side partial
-    aggregation: shuffles one candidate per key per map partition. Output
-    columns: key..., event_seq, op, payload... (delta_token is a checkpoint
-    label, not state, and is dropped).
-    """
-    keys = list(cfg.key_columns)
-    seq, op = cfg.order_column, cfg.op_column
-    payload = [c for c in _payload_cols(events, cfg)]
-    carried = F.struct(F.col(op).alias(op), *[F.col(c).alias(c) for c in payload])
-    agg = events.groupBy(*keys).agg(
-        F.max(F.col(seq)).alias(seq),
-        F.max_by(carried, F.col(seq)).alias("__w"),
-    )
-    return agg.select(*keys, seq, F.col(f"__w.{op}").alias(op), *[
-        F.col(f"__w.{c}").alias(c) for c in payload
-    ])
-
-
-def lww_fetch(events: DataFrame, cfg: EngineConfig) -> DataFrame:
-    """Last-writer-wins as winner-selection + payload fetch (two-phase).
-
-    The single-pass ``lww_agg`` drags every payload blob through the
-    aggregation buffers and the shuffle: with content-sized rows the map
-    side builds multi-hundred-MB hash maps that barely reduce (most keys
-    are unique within a batch) and then ships O(events) payload bytes —
-    measured memory-bandwidth-bound, not CPU-bound. This variant never
-    aggregates or shuffles payloads:
-
-    phase A  winners = groupBy(key).agg(max(event_seq)) — a long-only
-             buffer that stays in whole-stage-codegen HashAggregate (see
-             lww_winners for why NOT max(struct(seq, token))); the payload
-             columns are never referenced, so the parquet scan prunes them
-             and the content pages are not even decompressed;
-    phase B  inner join events ⋈ broadcast(winners) on (key…, event_seq)
-             — a map-side hash probe that materializes the winning
-             deliveries, payload included — followed by a per-key max_by
-             guard that collapses multi-token redeliveries of the winning
-             event to the max-token delivery (fetch_winner_payloads; the
-             guard is load-bearing, not dead code).
-
-    Correctness: event_seq identifies the winning *event*; SLT may
-    redeliver it under several delta tokens with identical payloads, and
-    the phase-B guard picks the largest token deterministically — the
-    same delivery the old max(struct(seq, token)) phase A encoded.
-
-    Scale: the winner set is O(distinct keys per batch) of ~100 B rows. A
-    micro-batch in steady state touches a bounded key set, so the explicit
-    broadcast is the right default; for giant backfill batches flip
-    ``cfg.broadcast_winners`` off and AQE plans a shuffled join of the
-    slim winner relation instead.
-    """
-    if cfg.token_column not in events.columns:
-        # no delivery id available → single-pass agg stays exact
-        return lww_agg(drop_cancelled(events, cfg), cfg)
-    # build the cancelled-seq set ONCE and share it across both phases —
-    # each would otherwise run its own broadcast-build scan of the batch
-    # (the sharing contract cancelled_seqs' docstring states; the
-    # streaming path additionally persists the batch first)
-    cancelled = cancelled_seqs(events, cfg)
-    return fetch_winner_payloads(
-        events,
-        lww_winners(events, cfg, cancelled=cancelled),
-        cfg,
-        cancelled=cancelled,
-    )
 
 
 def lww_winners(
@@ -307,7 +210,7 @@ def lww_winners(
 
     ``with_counts`` adds a ``__n_events`` surviving-event count per key —
     one extra long in the same HashAggregate buffer, effectively free.
-    This feeds the auto-skew probe (streaming/pipeline.ingest_batch):
+    This feeds the hot-key flip (streaming/pipeline.ingest_batch):
     max(__n_events) over the persisted winner set is the batch's hottest
     key, with no extra pass over the (payload-heavy) events."""
     keys = list(cfg.key_columns)
@@ -332,7 +235,7 @@ def fetch_winner_payloads(
     seq, token twice — nothing upstream enforces within-token uniqueness)
     would fan the probe out to >1 row per key, violating merge_cdc's ≤1-row
     contract. The trailing per-key max_by collapses that (deterministic:
-    the largest-seq delivery wins, matching lww_agg's idiom; duplicate
+    the largest (seq, token) delivery wins; duplicate
     rows are identical so any pick is value-equal). Plan cost, verified
     via .explain: string-payload agg buffers are not hash-aggregable, so
     this compiles to a SortAggregate — but the sort is an UnsafeRow
@@ -349,14 +252,17 @@ def _fetch_payloads(
     survivors: DataFrame, winners: DataFrame, cfg: EngineConfig
 ) -> DataFrame:
     """The broadcast winner-to-payload probe + duplicate-delivery guard
-    shared by lww_fetch (phase B) and the payload-pruned lww_window.
+    shared by the fetch fold (phase B) and the payload-pruned lww_window.
     `winners` is a (key..., event_seq) frame with <=1 row per key; output is
-    one full row per key carrying the max-token delivery's payload."""
+    one full row per key carrying the max-token delivery's payload (the
+    max-seq one when the batch has no token column).
+
+    The winner set is O(distinct keys per batch) of ~100 B rows, so it is
+    always broadcast: the probe stays map-side and the payload side is
+    never shuffled for the join."""
     keys = list(cfg.key_columns)
     seq, tok = cfg.order_column, cfg.token_column
-    if getattr(cfg, "broadcast_winners", True):
-        winners = F.broadcast(winners)
-    fetched = survivors.join(winners, on=[*keys, seq], how="inner")
+    fetched = survivors.join(F.broadcast(winners), on=[*keys, seq], how="inner")
     rest = [c for c in fetched.columns if c not in keys and c != tok]
     carried = F.struct(*[F.col(c).alias(c) for c in rest])
     order = (
@@ -371,36 +277,33 @@ def _fetch_payloads(
     )
 
 
-def fold_changes(
-    events: DataFrame,
-    cfg: EngineConfig,
-    strategy: str = "fetch",
-) -> DataFrame:
-    """Full batch fold: cancellation → LWW. One surviving row per key.
+def fold_changes(events: DataFrame, cfg: EngineConfig) -> DataFrame:
+    """Full batch fold: cancellation → LWW. One surviving row per key,
+    projected to :func:`fold_output_columns`.
 
-    strategy: 'fetch' (default, winner-select + broadcast payload fetch),
-    'agg' (single-pass partial-agg), 'window', or 'window_salted'.
-    """
-    if strategy == "fetch":
-        out = lww_fetch(events, cfg)
-    elif strategy == "agg":
-        out = lww_agg(drop_cancelled(events, cfg), cfg)
-    elif strategy == "window":
-        out = lww_window(drop_cancelled(events, cfg), cfg, salted=False)
-    elif strategy == "window_salted":
-        out = lww_window(drop_cancelled(events, cfg), cfg, salted=True)
-    else:
-        raise ValueError(f"unknown LWW strategy: {strategy!r}")
+    Phase A (:func:`lww_winners`) selects each key's winning event_seq
+    from a payload-pruned scan; phase B (:func:`fetch_winner_payloads`)
+    fetches the winning deliveries through a broadcast probe. The
+    cancelled-seq set is built once and shared by both phases — each
+    would otherwise run its own broadcast-build scan of the batch (the
+    streaming path additionally persists it)."""
+    cancelled = cancelled_seqs(events, cfg)
+    out = fetch_winner_payloads(
+        events,
+        lww_winners(events, cfg, cancelled=cancelled),
+        cfg,
+        cancelled=cancelled,
+    )
     keep = fold_output_columns(events, cfg)
     return out.select(*[c for c in keep if c in out.columns])
 
 
-def replay(events: DataFrame, cfg: EngineConfig, strategy: str = "fetch") -> DataFrame:
+def replay(events: DataFrame, cfg: EngineConfig) -> DataFrame:
     """Fold an entire log into the final table state (no incremental sink).
 
     Keys whose last surviving op is D have no row. This is the one-shot
     batch replay; the incremental path is streaming/pipeline.py + the
     LakeTable MERGE sink.
     """
-    folded = fold_changes(events, cfg, strategy=strategy)
+    folded = fold_changes(events, cfg)
     return folded.where(F.col(cfg.op_column) != "D").drop(cfg.op_column, cfg.order_column)

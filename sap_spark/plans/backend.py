@@ -12,7 +12,7 @@ factories, so a future Iceberg binding is done exactly when it passes
 that suite unchanged.
 
 The pipeline layer (streaming/pipeline.py) and CLI only call this
-surface: ``affected_buckets`` + ``merge_cdc`` per epoch, ``version`` /
+surface: ``affected_bucket_offsets`` + ``merge_cdc`` per epoch, ``version`` /
 ``merge_mode`` / ``num_buckets`` for lineage and sizing, ``compact`` /
 ``expire_snapshots`` for maintenance. Keeping the surface this narrow is
 what makes the swap possible.
@@ -29,9 +29,9 @@ Contract laws (each has a test of the same name in the contract suite):
     shield against stale re-inserts.
 4.  **evolution gate** — new nullable columns add, widenable types widen
     (int→long, float→double); anything else raises before data moves.
-5.  **key stability** — every key lives in exactly one bucket;
-    ``affected_buckets`` of a batch is the exact bucket set its keys
-    hash to.
+5.  **key stability** — every key lives in exactly one bucket; the key
+    set of ``affected_bucket_offsets`` of a batch is the exact bucket set
+    its keys hash to.
 6.  **maintenance safety** — ``compact`` and ``expire_snapshots`` never
     change the user-visible row set.
 7.  **change-feed fidelity** — ``changes_between(v1, v2)`` returns the
@@ -44,7 +44,7 @@ Contract laws (each has a test of the same name in the contract suite):
 9.  **rebucket layout evolution** — ``rebucket(M)`` changes only the
     layout: the read image, exactly-once memory, and version gate are
     untouched, and every subsequent write / point read /
-    ``affected_buckets`` routes by the new count (Iceberg
+    ``affected_bucket_offsets`` routes by the new count (Iceberg
     ``REPLACE PARTITION FIELD`` analog; the bucket count a table was
     created with must not be forever).
 
@@ -97,7 +97,12 @@ class TableBackend(Protocol):
     # writes --------------------------------------------------------------
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> None: ...
 
-    def affected_buckets(self, events: DataFrame) -> list[int]: ...
+    def affected_bucket_offsets(
+        self,
+        events: DataFrame,
+        seq_column: "str | None" = None,
+        count_column: "str | None" = None,
+    ) -> "dict[int, dict]": ...
 
     def merge_cdc(
         self,

@@ -39,10 +39,11 @@ Law → Iceberg mapping (law numbers from plans/backend.py):
    widenings the plugin's lattice allows: int→long, float→double).
 5. **key stability** — the table carries an explicit ``_bucket`` column
    computed by the engine's own hash (lake.bucket_expr) and is
-   partitioned ``identity(_bucket)``; ``affected_buckets`` is therefore
-   byte-identical between backends, and the MERGE's ``t._bucket IN
-   (...)`` predicate gives Iceberg partition pruning on the target scan
-   (the documented merge-pruning idiom).
+   partitioned ``identity(_bucket)``; the key set of
+   ``affected_bucket_offsets`` is therefore byte-identical between
+   backends, and the MERGE's ``t._bucket IN (...)`` predicate gives
+   Iceberg partition pruning on the target scan (the documented
+   merge-pruning idiom).
 6. **maintenance safety** — ``compact`` = ``CALL system.rewrite_data_files``
    (+ optional tombstone purge, a checkpoint-barrier op exactly like
    LakeTable.compact); ``expire_snapshots`` = ``CALL
@@ -76,7 +77,11 @@ from sap_spark.schema.compat import (
     plan_evolution,
     validate_schema_types,
 )
-from sap_spark.plans.lake import DEFAULT_BATCH_LEDGER_RETENTION, bucket_expr
+from sap_spark.plans.lake import (
+    DEFAULT_BATCH_LEDGER_RETENTION,
+    bucket_expr,
+    bucket_offsets,
+)
 
 # Internal (non-user) columns, same names and meaning as LakeTable.
 SEQ_COL = "_seq"
@@ -498,16 +503,20 @@ class IcebergTable:
 
     # -- writes ------------------------------------------------------------
 
-    def affected_buckets(self, events: DataFrame) -> list[int]:
-        """Engine-hash buckets (identical to LakeTable: lake.py:378)."""
-        rows = (
-            events.select(
-                bucket_expr(self.key_columns, self.num_buckets).alias("b")
-            )
-            .distinct()
-            .collect()
+    def affected_bucket_offsets(
+        self,
+        events: DataFrame,
+        seq_column: "str | None" = None,
+        count_column: "str | None" = None,
+    ) -> "dict[int, dict]":
+        """Engine-hash buckets with their high-water offsets — the same
+        groupBy as LakeTable's (plans/lake.py::bucket_offsets)."""
+        return bucket_offsets(
+            events,
+            bucket_expr(self.key_columns, self.num_buckets),
+            seq_column,
+            count_column,
         )
-        return sorted(r["b"] for r in rows)
 
     def merge_cdc(
         self,
@@ -711,8 +720,8 @@ class IcebergTable:
         """Layout evolution (law 9): the row UPDATE (one transactional
         Iceberg commit) reroutes every row's ``_bucket`` under the new
         count, then the num-buckets property flips so
-        ``affected_buckets`` and merge partition-pruning speak the new
-        numbering. Readers of earlier snapshots are untouched (Iceberg
+        ``affected_bucket_offsets`` and merge partition-pruning speak the
+        new numbering. Readers of earlier snapshots are untouched (Iceberg
         snapshot isolation); a stale handle refreshes on reload exactly
         like after a compaction.
 

@@ -90,8 +90,16 @@ INTERNAL_COLS = (SEQ_COL, DELETED_COL)
 # magnitude beyond any real replay depth; replaying a batch id that has
 # aged OUT of the window re-applies instead of no-opping — a semantic
 # no-op for the LWW merge (same winners, same final rows; it burns a
-# version). Set the `batch_ledger_retention` table property to None for
-# the old unbounded behavior.
+# version). It is NOT a no-op in two cases:
+#   - an evicted `overwrite()` batch id re-applies a full overwrite: every
+#     merge committed since the original overwrite is replaced by the
+#     overwrite frame (pinned by tests/test_batch_ledger.py);
+#   - a merge replayed after `compact(purge_tombstones=True)` can
+#     resurrect deletes: the purged tombstones no longer shield the keys
+#     from the replay's older upserts (the reason purge is a
+#     low-watermark maintenance op, never run mid-stream).
+# Set the `batch_ledger_retention` table property to None for the old
+# unbounded behavior.
 DEFAULT_BATCH_LEDGER_RETENTION = 10_000
 
 
@@ -123,6 +131,53 @@ class ConcurrentCommitError(RuntimeError):
 def bucket_expr(key_columns: list[str] | tuple[str, ...], num_buckets: int) -> F.Column:
     """Deterministic bucket id for a primary key."""
     return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
+
+
+def bucket_offsets(
+    events: DataFrame,
+    bucket: F.Column,
+    seq_column: "str | None" = None,
+    count_column: "str | None" = None,
+) -> "dict[int, dict]":
+    """Bucket ids touched by a batch, each with its high-water offset:
+    ``{bucket: {"max_seq": <max seq_column>, "n_rows": <count>}}``.
+
+    One column-pruned scan with a bucket-keyed partial agg producing
+    ≤ num_buckets rows: only the key (and seq/count) columns are read, so
+    parquet never materializes the payload, and map-side partial
+    aggregation keeps the shuffle tiny. The groupBy carries ``max(seq)``
+    and a row count in the same HashAggregate buffer, so one pass yields
+    BOTH the exact merge-pruning set and the per-partition lineage
+    offsets the pipeline records per epoch (north_rule). When
+    ``seq_column`` is absent from the batch, ``max_seq`` is None.
+
+    ``count_column`` (a per-key event count riding ``events``, e.g.
+    lww_winners' ``__n_events``) adds ``max_key_events`` per bucket — one
+    more long in the same agg buffer. The global max over buckets IS the
+    batch's hottest-key count (max over keys distributes over any key
+    partition), which lets the pipeline's hot-key probe ride this
+    discovery pass instead of running its own job; per-bucket it doubles
+    as skew observability in lineage. Shared by both table backends so
+    the offsets have one shape."""
+    aggs = [F.count(F.lit(1)).alias("__n_rows")]
+    with_seq = seq_column is not None and seq_column in events.columns
+    with_cnt = count_column is not None and count_column in events.columns
+    cols = [bucket.alias("__bucket")]
+    if with_seq:
+        aggs.append(F.max(F.col(seq_column)).alias("__max_seq"))
+        cols.append(F.col(seq_column))
+    if with_cnt:
+        aggs.append(F.max(F.col(count_column)).alias("__max_cnt"))
+        cols.append(F.col(count_column))
+    rows = events.select(*cols).groupBy("__bucket").agg(*aggs).collect()
+    return {
+        r["__bucket"]: {
+            "max_seq": r["__max_seq"] if with_seq else None,
+            "n_rows": r["__n_rows"],
+            **({"max_key_events": r["__max_cnt"]} if with_cnt else {}),
+        }
+        for r in rows
+    }
 
 
 # Iceberg-style write-target file size; buckets ≈ payload / this.
@@ -1006,69 +1061,18 @@ class LakeTable:
         cast = [F.col(k).cast(dtypes[k]) for k in self.key_columns]
         return F.pmod(F.xxhash64(*cast), F.lit(self.num_buckets)).cast("int")
 
-    def affected_buckets(self, events: DataFrame) -> list[int]:
-        """Bucket ids touched by a batch of (raw or folded) change events.
-
-        Runs a column-pruned scan: only the key columns are read (parquet
-        never materializes the payload), the distinct set is ≤ num_buckets
-        ints, and map-side partial aggregation keeps the shuffle tiny. Used
-        to prune the MERGE to touched buckets without materializing the
-        folded batch twice.
-        """
-        b = self._conformed_bucket_expr(events)
-        return sorted(
-            r["__bucket"]
-            for r in events.select(b.alias("__bucket")).distinct().collect()
-        )
-
     def affected_bucket_offsets(
         self,
         events: DataFrame,
         seq_column: "str | None" = None,
         count_column: "str | None" = None,
     ) -> "dict[int, dict]":
-        """Bucket ids touched by a batch, each with its high-water offset:
-        ``{bucket: {"max_seq": <max seq_column>, "n_rows": <count>}}``.
-
-        Same job shape and cost as :meth:`affected_buckets` — a
-        column-pruned scan with a bucket-keyed partial agg producing
-        ≤ num_buckets rows — but the groupBy carries ``max(seq)`` and a
-        row count in the same HashAggregate buffer, so one pass yields
-        BOTH the exact merge-pruning set and the per-partition lineage
-        offsets the pipeline records per epoch (north_rule). When
-        ``seq_column`` is absent from the batch, ``max_seq`` is None.
-
-        ``count_column`` (a per-key event count riding ``events``, e.g.
-        lww_winners' ``__n_events``) adds ``max_key_events`` per bucket —
-        one more long in the same agg buffer. The global max over buckets
-        IS the batch's hottest-key count (max over keys distributes over
-        any key partition), which lets the pipeline's auto-skew probe
-        fuse into this discovery pass instead of running its own job;
-        per-bucket it doubles as skew observability in lineage."""
-        b = self._conformed_bucket_expr(events)
-        aggs = [F.count(F.lit(1)).alias("__n_rows")]
-        with_seq = seq_column is not None and seq_column in events.columns
-        with_cnt = count_column is not None and count_column in events.columns
-        if with_seq:
-            aggs.append(F.max(F.col(seq_column)).alias("__max_seq"))
-        if with_cnt:
-            aggs.append(F.max(F.col(count_column)).alias("__max_cnt"))
-        cols = [b.alias("__bucket")]
-        if with_seq:
-            cols.append(F.col(seq_column))
-        if with_cnt:
-            cols.append(F.col(count_column))
-        rows = events.select(*cols).groupBy("__bucket").agg(*aggs).collect()
-        return {
-            r["__bucket"]: {
-                "max_seq": r["__max_seq"] if with_seq else None,
-                "n_rows": r["__n_rows"],
-                **(
-                    {"max_key_events": r["__max_cnt"]} if with_cnt else {}
-                ),
-            }
-            for r in rows
-        }
+        """Bucket ids a batch touches, each with its high-water offset (see
+        :func:`bucket_offsets`); the keys are the exact merge-pruning set.
+        Keys hash at the table's key dtypes, exactly as merge_cdc does."""
+        return bucket_offsets(
+            events, self._conformed_bucket_expr(events), seq_column, count_column
+        )
 
     def merge_cdc(
         self,
@@ -1148,8 +1152,8 @@ class LakeTable:
             .where(F.col(op_column).isNotNull())
         )
         # Bucket pruning: which buckets does this batch touch? When the
-        # caller already knows (a cheap key-pruned scan of the raw events,
-        # see affected_buckets), the folded plan stays single-pass — no
+        # caller already knows (a cheap key-pruned scan of the winner set,
+        # see affected_bucket_offsets), the folded plan stays single-pass — no
         # persist of a payload-heavy intermediate, no cache/GC pressure.
         # Fallback: persist the folded batch and discover from it.
         persisted = None
@@ -1282,7 +1286,7 @@ class LakeTable:
         Spark re-run when the winner's commits are compatible — the
         already-written files re-commit onto the new head as a pure
         METADATA retry. Compatibility, checked structurally against the
-        latest manifest (no op-log inspection, so any future commit
+        latest manifest (the op log is never read, so any future commit
         kind is handled by construction):
 
         - ``num_buckets`` unchanged (a concurrent rebucket re-routes

@@ -51,16 +51,17 @@ from __future__ import annotations
 
 import dataclasses
 import time
-from dataclasses import dataclass
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sap_spark.config import ConfigError, EngineConfig
-from sap_spark.plans.lake import LakeTable
-from sap_spark.streaming.pipeline import CdcPipeline, read_lineage_file
+from sap_spark.streaming.pipeline import (
+    CdcPipeline,
+    TableTarget,
+    read_lineage_file,
+)
 
 _UNROUTED = "<unrouted>"
 
@@ -73,66 +74,6 @@ _ENVELOPE_TYPES = (
     ("rocancel_column", T.BooleanType(), False),
     ("cancel_seq_column", T.LongType(), True),
 )
-
-
-@dataclass
-class TableTarget:
-    """One routing destination: a lake table plus its fold config.
-
-    ``transform`` runs on this table's slice only (after routing and
-    projection) — the per-table analog of ``CdcPipeline``'s envelope-level
-    transform; both may be used together. ``auto_compact_delta_files``
-    and the ``auto_expire_*`` knobs mirror the single-table pipeline's,
-    applied to this target independently (each routed table accumulates
-    its own manifests and MOR deltas at its own rate).
-    """
-
-    table: LakeTable
-    cfg: EngineConfig
-    transform: "Callable[[DataFrame], DataFrame] | None" = None
-    auto_compact_delta_files: "int | None" = None
-    auto_expire_keep: "int | None" = None
-    auto_expire_slack: int = 16
-    auto_expire_grace_seconds: float = 3600.0
-
-    def validate(self, name: str) -> "TableTarget":
-        self.cfg.validate()
-        if self.auto_compact_delta_files is not None:
-            if self.auto_compact_delta_files < 1:
-                raise ConfigError(
-                    f"target {name!r}: auto_compact_delta_files must be >= 1"
-                )
-            if self.table.merge_mode != "mor":
-                raise ConfigError(
-                    f"target {name!r}: auto_compact_delta_files requires "
-                    "a merge-on-read table (merge_mode='mor'); this table "
-                    f"is merge_mode='{self.table.merge_mode}'"
-                )
-        if self.auto_expire_keep is not None:
-            if self.auto_expire_keep < 1:
-                raise ConfigError(
-                    f"target {name!r}: auto_expire_keep must be >= 1"
-                )
-            if self.auto_expire_slack < 1:
-                raise ConfigError(
-                    f"target {name!r}: auto_expire_slack must be >= 1"
-                )
-            if self.auto_expire_grace_seconds < 0:
-                raise ConfigError(
-                    f"target {name!r}: auto_expire_grace_seconds must be >= 0"
-                )
-        return self
-
-    @property
-    def auto_expire(self) -> "tuple | None":
-        """(keep, slack, grace) for the shared epoch tail, or None."""
-        if self.auto_expire_keep is None:
-            return None
-        return (
-            self.auto_expire_keep,
-            self.auto_expire_slack,
-            self.auto_expire_grace_seconds,
-        )
 
 
 class MultiTableCdcPipeline(CdcPipeline):
@@ -427,12 +368,9 @@ class MultiTableCdcPipeline(CdcPipeline):
             slice_df = tgt.transform(slice_df)
         stats = self._apply_epoch_slice(
             slice_df,
-            tgt.table,
-            cfg,
+            tgt,
             f"{self.pipeline_id}-epoch-{epoch_id}-t-{name}",
             f"lineage-{epoch_id}-{name}",
-            tgt.auto_compact_delta_files,
-            tgt.auto_expire,
         )
         self._record_table_lineage(
             name,

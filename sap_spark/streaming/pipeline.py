@@ -5,7 +5,7 @@ Architecture (SURVEY.md §3.4, BASELINE.json north_star):
     readStream(change log)                 # delta tokens ≈ micro-batches
       → foreachBatch:
           observe lineage (token range, counts)     # no extra pass
-          drop_cancelled → LWW dedup (fold_changes) # operators/dedup.py
+          cancel set → LWW winners → payload fetch  # operators/dedup.py
           evolution gate → bucketed COW MERGE       # plans/lake.py
           commit marker = (pipeline, epoch_id)      # exactly-once
       → checkpointLocation                          # resumable delta token
@@ -25,12 +25,12 @@ throughput metrics"): each epoch appends a JSON line to
 ``<table>/_meta/lineage.jsonl`` with the token range, event/key counts,
 timing (via ``DataFrame.observe`` during the merge job itself — no second
 pass over the batch), and ``bucket_offsets`` — the per-partition high-water
-offsets {bucket: {max_seq, n_rows}}, computed inside the same bucket-keyed
-agg that discovers the merge's affected buckets (under the default auto
-strategy each bucket also carries ``max_key_events``, the bucket's
-hottest-key surviving-event count: the skew probe fuses into this agg, so
-probe + discovery are ONE job per epoch). ``bucket_high_water()``
-folds them across epochs for per-partition resume verification.
+offsets {bucket: {max_seq, n_rows, max_key_events}}, computed inside the
+same bucket-keyed agg that discovers the merge's affected buckets
+(``max_key_events`` is the bucket's hottest-key surviving-event count: the
+hot-key probe rides this agg, so probe + discovery are ONE job per epoch).
+``bucket_high_water()`` folds them across epochs for per-partition resume
+verification.
 """
 
 from __future__ import annotations
@@ -40,36 +40,15 @@ import json
 import os
 import time
 
+from dataclasses import dataclass
+from typing import Callable
+
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from sap_spark.config import EngineConfig
-from sap_spark.operators.dedup import fold_changes
+from sap_spark.config import ConfigError, EngineConfig
 from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.changelog import read_changelog_stream
-
-
-def _discover_buckets(
-    table, frame: DataFrame, cfg: EngineConfig, exact: bool
-):
-    """Affected-bucket set for a batch, plus — when ``frame`` is the
-    post-cancellation winner set (``exact=True``, the fetch/auto path)
-    and the backend can compute them in the same bucket-keyed agg
-    (LakeTable's ``affected_bucket_offsets``) — per-bucket high-water
-    offsets ``{bucket: {"max_seq": max applied seq, "n_rows": applied
-    keys}}`` for the epoch's lineage record (the north rule's
-    per-partition lineage offsets). With ``exact=False`` the frame is
-    the RAW event batch: its max seq may belong to a cancelled event the
-    fold drops, so recording it would overstate the table's true
-    high-water — offsets are then None and only the (superset-safe)
-    bucket set is returned. Either way it is ONE tiny job over a
-    key/seq-pruned projection."""
-    get_offsets = getattr(table, "affected_bucket_offsets", None)
-    if exact and get_offsets is not None:
-        keyed = frame.select(*cfg.key_columns, cfg.order_column)
-        offsets = get_offsets(keyed, seq_column=cfg.order_column)
-        return sorted(offsets), offsets
-    return table.affected_buckets(frame.select(*cfg.key_columns)), None
 
 
 def ingest_batch(
@@ -77,32 +56,36 @@ def ingest_batch(
     table: LakeTable,
     cfg: EngineConfig,
     batch_id: str,
-    strategy: str = "fetch",
     metrics_out: dict | None = None,
 ) -> bool:
-    """Apply one batch of raw change events to a LakeTable (idempotent).
+    """Apply one batch of raw change events to a table (idempotent).
 
-    Fetch strategy (default): the winner set (key, seq, token — O(keys) of
-    ~100 B rows) is computed once from a payload-pruned scan and persisted;
-    bucket discovery reads it (exact affected set, one tiny job) and the
-    fetch join broadcasts it — the payload-heavy fold stays single-pass
-    inside the MERGE write job.
+    One straight path for every batch:
 
-    Auto strategy: fetch, plus a per-batch hot-key probe. The winner scan
-    (already payload-pruned and persisted) carries a per-key surviving-event
-    count; ``max`` of it is the batch's hottest key, one tiny job over
-    O(keys) rows. Past ``cfg.hot_key_threshold`` the payload fold flips to
-    the salted two-level window (``lww_window(salted=True)``), whose every
-    exchange is explicitly bounded — per-(key, salt) partitions of ≤
-    hot/salt_partitions rows — instead of relying on partial-aggregation
-    pre-combine behavior under adversarial skew. Either way the winner scan
-    still drives exact bucket discovery. The chosen strategy and hottest-key
-    count are reported through ``metrics_out`` (and the pipeline's lineage).
+    1. the cancelled-seq set is built and persisted, so its pruned scan
+       of the batch runs once, not once per fold phase;
+    2. the winner scan (``lww_winners(with_counts=True)``: key, max seq
+       and surviving-event count per key — O(keys) of ~100 B rows, from a
+       payload-pruned scan) is persisted;
+    3. ONE bucket-keyed agg over it (``table.affected_bucket_offsets``)
+       yields the exact merge buckets, the per-bucket lineage offsets
+       ``{bucket: {max_seq, n_rows, max_key_events}}`` and — as the max
+       of ``max_key_events`` over buckets, which is the max over keys —
+       the batch's hottest-key count;
+    4. the payloads are fetched through a broadcast probe of the winner
+       set (``fetch_winner_payloads``) — or, when the hottest key carries
+       at least ``cfg.hot_key_threshold`` surviving events, folded by the
+       salted two-level window (``lww_window``), whose every exchange is
+       explicitly bounded (per-(key, salt) partitions of ≤
+       hot/salt_partitions rows) instead of relying on partial
+       aggregation under adversarial skew.
 
-    Other strategies: bucket discovery falls back to a key-pruned scan of
-    the raw events; a superset (keys fully cancelled in-batch) only
-    rewrites an unchanged bucket, never corrupts.
+    The payload fold stays lazy and single-pass inside the MERGE write
+    job. The fold that ran (``strategy``: ``fetch`` or ``window_salted``),
+    the hottest-key count and the bucket offsets are reported through
+    ``metrics_out`` (and the pipeline's lineage).
     """
+    # call-time imports: tracing tools patch these module attributes
     from sap_spark.operators.dedup import (
         cancelled_seqs,
         drop_cancelled,
@@ -115,96 +98,49 @@ def ingest_batch(
     # Replay fast path: a crash between the table commit and the
     # checkpoint commit replays the epoch with the same batch_id —
     # merge_cdc would no-op on its batch marker anyway, but only AFTER
-    # this function ran the persist/winner-scan/hot-probe/discovery jobs
-    # over the whole batch. One driver-side set lookup makes the replay
+    # this function ran the persist/winner-scan/discovery jobs over the
+    # whole batch. One driver-side set lookup makes the replay
     # near-free; last_merge_metrics mirrors merge_cdc's replay contract
     # (reset so lineage never reports the previous merge's timings).
     if batch_id in table.committed_batches():
         table.last_merge_metrics = None
         return False
 
-    chosen = strategy
-    hot = None
-    winners_full = cancelled = None
-    keep = fold_output_columns(events, cfg)
-    # the try spans from the FIRST persist: a probe/discovery/fold
-    # failure mid-epoch (foreachBatch retries the epoch) must not leak
-    # cached blocks — retried persists would otherwise accumulate in
-    # executor storage memory for the session's lifetime
+    keys, seq = list(cfg.key_columns), cfg.order_column
+    winners = cancelled = None
+    # the try spans from the FIRST persist: a discovery/fold failure
+    # mid-epoch (foreachBatch retries the epoch) must not leak cached
+    # blocks — retried persists would otherwise accumulate in executor
+    # storage memory for the session's lifetime
     try:
-        if strategy in ("fetch", "auto") and cfg.token_column in events.columns:
-            # the cancel set feeds both fold phases — persist so its
-            # pruned scan of the batch runs once, not once per phase
-            cancelled = cancelled_seqs(events, cfg)
-            if cancelled is not None:
-                cancelled = cancelled.persist()
-            winners_full = lww_winners(
-                events, cfg, cancelled=cancelled, with_counts=(strategy == "auto")
-            ).persist()
-            winners = winners_full
-            fused = None
-            if strategy == "auto":
-                winners = winners_full.select(*cfg.key_columns, cfg.order_column)
-                # Fuse the hot-key probe into the bucket-discovery agg when
-                # the backend supports it: max(per-key count) rides the
-                # same per-bucket HashAggregate buffer, and max over
-                # buckets == max over keys — one job per epoch instead of
-                # two over the persisted winner set (per-epoch fixed
-                # driver costs are the bench-scale utilization ceiling,
-                # BENCH/UTILIZATION_r4.md). Lineage gains a per-bucket
-                # max_key_events column as free skew observability.
-                get_offsets = getattr(table, "affected_bucket_offsets", None)
-                if get_offsets is not None:
-                    import inspect
-
-                    if "count_column" in inspect.signature(get_offsets).parameters:
-                        fused = get_offsets(
-                            winners_full.select(
-                                *cfg.key_columns, cfg.order_column, "__n_events"
-                            ),
-                            seq_column=cfg.order_column,
-                            count_column="__n_events",
-                        )
-                if fused is not None:
-                    hot = max(
-                        (o.get("max_key_events") or 0 for o in fused.values()),
-                        default=0,
-                    )
-                else:  # backend without fused discovery: separate tiny job
-                    hot = winners_full.agg(F.max("__n_events")).collect()[0][0] or 0
-                chosen = (
-                    "window_salted" if hot >= cfg.hot_key_threshold else "fetch"
-                )
-            if fused is not None:
-                affected, bucket_offsets = sorted(fused), fused
-            else:
-                affected, bucket_offsets = _discover_buckets(
-                    table, winners, cfg, exact=True
-                )
-            if chosen == "fetch":
-                folded = fetch_winner_payloads(
-                    events, winners, cfg, cancelled=cancelled
-                )
-            else:
-                folded = lww_window(
-                    drop_cancelled(events, cfg, cancelled=cancelled),
-                    cfg,
-                    salted=True,
-                )
-            folded = folded.select(*[c for c in keep if c in folded.columns])
-        else:
-            if strategy == "auto":
-                chosen = "fetch"  # no delivery id → lww_fetch's exact agg path
-            folded = fold_changes(events, cfg, strategy=chosen)
-            affected, bucket_offsets = _discover_buckets(
-                table, events, cfg, exact=False
+        cancelled = cancelled_seqs(events, cfg)
+        if cancelled is not None:
+            cancelled = cancelled.persist()
+        winners = lww_winners(
+            events, cfg, cancelled=cancelled, with_counts=True
+        ).persist()
+        bucket_offsets = table.affected_bucket_offsets(
+            winners, seq_column=seq, count_column="__n_events"
+        )
+        hot = max(
+            (o["max_key_events"] for o in bucket_offsets.values()), default=0
+        )
+        if hot >= cfg.hot_key_threshold:
+            chosen = "window_salted"
+            folded = lww_window(
+                drop_cancelled(events, cfg, cancelled=cancelled), cfg
             )
+        else:
+            chosen = "fetch"
+            folded = fetch_winner_payloads(
+                events, winners.select(*keys, seq), cfg, cancelled=cancelled
+            )
+        keep = fold_output_columns(events, cfg)
+        folded = folded.select(*[c for c in keep if c in folded.columns])
         if metrics_out is not None:
             metrics_out["strategy"] = chosen
-            if hot is not None:
-                metrics_out["hot_key_count"] = int(hot)
-            if bucket_offsets is not None:
-                metrics_out["bucket_offsets"] = bucket_offsets
+            metrics_out["hot_key_count"] = int(hot)
+            metrics_out["bucket_offsets"] = bucket_offsets
         # crash-restart needs no special handling here: the manifest
         # link is the SINGLE commit step (lake.py _commit), so a dead
         # driver either committed (the replayed epoch no-ops on its
@@ -217,12 +153,12 @@ def ingest_batch(
             folded,
             batch_id,
             op_column=cfg.op_column,
-            seq_column=cfg.order_column,
-            affected_buckets=affected,
+            seq_column=seq,
+            affected_buckets=sorted(bucket_offsets),
         )
     finally:
-        if winners_full is not None:
-            winners_full.unpersist()
+        if winners is not None:
+            winners.unpersist()
         if cancelled is not None:
             cancelled.unpersist()
 
@@ -288,6 +224,91 @@ def fold_lineage(records: list[dict]) -> dict:
     return out
 
 
+@dataclass
+class TableTarget:
+    """One destination table plus its fold config and epoch-tail options.
+
+    The single-table :class:`CdcPipeline` holds one; the multi-table
+    router (streaming/multitable.py) one per routed table, so both run
+    the same construction-time checks. ``transform`` runs on this table's
+    slice only (after routing and projection) — the per-table analog of
+    ``CdcPipeline``'s envelope-level transform; both may be used
+    together. ``auto_compact_delta_files`` and the ``auto_expire_*``
+    knobs are documented on :class:`CdcPipeline`; each target applies
+    them independently (each table accumulates its own manifests and MOR
+    deltas at its own rate).
+    """
+
+    table: LakeTable
+    cfg: EngineConfig
+    transform: "Callable[[DataFrame], DataFrame] | None" = None
+    auto_compact_delta_files: "int | None" = None
+    auto_expire_keep: "int | None" = None
+    auto_expire_slack: int = 16
+    auto_expire_grace_seconds: float = 3600.0
+
+    def validate(self, name: str) -> "TableTarget":
+        """Raise ``ConfigError`` now for any option that would otherwise
+        fail (or silently do nothing) mid-stream."""
+        self.cfg.validate()
+        if self.auto_compact_delta_files is not None:
+            if self.auto_compact_delta_files < 1:
+                raise ConfigError(
+                    f"target {name!r}: auto_compact_delta_files must be >= 1"
+                )
+            if self.table.merge_mode != "mor":
+                # a cow table never accumulates delta files, so the
+                # option would be silently inert
+                raise ConfigError(
+                    f"target {name!r}: auto_compact_delta_files requires "
+                    "a merge-on-read table (merge_mode='mor'); this table "
+                    f"is merge_mode='{self.table.merge_mode}'"
+                )
+            self._require_method(
+                name, "auto_compact_delta_files", "delta_file_counts"
+            )
+        if self.auto_expire_keep is not None:
+            if self.auto_expire_keep < 1:
+                raise ConfigError(
+                    f"target {name!r}: auto_expire_keep must be >= 1"
+                )
+            if self.auto_expire_slack < 1:
+                raise ConfigError(
+                    f"target {name!r}: auto_expire_slack must be >= 1"
+                )
+            if self.auto_expire_grace_seconds < 0:
+                raise ConfigError(
+                    f"target {name!r}: auto_expire_grace_seconds must be >= 0"
+                )
+            self._require_method(
+                name, "auto_expire_keep", "retained_manifest_count"
+            )
+        return self
+
+    def _require_method(self, name: str, option: str, method: str) -> None:
+        """The epoch tail calls ``method`` on the table for ``option``:
+        auto-compaction probes ``delta_file_counts()`` and then calls
+        ``compact(buckets=, purge_tombstones=)`` — a backend with the probe
+        has the bucket-scoped compaction too; auto-expiry probes
+        ``retained_manifest_count()``."""
+        if not hasattr(self.table, method):
+            raise ConfigError(
+                f"target {name!r}: {option} needs the table method "
+                f"{method}(), which {type(self.table).__name__} lacks"
+            )
+
+    @property
+    def auto_expire(self) -> "tuple | None":
+        """(keep, slack, grace) for the shared epoch tail, or None."""
+        if self.auto_expire_keep is None:
+            return None
+        return (
+            self.auto_expire_keep,
+            self.auto_expire_slack,
+            self.auto_expire_grace_seconds,
+        )
+
+
 class CdcPipeline:
     """Streaming CDC ingest of a change-log directory into a LakeTable."""
 
@@ -299,7 +320,6 @@ class CdcPipeline:
         log_path: str,
         checkpoint_dir: str,
         max_files_per_trigger: int | None = None,
-        strategy: str = "auto",
         pipeline_id: str | None = None,
         transform=None,
         enforce_token_atomicity: bool = True,
@@ -311,15 +331,7 @@ class CdcPipeline:
         auto_expire_slack: int = 16,
         auto_expire_grace_seconds: float = 3600.0,
     ):
-        """``strategy``: the per-batch LWW fold (see :func:`ingest_batch`).
-        Default ``'auto'`` — the fetch fold plus a per-batch hot-key probe
-        (one O(keys) job over the already-persisted winner scan) that
-        flips to the salted two-level window past
-        ``cfg.hot_key_threshold`` surviving events on one key, so the
-        north-rule skew machinery engages without opt-in. Pass
-        ``'fetch'`` to pin the probe-free fold.
-
-        ``transform``: optional DataFrame → DataFrame decode stage applied
+        """``transform``: optional DataFrame → DataFrame decode stage applied
         to each micro-batch before fold/merge — the slot for the SAP-style
         field-decode kernels (functions/decode.py ``decode_entity`` /
         per-field kernels, vectorized expressions or Arrow pandas UDFs; see
@@ -403,7 +415,6 @@ class CdcPipeline:
         self.log_path = log_path
         self.checkpoint_dir = checkpoint_dir
         self.max_files_per_trigger = max_files_per_trigger
-        self.strategy = strategy
         self.transform = transform
         self.enforce_token_atomicity = enforce_token_atomicity
         self.dead_letter_dir = dead_letter_dir
@@ -413,42 +424,28 @@ class CdcPipeline:
         # carries nulls in other tables' key columns — it scopes per-table
         # null-key rules by routing value instead)
         self._dlq_cfg = cfg
-        if auto_compact_delta_files is not None:
-            if table is None:
-                raise ValueError(
-                    "auto_compact_delta_files applies to a single-table "
-                    "pipeline; for MultiTableCdcPipeline set it per target "
-                    "via TableTarget(auto_compact_delta_files=...)"
-                )
-            if auto_compact_delta_files < 1:
-                raise ValueError("auto_compact_delta_files must be >= 1")
-            if table.merge_mode != "mor":
-                # a cow table never accumulates delta files, so the option
-                # would be silently inert — surface the config error now
-                raise ValueError(
-                    "auto_compact_delta_files requires a merge-on-read "
-                    f"table (merge_mode='mor'); this table is "
-                    f"merge_mode='{table.merge_mode}'"
-                )
-        self.auto_compact_delta_files = auto_compact_delta_files
-        if auto_expire_keep is not None:
-            if table is None:
-                raise ValueError(
-                    "auto_expire_keep applies to a single-table pipeline; "
-                    "for MultiTableCdcPipeline set it per target via "
-                    "TableTarget(auto_expire_keep=...)"
-                )
-            if auto_expire_keep < 1:
-                raise ValueError("auto_expire_keep must be >= 1")
-            if auto_expire_slack < 1:
-                raise ValueError("auto_expire_slack must be >= 1")
-            if auto_expire_grace_seconds < 0:
-                raise ValueError("auto_expire_grace_seconds must be >= 0")
-        self.auto_expire = (
-            (auto_expire_keep, auto_expire_slack, auto_expire_grace_seconds)
-            if auto_expire_keep is not None
-            else None
-        )
+        if table is None:
+            # the multi-table router validates one TableTarget per table
+            for option, value in (
+                ("auto_compact_delta_files", auto_compact_delta_files),
+                ("auto_expire_keep", auto_expire_keep),
+            ):
+                if value is not None:
+                    raise ConfigError(
+                        f"{option} applies to a single-table pipeline; for "
+                        "MultiTableCdcPipeline set it per target via "
+                        f"TableTarget({option}=...)"
+                    )
+            self.target = None
+        else:
+            self.target = TableTarget(
+                table,
+                cfg,
+                auto_compact_delta_files=auto_compact_delta_files,
+                auto_expire_keep=auto_expire_keep,
+                auto_expire_slack=auto_expire_slack,
+                auto_expire_grace_seconds=auto_expire_grace_seconds,
+            ).validate(table.path)
         # alternative staged layout (e.g. OData delta-response pages);
         # None = the change-event envelope (sources/changelog.py)
         self.stream_schema = stream_schema
@@ -514,11 +511,9 @@ class CdcPipeline:
         the per-partition lineage offsets. Lets an operator verify resume
         correctness per partition (a restarted run must only ever raise
         these) and spot key-skew (one bucket's n_rows — applied keys per
-        epoch — dwarfing the rest). Offsets are recorded by the fetch and
-        auto strategies (the production defaults), whose winner set makes
-        them exact post-cancellation; epochs run under the window/agg
-        strategies carry ``bucket_offsets: None`` and contribute nothing
-        here. JSON object keys are strings on disk; returned as ints."""
+        epoch — dwarfing the rest). Every applied epoch records them from
+        its post-cancellation winner set, so they are exact. JSON object
+        keys are strings on disk; returned as ints."""
         return fold_lineage(self.lineage())["bucket_high_water"]
 
     # -- the per-epoch apply ----------------------------------------------
@@ -823,12 +818,9 @@ class CdcPipeline:
             return
         stats = self._apply_epoch_slice(
             batch_df,
-            self.table,
-            cfg,
+            self.target,
             f"{self.pipeline_id}-epoch-{epoch_id}",
             f"lineage-{epoch_id}",
-            self.auto_compact_delta_files,
-            self.auto_expire,
         )
         self._record_lineage(
             {
@@ -844,12 +836,9 @@ class CdcPipeline:
     def _apply_epoch_slice(
         self,
         events: DataFrame,
-        table,
-        cfg,
+        target: TableTarget,
         batch_id: str,
         obs_name: str,
-        auto_compact_delta_files: "int | None",
-        auto_expire: "tuple | None" = None,
     ) -> dict:
         """Shared epoch tail: observe the lineage metrics, fold + MERGE
         one batch into one table (exactly-once on ``batch_id``), and
@@ -858,6 +847,9 @@ class CdcPipeline:
         multi-table per-table record — both paths call this, so the
         observation fields, compaction trigger and metrics shape cannot
         drift between them (streaming/multitable.py::_apply_table)."""
+        table, cfg = target.table, target.cfg
+        auto_compact_delta_files = target.auto_compact_delta_files
+        auto_expire = target.auto_expire
         t0 = time.monotonic()
         obs = Observation(obs_name)
         observed = events.observe(
@@ -869,8 +861,7 @@ class CdcPipeline:
         )
         fold_metrics: dict = {}
         applied = ingest_batch(
-            observed, table, cfg, batch_id, self.strategy,
-            metrics_out=fold_metrics,
+            observed, table, cfg, batch_id, metrics_out=fold_metrics
         )
         elapsed = time.monotonic() - t0
         compacted: list[int] | None = None

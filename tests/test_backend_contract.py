@@ -16,7 +16,7 @@ from pyspark.sql import types as T
 
 from sap_spark.plans.backend import TableBackend
 from sap_spark.plans.iceberg_backend import IcebergTable
-from sap_spark.plans.lake import LakeTable
+from sap_spark.plans.lake import LakeTable, bucket_expr
 
 SCHEMA = T.StructType(
     [
@@ -180,11 +180,24 @@ def test_bucket_stability(spark, make_table):
     batch = _changes(
         spark, [(f"r{i}", f"p{i}", "c", "I", i + 1) for i in range(50)]
     )
-    affected = table.affected_buckets(batch.select("repo", "path"))
-    assert affected == sorted(set(affected))
+    offsets = table.affected_bucket_offsets(batch, seq_column="event_seq")
+    affected = sorted(offsets)
+    # the key set is exactly the bucket set the batch's keys hash to
+    hashed = batch.select(
+        bucket_expr(["repo", "path"], table.num_buckets).alias("b")
+    )
+    assert set(affected) == {r["b"] for r in hashed.collect()}
     assert all(0 <= b < table.num_buckets for b in affected)
+    # one offset row per key, each bucket's high-water its max seq
+    assert sum(o["n_rows"] for o in offsets.values()) == 50
+    by_bucket = batch.groupBy(
+        bucket_expr(["repo", "path"], table.num_buckets).alias("b")
+    ).agg(F.max("event_seq").alias("m"))
+    assert {r["b"]: r["m"] for r in by_bucket.collect()} == {
+        b: o["max_seq"] for b, o in offsets.items()
+    }
     # deterministic: same keys, same buckets
-    assert affected == table.affected_buckets(batch.select("repo", "path"))
+    assert offsets == table.affected_bucket_offsets(batch, seq_column="event_seq")
     # merging with the precomputed set equals merging without it
     table.merge_cdc(batch, "b1", affected_buckets=affected)
     assert len(_state(table)) == 50
@@ -326,6 +339,6 @@ def test_rebucket_layout_evolution(spark, make_table):
     table.merge_cdc(_changes(spark, [("r9", "p9", "fresh", "I", 200)]), "b4")
     got = table.read(where="repo = 'r9' AND path = 'p9'").collect()
     assert [(r["repo"], r["path"], r["content"]) for r in got] == [("r9", "p9", "fresh")]
-    # affected_buckets speaks the new numbering
-    bs = table.affected_buckets(_changes(spark, [("r9", "p9", "x", "U", 1)]))
+    # affected_bucket_offsets speaks the new numbering
+    bs = table.affected_bucket_offsets(_changes(spark, [("r9", "p9", "x", "U", 1)]))
     assert bs and all(0 <= b < 19 for b in bs)

@@ -153,3 +153,20 @@ def test_alter_explicit_unbounded_on_legacy_manifest(spark, tmpdir_path):
     assert t2.batch_ledger_retention is None
     t3 = LakeTable(spark, tmpdir_path)
     assert t3.batch_ledger_retention is None
+
+
+def test_evicted_overwrite_replay_reapplies_full_overwrite(spark, tmpdir_path):
+    """The first caveat of the bounded ledger: an overwrite() batch id
+    that aged out re-applies the FULL overwrite, replacing every merge
+    committed since — not a semantic no-op like an evicted merge."""
+    t = _make(spark, tmpdir_path, batch_ledger_retention=1)
+    base = spark.createDataFrame([("r", "a", "v1")], SCHEMA)
+    t.overwrite(base, batch_id="load-0")
+    t.merge_cdc(_changes(spark, [("r", "b", "w1", "I", 1)]), "epoch-1")
+    assert t.manifest["commits"] == ["epoch-1"]  # load-0 evicted
+    assert _state(t) == {("r", "a"): "v1", ("r", "b"): "w1"}
+    v = t.version
+    t.overwrite(base, batch_id="load-0")
+    assert t.version == v + 1
+    # epoch-1's row is gone: the replay was a real overwrite
+    assert _state(t) == {("r", "a"): "v1"}

@@ -48,7 +48,7 @@ def _keys_in_distinct_buckets(table, spark, n=2, probe=32):
     picked, buckets = [], set()
     for i in range(probe):
         key = ("r", f"k{i}")
-        [b] = table.affected_buckets(
+        [b] = table.affected_bucket_offsets(
             _changes(spark, [(*key, "x", "I", 1)])
         )
         if b not in buckets:

@@ -33,7 +33,7 @@ def _ids_in_distinct_buckets(table, spark, n=2, probe=64):
     """First `n` single-key ids that land in pairwise-distinct buckets."""
     picked, buckets = [], set()
     for i in range(probe):
-        [b] = table.affected_buckets(_batch(spark, [(i, "x", "I", 1)]))
+        [b] = table.affected_bucket_offsets(_batch(spark, [(i, "x", "I", 1)]))
         if b not in buckets:
             picked.append(i)
             buckets.add(b)
@@ -45,7 +45,7 @@ def _ids_in_distinct_buckets(table, spark, n=2, probe=64):
 def _ids_in_same_bucket(table, spark, probe=64):
     by_bucket = {}
     for i in range(probe):
-        [b] = table.affected_buckets(_batch(spark, [(i, "x", "I", 1)]))
+        [b] = table.affected_bucket_offsets(_batch(spark, [(i, "x", "I", 1)]))
         by_bucket.setdefault(b, []).append(i)
         if len(by_bucket[b]) == 2:
             return by_bucket[b]

@@ -1,4 +1,4 @@
-"""Distributed CDC fold vs the sequential oracle, all strategies."""
+"""Distributed CDC fold vs the sequential oracle, for both LWW folds."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -7,6 +7,7 @@ from sap_spark.config import EngineConfig
 from sap_spark.operators.dedup import drop_cancelled, fold_changes, replay
 from sap_spark.sources.datagen import gen_change_events
 
+from tests.folds import FOLDS, replay_with
 from tests.oracle import fold_to_frame, sha256_hex
 
 CFG = EngineConfig().validate()
@@ -37,10 +38,10 @@ def test_drop_cancelled(spark, events):
     assert got == expected
 
 
-@pytest.mark.parametrize("strategy", ["fetch", "agg", "window", "window_salted"])
-def test_replay_matches_sequential_fold(spark, events, oracle_state, strategy):
+@pytest.mark.parametrize("fold", list(FOLDS))
+def test_replay_matches_sequential_fold(spark, events, oracle_state, fold):
     got = (
-        replay(events, CFG, strategy=strategy)
+        replay_with(fold, events, CFG)
         .orderBy("repo", "path")
         .toPandas()
         .reset_index(drop=True)
@@ -73,21 +74,23 @@ def test_fold_changes_keeps_last_delete(spark, events):
 
 
 def test_strategies_agree(spark, events):
+    """The fetch fold and the salted window it flips to on a hot key
+    yield identical rows."""
     outs = [
-        fold_changes(events, CFG, strategy=s)
+        fold(events, CFG)
         .orderBy("repo", "path")
         .select("repo", "path", "event_seq", "op", "commit")
         .collect()
-        for s in ["fetch", "agg", "window", "window_salted"]
+        for fold in FOLDS.values()
     ]
-    assert outs[0] == outs[1] == outs[2] == outs[3]
+    assert outs[0] == outs[1]
 
 
 def test_fetch_unique_per_key_with_duplicate_deliveries(spark, events):
     """Duplicate deliveries (same event_seq, later token) must yield exactly
     one winner row per key in the fetch path — the join on
     (key, seq, token) with max(struct(seq, token)) picks one delivery."""
-    folded = fold_changes(events, CFG, strategy="fetch")
+    folded = fold_changes(events, CFG)
     dup_keys = folded.groupBy("repo", "path").count().where(F.col("count") > 1)
     assert dup_keys.count() == 0
 
@@ -97,19 +100,19 @@ def test_fetch_unique_with_within_token_duplicate(spark, events):
     seq, token delivered twice) must still yield ≤1 row per key — the fetch
     join alone would fan out; the guard collapses it."""
     winners_sample = (
-        fold_changes(events, CFG, strategy="fetch").limit(5).drop("op", "event_seq")
+        fold_changes(events, CFG).limit(5).drop("op", "event_seq")
     )
     # re-inject an exact duplicate row of 5 winning deliveries
     dup_rows = events.join(
         winners_sample.select("repo", "path"), on=["repo", "path"], how="left_semi"
     )
     poisoned = events.unionByName(dup_rows)
-    folded = fold_changes(poisoned, CFG, strategy="fetch")
+    folded = fold_changes(poisoned, CFG)
     over = folded.groupBy("repo", "path").count().where(F.col("count") > 1)
     assert over.count() == 0
     # and the fold result is unchanged vs the clean log
     clean = (
-        fold_changes(events, CFG, strategy="fetch")
+        fold_changes(events, CFG)
         .orderBy("repo", "path").select("repo", "path", "event_seq", "op").collect()
     )
     got = (
@@ -118,29 +121,25 @@ def test_fetch_unique_with_within_token_duplicate(spark, events):
     assert got == clean
 
 
-def test_fetch_without_token_column_falls_back(spark, events):
-    """Without a delivery id (no delta_token column) the fetch strategy must
-    fall back to the single-pass agg and still match it."""
+def test_fetch_without_token_column_falls_back(spark, events, oracle_state):
+    """Without a delivery id (no delta_token column) the fetch fold's
+    payload probe orders duplicate deliveries by event_seq alone — their
+    payloads are identical, so the final state still matches the
+    sequential fold."""
     no_tok = events.drop("delta_token")
     got = (
-        fold_changes(no_tok, CFG, strategy="fetch")
+        replay(no_tok, CFG)
         .orderBy("repo", "path")
-        .select("repo", "path", "event_seq", "op", "commit")
-        .collect()
+        .toPandas()
+        .reset_index(drop=True)
     )
-    want = (
-        fold_changes(no_tok, CFG, strategy="agg")
-        .orderBy("repo", "path")
-        .select("repo", "path", "event_seq", "op", "commit")
-        .collect()
-    )
-    assert got == want
+    assert got.equals(oracle_state)
 
 
 def test_tiebreak_is_max_token_across_strategies(spark):
     """Pinned LWW tie-break: a duplicate delivery (same event_seq under a
     later delta_token) resolves to the LARGEST token in every token-aware
-    strategy. Payloads deliberately differ per delivery here (violating the
+    fold. Payloads deliberately differ per delivery here (violating the
     identical-payload contract) purely to make the tie-break observable."""
     rows = [
         ("r1", "a.py", 5, "T01", "I", "c-old", "py", "first delivery"),
@@ -153,17 +152,17 @@ def test_tiebreak_is_max_token_across_strategies(spark):
         "repo string, path string, event_seq long, delta_token string, "
         "op string, commit string, lang string, content string",
     )
-    for strategy in ["fetch", "window", "window_salted"]:
+    for name, fold in FOLDS.items():
         got = {
             (r["repo"], r["path"]): r["commit"]
-            for r in fold_changes(log, CFG, strategy=strategy).collect()
+            for r in fold(log, CFG).collect()
         }
-        assert got == {("r1", "a.py"): "c-new", ("r2", "b.py"): "c9"}, strategy
+        assert got == {("r1", "a.py"): "c-new", ("r2", "b.py"): "c9"}, name
 
 
 def test_strategies_agree_with_duplicate_deliveries(spark):
     """Contract-conformant duplicate deliveries (identical payloads) yield
-    value-identical one-row-per-key output under ALL four strategies."""
+    value-identical one-row-per-key output under both folds."""
     base = [
         ("r1", "a.py", 5, "T01", "I", "c5", "py", "body5"),
         ("r1", "a.py", 7, "T02", "U", "c7", "py", "body7"),
@@ -178,16 +177,16 @@ def test_strategies_agree_with_duplicate_deliveries(spark):
         "op string, commit string, lang string, content string",
     )
     outs = []
-    for strategy in ["fetch", "agg", "window", "window_salted"]:
+    for name, fold in FOLDS.items():
         out = (
-            fold_changes(log, CFG, strategy=strategy)
+            fold(log, CFG)
             .orderBy("repo", "path")
             .select("repo", "path", "event_seq", "op", "commit", "content")
             .collect()
         )
-        assert len(out) == 2, strategy
+        assert len(out) == 2, name
         outs.append(out)
-    assert outs[0] == outs[1] == outs[2] == outs[3]
+    assert outs[0] == outs[1]
 
 
 def test_null_rocancel_is_not_a_cancel(spark):

@@ -393,3 +393,65 @@ def test_evolve_schema_rejects_key_widening(spark):
     )
     assert t.evolve_schema(wide_payload) is True
     assert any("ADD COLUMNS" in s for s in fake.sqls())
+
+
+def test_affected_bucket_offsets_is_engine_hash_groupby(spark):
+    """The fused discovery agg runs on the Iceberg binding too: the same
+    bucket-keyed groupBy over the engine hash, never touching the
+    catalog — so the pipeline's one fold path holds on both backends."""
+    import pyspark.sql.functions as F
+
+    from sap_spark.plans.lake import bucket_expr
+
+    t, fake = _table(spark)
+    rows = [("r", f"f{i}", "body", "I", i + 1) for i in range(40)]
+    events = spark.createDataFrame(
+        rows, "repo string, path string, content string, op string, event_seq long"
+    ).withColumn("__n_events", F.col("event_seq") % 3 + 1)
+    offsets = t.affected_bucket_offsets(
+        events, seq_column="event_seq", count_column="__n_events"
+    )
+    expected = {
+        r["b"]: (r["m"], r["n"], r["c"])
+        for r in events.groupBy(bucket_expr(KEYS, 8).alias("b"))
+        .agg(
+            F.max("event_seq").alias("m"),
+            F.count(F.lit(1)).alias("n"),
+            F.max("__n_events").alias("c"),
+        )
+        .collect()
+    }
+    assert {
+        b: (o["max_seq"], o["n_rows"], o["max_key_events"])
+        for b, o in offsets.items()
+    } == expected
+    assert fake.sqls() == []
+
+
+def test_pipelines_reject_epoch_tail_options_iceberg_lacks(spark, tmpdir_path):
+    """auto_compact_delta_files calls delta_file_counts() and
+    compact(buckets=, purge_tombstones=); auto_expire_keep calls
+    retained_manifest_count(). IcebergTable (merge_mode 'mor' by default)
+    implements none of them, so both pipelines must refuse the options
+    at construction instead of raising AttributeError in an epoch tail."""
+    from sap_spark.config import ConfigError, EngineConfig
+    from sap_spark.streaming.multitable import MultiTableCdcPipeline, TableTarget
+    from sap_spark.streaming.pipeline import CdcPipeline
+
+    cfg = EngineConfig(payload_columns=("content",)).validate()
+    t, fake = _table(spark)
+    assert t.merge_mode == "mor"
+    log, ckpt = f"{tmpdir_path}/log", f"{tmpdir_path}/ckpt"
+    for option, match in (
+        ({"auto_compact_delta_files": 4}, "delta_file_counts"),
+        ({"auto_expire_keep": 2}, "retained_manifest_count"),
+    ):
+        with pytest.raises(ConfigError, match=match):
+            CdcPipeline(spark, cfg, t, log, ckpt, **option)
+        with pytest.raises(ConfigError, match=match):
+            MultiTableCdcPipeline(
+                spark, {"repos": TableTarget(t, cfg, **option)}, log, ckpt
+            )
+    # without the options the Iceberg table is a valid pipeline target
+    CdcPipeline(spark, cfg, t, log, ckpt)
+    assert fake.sqls() == []

@@ -1,4 +1,4 @@
-"""Snapshot expiry, salted repartition, stateful cross-batch dedup."""
+"""Snapshot expiry, stateful cross-batch dedup."""
 
 import glob
 import os
@@ -7,7 +7,6 @@ import pyspark.sql.functions as F
 from pyspark.sql import types as T
 
 from sap_spark.config import EngineConfig
-from sap_spark.operators.dedup import fold_changes, salted_repartition
 from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.datagen import gen_change_events
 from sap_spark.streaming.pipeline import ingest_batch
@@ -110,25 +109,6 @@ def test_expire_snapshots_aborts_on_missing_referenced_file(spark, tmpdir_path):
     os.remove(victim)
     with pytest.raises(FileNotFoundError, match="aborted"):
         table.expire_snapshots(keep_last=1)
-
-
-def test_salted_repartition_spreads_hot_key(spark):
-    events = gen_change_events(spark, n_events=5000, n_keys=300, events_per_token=5000)
-    salted = salted_repartition(events, CFG, num_partitions=8)
-    # the hottest key must span >1 partition
-    dist = (
-        salted.withColumn("pid", F.spark_partition_id())
-        .groupBy("repo", "path")
-        .agg(F.countDistinct("pid").alias("nparts"), F.count(F.lit(1)).alias("n"))
-        .orderBy(F.desc("n"))
-        .limit(5)
-        .collect()
-    )
-    assert any(r["nparts"] > 1 for r in dist), dist
-    # fold result unchanged by the salted layout
-    a = fold_changes(events, CFG).orderBy("repo", "path").collect()
-    b = fold_changes(salted, CFG).orderBy("repo", "path").collect()
-    assert a == b
 
 
 def test_seen_seq_filter_stateful(spark, tmpdir_path):

@@ -369,7 +369,7 @@ def test_v4_delta_feed_to_cdc_pipeline(spark):
     ).validate()
     final = {
         (r["Repo"], r["Path"]): r["Content"]
-        for r in replay(log, cfg, strategy="fetch").collect()
+        for r in replay(log, cfg).collect()
     }
     assert final == {
         ("r1", "a.py"): "v2",   # upsert superseded by later delta

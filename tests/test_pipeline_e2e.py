@@ -349,12 +349,12 @@ def test_epoch_retry_is_noop(spark, tmpdir_path):
 
 
 def test_auto_strategy_flips_on_zipf_hot_key(spark, tmpdir_path):
-    """strategy='auto': a batch where one key carries half the events must
-    (a) be detected by the winner-scan probe, (b) fold via the salted
-    window path with bounded per-(key, salt) partition sizes, and (c)
-    produce exactly the sequential-fold state; a mild batch under the same
-    config stays on the fetch path. The chosen strategy and hottest-key
-    count are recorded in lineage."""
+    """The runtime hot-key flip: a batch where one key carries half the
+    events must (a) be detected by the winner-scan probe, (b) fold via the
+    salted window path with bounded per-(key, salt) partition sizes, and
+    (c) produce exactly the sequential-fold state; a mild batch under the
+    same config stays on the fetch path. The fold that ran and the
+    hottest-key count are recorded in lineage."""
     events = gen_change_events(
         spark, n_events=6000, n_keys=500, events_per_token=3000
     ).cache()
@@ -373,8 +373,7 @@ def test_auto_strategy_flips_on_zipf_hot_key(spark, tmpdir_path):
         spark, f"{tmpdir_path}/hot_repos", TARGET_SCHEMA,
         key_columns=["repo", "path"], num_buckets=8,
     )
-    # deliberately NO strategy argument: auto is the pipeline default,
-    # so the north-rule skew machinery must engage without opt-in
+    # no option: the north-rule skew machinery engages without opt-in
     pipe = CdcPipeline(
         spark, cfg, table, log_dir,
         checkpoint_dir=f"{tmpdir_path}/hot_ckpt",
@@ -402,7 +401,7 @@ def test_auto_strategy_flips_on_zipf_hot_key(spark, tmpdir_path):
     hot_total = hot_events.where(F.col("repo") == "org/hot").count()
     assert sizes <= 2 * hot_total / cfg.salt_partitions
 
-    # a mild batch under the same auto config stays on fetch
+    # a mild batch under the same config stays on fetch
     log2 = f"{tmpdir_path}/mildlog"
     write_change_log(events, log2)
     table2 = LakeTable.create(
@@ -470,35 +469,6 @@ def test_per_bucket_lineage_offsets(spark, tmpdir_path):
         .collect()
     }
     assert pipe.bucket_high_water() == actual
-
-
-def test_window_strategy_records_no_bucket_offsets(spark, tmpdir_path):
-    """The window/agg strategies fold via full-frame plans whose raw max
-    seq may belong to a cancelled event, so recording offsets from the
-    raw batch would overstate the true high-water — those epochs carry
-    bucket_offsets=None (and bucket_high_water() stays empty) rather
-    than a wrong number. Final state is unaffected."""
-    events = gen_change_events(
-        spark, n_events=2000, n_keys=200, events_per_token=1000
-    ).cache()
-    log_dir = f"{tmpdir_path}/log"
-    write_change_log(events, log_dir)
-    table = LakeTable.create(
-        spark, f"{tmpdir_path}/repos", TARGET_SCHEMA,
-        key_columns=["repo", "path"], num_buckets=8,
-    )
-    pipe = CdcPipeline(
-        spark, CFG, table, log_dir,
-        checkpoint_dir=f"{tmpdir_path}/ckpt",
-        strategy="window", pipeline_id="win-offsets",
-    )
-    pipe.run_available_now(timeout_sec=300)
-    applied = [r for r in pipe.lineage() if r["applied"]]
-    assert applied and all(r["bucket_offsets"] is None for r in applied)
-    assert pipe.bucket_high_water() == {}
-    table = LakeTable(spark, table.path)
-    got = table.read().orderBy("repo", "path").toPandas().reset_index(drop=True)
-    assert got.equals(fold_to_frame(events.toPandas()))
 
 
 def test_local_path_percent_decodes_uris():

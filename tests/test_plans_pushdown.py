@@ -4,14 +4,13 @@ visible in `explain` output, not assumed.
 - OData-style options reach the parquet scan (PushedFilters / ReadSchema)
 - column pruning keeps untouched columns out of the scan
 - dimension joins broadcast
-- LWW aggregation does map-side partial aggregation (partial_max before
-  the exchange)
+- LWW winner selection does map-side partial aggregation (partial_max
+  before the exchange)
 """
 
 import pyspark.sql.functions as F
 
 from sap_spark.config import EngineConfig
-from sap_spark.operators.dedup import lww_agg
 from sap_spark.sources.changelog import ODataQueryOptions, apply_query_options
 
 
@@ -58,23 +57,6 @@ def test_dimension_join_broadcasts(spark, sf_dir):
     plan = plan_of(joined)
     assert plan.count("BroadcastHashJoin") >= 2  # tree + node detail lines
     assert "SortMergeJoin" not in plan
-
-
-def test_lww_agg_has_partial_aggregation(spark, sf_dir):
-    """Map-side combine is the skew defense — it must appear as a partial
-    aggregate BEFORE the exchange in the physical plan."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        F.col("user_id").alias("key"),
-        F.col("event_id").alias("event_seq"),
-        F.lit("I").alias("op"),
-        F.col("value"),
-    )
-    cfg = EngineConfig(key_columns=("key",)).validate()
-    plan = plan_of(lww_agg(ev, cfg))
-    # partial_max/partial_max_by run in the map stage (the detail section
-    # lists them on the aggregate node feeding the Exchange)
-    assert "partial_max" in plan and "partial_max_by" in plan
-    assert plan.count("Exchange (") == 1  # exactly one shuffle, on the key
 
 
 def test_bucket_pruned_merge_reads_only_affected_files(spark, tmpdir_path):
@@ -177,11 +159,11 @@ def test_mor_read_folds_only_delta_buckets(spark, tmpdir_path):
 
 
 def test_lww_fetch_prunes_payload_and_broadcasts(spark, tmpdir_path):
-    """The default fetch fold must (a) never read payload columns in the
-    winner-selection branch — visible as a second scan whose ReadSchema
-    excludes content — and (b) join the winner set back with a broadcast
-    hash join, never a shuffle of the payload side."""
-    from sap_spark.operators.dedup import lww_fetch
+    """The fetch fold (fold_changes) must (a) never read payload columns
+    in the winner-selection branch — visible as a second scan whose
+    ReadSchema excludes content — and (b) join the winner set back with a
+    broadcast hash join, never a shuffle of the payload side."""
+    from sap_spark.operators.dedup import fold_changes
     from sap_spark.sources.datagen import gen_change_events, write_change_log
 
     events = gen_change_events(spark, n_events=2000, n_keys=200, events_per_token=500)
@@ -189,7 +171,7 @@ def test_lww_fetch_prunes_payload_and_broadcasts(spark, tmpdir_path):
     log = spark.read.parquet(f"{tmpdir_path}/log")
 
     cfg = EngineConfig().validate()
-    plan = plan_of(lww_fetch(log, cfg))
+    plan = plan_of(fold_changes(log, cfg))
 
     assert "BroadcastHashJoin" in plan
     # one scan per branch: the winner branch must NOT read content/commit
@@ -280,7 +262,7 @@ def test_lww_window_salted_prunes_payload_below_sorts(spark, tmpdir_path):
     log = spark.read.parquet(f"{tmpdir_path}/wlog")
 
     cfg = EngineConfig().validate()
-    plan = plan_of(lww_window(log, cfg, salted=True))
+    plan = plan_of(lww_window(log, cfg))
     physical = plan.split("== Physical Plan ==")[-1]
 
     # formatted explain: per-node detail sections separated by blank lines

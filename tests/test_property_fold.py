@@ -1,5 +1,5 @@
 """Property-based fold testing: random adversarial change logs vs the
-sequential oracle, for every LWW strategy.
+sequential oracle, for both LWW folds.
 
 Hypothesis explores corners the fixed fixtures can't: cancel chains at
 token boundaries, delete-then-reinsert, duplicate deliveries of deletes,
@@ -14,8 +14,9 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from sap_spark.config import EngineConfig
-from sap_spark.operators.dedup import fold_changes, replay
+from sap_spark.operators.dedup import fold_changes
 
+from tests.folds import FOLDS, replay_with
 from tests.oracle import fold_to_frame
 
 CFG = EngineConfig().validate()
@@ -96,18 +97,18 @@ def event_logs(draw) -> pd.DataFrame:
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-@pytest.mark.parametrize("strategy", ["fetch", "agg", "window", "window_salted"])
-def test_fold_matches_sequential_oracle(spark, strategy, log):
+@pytest.mark.parametrize("fold", list(FOLDS))
+def test_fold_matches_sequential_oracle(spark, fold, log):
     expected = fold_to_frame(log)
     sdf = spark.createDataFrame(log, schema=SPARK_SCHEMA)
     got = (
-        replay(sdf, CFG, strategy=strategy)
+        replay_with(fold, sdf, CFG)
         .orderBy("repo", "path")
         .toPandas()
         .reset_index(drop=True)
     )
     assert got.equals(expected), (
-        f"strategy={strategy}\nlog:\n{log}\ngot:\n{got}\nexpected:\n{expected}"
+        f"fold={fold}\nlog:\n{log}\ngot:\n{got}\nexpected:\n{expected}"
     )
 
 

@@ -15,6 +15,7 @@ from sap_spark.schema.compat import SchemaCompatError
 from sap_spark.sources.datagen import gen_change_events
 from sap_spark.streaming.pipeline import CdcPipeline, ingest_batch
 
+from tests.folds import FOLDS, replay_with
 from tests.oracle import fold_to_frame
 
 CFG = EngineConfig().validate()
@@ -127,15 +128,12 @@ def test_narrow_key_dtype_feed_buckets_consistently(spark, tmpdir_path):
         ),
         rows,
     )
-    affected = table.affected_buckets(ints)
+    affected = sorted(table.affected_bucket_offsets(ints, seq_column="event_seq"))
     assert table.merge_cdc(ints, "b0", affected_buckets=affected)
     got = table.read().orderBy("id").collect()
     assert [r["id"] for r in got] == list(range(50))
     # point-lookup pruning agrees too (literal is hashed at the table dtype)
     assert table.read(where="id = 7").collect()[0]["v"] == "v7"
-    # offsets variant shares the conformed hash
-    offsets = table.affected_bucket_offsets(ints, seq_column="event_seq")
-    assert sorted(offsets) == affected
 
 
 # -- null-op events are inert, never ghost rows -----------------------------
@@ -177,14 +175,13 @@ def test_null_op_event_creates_no_ghost_row(spark, tmpdir_path, merge_mode):
 # -- null-op is inert at the FOLD too (batch replay ≡ incremental) ----------
 
 
-@pytest.mark.parametrize("strategy", ["fetch", "agg", "window", "window_salted"])
-def test_null_op_inert_in_fold(spark, tmpdir_path, strategy):
+@pytest.mark.parametrize("fold", list(FOLDS))
+def test_null_op_inert_in_fold(spark, tmpdir_path, fold):
     """A null-op event that would win LWW must not erase the key's earlier
     valid state: batch replay (fold the whole log) and the incremental path
     (the same events split across epochs, where merge_cdc drops null-op
-    rows) have to agree. Before the fix every strategy let the null-op win
+    rows) have to agree. Before the fix every fold let the null-op win
     and the key vanished from the one-shot replay."""
-    from sap_spark.operators.dedup import replay
 
     full = T.StructType(
         list(INT_KEY_SCHEMA.fields)
@@ -206,7 +203,7 @@ def test_null_op_inert_in_fold(spark, tmpdir_path, strategy):
         key_columns=("id",),
         payload_columns=("v",),
     ).validate()
-    got = replay(events, cfg, strategy=strategy).orderBy("id").collect()
+    got = replay_with(fold, events, cfg).orderBy("id").collect()
     assert [(r["id"], r["v"]) for r in got] == [(1, "a")]
 
 

@@ -10,9 +10,10 @@ growth on the read path, unbounded delta-file accumulation) fails at
 Protocol: one deterministic log of ``--events`` events split into
 ``--epochs`` delta tokens (one file per token, maxFilesPerTrigger=1, so
 the streaming source delivers exactly one token per micro-batch — the
-production cadence). The pipeline runs with its defaults (strategy=auto,
-token atomicity on) plus auto-compaction at the documented delta-file
-threshold, exactly as a long-lived deployment would. Per-epoch walls,
+production cadence). The pipeline runs with its defaults (the one LWW
+fold, flipping to the salted window only on a hot key; token atomicity
+on) plus auto-compaction at the documented delta-file threshold, exactly
+as a long-lived deployment would. Per-epoch walls,
 events/sec, merge phases and table_version come from the pipeline's own
 lineage records (streaming/pipeline.py::_record_lineage) — no extra
 instrumentation is added to the measured path.
