@@ -28,6 +28,8 @@ Design notes for cluster scale:
 from __future__ import annotations
 
 import argparse
+import contextlib
+import json
 import os
 import sys
 import zipfile
@@ -63,111 +65,124 @@ def _default_schema() -> T.StructType:
     )
 
 
+@contextlib.contextmanager
+def _session(args, spark, app_name: str, needed: bool = True):
+    """The command's SparkSession: ``spark`` when the caller passed one
+    (or ``needed`` is false — then ``spark`` may be None), else the
+    engine's tuned session from ``--master``/``--shuffle-partitions``.
+    getOrCreate may hand back a pre-existing session (tests, notebook
+    embedding); only a session this call created is stopped, and it is
+    stopped even when the command raises."""
+    if spark is not None or not needed:
+        yield spark
+        return
+    from pyspark.sql import SparkSession
+
+    from sap_spark.config import tuned_builder
+
+    own_session = SparkSession.getActiveSession() is None
+    spark = tuned_builder(
+        app_name=app_name,
+        master=args.master,
+        shuffle_partitions=args.shuffle_partitions,
+    ).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    try:
+        yield spark
+    finally:
+        if own_session:
+            spark.stop()
+
+
 def run_ingest(args, spark=None) -> dict:
     """Create-if-missing the target table, replay the change log into it,
     return the lineage summary."""
-    from sap_spark.config import EngineConfig, tuned_builder
+    from sap_spark.config import EngineConfig
     from sap_spark.plans.lake import LakeTable
     from sap_spark.streaming.pipeline import CdcPipeline, fold_lineage
 
-    own_session = False
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        # getOrCreate may hand back a pre-existing session (tests, notebook
-        # embedding) — only stop a session this call actually created
-        own_session = SparkSession.getActiveSession() is None
-        spark = tuned_builder(
-            app_name="sap_spark-cdc-ingest",
-            master=args.master,
-            shuffle_partitions=args.shuffle_partitions,
-        ).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-
-    keys = args.keys.split(",")
-    schema = (
-        T.StructType.fromDDL(args.schema) if args.schema else _default_schema()
-    )
-    # --buckets omitted → derive from the change-log size (upper bound on
-    # the table payload) via the documented ~payload/256MB rule. Skipped
-    # when the table already exists: resuming over a million-file log
-    # must not pay an O(log files) stat walk for a number create()
-    # would discard anyway.
-    exists = os.path.exists(os.path.join(args.table, "_meta", "VERSION"))
-    expected_bytes = None
-    if args.buckets is None and not exists and os.path.isdir(args.log):
-        expected_bytes = sum(
-            os.path.getsize(os.path.join(dp, f))
-            for dp, _, fs in os.walk(args.log)
-            for f in fs
+    with _session(args, spark, "sap_spark-cdc-ingest") as spark:
+        keys = args.keys.split(",")
+        schema = (
+            T.StructType.fromDDL(args.schema) if args.schema else _default_schema()
         )
-    table = LakeTable.create(
-        spark, args.table, schema, key_columns=keys,
-        num_buckets=args.buckets, if_not_exists=True,
-        expected_payload_bytes=expected_bytes,
-        merge_mode=args.merge_mode or "cow",
-        stats_columns=_split_cols(getattr(args, "stats_columns", None)),
-        sort_columns=_split_cols(getattr(args, "sort_columns", None)),
-        bloom_columns=_split_cols(getattr(args, "bloom_columns", None)),
-        max_records_per_file=getattr(args, "max_records_per_file", None),
-    )
-    if args.merge_mode is not None and table.merge_mode != args.merge_mode:
-        # an EXPLICIT --merge-mode against an existing table with a
-        # different stored mode: the stored mode is a table-layout
-        # property and wins — surface the mismatch instead of silently
-        # ignoring the flag. (Omitting the flag on re-ingest is the
-        # normal resume workflow and uses the stored mode.)
-        raise SystemExit(
-            f"--merge-mode {args.merge_mode} conflicts with existing table "
-            f"at {args.table} (stored merge_mode={table.merge_mode}); "
-            "recreate the table to change its merge mode"
+        # --buckets omitted → derive from the change-log size (upper bound on
+        # the table payload) via the documented ~payload/256MB rule. Skipped
+        # when the table already exists: resuming over a million-file log
+        # must not pay an O(log files) stat walk for a number create()
+        # would discard anyway.
+        exists = os.path.exists(os.path.join(args.table, "_meta", "VERSION"))
+        expected_bytes = None
+        if args.buckets is None and not exists and os.path.isdir(args.log):
+            expected_bytes = sum(
+                os.path.getsize(os.path.join(dp, f))
+                for dp, _, fs in os.walk(args.log)
+                for f in fs
+            )
+        table = LakeTable.create(
+            spark, args.table, schema, key_columns=keys,
+            num_buckets=args.buckets, if_not_exists=True,
+            expected_payload_bytes=expected_bytes,
+            merge_mode=args.merge_mode or "cow",
+            stats_columns=_split_cols(getattr(args, "stats_columns", None)),
+            sort_columns=_split_cols(getattr(args, "sort_columns", None)),
+            bloom_columns=_split_cols(getattr(args, "bloom_columns", None)),
+            max_records_per_file=getattr(args, "max_records_per_file", None),
         )
-    if args.auto_compact_deltas is not None and table.merge_mode != "mor":
-        raise SystemExit(
-            "--auto-compact-deltas only applies to merge-on-read tables; "
-            f"table at {args.table} is merge_mode={table.merge_mode} "
-            "(pass --merge-mode mor at table creation)"
+        if args.merge_mode is not None and table.merge_mode != args.merge_mode:
+            # an EXPLICIT --merge-mode against an existing table with a
+            # different stored mode: the stored mode is a table-layout
+            # property and wins — surface the mismatch instead of silently
+            # ignoring the flag. (Omitting the flag on re-ingest is the
+            # normal resume workflow and uses the stored mode.)
+            raise SystemExit(
+                f"--merge-mode {args.merge_mode} conflicts with existing table "
+                f"at {args.table} (stored merge_mode={table.merge_mode}); "
+                "recreate the table to change its merge mode"
+            )
+        if args.auto_compact_deltas is not None and table.merge_mode != "mor":
+            raise SystemExit(
+                "--auto-compact-deltas only applies to merge-on-read tables; "
+                f"table at {args.table} is merge_mode={table.merge_mode} "
+                "(pass --merge-mode mor at table creation)"
+            )
+        # layout knobs are mutable table properties: explicit flags against a
+        # PRE-EXISTING table apply as a metadata-only alter (a fresh create
+        # already carries them, so this is a no-op commit-wise there). Runs
+        # AFTER every flag validation above — a rejected invocation must not
+        # have already committed a property change.
+        explicit = {}
+        for knob in ("stats_columns", "sort_columns", "bloom_columns"):
+            v = getattr(args, knob, None)
+            if v is not None:
+                explicit[knob] = _split_cols(v)
+        if getattr(args, "max_records_per_file", None) is not None:
+            explicit["max_records_per_file"] = args.max_records_per_file
+        if explicit:
+            table.alter_properties(**explicit)
+        cfg = EngineConfig(
+            key_columns=tuple(keys),
+            num_buckets=table.num_buckets,
+        ).validate()
+        pipe = CdcPipeline(
+            spark, cfg, table, args.log,
+            checkpoint_dir=args.checkpoint,
+            max_files_per_trigger=args.max_files_per_trigger,
+            pipeline_id=args.pipeline_id,
+            dead_letter_dir=args.dead_letter_dir,
+            auto_compact_delta_files=args.auto_compact_deltas,
+            auto_expire_keep=args.auto_expire_keep,
+            auto_expire_slack=args.auto_expire_slack,
+            auto_expire_grace_seconds=args.auto_expire_grace,
         )
-    # layout knobs are mutable table properties: explicit flags against a
-    # PRE-EXISTING table apply as a metadata-only alter (a fresh create
-    # already carries them, so this is a no-op commit-wise there). Runs
-    # AFTER every flag validation above — a rejected invocation must not
-    # have already committed a property change.
-    explicit = {}
-    for knob in ("stats_columns", "sort_columns", "bloom_columns"):
-        v = getattr(args, knob, None)
-        if v is not None:
-            explicit[knob] = _split_cols(v)
-    if getattr(args, "max_records_per_file", None) is not None:
-        explicit["max_records_per_file"] = args.max_records_per_file
-    if explicit:
-        table.alter_properties(**explicit)
-    cfg = EngineConfig(
-        key_columns=tuple(keys),
-        num_buckets=table.num_buckets,
-    ).validate()
-    pipe = CdcPipeline(
-        spark, cfg, table, args.log,
-        checkpoint_dir=args.checkpoint,
-        max_files_per_trigger=args.max_files_per_trigger,
-        pipeline_id=args.pipeline_id,
-        dead_letter_dir=args.dead_letter_dir,
-        auto_compact_delta_files=args.auto_compact_deltas,
-        auto_expire_keep=args.auto_expire_keep,
-        auto_expire_slack=args.auto_expire_slack,
-        auto_expire_grace_seconds=args.auto_expire_grace,
-    )
-    pipe.run_available_now(timeout_sec=args.timeout)
-    fold = fold_lineage(pipe.lineage())
-    summary = {
-        "epochs_applied": fold["epochs_applied"],
-        "events": fold["events"],
-        "quarantined": fold["quarantined"],
-        "table_version": LakeTable(spark, args.table).version,
-    }
-    if own_session:
-        spark.stop()
-    return summary
+        pipe.run_available_now(timeout_sec=args.timeout)
+        fold = fold_lineage(pipe.lineage())
+        return {
+            "epochs_applied": fold["epochs_applied"],
+            "events": fold["events"],
+            "quarantined": fold["quarantined"],
+            "table_version": LakeTable(spark, args.table).version,
+        }
 
 
 def _split_cols(v: "str | None") -> "list[str] | None":
@@ -180,99 +195,86 @@ def run_maintain(args, spark=None) -> dict:
     expire old snapshots. The checkpoint-barrier op of the MOR loop:
     schedule it when no out-of-order events older than any tombstone can
     still arrive (below the low-watermark delta token)."""
-    from sap_spark.config import tuned_builder
     from sap_spark.plans.lake import LakeTable
 
-    own_session = False
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        own_session = SparkSession.getActiveSession() is None
-        spark = tuned_builder(
-            app_name="sap_spark-maintain", master=args.master,
-            shuffle_partitions=args.shuffle_partitions,
-        ).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-
-    table = LakeTable(spark, args.table)
-    summary: dict = {"table_version_before": table.version}
-    zorder = getattr(args, "zorder", None)
-    zcols = _split_cols(zorder)
-    rebucket_to = getattr(args, "rebucket", None)
-    if zcols and not (args.compact or rebucket_to is not None):
-        # silently ignoring a clustering request would leave the
-        # operator believing the table was rewritten
-        raise SystemExit("--zorder requires --compact or --rebucket")
-    if rebucket_to is not None:
-        if str(rebucket_to) == "auto":
-            # re-derive from what the table holds NOW (the same
-            # ~payload/256MB rule create uses for the change log): the
-            # count chosen at creation was sized for day-one data
-            from sap_spark.plans.lake import derive_num_buckets
-
-            payload, missing = 0, 0
-            for entries in table.manifest["buckets"].values():
-                for e in entries:
-                    try:
-                        payload += os.path.getsize(e["path"])
-                    except OSError:
-                        missing += 1
-            if missing:
-                # entry paths are re-rooted onto this handle's root at
-                # load, so a missing file here is real corruption — an
-                # auto count derived from partial payload would silently
-                # undersize the reshard; make the operator run doctor
-                raise SystemExit(
-                    f"--rebucket auto: {missing} referenced data files "
-                    "are missing — run `cli doctor` and repair before "
-                    "resharding (a payload sum over the survivors would "
-                    "undersize the new bucket count)"
-                )
-            rebucket_to = derive_num_buckets(payload)
-            summary["rebucket_auto_payload_bytes"] = payload
-            if rebucket_to == table.num_buckets:
-                summary["rebucketed_to"] = rebucket_to
-                summary["rebucket_noop"] = True
-                rebucket_to = None  # already right-sized: skip the rewrite
-                if zcols and not args.compact:
-                    # the clustering request must still be honored: a
-                    # right-sized table gets the plain zordered rewrite
-                    table.compact(only_dirty=False, zorder=zcols)
-                    summary["compacted"] = True
-                    summary["zorder"] = zcols
+    with _session(args, spark, "sap_spark-maintain") as spark:
+        table = LakeTable(spark, args.table)
+        summary: dict = {"table_version_before": table.version}
+        zorder = getattr(args, "zorder", None)
+        zcols = _split_cols(zorder)
+        rebucket_to = getattr(args, "rebucket", None)
+        if zcols and not (args.compact or rebucket_to is not None):
+            # silently ignoring a clustering request would leave the
+            # operator believing the table was rewritten
+            raise SystemExit("--zorder requires --compact or --rebucket")
         if rebucket_to is not None:
-            try:
-                target = int(rebucket_to)
-            except ValueError:
-                raise SystemExit(
-                    f"--rebucket must be an integer or 'auto', got {rebucket_to!r}"
-                )
-            table.rebucket(target, zorder=zcols)
-            summary["rebucketed_to"] = target
+            if str(rebucket_to) == "auto":
+                # re-derive from what the table holds NOW (the same
+                # ~payload/256MB rule create uses for the change log): the
+                # count chosen at creation was sized for day-one data
+                from sap_spark.plans.lake import derive_num_buckets
+
+                payload, missing = 0, 0
+                for entries in table.manifest["buckets"].values():
+                    for e in entries:
+                        try:
+                            payload += os.path.getsize(e["path"])
+                        except OSError:
+                            missing += 1
+                if missing:
+                    # entry paths are re-rooted onto this handle's root at
+                    # load, so a missing file here is real corruption — an
+                    # auto count derived from partial payload would silently
+                    # undersize the reshard; make the operator run doctor
+                    raise SystemExit(
+                        f"--rebucket auto: {missing} referenced data files "
+                        "are missing — run `cli doctor` and repair before "
+                        "resharding (a payload sum over the survivors would "
+                        "undersize the new bucket count)"
+                    )
+                rebucket_to = derive_num_buckets(payload)
+                summary["rebucket_auto_payload_bytes"] = payload
+                if rebucket_to == table.num_buckets:
+                    summary["rebucketed_to"] = rebucket_to
+                    summary["rebucket_noop"] = True
+                    rebucket_to = None  # already right-sized: skip the rewrite
+                    if zcols and not args.compact:
+                        # the clustering request must still be honored: a
+                        # right-sized table gets the plain zordered rewrite
+                        table.compact(only_dirty=False, zorder=zcols)
+                        summary["compacted"] = True
+                        summary["zorder"] = zcols
+            if rebucket_to is not None:
+                try:
+                    target = int(rebucket_to)
+                except ValueError:
+                    raise SystemExit(
+                        f"--rebucket must be an integer or 'auto', got {rebucket_to!r}"
+                    )
+                table.rebucket(target, zorder=zcols)
+                summary["rebucketed_to"] = target
+                if zcols:
+                    summary["zorder"] = zcols
+        if args.compact:
+            # After a reshard the table is fully folded and clustered, so
+            # only the tombstone purge remains (--compact's documented
+            # checkpoint-barrier op): restrict to dirty buckets and keep
+            # the SAME clustering so the purge rewrite doesn't revert them
+            # to linear order. Without a reshard, a clustering rewrite
+            # must cover the whole table or cold buckets stay linear.
+            only_dirty = True if rebucket_to is not None else not zcols
+            table.compact(only_dirty=only_dirty, zorder=zcols)
+            summary["compacted"] = True
             if zcols:
                 summary["zorder"] = zcols
-    if args.compact:
-        # After a reshard the table is fully folded and clustered, so
-        # only the tombstone purge remains (--compact's documented
-        # checkpoint-barrier op): restrict to dirty buckets and keep
-        # the SAME clustering so the purge rewrite doesn't revert them
-        # to linear order. Without a reshard, a clustering rewrite
-        # must cover the whole table or cold buckets stay linear.
-        only_dirty = True if rebucket_to is not None else not zcols
-        table.compact(only_dirty=only_dirty, zorder=zcols)
-        summary["compacted"] = True
-        if zcols:
-            summary["zorder"] = zcols
-    if args.expire_keep is not None:
-        summary["files_removed"] = table.expire_snapshots(
-            keep_last=args.expire_keep,
-            grace_seconds=float(getattr(args, "expire_grace", 0.0) or 0.0),
-        )
-    summary["table_version"] = table.version
-    summary["rows"] = LakeTable(spark, args.table).read().count()
-    if own_session:
-        spark.stop()
-    return summary
+        if args.expire_keep is not None:
+            summary["files_removed"] = table.expire_snapshots(
+                keep_last=args.expire_keep,
+                grace_seconds=float(getattr(args, "expire_grace", 0.0) or 0.0),
+            )
+        summary["table_version"] = table.version
+        summary["rows"] = LakeTable(spark, args.table).read().count()
+        return summary
 
 
 def run_bootstrap(args, spark=None) -> dict:
@@ -281,51 +283,36 @@ def run_bootstrap(args, spark=None) -> dict:
     `ingest` consumes (delta_token-partitioned parquet with op/event_seq/
     delta_token/rocancel envelope). The on-ramp for sources that can only
     be polled: poll → diff → same pipeline as a real change log."""
-    from sap_spark.config import tuned_builder
     from sap_spark.operators.snapshot import snapshot_diff
+    from sap_spark.sources.datagen import write_change_log
 
     import pyspark.sql.functions as F
 
-    own_session = False
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        own_session = SparkSession.getActiveSession() is None
-        spark = tuned_builder(
-            app_name="sap_spark-bootstrap", master=args.master,
-            shuffle_partitions=args.shuffle_partitions,
-        ).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-
-    keys = args.keys.split(",")
-    old = spark.read.parquet(args.old)
-    new = spark.read.parquet(args.new)
-    diff = snapshot_diff(old, new, keys)
-    # constant event_seq per bootstrap token: the diff is ≤1 row/key by
-    # construction, so no LWW ordering is needed within it, and later
-    # tokens use higher bases — no global window, scale-safe
-    events = (
-        diff.withColumn("delta_token", F.lit(args.token))
-        .withColumn("event_seq", F.lit(int(args.seq_base)))
-        .withColumn("rocancel", F.lit(False))
-        .withColumn("cancel_seq", F.lit(None).cast("long"))
-    )
-    # reuse the canonical log writer: token-aligned layout plus the 8 MB
-    # parquet row groups that keep a one-file token splittable into many
-    # scan tasks — a bootstrap diff is the largest token a log ever gets
-    from sap_spark.sources.datagen import write_change_log
-
-    write_change_log(events, args.out, mode="append")
-    by_op = {
-        r["op"]: r["n"]
-        for r in spark.read.parquet(args.out)
-        .where(F.col("delta_token") == args.token)
-        .groupBy("op").agg(F.count("*").alias("n")).collect()
-    }
-    n = sum(by_op.values())
-    if own_session:
-        spark.stop()
-    return {"token": args.token, "events": n, "by_op": by_op}
+    with _session(args, spark, "sap_spark-bootstrap") as spark:
+        keys = args.keys.split(",")
+        old = spark.read.parquet(args.old)
+        new = spark.read.parquet(args.new)
+        diff = snapshot_diff(old, new, keys)
+        # constant event_seq per bootstrap token: the diff is ≤1 row/key by
+        # construction, so no LWW ordering is needed within it, and later
+        # tokens use higher bases — no global window, scale-safe
+        events = (
+            diff.withColumn("delta_token", F.lit(args.token))
+            .withColumn("event_seq", F.lit(int(args.seq_base)))
+            .withColumn("rocancel", F.lit(False))
+            .withColumn("cancel_seq", F.lit(None).cast("long"))
+        )
+        # reuse the canonical log writer: token-aligned layout plus the 8 MB
+        # parquet row groups that keep a one-file token splittable into many
+        # scan tasks — a bootstrap diff is the largest token a log ever gets
+        write_change_log(events, args.out, mode="append")
+        by_op = {
+            r["op"]: r["n"]
+            for r in spark.read.parquet(args.out)
+            .where(F.col("delta_token") == args.token)
+            .groupBy("op").agg(F.count("*").alias("n")).collect()
+        }
+        return {"token": args.token, "events": sum(by_op.values()), "by_op": by_op}
 
 
 def run_status(args, spark=None) -> dict:
@@ -393,36 +380,26 @@ def run_status(args, spark=None) -> dict:
             None,
         ),
     }
-    from sap_spark.streaming.pipeline import fold_lineage, read_lineage_file
+    from sap_spark.streaming.pipeline import (
+        fold_lineage,
+        read_lineage_file,
+        table_lineage_path,
+    )
 
-    lineage_path = os.path.join(args.table, "_meta", "lineage.jsonl")
     # tolerant reader + the same fold the pipeline itself uses — status
     # must agree with `cli ingest` summaries and bucket_high_water()
     # (int bucket keys included), and must survive a torn in-flight
     # append from a live writer
     by_pid: dict = {}
-    for r in read_lineage_file(lineage_path):
+    for r in read_lineage_file(table_lineage_path(args.table)):
         pid = r.get("pipeline_id")
         if args.pipeline_id and pid != args.pipeline_id:
             continue
         by_pid.setdefault(pid, []).append(r)
     out["pipelines"] = {pid: fold_lineage(rs) for pid, rs in by_pid.items()}
     if args.count:
-        from sap_spark.config import tuned_builder
-
-        own_session = False
-        if spark is None:
-            from pyspark.sql import SparkSession
-
-            own_session = SparkSession.getActiveSession() is None
-            spark = tuned_builder(
-                app_name="sap_spark-status", master=args.master,
-                shuffle_partitions=args.shuffle_partitions,
-            ).getOrCreate()
-            spark.sparkContext.setLogLevel("WARN")
-        out["rows"] = LakeTable(spark, args.table).read().count()
-        if own_session:
-            spark.stop()
+        with _session(args, spark, "sap_spark-status") as spark:
+            out["rows"] = LakeTable(spark, args.table).read().count()
     return out
 
 
@@ -436,19 +413,9 @@ def run_doctor(args, spark=None) -> dict:
     from sap_spark.plans.doctor import check_table, table_fingerprint
 
     fingerprint = getattr(args, "fingerprint", False)
-    own_session = False
-    if (args.deep or fingerprint) and spark is None:
-        from pyspark.sql import SparkSession
-
-        from sap_spark.config import tuned_builder
-
-        own_session = SparkSession.getActiveSession() is None
-        spark = tuned_builder(
-            app_name="sap_spark-doctor", master=args.master,
-            shuffle_partitions=args.shuffle_partitions,
-        ).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-    try:
+    with _session(
+        args, spark, "sap_spark-doctor", needed=args.deep or fingerprint
+    ) as spark:
         report = check_table(
             args.table, spark=spark, version=args.version, deep=args.deep
         )
@@ -461,9 +428,6 @@ def run_doctor(args, spark=None) -> dict:
                 version=args.version,
             )
         return report
-    finally:
-        if own_session:
-            spark.stop()
 
 
 def run_changes(args, spark=None) -> dict:
@@ -473,48 +437,42 @@ def run_changes(args, spark=None) -> dict:
     incremental added-files path automatically; ``--incremental`` pins
     it (failing loudly if a rewrite/compaction is in the range),
     ``--snapshot`` forces the full snapshot diff."""
-    from sap_spark.config import tuned_builder
     from sap_spark.plans.lake import LakeTable
 
-    own_session = False
-    if spark is None:
-        from pyspark.sql import SparkSession
-
-        own_session = SparkSession.getActiveSession() is None
-        spark = tuned_builder(
-            app_name="sap_spark-changes", master=args.master,
-            shuffle_partitions=args.shuffle_partitions,
-        ).getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
-    table = LakeTable(spark, args.table)
-    incremental = True if args.incremental else (False if args.snapshot else None)
-    to_version = args.to_version if args.to_version is not None else table.version
-    feed = table.changes_between(
-        args.from_version, to_version, incremental=incremental
-    )
-    summary = {
-        "from_version": args.from_version,
-        "to_version": to_version,
-        "path": args.out,
-    }
-    if args.out:
-        feed.write.mode("overwrite").parquet(args.out)
-        summary["rows"] = spark.read.parquet(args.out).count()
-    else:
-        summary["rows"] = feed.count()
-    if own_session:
-        spark.stop()
-    return summary
+    with _session(args, spark, "sap_spark-changes") as spark:
+        table = LakeTable(spark, args.table)
+        incremental = True if args.incremental else (False if args.snapshot else None)
+        to_version = args.to_version if args.to_version is not None else table.version
+        feed = table.changes_between(
+            args.from_version, to_version, incremental=incremental
+        )
+        summary = {
+            "from_version": args.from_version,
+            "to_version": to_version,
+            "path": args.out,
+        }
+        if args.out:
+            feed.write.mode("overwrite").parquet(args.out)
+            summary["rows"] = spark.read.parquet(args.out).count()
+        else:
+            summary["rows"] = feed.count()
+        return summary
 
 
 def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser(prog="sap_spark.cli")
     sub = ap.add_subparsers(dest="cmd", required=True)
+    # session flags shared by every subcommand that may start Spark
+    session = argparse.ArgumentParser(add_help=False)
+    session.add_argument("--master", default=None,
+                         help="only for local runs; leave unset under spark-submit")
+    session.add_argument("--shuffle-partitions", type=int, default=None)
 
     p = sub.add_parser("package", help="zip sap_spark for --py-files")
     p.add_argument("--out", default="sap_spark.zip")
 
-    m = sub.add_parser("maintain", help="compact MOR deltas / tombstones, expire snapshots")
+    m = sub.add_parser("maintain", parents=[session],
+                       help="compact MOR deltas / tombstones, expire snapshots")
     m.add_argument("--table", required=True)
     m.add_argument("--compact", action="store_true")
     m.add_argument("--expire-keep", type=int, default=None,
@@ -538,10 +496,9 @@ def main(argv: list[str] | None = None) -> None:
                         "rewrite; folds MOR deltas, keeps tombstones — safe "
                         "at any epoch boundary, but single-writer: stop or "
                         "pause ingest first")
-    m.add_argument("--master", default=None)
-    m.add_argument("--shuffle-partitions", type=int, default=None)
 
-    b = sub.add_parser("bootstrap", help="diff two table snapshots into a change log")
+    b = sub.add_parser("bootstrap", parents=[session],
+                       help="diff two table snapshots into a change log")
     b.add_argument("--old", required=True, help="parquet dir of the previous image")
     b.add_argument("--new", required=True, help="parquet dir of the current image")
     b.add_argument("--out", required=True, help="change-log dir to append to")
@@ -549,11 +506,10 @@ def main(argv: list[str] | None = None) -> None:
     b.add_argument("--token", required=True, help="delta token for this diff")
     b.add_argument("--seq-base", default=0, help="event_seq for this token "
                    "(use a higher base per successive token)")
-    b.add_argument("--master", default=None)
-    b.add_argument("--shuffle-partitions", type=int, default=None)
 
     st = sub.add_parser(
         "status",
+        parents=[session],
         help="table + lineage state (driver-side metadata only; add "
              "--count for a live row count)",
     )
@@ -562,11 +518,10 @@ def main(argv: list[str] | None = None) -> None:
                     help="restrict the lineage rollup to one pipeline")
     st.add_argument("--count", action="store_true",
                     help="also count live rows (starts a Spark session)")
-    st.add_argument("--master", default=None)
-    st.add_argument("--shuffle-partitions", type=int, default=None)
 
     dr = sub.add_parser(
         "doctor",
+        parents=[session],
         help="read-only integrity audit: manifest chain, bucket map, "
              "referenced files, stats/bloom soundness, batch ledger "
              "(driver-side metadata only; --deep adds distributed "
@@ -586,11 +541,10 @@ def main(argv: list[str] | None = None) -> None:
     dr.add_argument("--fingerprint-columns", default=None,
                     help="comma-separated column subset to fingerprint "
                          "(default: full public schema)")
-    dr.add_argument("--master", default=None)
-    dr.add_argument("--shuffle-partitions", type=int, default=None)
 
     ch = sub.add_parser(
         "changes",
+        parents=[session],
         help="net I/U/D feed between two table versions "
              "(incremental on pure MOR-append ranges)",
     )
@@ -606,10 +560,9 @@ def main(argv: list[str] | None = None) -> None:
                            "fails if the range saw a rewrite/compaction")
     mode.add_argument("--snapshot", action="store_true",
                       help="force the full snapshot diff")
-    ch.add_argument("--master", default=None)
-    ch.add_argument("--shuffle-partitions", type=int, default=None)
 
-    i = sub.add_parser("ingest", help="replay a change log into a LakeTable")
+    i = sub.add_parser("ingest", parents=[session],
+                       help="replay a change log into a LakeTable")
     i.add_argument("--log", required=True, help="change-log directory (parquet, delta_token-partitioned)")
     i.add_argument("--table", required=True, help="LakeTable directory")
     i.add_argument("--checkpoint", required=True, help="streaming checkpoint dir")
@@ -664,43 +617,23 @@ def main(argv: list[str] | None = None) -> None:
                         "seconds (protects a concurrent writer's "
                         "in-flight commit)")
     i.add_argument("--timeout", type=float, default=None)
-    i.add_argument("--master", default=None,
-                   help="only for local runs; leave unset under spark-submit")
-    i.add_argument("--shuffle-partitions", type=int, default=None)
 
     args = ap.parse_args(argv)
     if args.cmd == "package":
-        out = package_pyfiles(args.out)
-        print(out)
-    elif args.cmd == "maintain":
-        import json
-
-        print(json.dumps(run_maintain(args)))
-    elif args.cmd == "bootstrap":
-        import json
-
-        print(json.dumps(run_bootstrap(args)))
-    elif args.cmd == "status":
-        import json
-
-        print(json.dumps(run_status(args)))
-    elif args.cmd == "changes":
-        import json
-
-        print(json.dumps(run_changes(args)))
-    elif args.cmd == "doctor":
-        import json
-
-        report = run_doctor(args)
-        print(json.dumps(report))
-        if not report["ok"]:
-            raise SystemExit(1)
-    else:
-        summary = run_ingest(args)
-        import json
-
-        print(json.dumps(summary))
-
+        print(package_pyfiles(args.out))
+        return
+    commands = {
+        "maintain": run_maintain,
+        "bootstrap": run_bootstrap,
+        "status": run_status,
+        "doctor": run_doctor,
+        "changes": run_changes,
+        "ingest": run_ingest,
+    }
+    out = commands[args.cmd](args)
+    print(json.dumps(out))
+    if args.cmd == "doctor" and not out["ok"]:
+        raise SystemExit(1)
 
 if __name__ == "__main__":
     main(sys.argv[1:])

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import os
 import re
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
@@ -57,8 +57,6 @@ class EngineConfig:
     # the epoch's bucket-discovery agg over the persisted, payload-pruned
     # winner scan, so measuring it costs no extra job.
     hot_key_threshold: int = 2_000_000
-    shuffle_partitions: int | None = None
-    extra_spark_conf: dict = field(default_factory=dict)
 
     def validate(self) -> "EngineConfig":
         errors: list[str] = []

@@ -60,10 +60,6 @@ def token_count_bpe(text: Column) -> Column:
     )
 
 
-def char_len(text: Column) -> Column:
-    return F.length(text)
-
-
 def alpha_ratio(text: Column) -> Column:
     """Fraction of alphabetic characters."""
     alpha = F.length(F.regexp_replace(text, r"[^A-Za-z]", ""))

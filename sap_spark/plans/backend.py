@@ -13,9 +13,9 @@ that suite unchanged.
 
 The pipeline layer (streaming/pipeline.py) and CLI only call this
 surface: ``affected_bucket_offsets`` + ``merge_cdc`` per epoch, ``version`` /
-``merge_mode`` / ``num_buckets`` for lineage and sizing, ``compact`` /
-``expire_snapshots`` for maintenance. Keeping the surface this narrow is
-what makes the swap possible.
+``merge_mode`` / ``num_buckets`` / ``last_merge_metrics`` for lineage and
+sizing, ``compact`` / ``expire_snapshots`` for maintenance. Keeping the
+surface this narrow is what makes the swap possible.
 
 Contract laws (each has a test of the same name in the contract suite):
 
@@ -74,6 +74,10 @@ class TableBackend(Protocol):
     # identity / layout ---------------------------------------------------
     path: str
     version: int
+    # per-phase timings of the last ``merge_cdc`` for the epoch's lineage
+    # record (``merge_phases``); None after a replayed batch or when the
+    # backend does not time its merge phases
+    last_merge_metrics: "dict | None"
 
     @property
     def schema(self) -> T.StructType: ...

@@ -299,6 +299,9 @@ class IcebergTable:
     lineage records, CLI output — is backend-agnostic).
     """
 
+    # merge_cdc is one MERGE INTO statement: no per-phase timings
+    last_merge_metrics: "dict | None" = None
+
     def __init__(self, spark: SparkSession, path: str, version: int | None = None):
         if path.count(".") != 2:
             raise ValueError(

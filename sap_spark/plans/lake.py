@@ -205,6 +205,9 @@ def derive_num_buckets(
 class LakeTable:
     """Handle to one table directory. See module docstring for semantics."""
 
+    # phase timings of the last merge_cdc (None until one applies)
+    last_merge_metrics: "dict | None" = None
+
     def __init__(
         self,
         spark: SparkSession,
@@ -877,11 +880,6 @@ class LakeTable:
             return sorted(int(r["b"]) for r in got) if got else None
         except Exception:  # noqa: BLE001 — mis-typed literal: no pruning
             return None
-
-    def _bucket_for_key_literals(self, pinned: "dict[str, object]") -> "int | None":
-        """Single-combo convenience over :meth:`_buckets_for_key_combos`."""
-        got = self._buckets_for_key_combos([pinned])
-        return got[0] if got else None
 
     # -- write paths ----------------------------------------------------------
 

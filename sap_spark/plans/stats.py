@@ -952,21 +952,3 @@ def key_membership_literals(
             {**c, col: v} for c in combos for v in sorted(per_key[col], key=repr)
         ]
     return combos
-
-
-def key_equality_literals(
-    conjuncts: "list[tuple[str, str, object]]", key_columns: "list[str]"
-) -> "dict[str, object] | None":
-    """``{key: literal}`` when EVERY key column is pinned by an equality
-    conjunct (the point-lookup shape that allows bucket pruning), else
-    None. Conflicting equalities on one key return None (the post-
-    filter will yield the honest empty result)."""
-    pinned: dict[str, object] = {}
-    for col, op, lit in conjuncts:
-        if col in key_columns and op == "=":
-            if col in pinned and pinned[col] != lit:
-                return None
-            pinned[col] = lit
-    if set(pinned) == set(key_columns):
-        return pinned
-    return None

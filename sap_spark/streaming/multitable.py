@@ -50,7 +50,6 @@ unchanged per table.
 from __future__ import annotations
 
 import dataclasses
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,7 +59,8 @@ from sap_spark.config import ConfigError, EngineConfig
 from sap_spark.streaming.pipeline import (
     CdcPipeline,
     TableTarget,
-    read_lineage_file,
+    fold_lineage,
+    table_lineage_path,
 )
 
 _UNROUTED = "<unrouted>"
@@ -232,21 +232,12 @@ class MultiTableCdcPipeline(CdcPipeline):
     def table_lineage(self, name: str) -> "list[dict]":
         """One target table's lineage records for this pipeline (the
         single-table-shaped records written next to the table)."""
-        import os
-
-        tgt = self.targets[name]
-        path = os.path.join(tgt.table.path, "_meta", "lineage.jsonl")
-        return [
-            r
-            for r in read_lineage_file(path)
-            if r.get("pipeline_id") == self.pipeline_id
-        ]
+        table = self.targets[name].table
+        return self._own_lineage(table_lineage_path(table.path))
 
     def bucket_high_water(self, name: "str | None" = None) -> "dict[int, int]":
         """Per-bucket high-water marks for one target table (multi-table
         pipelines have no single-table default — pass the target name)."""
-        from sap_spark.streaming.pipeline import fold_lineage
-
         if name is None:
             raise ValueError(
                 "multi-table pipeline: pass the target table name, e.g. "
@@ -256,16 +247,6 @@ class MultiTableCdcPipeline(CdcPipeline):
 
     # -- the per-epoch apply ------------------------------------------------
 
-    def _record_table_lineage(self, name: str, record: dict) -> None:
-        import json
-        import os
-
-        tgt = self.targets[name]
-        path = os.path.join(tgt.table.path, "_meta", "lineage.jsonl")
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        with open(path, "a") as f:
-            f.write(json.dumps(record) + "\n")
-
     def _process_batch(self, batch_df: DataFrame, epoch_id: int) -> None:
         """Fan one epoch out to every routed table (see module doc for
         the crash/retry argument). Route discovery and each table's
@@ -274,15 +255,6 @@ class MultiTableCdcPipeline(CdcPipeline):
             batch_df, epoch_id
         )
         if prepared is None:
-            self._record_lineage(
-                {
-                    "pipeline_id": self.pipeline_id,
-                    "epoch_id": epoch_id,
-                    "applied": False,
-                    "deferred_files": n_deferred,
-                    "wall_time": time.time(),
-                }
-            )
             return
         route = F.col(self.table_column)
         known = sorted(self.targets)
@@ -323,18 +295,14 @@ class MultiTableCdcPipeline(CdcPipeline):
                     prepared, name, tgt, epoch_id
                 )
             self._record_lineage(
+                epoch_id,
                 {
-                    "pipeline_id": self.pipeline_id,
-                    "epoch_id": epoch_id,
-                    "applied": any(t["applied"] for t in summary.values())
-                    if summary
-                    else False,
+                    "applied": any(t["applied"] for t in summary.values()),
                     "tables": summary,
                     "deferred_files": n_deferred,
                     "quarantined": n_quarantined,
                     "unrouted": n_unrouted,
-                    "wall_time": time.time(),
-                }
+                },
             )
         finally:
             prepared.unpersist()
@@ -372,15 +340,10 @@ class MultiTableCdcPipeline(CdcPipeline):
             f"{self.pipeline_id}-epoch-{epoch_id}-t-{name}",
             f"lineage-{epoch_id}-{name}",
         )
-        self._record_table_lineage(
-            name,
-            {
-                "pipeline_id": self.pipeline_id,
-                "table": name,
-                "epoch_id": epoch_id,
-                **stats,
-                "wall_time": time.time(),
-            },
+        self._record_lineage(
+            epoch_id,
+            {"table": name, **stats},
+            path=table_lineage_path(tgt.table.path),
         )
         return {
             k: stats[k]

@@ -163,6 +163,12 @@ def ingest_batch(
             cancelled.unpersist()
 
 
+def table_lineage_path(table_path: str) -> str:
+    """Where the per-epoch lineage records of the table at
+    ``table_path`` live."""
+    return os.path.join(table_path, "_meta", "lineage.jsonl")
+
+
 def read_lineage_file(path: str) -> list[dict]:
     """Parse a ``lineage.jsonl``, tolerating a torn TRAILING line: a
     reader racing the writer's append (``cli status`` against a live
@@ -459,22 +465,44 @@ class CdcPipeline:
             os.path.abspath(checkpoint_dir).encode()
         ).hexdigest()[:12]
         # table is None only for the multi-table router subclass
-        # (streaming/multitable.py), which sets its own lineage path
+        # (streaming/multitable.py), whose summary records live under
+        # the checkpoint dir
         self.lineage_path = (
-            os.path.join(table.path, "_meta", "lineage.jsonl")
+            table_lineage_path(table.path)
             if table is not None
             else os.path.join(checkpoint_dir, "sap_spark_lineage.jsonl")
         )
-        # parsed source-log entries, per log filename (see _seen_before)
-        self._source_log_cache: "dict[str, list[tuple[int, str]]]" = {}
+        # parsed source-log entries, per log filename (see _source_log)
+        self._source_log_cache: "dict[str, list[tuple]]" = {}
         self._deferred_dir = os.path.join(checkpoint_dir, "sap_spark_deferred")
 
     # -- lineage ---------------------------------------------------------
 
-    def _record_lineage(self, record: dict) -> None:
-        os.makedirs(os.path.dirname(self.lineage_path), exist_ok=True)
-        with open(self.lineage_path, "a") as f:
+    def _record_lineage(
+        self, epoch_id: int, fields: dict, path: "str | None" = None
+    ) -> None:
+        """Append one epoch record to this pipeline's lineage file (or to
+        ``path``) — the one lineage writer; :func:`read_lineage_file` is
+        the one reader."""
+        path = path or self.lineage_path
+        record = {
+            "pipeline_id": self.pipeline_id,
+            "epoch_id": epoch_id,
+            **fields,
+            "wall_time": time.time(),
+        }
+        os.makedirs(os.path.dirname(path), exist_ok=True)
+        with open(path, "a") as f:
             f.write(json.dumps(record) + "\n")
+
+    def _own_lineage(self, path: str) -> list[dict]:
+        """This pipeline's records in a lineage file that prior runs and
+        other pipelines also append to."""
+        return [
+            r
+            for r in read_lineage_file(path)
+            if r.get("pipeline_id") == self.pipeline_id
+        ]
 
     @property
     def _dlq_namespace(self) -> str | None:
@@ -500,10 +528,9 @@ class CdcPipeline:
         accumulates rows from prior runs and other pipelines; by default
         only this pipeline's records are returned so summaries (epochs
         applied, event counts) are per-run truthful."""
-        records = read_lineage_file(self.lineage_path)
         if all_pipelines:
-            return records
-        return [r for r in records if r.get("pipeline_id") == self.pipeline_id]
+            return read_lineage_file(self.lineage_path)
+        return self._own_lineage(self.lineage_path)
 
     def bucket_high_water(self) -> dict[int, int]:
         """Per-bucket high-water mark: the max applied event_seq each
@@ -516,38 +543,71 @@ class CdcPipeline:
         keys are strings on disk; returned as ints."""
         return fold_lineage(self.lineage())["bucket_high_water"]
 
-    # -- the per-epoch apply ----------------------------------------------
+    # -- checkpoint artifacts ---------------------------------------------
+
+    def _source_log(self) -> "list[tuple[int, str, str | None]]":
+        """Every ``(batchId, path, local path)`` entry of the checkpoint's
+        file-source log ``<ckpt>/sources/0`` — its one reader. The log is
+        the pinned offset record the stream replays on retry
+        (``batch_df.inputFiles()`` is not reliable for foreachBatch
+        frames); empty for non-file sources.
+
+        Spark writes each batch as ``<n>`` and every ``compactInterval``-th
+        (default 10) as ``<n>.compact`` holding ALL entries so far; every
+        entry keeps its original ``batchId`` either way. During the log's
+        cleanup delay a plain ``<n>`` and a later ``<m>.compact`` coexist,
+        so one entry can appear twice; files are returned in log order
+        (``<n>`` before ``<n>.compact``) for callers to dedupe.
+
+        Log files are immutable once visible (published by atomic rename;
+        compaction adds a new file and later removes old ones), so parsed
+        entries are cached per filename: each epoch parses only the files
+        it has not seen instead of the WHOLE history, which would be
+        quadratic over a long-running stream. Entries of vanished
+        filenames are dropped."""
+        src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
+        if not os.path.isdir(src_dir):
+            return []
+        present = sorted(
+            (fn for fn in os.listdir(src_dir) if fn.split(".")[0].isdigit()),
+            key=lambda fn: (int(fn.split(".")[0]), fn),
+        )
+        cache = self._source_log_cache
+        for gone in set(cache) - set(present):
+            del cache[gone]
+        entries: "list[tuple[int, str, str | None]]" = []
+        for fn in present:
+            if fn not in cache:
+                with open(os.path.join(src_dir, fn)) as f:
+                    parsed = [json.loads(ln) for ln in f if ln.startswith("{")]
+                cache[fn] = [
+                    (e["batchId"], e["path"], self._local_path(e["path"]))
+                    for e in parsed
+                ]
+            entries.extend(cache[fn])
+        return entries
 
     def _batch_files(self, epoch_id: int) -> list[str] | None:
-        """The exact file set of this epoch, from the checkpoint's source
-        log (``<ckpt>/sources/0/<epoch>``) — the pinned offset record the
-        stream replays on retry. (``batch_df.inputFiles()`` is not reliable
-        for foreachBatch frames.) None for non-file sources.
-
-        Every ``compactInterval``-th batch (default 10) is written as
-        ``<epoch>.compact`` holding ALL entries so far, each line keeping
-        its original ``batchId`` — without the fallback below, compaction
-        epochs would silently skip both the AQE re-root and token-atomicity
+        """The exact file set of this epoch, in log order without
+        duplicates; None when the log has none (non-file sources).
+        Compaction epochs resolve like any other — without that they
+        would silently skip both the AQE re-root and token-atomicity
         enforcement (a delta token split at epoch 9/19/… would be applied
         partially, losing ROCANCEL cancellation scope)."""
-        src = os.path.join(self.checkpoint_dir, "sources", "0", str(epoch_id))
-        if os.path.exists(src):
-            log_path, is_compact = src, False
-        elif os.path.exists(src + ".compact"):
-            log_path, is_compact = src + ".compact", True
-        else:
-            return None
-        files = []
-        with open(log_path) as f:
-            for line in f:
-                line = line.strip()
-                if line.startswith("{"):
-                    entry = json.loads(line)
-                    if not is_compact or entry.get("batchId") == epoch_id:
-                        files.append(entry["path"])
-        return files or None
+        files = dict.fromkeys(
+            path for bid, path, _ in self._source_log() if bid == epoch_id
+        )
+        return list(files) or None
 
-    # -- delta-unit (token) atomicity -------------------------------------
+    def _seen_before(self, epoch_id: int) -> set[str]:
+        """Local paths of every file the source delivered in epochs before
+        this one (filtered per call, so a retried epoch sees the same
+        state its first attempt saw)."""
+        return {
+            local
+            for bid, _, local in self._source_log()
+            if bid < epoch_id and local
+        }
 
     @staticmethod
     def _local_path(uri: str) -> str | None:
@@ -569,93 +629,50 @@ class CdcPipeline:
             return unquote(parsed.path)
         return None
 
-    def _load_deferred(self, epoch_id: int) -> set[str]:
-        """Deferred file set left by the most recent epoch before this one
-        (ids ≥ epoch_id are ignored so a retried epoch re-reads the same
-        state its first attempt saw)."""
+    def _deferred_ids(self) -> list[int]:
+        """Epoch ids holding a deferred-state record, ascending — the one
+        scan of ``<ckpt>/sap_spark_deferred/``."""
         if not os.path.isdir(self._deferred_dir):
-            return set()
-        best = -1
-        for fn in os.listdir(self._deferred_dir):
-            if fn.endswith(".json"):
-                eid = int(fn[:-5])
-                if eid < epoch_id:
-                    best = max(best, eid)
-        if best < 0:
-            return set()
-        with open(os.path.join(self._deferred_dir, f"{best:012d}.json")) as f:
-            return set(json.load(f)["files"])
+            return []
+        return sorted(
+            int(fn[:-5])
+            for fn in os.listdir(self._deferred_dir)
+            if fn.endswith(".json")
+        )
+
+    def _deferred_path(self, epoch_id: int) -> str:
+        return os.path.join(self._deferred_dir, f"{epoch_id:012d}.json")
+
+    def _latest_deferred(self, before: "int | None" = None) -> list[str]:
+        """Files of the newest deferred-state record, or of the newest one
+        before epoch ``before`` (ids ≥ it are ignored so a retried epoch
+        re-reads the state its first attempt saw)."""
+        ids = [i for i in self._deferred_ids() if before is None or i < before]
+        if not ids:
+            return []
+        with open(self._deferred_path(ids[-1])) as f:
+            return json.load(f)["files"]
 
     def _save_deferred(self, epoch_id: int, files: list[str]) -> None:
         os.makedirs(self._deferred_dir, exist_ok=True)
-        target = os.path.join(self._deferred_dir, f"{epoch_id:012d}.json")
+        target = self._deferred_path(epoch_id)
         tmp = target + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"epoch_id": epoch_id, "files": sorted(files)}, f)
         os.replace(tmp, target)
         # prune old state (retries only ever look backwards one step)
-        for fn in os.listdir(self._deferred_dir):
-            if fn.endswith(".json") and int(fn[:-5]) < epoch_id - 2:
-                os.remove(os.path.join(self._deferred_dir, fn))
+        for eid in self._deferred_ids():
+            if eid < epoch_id - 2:
+                os.remove(self._deferred_path(eid))
 
     def deferred_files(self) -> list[str]:
         """Files of still-incomplete delta tokens after the last epoch
         (operational visibility: non-empty after run_available_now means the
         log ends with a partially-delivered token — the next run applies it
         once its remaining files arrive)."""
-        if not os.path.isdir(self._deferred_dir):
-            return []
-        ids = sorted(
-            int(fn[:-5])
-            for fn in os.listdir(self._deferred_dir)
-            if fn.endswith(".json")
-        )
-        if not ids:
-            return []
-        with open(os.path.join(self._deferred_dir, f"{ids[-1]:012d}.json")) as f:
-            return json.load(f)["files"]
+        return self._latest_deferred()
 
-    def _seen_before(self, epoch_id: int) -> set[str]:
-        """Every file the source delivered in epochs before this one, from
-        the checkpoint source log (handles .compact entries, which keep the
-        original batchId per line).
-
-        Source-log files are immutable once visible (Spark publishes each
-        by atomic rename; compaction adds a new .compact and removes old
-        files), so parsed entries are cached per log filename on the
-        pipeline object: each epoch parses only the log files it has not
-        seen, instead of re-reading the WHOLE history — the uncached form
-        was O(total delivered files) driver work per epoch, quadratic
-        over a long-running stream. Entries for vanished (compacted-away)
-        filenames are dropped; the epoch_id filter stays per-call so a
-        retried epoch reads the same state its first attempt saw."""
-        src_dir = os.path.join(self.checkpoint_dir, "sources", "0")
-        seen: set[str] = set()
-        if not os.path.isdir(src_dir):
-            return seen
-        cache = self._source_log_cache
-        present = {fn for fn in os.listdir(src_dir) if not fn.startswith(".")}
-        for gone in set(cache) - present:
-            del cache[gone]
-        for fn in sorted(present):
-            entries = cache.get(fn)
-            if entries is None:
-                entries = []
-                with open(os.path.join(src_dir, fn)) as f:
-                    for line in f:
-                        line = line.strip()
-                        if line.startswith("{"):
-                            e = json.loads(line)
-                            p = self._local_path(e["path"])
-                            if p:
-                                entries.append(
-                                    (e.get("batchId", 1 << 62), p)
-                                )
-                cache[fn] = entries
-            for bid, p in entries:
-                if bid < epoch_id:
-                    seen.add(p)
-        return seen
+    # -- delta-unit (token) atomicity -------------------------------------
 
     def _split_complete_tokens(
         self, files: list[str], epoch_id: int
@@ -669,7 +686,7 @@ class CdcPipeline:
         was already applied by an earlier epoch (an appended log can add
         files to a token dir whose earlier files were long applied —
         completeness must not wait on those)."""
-        deferred_prev = self._load_deferred(epoch_id)
+        deferred_prev = set(self._latest_deferred(before=epoch_id))
         have = set(files) | deferred_prev
         applied_before = self._seen_before(epoch_id) - deferred_prev
         by_dir: dict[str, set[str]] = {}
@@ -702,6 +719,8 @@ class CdcPipeline:
                 deferred.extend(sorted(fs))
         return complete, deferred
 
+    # -- the per-epoch apply ----------------------------------------------
+
     def _prepare_batch(
         self, batch_df: DataFrame, epoch_id: int
     ) -> "tuple[DataFrame | None, int, int]":
@@ -709,12 +728,11 @@ class CdcPipeline:
         batch scan of its exact files, enforce delta-token atomicity,
         apply the envelope-level ``transform``, and split off the DLQ.
         Returns ``(events, n_deferred, n_quarantined)``; ``events`` is
-        None when every file of the epoch was deferred (nothing to
-        apply — the caller records the deferred lineage record). Used by
-        both the single-table fold tail below and the multi-table router
-        (streaming/multitable.py), so the two paths cannot drift on
-        re-rooting or atomicity semantics."""
-        cfg = self.cfg
+        None when every file of the epoch was deferred — nothing to
+        apply, and the epoch's not-applied lineage record is already
+        written. Used by both the single-table fold tail below and the
+        multi-table router (streaming/multitable.py), so the two paths
+        cannot drift on re-rooting or atomicity semantics."""
         if self.dead_letter_dir is not None and epoch_id == 0:
             # fresh checkpoint ⇒ fresh epoch numbering: clear this
             # pipeline's DLQ namespace so stale epoch dirs from a prior
@@ -728,46 +746,41 @@ class CdcPipeline:
 
                 shutil.rmtree(ns, ignore_errors=True)
         files = self._batch_files(epoch_id)
-        local = (
-            [self._local_path(f) for f in files] if files is not None else None
-        )
         n_deferred = 0
-        if (
-            self.enforce_token_atomicity
-            and local
-            and any(p is None for p in local)
-        ):
-            # Non-listable scheme (object store): completeness of a delta
-            # token cannot be verified by listing, and silently skipping
-            # enforcement would reopen the split-token ROCANCEL hole this
-            # guard exists for. Fail loudly; the operator must either make
-            # the source batch whole tokens (one file per token, or
-            # maxFilesPerTrigger a multiple of files-per-token with aligned
-            # writes) and pass enforce_token_atomicity=False, or stage the
-            # log on a listable filesystem.
-            raise RuntimeError(
-                "token-atomicity enforcement requires a listable (local) "
-                "change-log path; got non-local files "
-                f"{[f for f, p in zip(files, local) if p is None][:3]}… "
-                "Pass enforce_token_atomicity=False ONLY if the source "
-                "delivers whole delta tokens per micro-batch."
-            )
-        if local and all(p is not None for p in local):
+        if files is not None:
+            local = [self._local_path(f) for f in files]
+            listable = None not in local
             if self.enforce_token_atomicity:
-                complete, deferred = self._split_complete_tokens(local, epoch_id)
+                if not listable:
+                    # Non-listable scheme (object store): completeness of
+                    # a delta token cannot be verified by listing, and
+                    # silently skipping enforcement would reopen the
+                    # split-token ROCANCEL hole this guard exists for.
+                    # Fail loudly; the operator must either make the
+                    # source batch whole tokens (one file per token, or
+                    # maxFilesPerTrigger a multiple of files-per-token
+                    # with aligned writes) and pass
+                    # enforce_token_atomicity=False, or stage the log on
+                    # a listable filesystem.
+                    raise RuntimeError(
+                        "token-atomicity enforcement requires a listable "
+                        "(local) change-log path; got non-local files "
+                        f"{[f for f, p in zip(files, local) if p is None][:3]}… "
+                        "Pass enforce_token_atomicity=False ONLY if the "
+                        "source delivers whole delta tokens per micro-batch."
+                    )
+                files, deferred = self._split_complete_tokens(local, epoch_id)
                 self._save_deferred(epoch_id, deferred)
                 n_deferred = len(deferred)
-                if not complete:
+                if not files:
+                    self._record_lineage(
+                        epoch_id, {"applied": False, "deferred_files": n_deferred}
+                    )
                     return None, n_deferred, 0
-            else:
-                complete = local
-            batch_df = (
-                self.spark.read.option("basePath", self.log_path)
-                .schema(batch_df.schema)
-                .parquet(*complete)
-            )
-        elif files is not None:
-            # non-local scheme: re-root on the original URIs, no atomicity
+            elif listable:
+                files = local
+            # a non-local scheme without enforcement re-roots on the
+            # original URIs
             batch_df = (
                 self.spark.read.option("basePath", self.log_path)
                 .schema(batch_df.schema)
@@ -801,20 +814,10 @@ class CdcPipeline:
         files but not necessarily in token order — the merge is event_seq-
         version-gated and delete-tombstoned, so out-of-order delta units
         still converge to the exact sequential-fold state."""
-        cfg = self.cfg
         batch_df, n_deferred, n_quarantined = self._prepare_batch(
             batch_df, epoch_id
         )
         if batch_df is None:
-            self._record_lineage(
-                {
-                    "pipeline_id": self.pipeline_id,
-                    "epoch_id": epoch_id,
-                    "applied": False,
-                    "deferred_files": n_deferred,
-                    "wall_time": time.time(),
-                }
-            )
             return
         stats = self._apply_epoch_slice(
             batch_df,
@@ -823,14 +826,12 @@ class CdcPipeline:
             f"lineage-{epoch_id}",
         )
         self._record_lineage(
+            epoch_id,
             {
-                "pipeline_id": self.pipeline_id,
-                "epoch_id": epoch_id,
                 **stats,
                 "deferred_files": n_deferred,
                 "quarantined": n_quarantined,
-                "wall_time": time.time(),
-            }
+            },
         )
 
     def _apply_epoch_slice(
@@ -911,7 +912,7 @@ class CdcPipeline:
             "elapsed_sec": round(elapsed, 4),
             "fold": fold_metrics or None,
             "bucket_offsets": bucket_offsets,
-            "merge_phases": getattr(table, "last_merge_metrics", None),
+            "merge_phases": table.last_merge_metrics,
             "compacted_buckets": compacted,
             "compact_sec": compact_sec,
             "expired_files": expired_files,

@@ -294,3 +294,42 @@ def test_cli_changes_feed(spark, tmp_path, capsys):
           "--from-version", "1", "--snapshot"])
     st2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert st2["rows"] == st["rows"]
+
+
+def test_cli_stops_own_session_when_command_raises(tmp_path, monkeypatch):
+    """A subcommand that raises still stops the session the CLI created
+    for it, so an in-process call leaves no session behind."""
+    import pytest
+    from pyspark.sql import SparkSession
+
+    from sap_spark import config
+
+    class FakeSession:
+        stopped = False
+        sparkContext = type("Ctx", (), {"setLogLevel": lambda self, lvl: None})()
+
+        def stop(self):
+            self.stopped = True
+
+    session = FakeSession()
+    built = {}
+
+    class FakeBuilder:
+        def getOrCreate(self):
+            return session
+
+    def fake_tuned_builder(**kwargs):
+        built.update(kwargs)
+        return FakeBuilder()
+
+    monkeypatch.setattr(config, "tuned_builder", fake_tuned_builder)
+    monkeypatch.setattr(SparkSession, "getActiveSession", staticmethod(lambda: None))
+    with pytest.raises(FileNotFoundError):
+        main(["maintain", "--table", str(tmp_path / "missing"),
+              "--master", "local[1]", "--shuffle-partitions", "3"])
+    assert built == {
+        "app_name": "sap_spark-maintain",
+        "master": "local[1]",
+        "shuffle_partitions": 3,
+    }
+    assert session.stopped

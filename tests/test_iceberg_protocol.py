@@ -155,6 +155,8 @@ def test_merge_cdc_wap_statement_sequence(spark):
         ("sql", _sql_publish("ice", "cdc.repos", "epoch-1")),
         ("dropTempView", view),
     ]
+    # one MERGE INTO statement: no phase timings for lineage merge_phases
+    assert t.last_merge_metrics is None
 
 
 def test_merge_cdc_replay_is_statement_free(spark):

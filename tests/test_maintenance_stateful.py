@@ -1,4 +1,4 @@
-"""Snapshot expiry, stateful cross-batch dedup."""
+"""Snapshot expiry and maintenance safety under live replay."""
 
 import glob
 import os
@@ -10,7 +10,6 @@ from sap_spark.config import EngineConfig
 from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.datagen import gen_change_events
 from sap_spark.streaming.pipeline import ingest_batch
-from sap_spark.streaming.stateful import seen_seq_filter
 
 CFG = EngineConfig().validate()
 
@@ -109,70 +108,6 @@ def test_expire_snapshots_aborts_on_missing_referenced_file(spark, tmpdir_path):
     os.remove(victim)
     with pytest.raises(FileNotFoundError, match="aborted"):
         table.expire_snapshots(keep_last=1)
-
-
-def test_seen_seq_filter_stateful(spark, tmpdir_path):
-    """Cross-batch duplicate suppression via applyInPandasWithState."""
-    rows = [
-        ("k1", 1, "a"), ("k1", 2, "b"), ("k2", 5, "c"),
-    ]
-    more = [
-        ("k1", 2, "b-dup"),   # re-delivery of seq 2 → must be dropped
-        ("k1", 3, "d"),       # new → kept
-        ("k2", 4, "late"),    # older than watermark 5 → dropped
-    ]
-    schema = "key string, event_seq long, payload string"
-    src_dir = f"{tmpdir_path}/src"
-    spark.createDataFrame(rows, schema).coalesce(1).write.mode("overwrite").parquet(src_dir)
-
-    stream = spark.readStream.schema(
-        T.StructType([
-            T.StructField("key", T.StringType()),
-            T.StructField("event_seq", T.LongType()),
-            T.StructField("payload", T.StringType()),
-        ])
-    ).option("maxFilesPerTrigger", "1").parquet(src_dir)
-    out_dir = f"{tmpdir_path}/out"
-    filtered = seen_seq_filter(stream, ["key"])
-
-    def run_once():
-        q = (
-            seen_seq_filter(
-                spark.readStream.schema(filtered.schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(src_dir),
-                ["key"],
-            )
-            .writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", f"{tmpdir_path}/ck")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    run_once()
-    got1 = set(
-        map(tuple, spark.read.parquet(out_dir).select("key", "event_seq").collect())
-    )
-    assert got1 == {("k1", 1), ("k1", 2), ("k2", 5)}
-
-    # append second batch file; resume from checkpoint → state remembered
-    spark.createDataFrame(more, schema).coalesce(1).write.mode("append").parquet(src_dir)
-    run_once()
-    got2 = set(
-        map(
-            tuple,
-            spark.read.parquet(out_dir)
-            .select("key", "event_seq", "payload")
-            .collect(),
-        )
-    )
-    assert got2 == {
-        ("k1", 1, "a"), ("k1", 2, "b"), ("k2", 5, "c"),  # from run 1
-        ("k1", 3, "d"),                                  # only new event from run 2
-    }, got2
 
 
 def test_maintenance_ops_invisible_under_live_replay(spark, tmpdir_path):

@@ -199,6 +199,20 @@ def test_token_atomicity_across_compact_boundary(spark, tmpdir_path):
     # recorded per-batchId inside the compact file)
     compact_epoch = int(compacts[0].split(".")[0])
     assert pipe._batch_files(compact_epoch), "compact epoch file set unresolved"
+    # within Spark's log-cleanup delay the plain <n> files sit next to the
+    # <m>.compact that repeats their entries: each epoch's file set must
+    # still be exactly its own log file's entries, in order, once each
+    import json
+
+    plain = sorted(int(f) for f in os.listdir(src_dir) if f.isdigit())
+    assert any(n < compact_epoch for n in plain), "plain log files already cleaned"
+    for n in plain:
+        with open(os.path.join(src_dir, str(n))) as f:
+            logged = [json.loads(ln)["path"] for ln in f if ln.startswith("{")]
+        assert pipe._batch_files(n) == logged, f"epoch {n} file set"
+    for r in pipe.lineage():
+        files = pipe._batch_files(r["epoch_id"])
+        assert len(files) == len(set(files)), f"epoch {r['epoch_id']} duplicates"
     applied = [r for r in pipe.lineage() if r["applied"]]
     assert len(applied) > compact_epoch, "run ended before the compact epoch"
     assert any(r.get("deferred_files") for r in pipe.lineage()), (

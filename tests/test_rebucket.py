@@ -126,8 +126,10 @@ def test_rebucket_point_lookup_routes_by_new_count(spark, tmpdir_path):
     _seed(spark, table)
     table.rebucket(32)
     # the planner's single-bucket route under the NEW count holds the key
-    b = table._bucket_for_key_literals({"repo": "r3", "path": "p3"})
-    assert b is not None and 0 <= b < 32
+    route = table._buckets_for_key_combos([{"repo": "r3", "path": "p3"}])
+    assert route is not None and len(route) == 1
+    b = route[0]
+    assert 0 <= b < 32
     hit = (
         table.read_internal(buckets=[b])
         .where((F.col("repo") == "r3") & (F.col("path") == "p3"))

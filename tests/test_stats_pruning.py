@@ -18,7 +18,6 @@ from pyspark.sql import types as T
 from sap_spark.plans.lake import LakeTable
 from sap_spark.plans.stats import (
     file_may_match,
-    key_equality_literals,
     parse_conjuncts,
 )
 
@@ -159,14 +158,6 @@ def test_file_may_match_bounds():
     # lossy above 2^53) — exact int math would wrongly prune this file
     big = float(1 << 53)
     assert file_may_match({"v": [big, big]}, [("v", "=", (1 << 53) + 1)])
-
-
-def test_key_equality_literals():
-    assert key_equality_literals([("k", "=", 5)], ["k"]) == {"k": 5}
-    assert key_equality_literals([("k", ">", 5)], ["k"]) is None
-    assert key_equality_literals([("a", "=", 1)], ["a", "b"]) is None
-    # conflicting equalities: honest None (post-filter yields empty)
-    assert key_equality_literals([("k", "=", 1), ("k", "=", 2)], ["k"]) is None
 
 
 # ---------------------------------------------------------------------------
