@@ -18,6 +18,7 @@ from pyspark.sql import types as T
 from sap_spark.plans.lake import LakeTable
 from sap_spark.plans.stats import (
     file_may_match,
+    key_membership_literals,
     parse_conjuncts,
 )
 
@@ -158,6 +159,15 @@ def test_file_may_match_bounds():
     # lossy above 2^53) — exact int math would wrongly prune this file
     big = float(1 << 53)
     assert file_may_match({"v": [big, big]}, [("v", "=", (1 << 53) + 1)])
+
+
+def test_key_equality_literals():
+    # an equality pin on every key column resolves to one key combo
+    assert key_membership_literals([("k", "=", 5)], ["k"]) == [{"k": 5}]
+    assert key_membership_literals([("k", ">", 5)], ["k"]) is None
+    assert key_membership_literals([("a", "=", 1)], ["a", "b"]) is None
+    # conflicting equalities: honest None (post-filter yields empty)
+    assert key_membership_literals([("k", "=", 1), ("k", "=", 2)], ["k"]) is None
 
 
 # ---------------------------------------------------------------------------
