@@ -780,13 +780,20 @@ class IcebergTable:
         retained snapshots, so the in-flight-writer hazard LakeTable's
         grace window guards against does not exist here.
 
-        The mirror is CHRONOLOGICAL (stored ids, then live ancestry
-        wap.ids oldest-first) and trimmed to the batch-ledger retention
-        window — unbounded, it would grow one id per epoch forever,
-        re-serialized at every expiry (LakeTable bounds its manifest
-        ledger identically; Delta's setTransaction retention is the
-        public analog)."""
+        The mirror is stored ids, then live ancestry wap.ids
+        oldest-first, trimmed to the batch-ledger retention window —
+        unbounded, it would grow one id per epoch forever, re-serialized
+        at every expiry (LakeTable bounds its manifest ledger
+        identically; Delta's setTransaction retention is the public
+        analog). That order is chronological for every id but one kind:
+        an empty-batch fast-path id (see merge_cdc) goes straight into
+        the stored ids, so it lands ahead of the wap.ids of older data
+        epochs still in the ancestry, and the trim can evict it before
+        them. Harmless: replaying an evicted empty batch touches no
+        bucket and changes no row, it only re-records its id."""
         stored = self._stored_ledger()
+        # chronological except empty-batch fast-path ids, which sit
+        # ahead of older live wap.ids (harmless; see the docstring)
         seen = set(stored)
         mirror = stored + [
             b for b in self._ancestry_wap_ids() if b not in seen

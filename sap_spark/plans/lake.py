@@ -55,7 +55,9 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Sequence
 
+from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -128,8 +130,12 @@ class ConcurrentCommitError(RuntimeError):
     retry (see :meth:`LakeTable._commit`)."""
 
 
-def bucket_expr(key_columns: list[str] | tuple[str, ...], num_buckets: int) -> F.Column:
-    """Deterministic bucket id for a primary key."""
+def bucket_expr(
+    key_columns: "Sequence[str | F.Column]", num_buckets: int
+) -> F.Column:
+    """Deterministic bucket id for a primary key: column names on the
+    write path, or key-typed literal Columns when a point lookup routes
+    its pinned keys (:meth:`LakeTable._buckets_for_key_combos`)."""
     return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
 
 
@@ -746,12 +752,11 @@ class LakeTable:
         at read time."""
         keys = self.key_columns
         rest = [c for c in df.columns if c not in keys]
-        carried = F.struct(*[F.col(c).alias(c) for c in rest])
         order = F.coalesce(F.col(SEQ_COL), F.lit(-1))
         return (
             df.groupBy(*keys)
-            .agg(F.max_by(carried, order).alias("__w"))
-            .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in rest])
+            .agg(F.max_by(F.struct(*rest), order).alias("__w"))
+            .select(*keys, "__w.*")
         )
 
     def read_internal(
@@ -830,8 +835,10 @@ class LakeTable:
         ``read().where(where)`` — the full predicate is always applied —
         but its plain ``col <op> literal`` conjuncts additionally skip
         whole files via the manifest bounds (plans/stats.py), and a
-        point lookup (every key column pinned by equality) prunes to
-        the single hash bucket that can hold the key. At 100 TB that is
+        point lookup (every key column pinned by equality or IN) prunes
+        to the hash buckets that can hold the keys. Key routing is
+        constant-folded on the driver (:meth:`_buckets_for_key_combos`),
+        so planning a lookup launches no Spark job. At 100 TB that is
         the difference between a metadata walk + one file and a full
         scan."""
         if where is None:
@@ -864,22 +871,55 @@ class LakeTable:
         self, combos: "list[dict[str, object]]"
     ) -> "list[int] | None":
         """The bucket set a point-in-set lookup can live in (one bucket
-        per fully-pinned key combination, deduplicated), or None when
-        the literals don't coerce to the key schema (the post-filter
-        then yields the honest result over all buckets). Evaluated with
-        the SAME Spark expression the write path uses (one local
-        ≤max_combos-row job at planning time) — a reimplementation of
-        xxhash64 here would be a silent-wrong-bucket bug factory."""
-        key_fields = [f for f in self.schema.fields if f.name in self.key_columns]
+        per fully-pinned key combination, deduplicated and sorted), or
+        None when a literal does not fit the key schema (the post-filter
+        then yields the honest result over all buckets).
+
+        Each combination becomes one column: the write path's own
+        :func:`bucket_expr` over ``cast(lit(v) AS key_dtype)`` literals,
+        projected on a one-row ``VALUES`` relation. Catalyst constant-
+        folds every column, so ``collect()`` is answered by a
+        LocalTableScan on the driver and planning launches no Spark job.
+        xxhash64 stays Spark's: a Python reimplementation would be a
+        silent-wrong-bucket bug factory.
+
+        Literal gate, before any literal is built: the type check
+        ``createDataFrame(verifySchema=True)`` applies over the key
+        schema (wrong Python type, out-of-range integer, None on a
+        non-nullable key), plus str-only on string keys. That verifier
+        accepts any object for a string field, but Spark compares
+        ``k = 1`` numerically, so ``'01'`` matches too and routing by
+        ``cast(1 AS string)`` would miss it. A decimal too wide for its
+        key type fails the cast itself."""
+        fields = {f.name: f for f in self.schema.fields}
+        key_fields = [fields[k] for k in self.key_columns]
+        rows = [tuple(c[f.name] for f in key_fields) for c in combos]
+        verify = T._make_type_verifier(T.StructType(key_fields))
         try:
-            rows = [tuple(c[f.name] for f in key_fields) for c in combos]
-            df = self.spark.createDataFrame(rows, T.StructType(key_fields))
-            got = df.select(
-                bucket_expr(self.key_columns, self.num_buckets).alias("b")
-            ).distinct().collect()
-            return sorted(int(r["b"]) for r in got) if got else None
-        except Exception:  # noqa: BLE001 — mis-typed literal: no pruning
+            for row in rows:
+                verify(row)
+        except (TypeError, ValueError):
             return None
+        if any(
+            isinstance(f.dataType, T.StringType)
+            and v is not None
+            and not isinstance(v, str)
+            for row in rows
+            for f, v in zip(key_fields, row)
+        ):
+            return None
+        cols = [
+            bucket_expr(
+                [F.lit(v).cast(f.dataType) for f, v in zip(key_fields, row)],
+                self.num_buckets,
+            ).alias(f"b{i}")
+            for i, row in enumerate(rows)
+        ]
+        try:
+            got = self.spark.sql("VALUES (0)").select(*cols).collect()[0]
+        except ArithmeticException:
+            return None
+        return sorted({int(b) for b in got}) or None
 
     # -- write paths ----------------------------------------------------------
 
@@ -1057,7 +1097,7 @@ class LakeTable:
         merge write and every merge raises the stray-bucket guard."""
         dtypes = {f.name: f.dataType for f in self.schema.fields}
         cast = [F.col(k).cast(dtypes[k]) for k in self.key_columns]
-        return F.pmod(F.xxhash64(*cast), F.lit(self.num_buckets)).cast("int")
+        return bucket_expr(cast, self.num_buckets)
 
     def affected_bucket_offsets(
         self,

@@ -178,7 +178,13 @@ def plan_evolution(current: T.StructType, incoming: T.StructType) -> EvolutionPl
 def apply_cast_plan(df: DataFrame, target: T.StructType) -> DataFrame:
     """Conform a DataFrame to a target schema: missing columns → null,
     narrower columns → cast up. Used when unioning data files written under
-    older schema versions (read-time evolution, no file rewrite)."""
+    older schema versions (read-time evolution, no file rewrite). A frame
+    whose (name, type) list already equals the target's — every file
+    written under the current schema — is returned as is."""
+    if [(f.name, f.dataType) for f in df.schema.fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]:
+        return df
     cols = []
     have = {f.name: f for f in df.schema.fields}
     for f in target.fields:

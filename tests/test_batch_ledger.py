@@ -170,3 +170,21 @@ def test_evicted_overwrite_replay_reapplies_full_overwrite(spark, tmpdir_path):
     assert t.version == v + 1
     # epoch-1's row is gone: the replay was a real overwrite
     assert _state(t) == {("r", "a"): "v1"}
+
+
+def test_evicted_merge_replay_after_tombstone_purge_resurrects_delete(
+    spark, tmpdir_path
+):
+    """The second caveat of the bounded ledger: once compact() purged a
+    key's tombstone, an evicted merge id replayed with the key's older
+    upsert brings the deleted key back — nothing is left to gate it."""
+    t = _make(spark, tmpdir_path, batch_ledger_retention=1)
+    upsert = [("r", "k", "v1", "I", 1)]
+    t.merge_cdc(_changes(spark, upsert), "b0")
+    t.merge_cdc(_changes(spark, [("r", "k", None, "D", 2)]), "b1")
+    assert ("r", "k") not in _state(t)
+    t.compact(purge_tombstones=True)
+    t.merge_cdc(_changes(spark, [("r", "other", "w1", "I", 3)]), "b2")
+    assert t.manifest["commits"] == ["b2"]  # b0 evicted
+    assert t.merge_cdc(_changes(spark, upsert), "b0") is True
+    assert _state(t) == {("r", "k"): "v1", ("r", "other"): "w1"}

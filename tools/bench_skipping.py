@@ -7,7 +7,9 @@ query shapes with skipping ON (``read(where=...)``) vs OFF
 (``read().where(...)``), reporting files opened / files total for each.
 The files-opened counts are cross-checked against the manifest walk
 (``entry_may_match`` over every entry) so the reported skip ratios are
-pinned to the planning layer, not inferred from timings.
+pinned to the planning layer, not inferred from timings. Each shape also
+reports that walk's wall seconds and the Spark jobs it launched (none for
+a point lookup: its key routing is constant-folded on the driver).
 
     python tools/bench_skipping.py [--rows 1000000] [--out BENCH/SKIPPING_r5.md]
 
@@ -76,8 +78,11 @@ def build_table(spark, path: str, n_rows: int):
     return LakeTable(spark, path)
 
 
-def manifest_kept(t, where: str) -> tuple[int, int]:
-    """(files the planning walk keeps, files total) — the pinned ratio."""
+def manifest_kept(t, where: str) -> tuple[int, int, float, int]:
+    """(files the planning walk keeps, files total, planning seconds,
+    Spark jobs planning launched) — the pinned ratio, and what it cost.
+    Key routing is constant-folded on the driver, so a point lookup
+    plans with no Spark job."""
     from sap_spark.plans.stats import (
         entry_may_match,
         key_membership_literals,
@@ -85,6 +90,9 @@ def manifest_kept(t, where: str) -> tuple[int, int]:
         split_conjuncts_by_keys,
     )
 
+    tracker = t.spark.sparkContext.statusTracker()
+    jobs_before = set(tracker.getJobIdsForGroup())
+    t0 = time.monotonic()
     conjuncts = parse_conjuncts(t.spark, where)
     combos = key_membership_literals(conjuncts, t.key_columns)
     buckets = t._buckets_for_key_combos(combos) if combos else None
@@ -100,8 +108,10 @@ def manifest_kept(t, where: str) -> tuple[int, int]:
         for e in entries
         if entry_may_match(e, key_cj + other_cj, True)
     )
+    plan_s = time.monotonic() - t0
+    plan_jobs = len(set(tracker.getJobIdsForGroup()) - jobs_before)
     total = sum(len(es) for es in t.manifest["buckets"].values())
-    return kept, total
+    return kept, total, plan_s, plan_jobs
 
 
 def timed_count(df) -> tuple[float, int, int]:
@@ -142,7 +152,7 @@ def main() -> int:
     }
     results: dict[str, dict] = {}
     for name, where in queries.items():
-        kept, total = manifest_kept(t, where)
+        kept, total, plan_s, plan_jobs = manifest_kept(t, where)
         # interleave on/off, two passes, keep the min (local box noise)
         on_s, off_s = [], []
         on_files = off_files = on_rows = off_rows = None
@@ -162,6 +172,8 @@ def main() -> int:
             "files_opened_skipping": on_files,
             "files_opened_full": off_files,
             "skip_ratio": round(1 - on_files / total, 4),
+            "plan_sec": round(plan_s, 4),
+            "plan_spark_jobs": plan_jobs,
             "wall_skipping_sec": round(min(on_s), 3),
             "wall_full_sec": round(min(off_s), 3),
             "speedup": round(min(off_s) / min(on_s), 2) if min(on_s) > 0 else None,
@@ -206,14 +218,15 @@ def write_md(out_path: str, r: dict) -> None:
         "`files opened` under ON is asserted equal to the manifest-walk keep "
         "count, so the ratios are pinned to the planning layer.",
         "",
-        "| query | predicate shape | rows | files opened / total | skip % | wall ON | wall OFF | speedup |",
-        "|---|---|---|---|---|---|---|---|",
+        "| query | predicate shape | rows | files opened / total | skip % | plan | plan jobs | wall ON | wall OFF | speedup |",
+        "|---|---|---|---|---|---|---|---|---|---|",
     ]
     for name, x in q.items():
         lines.append(
             f"| {name} | `{x['where'][:58]}` | {x['rows']} "
             f"| {x['files_opened_skipping']} / {x['files_total']} "
-            f"| {100 * x['skip_ratio']:.1f}% | {x['wall_skipping_sec']}s "
+            f"| {100 * x['skip_ratio']:.1f}% | {x['plan_sec']}s "
+            f"| {x['plan_spark_jobs']} | {x['wall_skipping_sec']}s "
             f"| {x['wall_full_sec']}s | {x['speedup']}x |"
         )
     lines += [
