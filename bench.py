@@ -17,7 +17,9 @@ Every reported number is a median: the replay runs SPARK_GRAFT_BENCH_REPS
 same number of full interleaved passes (this VM's deliverable CPU swings
 2-6x on hypervisor throttling windows spanning whole passes — a single
 shot is as likely to measure the hypervisor as the plan; see
-BENCH/QUERIES_r4.md). Raw samples ship alongside the medians in the JSON.
+BENCH/QUERIES_r4.md). Raw samples ship alongside the medians in the JSON,
+with each replay rep's host CPU steal ratio and single-core probe
+(``cdc_replay_steal_ratios``, ``cdc_replay_cpu_probe_s``).
 
 Scaling evidence (north_rule, sandbox substitute for N vs 4N executors):
 
@@ -43,6 +45,8 @@ import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.run import cpu_probe, cpu_ticks  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 N_EVENTS = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "4000000"))
@@ -151,11 +155,16 @@ def bench_cdc_replay(spark, cores: int, n_events: int, log_path: str | None = No
             max_files_per_trigger=BENCH_MFT * FILES_PER_TOKEN,
             pipeline_id="bench",
         )
+        # host state beside the wall: a rep slowed by a throttled window
+        # shows high steal or a slow single-core probe
+        probe = cpu_probe()
+        ticks0 = cpu_ticks()
         window_start_ms = time.time() * 1000
         t0 = time.monotonic()
         pipe.run_available_now(timeout_sec=3600)
         elapsed = time.monotonic() - t0
         window_end_ms = time.time() * 1000
+        ticks1 = cpu_ticks()
         final_rows = LakeTable(spark, table.path).read().count()
         assert final_rows > 0
         # orderless state fingerprint (untimed): every run over the same
@@ -177,6 +186,10 @@ def bench_cdc_replay(spark, cores: int, n_events: int, log_path: str | None = No
             # accounting filter, so utilization evidence counts replay
             # tasks only (not warmup / row-count scans / later queries)
             "window_ms": (window_start_ms, window_end_ms),
+            "host_steal_ratio": round(
+                (ticks1[0] - ticks0[0]) / max(ticks1[1] - ticks0[1], 1), 4
+            ),
+            "cpu_probe_s": round(probe, 4),
         }
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
@@ -302,6 +315,8 @@ def run_bench(
         "cdc_task_run_sec": cdc.get("task_run_sec"),
         "cdc_core_busy_fraction": cdc.get("core_busy_fraction"),
         "cdc_replay_samples": [r["sec"] for r in replay_reps],
+        "cdc_replay_steal_ratios": [r["host_steal_ratio"] for r in replay_reps],
+        "cdc_replay_cpu_probe_s": [r["cpu_probe_s"] for r in replay_reps],
         "query_samples": query_samples,
     }
 

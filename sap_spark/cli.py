@@ -212,18 +212,20 @@ def run_maintain(args, spark=None) -> dict:
                 # re-derive from what the table holds NOW (the same
                 # ~payload/256MB rule create uses for the change log): the
                 # count chosen at creation was sized for day-one data
-                from sap_spark.plans.lake import derive_num_buckets
+                from sap_spark.plans import lake
 
-                payload, missing = 0, 0
-                for entries in table.manifest["buckets"].values():
-                    for e in entries:
-                        try:
-                            payload += os.path.getsize(e["path"])
-                        except OSError:
-                            missing += 1
+                # the data scan and file identity expiry and doctor use
+                on_disk = lake.scan_data_files(table.path)
+                keys = [
+                    lake.data_file_key(e["path"])
+                    for _, es in table.bucket_entries()
+                    for e in es
+                ]
+                missing = sum(k not in on_disk for k in keys)
+                payload = sum(os.path.getsize(on_disk[k]) for k in keys if k in on_disk)
                 if missing:
-                    # entry paths are re-rooted onto this handle's root at
-                    # load, so a missing file here is real corruption — an
+                    # a referenced file absent from the scan is real
+                    # corruption (doctor's data_files check fails too) — an
                     # auto count derived from partial payload would silently
                     # undersize the reshard; make the operator run doctor
                     raise SystemExit(
@@ -232,7 +234,7 @@ def run_maintain(args, spark=None) -> dict:
                         "resharding (a payload sum over the survivors would "
                         "undersize the new bucket count)"
                     )
-                rebucket_to = derive_num_buckets(payload)
+                rebucket_to = lake.derive_num_buckets(payload)
                 summary["rebucket_auto_payload_bytes"] = payload
                 if rebucket_to == table.num_buckets:
                     summary["rebucketed_to"] = rebucket_to
@@ -350,7 +352,7 @@ def run_status(args, spark=None) -> dict:
     }
     # data-skipping coverage: how much of the table the manifest bounds
     # can prune over (files from before the stats feature carry none)
-    all_entries = [e for es in table.manifest["buckets"].values() for e in es]
+    all_entries = [e for _, es in table.bucket_entries() for e in es]
     out["file_stats"] = {
         "files": len(all_entries),
         "with_bounds": sum(1 for e in all_entries if e.get("stats")),

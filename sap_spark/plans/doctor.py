@@ -8,7 +8,7 @@ pre-flight an operator runs before trusting a restored/copied table, after
 a crash, or before an expiry on a table of unknown provenance.
 
 Scale shape: the default audit is a DRIVER-SIDE METADATA walk — O(retained
-manifests + file entries), one `glob` over the data directory, zero Spark
+manifests + file entries), two `glob`s over the data directory, zero Spark
 jobs — safe to run against a table a pipeline is actively writing (same
 contract as `cli status`). ``deep=True`` adds two DISTRIBUTED, column-pruned
 verification jobs over the current snapshot's files: (1) a footer pass
@@ -39,10 +39,17 @@ lake-format invariants the CDC engine's exactly-once story rests on.
 from __future__ import annotations
 
 import base64
-import glob
 import json
 import math
 import os
+
+from sap_spark.plans.lake import (
+    LakeTable,
+    bucket_expr,
+    data_file_key,
+    scan_data_files,
+    sidecar_debris,
+)
 
 MAX_PROBLEMS = 20  # per check, keeps reports readable on badly broken tables
 
@@ -51,14 +58,6 @@ def _cap(problems: list) -> list:
     if len(problems) > MAX_PROBLEMS:
         return problems[:MAX_PROBLEMS] + [f"... {len(problems) - MAX_PROBLEMS} more"]
     return problems
-
-
-def _file_key(p: str) -> tuple:
-    """Table-internal identity of a data file — the last 4 path segments
-    (data/<commit-uuid>/__bucket=N/<file>.parquet), independent of how the
-    table root was spelled when the entry was written (same normalization
-    expire_snapshots prunes by)."""
-    return tuple(os.path.normpath(p).split(os.sep)[-4:])
 
 
 def _check(name: str, level: str, problems: list, detail: str = "") -> dict:
@@ -83,8 +82,6 @@ def check_table(
 ) -> dict:
     """Audit one LakeTable; see module docstring. ``spark`` is required
     only for ``deep=True``."""
-    from sap_spark.plans.lake import LakeTable
-
     if deep and spark is None:
         raise ValueError("deep=True needs a SparkSession (footer/bucket jobs)")
 
@@ -94,7 +91,7 @@ def check_table(
     # -- 1. manifest chain: every parent resolves, versions strictly
     #       descend, the walk ends at a trimmed (None) parent ------------
     chain_problems: list = []
-    reachable: list[int] = []
+    manifests: list[dict] = []
     strict_problems: list = []
     v: "int | None" = table.version
     seen: set = set()
@@ -111,8 +108,7 @@ def check_table(
             )
             break
         try:
-            with open(mpath) as f:
-                m = json.load(f)
+            m = table._load_manifest(v)
         except Exception as exc:  # noqa: BLE001
             chain_problems.append(f"v{v} unparseable: {exc}")
             break
@@ -120,7 +116,7 @@ def check_table(
             chain_problems.append(
                 f"v{v} manifest says version={m.get('version')}"
             )
-        reachable.append(v)
+        manifests.append(m)
         # strict re-parse: bare NaN/Infinity tokens are legacy pre-fix
         # bounds — the loader scrubs them and the next commit heals the
         # chain, so this is warn-level
@@ -142,7 +138,7 @@ def check_table(
             "manifest_chain",
             "error",
             chain_problems,
-            f"{len(reachable)} retained versions, newest v{table.version}",
+            f"{len(manifests)} retained versions, newest v{table.version}",
         )
     )
     checks.append(_check("manifest_strict_json", "warn", strict_problems))
@@ -191,7 +187,8 @@ def check_table(
     entries_all: list[tuple[int, dict]] = []
     seen_files: dict[tuple, int] = {}
     num_buckets = table.num_buckets
-    for bstr, entries in table.manifest.get("buckets", {}).items():
+    bucket_map = dict(table.bucket_entries())
+    for bstr, entries in bucket_map.items():
         try:
             b = int(bstr)
         except ValueError:
@@ -207,7 +204,7 @@ def check_table(
                     f"bucket {b}: {os.path.basename(e.get('path', '?'))} has "
                     f"schema_id {sid} out of range"
                 )
-            fk = _file_key(e.get("path", ""))
+            fk = data_file_key(e.get("path", ""))
             if fk in seen_files and seen_files[fk] != b:
                 bucket_problems.append(
                     f"file {'/'.join(fk)} referenced by buckets "
@@ -226,20 +223,17 @@ def check_table(
             "error",
             bucket_problems,
             f"{len(entries_all)} file entries across "
-            f"{len(table.manifest.get('buckets', {}))}/{num_buckets} buckets",
+            f"{len(bucket_map)}/{num_buckets} buckets",
         )
     )
 
     # -- 5. referenced data files exist (by table-internal identity, the
     #       same spelling-independent comparison expire_snapshots uses) --
-    scanned = {
-        _file_key(f): f
-        for f in glob.glob(os.path.join(path, "data", "*", "__bucket=*", "*.parquet"))
-    }
+    scanned = scan_data_files(path)
     missing = [
-        "/".join(_file_key(e.get("path", "")))
+        "/".join(data_file_key(e.get("path", "")))
         for _, e in entries_all
-        if _file_key(e.get("path", "")) not in scanned
+        if data_file_key(e.get("path", "")) not in scanned
     ]
     checks.append(
         _check(
@@ -296,7 +290,7 @@ def check_table(
         name = os.path.basename(e.get("path", "?"))
         ref_cols = e.get("bloom_ref") or []
         if ref_cols:
-            actual = scanned.get(_file_key(e.get("path", "")), e.get("path", ""))
+            actual = scanned.get(data_file_key(e.get("path", "")), e.get("path", ""))
             sidecar = actual + ".bloom"
             try:
                 with open(sidecar) as f:
@@ -333,17 +327,16 @@ def check_table(
     # -- 9. orphans (informational): on-disk files no retained manifest
     #       references — expected debris after crashes, reclaimed by
     #       expire_snapshots --------------------------------------------
-    referenced_any: set = set()
-    for rv in reachable:
-        try:
-            m = table._load_manifest(rv)
-        except Exception:  # noqa: BLE001 — chain check already flagged it
-            continue
-        for entries in m.get("buckets", {}).values():
-            referenced_any.update(_file_key(e["path"]) for e in entries)
+    referenced_any = {
+        data_file_key(e["path"])
+        for m in manifests
+        for _, entries in table.bucket_entries(manifest=m)
+        for e in entries
+    }
     orphans = [f for fk, f in scanned.items() if fk not in referenced_any]
+    debris = sidecar_debris(path, scanned.values())
     orphan_bytes = 0
-    for f in orphans:
+    for f in orphans + debris:
         try:
             orphan_bytes += os.path.getsize(f)
         except OSError:
@@ -354,7 +347,8 @@ def check_table(
             "level": "info",
             "ok": True,
             "detail": (
-                f"{len(orphans)} unreferenced files ({orphan_bytes} bytes) — "
+                f"{len(orphans)} unreferenced files and {len(debris)} bloom "
+                f"sidecars without a data file ({orphan_bytes} bytes) — "
                 "crashed-attempt debris; `cli maintain --expire-keep` reclaims"
             ),
             "problems": [],
@@ -402,8 +396,6 @@ def table_fingerprint(
     import hashlib
 
     from pyspark.sql import functions as F
-
-    from sap_spark.plans.lake import LakeTable
 
     table = (
         path_or_table
@@ -454,12 +446,10 @@ def _deep_checks(spark, table, entries_all, scanned) -> list[dict]:
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from sap_spark.plans.lake import bucket_expr
-
     # resolve each entry to its on-disk spelling (existence already checked)
     rows = []
     for b, e in entries_all:
-        actual = scanned.get(_file_key(e.get("path", "")))
+        actual = scanned.get(data_file_key(e.get("path", "")))
         if actual is None:
             continue  # data_files check already reported it
         rows.append(

@@ -43,19 +43,27 @@ Semantics provided (and how they scale):
   conform old files to the current schema (null-fill added columns, cast
   widened columns) — ALTER is a metadata operation, as in Iceberg.
 - **Time travel**: any retained manifest version is readable.
+- **Concurrent writers**: the link claim admits one writer per version.
+  A merge that loses it to a compatible commit (disjoint COW buckets,
+  any MOR append) rebases onto the new head as a metadata-only retry
+  (:meth:`LakeTable._commit_merge`); a conflicting race raises
+  :class:`ConcurrentCommitError`. Rebucket and tombstone purge stay
+  maintenance-window ops.
 
-Single-writer by design (one streaming query owns a table), which matches
-the CDC pipeline; a multi-writer catalog is out of scope.
+Only :class:`LakeTable` knows the manifest layout: reads use
+``bucket_entries``, commits edit a copy from ``_edit`` (bucket lists via
+``_replace_buckets``), and every parent-chain walk is ``_chain``.
 """
 
 from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import time
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterable, Iterator, Sequence
 
 from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, SparkSession
@@ -201,11 +209,43 @@ def derive_num_buckets(
     LAYOUT, not the compute size — but it caps merge-write parallelism
     (one task per bucket-cluster), so pass ``min_buckets`` ≥ the planned
     executor-core count for small tables on big clusters."""
-    import math
-
     if expected_payload_bytes <= 0:
         return min_buckets
     return min(max_buckets, max(min_buckets, math.ceil(expected_payload_bytes / target_file_bytes)))
+
+
+def _data_glob(root: str, leaf: str) -> list[str]:
+    return glob.glob(os.path.join(root, "data", "*", "__bucket=*", leaf))
+
+
+def data_file_key(path: str) -> tuple:
+    """Table-internal identity of a data file: its last four segments,
+    ``data/<commit-uuid>/__bucket=N/<file>.parquet``. Manifest paths carry
+    whatever spelling the table root had when they were written (relative
+    to a long-gone CWD, absolute, symlinked, trailing slash), so neither
+    exact-string nor realpath comparison is safe across processes; this
+    suffix is unique within a table and independent of the spelling."""
+    return tuple(os.path.normpath(path).split(os.sep)[-4:])
+
+
+def scan_data_files(root: str) -> "dict[tuple, str]":
+    """Every data file on disk under a table root, by :func:`data_file_key`."""
+    return {data_file_key(f): f for f in _data_glob(root, "*.parquet")}
+
+
+def sidecar_debris(root: str, data_files: "Iterable[str]") -> list[str]:
+    """Bloom sidecars (``<file>.parquet.bloom``) and unpublished sidecar
+    tmps (``.bloom.tmp-<pid>``, left by a killed metadata task) whose
+    data file is gone. ``data_files`` is a scan of the data files on
+    disk; a sidecar outside it is re-checked on disk, so a data file
+    written after that scan keeps its sidecar."""
+    live = set(data_files)
+    out = []
+    for s in _data_glob(root, "*.parquet.bloom*"):
+        data = s[: s.rindex(".parquet.bloom") + len(".parquet")]
+        if data not in live and not os.path.exists(data):
+            out.append(s)
+    return out
 
 
 class LakeTable:
@@ -242,17 +282,24 @@ class LakeTable:
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self._meta_dir, f"v{version:08d}.json")
 
+    def _manifest_versions(self) -> "dict[str, int]":
+        """Every numeric ``v*.json`` manifest on disk, path -> version: the
+        one listing of the manifest directory. Stray non-numeric names an
+        operator may leave there are skipped, never fatal."""
+        out = {}
+        for mf in glob.glob(os.path.join(self._meta_dir, "v*.json")):
+            try:
+                out[mf] = int(os.path.basename(mf)[1:-5])
+            except ValueError:
+                continue
+        return out
+
     def _current_version(self) -> int:
         """Highest manifest on disk — the source of truth. The VERSION
         file is only an advisory cache (and the table-exists marker):
         trusting it would re-open the torn-commit window the
         link-is-the-commit design closes."""
-        best = -1
-        for mf in glob.glob(os.path.join(self._meta_dir, "v*.json")):
-            try:
-                best = max(best, int(os.path.basename(mf)[1:-5]))
-            except ValueError:
-                continue
+        best = max(self._manifest_versions().values(), default=-1)
         if best >= 0:
             return best
         with open(self._version_file()) as f:  # pre-manifest corruption aid
@@ -261,85 +308,114 @@ class LakeTable:
     def retained_manifest_count(self) -> int:
         """Numeric ``v*.json`` manifests currently on disk — the
         metadata-growth watermark the streaming auto-expiry triggers on
-        (one manifest per commit since the last expiry; stray
-        non-numeric names the read path tolerates are not counted).
-        O(versions) driver-side, same listing cost as
-        :meth:`_current_version`."""
-        n = 0
-        for mf in glob.glob(os.path.join(self._meta_dir, "v*.json")):
-            try:
-                int(os.path.basename(mf)[1:-5])
-            except ValueError:
-                continue
-            n += 1
-        return n
+        (one manifest per commit since the last expiry). O(versions)
+        driver-side, same listing cost as :meth:`_current_version`."""
+        return len(self._manifest_versions())
 
     def _load_manifest(self, version: int) -> dict:
+        """Parse manifest ``version`` and heal its file entries in one pass
+        (O(entries) string work, no filesystem probes; the next commit
+        persists the healed entries).
+
+        Re-root: every data file lives at the fixed layout
+        ``<root>/data/<commit-uuid>/__bucket=N/<file>.parquet`` (one writer
+        path, :meth:`_write_buckets`), but entries record the root spelling
+        the writing handle used. A restored backup, a renamed directory or
+        a relative-vs-absolute spelling would make reads, payload sums and
+        expiry chase files at the OLD location; rewriting each path onto
+        THIS handle's root makes tables relocatable (Iceberg's
+        LocationProvider-relative-path property). Bloom sidecars follow:
+        their path is ``<data file>.bloom``.
+
+        Scrub: drop non-finite float bounds inherited from manifests
+        written BEFORE the NaN-soundness fix (json.load accepts the bare
+        NaN token); otherwise the next commit's ``allow_nan=False`` would
+        reject the copied entry and brick writes to an upgraded table.
+        The read side ignores such bounds anyway (stats.decode_bound)."""
         with open(self._manifest_path(version)) as f:
-            return self._reroot_entry_paths(
-                self._scrub_nonfinite_stats(json.load(f))
-            )
-
-    def _reroot_entry_paths(self, manifest: dict) -> dict:
-        """Rewrite data-file entry paths onto THIS handle's table root.
-
-        Entries record the root spelling the writing handle used, and
-        every data file lives at the fixed layout
-        ``<root>/data/<commit-uuid>/__bucket=N/<file>.parquet`` (one
-        writer path, ``_write_bucket_files``). A restored backup, a
-        renamed directory, or simply a different spelling of the same
-        root (relative vs absolute) would otherwise make every read,
-        compaction payload sum and expiry walk chase files at the OLD
-        location — re-rooting at load time makes table directories
-        relocatable, Iceberg's LocationProvider-relative-path property.
-        O(entries) string work, no filesystem probes; idempotent (the
-        next commit persists the healed spelling); entries outside the
-        canonical layout are left untouched (there are none today —
-        conservative guard only). Bloom sidecars relocate for free:
-        their path is derived as ``<data file>.bloom`` after re-rooting.
-        """
+            manifest = json.load(f)
         root = self.path.rstrip("/")
-        for entries in (manifest.get("buckets") or {}).values():
+        for _, entries in self.bucket_entries(manifest=manifest):
             for e in entries:
                 p = e.get("path")
-                if not p:
-                    continue
-                tail = p.replace("\\", "/").rstrip("/").split("/")[-4:]
-                if len(tail) == 4 and tail[0] == "data":
-                    expected = root + "/" + "/".join(tail)
-                    if p != expected:
-                        e["path"] = expected
+                if p:
+                    tail = p.replace("\\", "/").rstrip("/").split("/")[-4:]
+                    if len(tail) == 4 and tail[0] == "data":
+                        e["path"] = root + "/" + "/".join(tail)
+                stats = e.get("stats")
+                if stats:
+                    for c, b in list(stats.items()):
+                        if any(isinstance(v, float) and not math.isfinite(v) for v in b):
+                            del stats[c]
+                    if not stats:
+                        del e["stats"]
+        return manifest
+
+    def _chain(self, version: int) -> "Iterator[tuple[int, dict]]":
+        """``(version, manifest)`` from ``version`` down the parent chain,
+        newest first, each manifest parsed once — the one chain walk
+        (history, version_as_of, expiry's keep walk). It ends at the
+        oldest retained version, whose parent expiry trims to None."""
+        v: "int | None" = version
+        while v is not None:
+            m = self._load_manifest(v)
+            yield v, m
+            v = m["parent"]
+
+    def _stamp(self, version: int, manifest: dict) -> float:
+        """Commit wall-clock of a manifest. Manifests written before the
+        ``committed_at`` stamp existed fall back to the file's mtime."""
+        ca = manifest.get("committed_at")
+        if ca is not None:
+            return float(ca)
+        return os.path.getmtime(self._manifest_path(version))
+
+    def bucket_entries(
+        self,
+        buckets: "Iterable | None" = None,
+        manifest: "dict | None" = None,
+    ) -> "Iterator[tuple[str, list[dict]]]":
+        """``(bucket id, file entries)`` of a manifest (default: this
+        handle's snapshot) — the one reader of the bucket map. Ids are the
+        manifest's decimal strings. ``buckets`` restricts the walk to
+        those ids, in that order; an id with no files yields ``[]``.
+        Entries are the manifest's own dicts: read them, do not edit them
+        (a commit edits a copy from :meth:`_edit`)."""
+        bmap = (self.manifest if manifest is None else manifest).get("buckets") or {}
+        if buckets is None:
+            yield from bmap.items()
+        else:
+            for b in buckets:
+                yield str(b), bmap.get(str(b), [])
+
+    def _edit(self, batch_id: "str | None" = None) -> dict:
+        """A deep copy of this handle's manifest: the base every commit
+        edits, so a failed commit leaves ``self.manifest`` as it was.
+        ``batch_id`` is appended to the copy's batch ledger, trimmed to
+        the retention window oldest first (the list is chronological, and
+        only ids near the head can ever replay through the engine)."""
+        manifest = json.loads(json.dumps(self.manifest))
+        if batch_id is not None:
+            ledger = manifest["commits"]
+            ledger.append(batch_id)
+            keep = self.batch_ledger_retention
+            if keep is not None and len(ledger) > keep:
+                del ledger[:-keep]
         return manifest
 
     @staticmethod
-    def _scrub_nonfinite_stats(manifest: dict) -> dict:
-        """Drop non-finite float bounds inherited from manifests written
-        BEFORE the NaN-soundness fix (json.load accepts the bare NaN
-        token). Without this, every later commit deep-copies the legacy
-        entry forward and _commit's ``allow_nan=False`` rejects it —
-        bricking writes to an upgraded table. The read side independently
-        ignores such bounds (stats.decode_bound), so scrubbing only
-        changes what future manifests inherit. O(files) driver-side,
-        touches nothing when clean (the overwhelmingly common case)."""
-        import math
-
-        for entries in (manifest.get("buckets") or {}).values():
-            for e in entries:
-                stats = e.get("stats")
-                if not stats:
-                    continue
-                bad = [
-                    c
-                    for c, b in stats.items()
-                    if any(
-                        isinstance(v, float) and not math.isfinite(v)
-                        for v in b
-                    )
-                ]
-                for c in bad:
-                    del stats[c]
-                if not stats:
-                    del e["stats"]
+    def _replace_buckets(
+        manifest: dict,
+        buckets: "dict[str, list[dict]]",
+        drop: "Iterable | None" = (),
+    ) -> dict:
+        """Remove the bucket ids in ``drop`` from an edited manifest (None:
+        every bucket, a full rewrite), then set ``buckets``' entry lists.
+        Returns ``manifest``."""
+        bmap = manifest["buckets"]
+        for b in list(bmap) if drop is None else drop:
+            bmap.pop(str(b), None)
+        bmap.update(buckets)
         return manifest
 
     def _commit(self, manifest: dict, op: "dict | None" = None) -> None:
@@ -581,16 +657,6 @@ class LakeTable:
             return props["batch_ledger_retention"]
         return DEFAULT_BATCH_LEDGER_RETENTION
 
-    def _append_batch_id(self, manifest: dict, batch_id: str) -> None:
-        """Record a commit's batch id, trimming the ledger to the
-        retention window (oldest first — the list is chronological, and
-        only ids near the head can ever replay through the engine)."""
-        ledger = manifest["commits"]
-        ledger.append(batch_id)
-        keep = self.batch_ledger_retention
-        if keep is not None and len(ledger) > keep:
-            del ledger[:-keep]
-
     @property
     def merge_mode(self) -> str:
         return self.manifest.get("properties", {}).get("merge_mode", "cow")
@@ -661,7 +727,7 @@ class LakeTable:
         if plan.is_noop:
             return False
         new_schema = plan.apply_to(self.schema)
-        manifest = json.loads(json.dumps(self.manifest))
+        manifest = self._edit()
         manifest["schemas"].append(new_schema.json())
         manifest["current_schema_id"] = len(manifest["schemas"]) - 1
         self._commit(manifest)
@@ -678,7 +744,7 @@ class LakeTable:
         batch_ledger_retention=_UNSET,
     ) -> bool:
         """Change the write-path layout knobs after creation, as a
-        metadata-only commit. All three affect only FUTURE writes —
+        metadata-only commit. All five affect only FUTURE writes —
         existing files keep whatever stats/order/size they were written
         with, which is sound (a file without bounds for a column is
         simply never pruned on it) — so the table a user sized on day
@@ -720,7 +786,7 @@ class LakeTable:
                 changed["batch_ledger_retention"] = batch_ledger_retention
         if not changed:
             return False
-        manifest = json.loads(json.dumps(self.manifest))
+        manifest = self._edit()
         manifest.setdefault("properties", {}).update(changed)
         self._commit(manifest, op={"type": "alter", "properties": changed})
         return True
@@ -759,18 +825,13 @@ class LakeTable:
             .select(*keys, "__w.*")
         )
 
-    def read_internal(
+    def plan_files(
         self,
-        buckets: list[int] | None = None,
+        buckets: "list[int] | None" = None,
         conjuncts: "list[tuple[str, str, object]] | None" = None,
-    ) -> DataFrame:
-        """Read rows incl. internal cols, optionally pruned to buckets.
-        On a table with delta files (merge-on-read), the result is folded
-        to the latest row per key — **per bucket**: a key lives in exactly
-        one hash bucket, so only delta-bearing buckets need the
-        payload-carrying fold shuffle; base-only buckets union in
-        verbatim. On a 100 TB table with one hot bucket's delta, a full
-        read pays the fold over that bucket alone, not O(table).
+    ) -> "tuple[list[dict], list[dict]]":
+        """The file entries :meth:`read_internal` reads: ``(base files,
+        files of delta-bearing buckets)``, the latter folded per key.
 
         ``conjuncts`` (from :func:`plans.stats.parse_conjuncts`) skips
         files by their manifest min/max bounds. Soundness split: key-
@@ -781,11 +842,6 @@ class LakeTable:
         predicate rejects it would resurrect an older version from a
         kept file. Callers must still apply the full predicate to the
         result; pruning is one-sided."""
-        wanted = (
-            self.manifest["buckets"].items()
-            if buckets is None
-            else [(str(b), self.manifest["buckets"].get(str(b), [])) for b in buckets]
-        )
         key_cj, other_cj = split_conjuncts_by_keys(
             conjuncts or [], self.key_columns
         )
@@ -795,10 +851,9 @@ class LakeTable:
         ts_utc = self.spark is not None and self.spark.conf.get(
             "spark.sql.session.timeZone", ""
         ) in ("UTC", "Etc/UTC", "GMT", "Z", "+00:00")
-        sid = self.manifest["current_schema_id"]
         base_files: list[dict] = []
         delta_bucket_files: list[dict] = []
-        for _, entries in wanted:
+        for _, entries in self.bucket_entries(buckets):
             if any(e.get("kind") == "delta" for e in entries):
                 if key_cj:
                     entries = [
@@ -813,6 +868,23 @@ class LakeTable:
                         if entry_may_match(e, key_cj + other_cj, ts_utc)
                     ]
                 base_files.extend(entries)
+        return base_files, delta_bucket_files
+
+    def read_internal(
+        self,
+        buckets: list[int] | None = None,
+        conjuncts: "list[tuple[str, str, object]] | None" = None,
+    ) -> DataFrame:
+        """Read rows incl. internal cols, optionally pruned to buckets and
+        by ``conjuncts`` (see :meth:`plan_files`). On a table with delta
+        files (merge-on-read), the result is folded to the latest row per
+        key — **per bucket**: a key lives in exactly one hash bucket, so
+        only delta-bearing buckets need the payload-carrying fold shuffle;
+        base-only buckets union in verbatim. On a 100 TB table with one
+        hot bucket's delta, a full read pays the fold over that bucket
+        alone, not O(table)."""
+        base_files, delta_bucket_files = self.plan_files(buckets, conjuncts)
+        sid = self.manifest["current_schema_id"]
         parts: list[DataFrame] = []
         base_df = self._read_files(base_files, sid)
         if base_df is not None:
@@ -841,22 +913,11 @@ class LakeTable:
         so planning a lookup launches no Spark job. At 100 TB that is
         the difference between a metadata walk + one file and a full
         scan."""
-        if where is None:
-            df = self.read_internal()
-        else:
-            conjuncts = parse_conjuncts(self.spark, where)
-            # Spark resolves identifiers case-insensitively; fold each
-            # conjunct's column onto the schema's canonical spelling so
-            # `WHERE K = 7` still classifies as a key and finds bounds
-            canon = {f.name.lower(): f.name for f in self.schema.fields}
-            conjuncts = [
-                (canon.get(c.lower(), c), op, v) for c, op, v in conjuncts
-            ]
-            buckets = None
-            combos = key_membership_literals(conjuncts, self.key_columns)
-            if combos:
-                buckets = self._buckets_for_key_combos(combos)
-            df = self.read_internal(buckets=buckets, conjuncts=conjuncts)
+        df = (
+            self.read_internal()
+            if where is None
+            else self.read_internal(*self.where_pruning(where))
+        )
         out = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).select(
             *[f.name for f in self.schema.fields]
         )
@@ -866,6 +927,19 @@ class LakeTable:
             # (law 8 identity — also how the Iceberg binding behaves)
             out = out.where(F.expr(where))
         return out
+
+    def where_pruning(self, where: str) -> "tuple[list[int] | None, list]":
+        """``(buckets, conjuncts)`` a ``read(where=...)`` prunes by, for
+        :meth:`plan_files`: the predicate's plain conjuncts, and the hash
+        buckets a point lookup's pinned keys route to (None: all)."""
+        conjuncts = parse_conjuncts(self.spark, where)
+        # Spark resolves identifiers case-insensitively; fold each
+        # conjunct's column onto the schema's canonical spelling so
+        # `WHERE K = 7` still classifies as a key and finds bounds
+        canon = {f.name.lower(): f.name for f in self.schema.fields}
+        conjuncts = [(canon.get(c.lower(), c), op, v) for c, op, v in conjuncts]
+        combos = key_membership_literals(conjuncts, self.key_columns)
+        return (self._buckets_for_key_combos(combos) if combos else None), conjuncts
 
     def _buckets_for_key_combos(
         self, combos: "list[dict[str, object]]"
@@ -1080,11 +1154,9 @@ class LakeTable:
             .withColumn("__bucket", bucket_expr(self.key_columns, self.num_buckets))
         )
         new_buckets = self._write_buckets(prepared)
-        manifest = json.loads(json.dumps(self.manifest))
-        manifest["buckets"] = new_buckets
-        if batch_id is not None:
-            self._append_batch_id(manifest, batch_id)
-        self._commit(manifest)
+        self._commit(
+            self._replace_buckets(self._edit(batch_id), new_buckets, drop=None)
+        )
 
     def _conformed_bucket_expr(self, frame: DataFrame) -> F.Column:
         """Bucket id over key columns CAST to the table's key dtypes.
@@ -1357,20 +1429,19 @@ class LakeTable:
             if replaced_buckets is not None
             else sorted(new_files)
         )
-        base_buckets = {
-            b: list(self.manifest["buckets"].get(b, [])) for b in touched
-        }
+        base_buckets = {b: list(es) for b, es in self.bucket_entries(touched)}
         for attempt in range(self._MAX_COMMIT_REBASES):
-            manifest = json.loads(json.dumps(self.manifest))
+            manifest = self._edit(batch_id)
             if mor:
-                for b, entries in new_files.items():
-                    manifest["buckets"].setdefault(b, []).extend(entries)
+                self._replace_buckets(
+                    manifest,
+                    {
+                        b: have + new_files[b]
+                        for b, have in self.bucket_entries(new_files, manifest)
+                    },
+                )
             else:
-                for b in touched:
-                    manifest["buckets"].pop(b, None)
-                for b, entries in new_files.items():
-                    manifest["buckets"][b] = entries
-            self._append_batch_id(manifest, batch_id)
+                self._replace_buckets(manifest, new_files, drop=touched)
             try:
                 self._commit(manifest)
                 return True
@@ -1394,8 +1465,7 @@ class LakeTable:
                         f"batch {batch_id!r}: the schema history diverged "
                         "under a concurrent commit — reload and retry"
                     ) from None
-                for b in touched:
-                    have = latest["buckets"].get(b, [])
+                for b, have in self.bucket_entries(touched, latest):
                     base = base_buckets[b]
                     ok = (
                         have[: len(base)] == base if mor else have == base
@@ -1461,11 +1531,12 @@ class LakeTable:
         to_version = self.version if to_version is None else to_version
         old_t = LakeTable(self.spark, self.path, version=from_version)
         new_t = LakeTable(self.spark, self.path, version=to_version)
-        all_buckets = set(old_t.manifest["buckets"]) | set(new_t.manifest["buckets"])
+        old_files = dict(old_t.bucket_entries())
+        new_files = dict(new_t.bucket_entries())
         changed = sorted(
             int(b)
-            for b in all_buckets
-            if old_t.manifest["buckets"].get(b) != new_t.manifest["buckets"].get(b)
+            for b in old_files.keys() | new_files.keys()
+            if old_files.get(b) != new_files.get(b)
         )
 
         def null_pad(df: DataFrame, fields) -> DataFrame:
@@ -1485,7 +1556,7 @@ class LakeTable:
             df = df.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
             return null_pad(df, new_t.schema.fields)
 
-        added = self._pure_delta_appends(old_t, new_t, changed)
+        added = self._pure_delta_appends(old_files, new_files, changed)
         if incremental is True and added is None:
             raise ValueError(
                 f"versions {from_version}..{to_version} are not pure delta "
@@ -1521,9 +1592,11 @@ class LakeTable:
 
     @staticmethod
     def _pure_delta_appends(
-        old_t: "LakeTable", new_t: "LakeTable", changed: list[int]
+        old_files: "dict[str, list[dict]]",
+        new_files: "dict[str, list[dict]]",
+        changed: list[int],
     ) -> "list[dict] | None":
-        """The file entries appended between two manifests, or None when
+        """The file entries appended between two bucket maps, or None when
         any changed bucket was REWRITTEN (COW merge, compaction,
         overwrite) rather than purely extended with delta files — the
         shapes where added-files-only change tracking would be wrong.
@@ -1531,8 +1604,8 @@ class LakeTable:
         returns ``[]`` — trivially pure-append, empty feed."""
         added: list[dict] = []
         for b in changed:
-            o = old_t.manifest["buckets"].get(str(b), [])
-            n = new_t.manifest["buckets"].get(str(b), [])
+            o = old_files.get(str(b), [])
+            n = new_files.get(str(b), [])
             if n[: len(o)] != o:
                 return None  # rewrite: old entries vanished/reordered
             tail = n[len(o) :]
@@ -1551,7 +1624,7 @@ class LakeTable:
         by :meth:`compact`'s dirty detection and the pipeline's
         auto-compaction probe."""
         counts: dict[int, int] = {}
-        for b, entries in self.manifest["buckets"].items():
+        for b, entries in self.bucket_entries():
             n = sum(1 for e in entries if e.get("kind") == "delta")
             if n:
                 counts[int(b)] = n
@@ -1561,11 +1634,7 @@ class LakeTable:
         """Buckets among ``candidates`` holding at least one tombstone —
         a column-pruned scan (keys + deleted flag only, the payload never
         leaves parquet) returning ≤ num_buckets ints."""
-        entries = [
-            e
-            for b in candidates
-            for e in self.manifest["buckets"].get(str(b), [])
-        ]
+        entries = [e for _, es in self.bucket_entries(candidates) for e in es]
         df = self._read_files(entries, self.manifest["current_schema_id"])
         if df is None:
             return []
@@ -1633,7 +1702,7 @@ class LakeTable:
             "zorder columns",
             zorder,
         )
-        universe = {int(b) for b in self.manifest["buckets"]}
+        universe = {int(b) for b, _ in self.bucket_entries()}
         if buckets is not None:
             universe &= set(buckets)
         if only_dirty:
@@ -1659,11 +1728,7 @@ class LakeTable:
         new_buckets = self._write_buckets(
             prepared, n_partitions=len(dirty), zorder=zorder
         )
-        manifest = json.loads(json.dumps(self.manifest))
-        for b in dirty:
-            manifest["buckets"].pop(str(b), None)
-        for b, entries in new_buckets.items():
-            manifest["buckets"][b] = entries
+        manifest = self._replace_buckets(self._edit(), new_buckets, drop=dirty)
         # self-describing commit: if the caller crashes between this commit
         # and its own bookkeeping (e.g. the pipeline's lineage append), the
         # table history still attributes this version to a compaction
@@ -1731,14 +1796,15 @@ class LakeTable:
         prepared = live.withColumn(
             "__bucket", bucket_expr(self.key_columns, new_num_buckets)
         )
-        manifest = json.loads(json.dumps(self.manifest))
-        manifest["num_buckets"] = new_num_buckets
         # _write_buckets derives nothing from num_buckets except the
         # default partition count, which we pass explicitly — the new
         # layout is written before the count flips in the manifest
-        manifest["buckets"] = self._write_buckets(
-            prepared, n_partitions=new_num_buckets, zorder=zorder
+        manifest = self._replace_buckets(
+            self._edit(),
+            self._write_buckets(prepared, n_partitions=new_num_buckets, zorder=zorder),
+            drop=None,
         )
+        manifest["num_buckets"] = new_num_buckets
         op = {"type": "rebucket", "from": old, "to": new_num_buckets}
         if zorder:
             op["zorder"] = list(zorder)
@@ -1747,11 +1813,13 @@ class LakeTable:
     def expire_snapshots(self, keep_last: int = 1, grace_seconds: float = 0.0) -> int:
         """Delete manifests older than the newest `keep_last` and any data
         files no longer referenced by a retained manifest (Iceberg
-        `expireSnapshots` analog). Returns the number of data files
-        removed. Time travel to expired versions stops working; the current
-        snapshot is never touched.
+        `expireSnapshots` analog), then the bloom sidecars and sidecar
+        tmps whose data file is gone (:func:`sidecar_debris`). Returns the
+        number of data files removed. Time travel to expired versions
+        stops working; the current snapshot is never touched.
 
-        ``grace_seconds``: spare unreferenced files younger than this.
+        ``grace_seconds``: spare unreferenced files (sidecars included)
+        younger than this.
         An in-flight writer spills its commit dir BEFORE flipping the
         manifest pointer, so for that window its files are
         indistinguishable from orphans; a maintenance job running next
@@ -1770,35 +1838,19 @@ class LakeTable:
         never touched."""
         latest = self._current_version()
         pinned = self.version
-        keep_versions: list[int] = []
-        v: int | None = latest
-        while v is not None:
-            keep_versions.append(v)
-            if len(keep_versions) >= keep_last and v <= pinned:
+        kept: dict[int, dict] = {}
+        for v, m in self._chain(latest):
+            kept[v] = m
+            if len(kept) >= keep_last and v <= pinned:
                 break
-            v = self._load_manifest(v)["parent"]
-        # every file referenced by a retained manifest survives. Manifest
-        # paths carry whatever spelling the table was created/merged
-        # under (relative to a long-gone CWD, absolute, symlinked,
-        # trailing slash), so neither exact-string nor realpath
-        # comparison is safe across processes. Compare by the
-        # table-internal suffix instead — data/<commit-uuid>/__bucket=N/
-        # <file>.parquet is unique within a table and independent of how
-        # the table root was spelled.
-        def file_key(p: str) -> tuple:
-            return tuple(os.path.normpath(p).split(os.sep)[-4:])
-
-        referenced: set[tuple] = set()
-        for kv in keep_versions:
-            m = self._load_manifest(kv)
-            for entries in m["buckets"].values():
-                referenced.update(file_key(e["path"]) for e in entries)
-        scanned = {
-            file_key(f): f
-            for f in glob.glob(
-                os.path.join(self.path, "data", "*", "__bucket=*", "*.parquet")
-            )
+        # every file referenced by a retained manifest survives
+        referenced = {
+            data_file_key(e["path"])
+            for m in kept.values()
+            for _, entries in self.bucket_entries(manifest=m)
+            for e in entries
         }
+        scanned = scan_data_files(self.path)
         missing = referenced - set(scanned)
         if missing:
             # a retained manifest references files the scan can't see —
@@ -1812,86 +1864,77 @@ class LakeTable:
         # walk (history, version_as_of, the next expiry's keep walk) ends
         # inside the retained set, so a crash at any later step leaves
         # only harmless unreferenced debris the next expiry sweeps; then
-        # (2) drop expired manifests; then (3) delete data files. The old
-        # order (delete manifests, then trim) left a window where the
-        # retained chain dangled into a removed manifest, wedging every
-        # walk with FileNotFoundError.
-        oldest = min(keep_versions)
-        m = self._load_manifest(oldest)
+        # (2) drop expired manifests; then (3) delete data files and
+        # (4) the bloom sidecars their deletion orphaned. The old order
+        # (delete manifests, then trim) left a window where the retained
+        # chain dangled into a removed manifest, wedging every walk with
+        # FileNotFoundError.
+        oldest = min(kept)
+        m = kept[oldest]
         if m["parent"] is not None:
-            if m.get("committed_at") is None:
-                # legacy stamp-less manifest: the rewrite below resets the
-                # file mtime that version_as_of's fallback reads — freeze
-                # the pre-rewrite mtime as the stamp so retained legacy
-                # snapshots stay reachable by timestamp
-                m["committed_at"] = os.path.getmtime(
-                    self._manifest_path(oldest)
-                )
+            # freeze the stamp: the rewrite resets the file mtime that a
+            # legacy stamp-less manifest's timestamp falls back to, and
+            # retained legacy snapshots must stay reachable by timestamp
+            m["committed_at"] = self._stamp(oldest, m)
             m["parent"] = None
             tmp = self._manifest_path(oldest) + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(m, f)
             os.replace(tmp, self._manifest_path(oldest))
-        # drop expired manifests (keep the retained chain intact); skip
-        # non-numeric v*.json matches the same way _current_version does —
-        # a stray operator file the read path tolerates must not crash
-        # maintenance mid-run
-        for mf in glob.glob(os.path.join(self._meta_dir, "v*.json")):
-            try:
-                ver = int(os.path.basename(mf)[1:-5])
-            except ValueError:
-                continue
+        for mf, ver in self._manifest_versions().items():
             # ver > latest: a writer committed AFTER our entry-time scan —
             # that snapshot (and its files, grace-aged) is someone else's
             # live state, never expiry's to remove
-            if ver not in keep_versions and ver <= latest:
+            if ver not in kept and ver <= latest:
                 try:
                     os.remove(mf)
                 except FileNotFoundError:
                     pass  # a concurrent expiry (auto-expire on a second
                     # pipeline) already swept it — deletion is idempotent
-        removed = 0
         now = time.time()
+
+        def aged(f: str) -> bool:
+            if grace_seconds <= 0:
+                return True
+            try:
+                return now - os.path.getmtime(f) >= grace_seconds
+            except OSError:
+                return False  # vanished mid-scan: someone else's problem
+
+        removed = 0
+        live = []
         for key, f in scanned.items():
-            if key not in referenced:
-                if grace_seconds > 0:
-                    try:
-                        if now - os.path.getmtime(f) < grace_seconds:
-                            continue  # possibly an in-flight write
-                    except OSError:
-                        continue  # vanished mid-scan: someone else's problem
+            if key in referenced or not aged(f):  # young: possibly in flight
+                live.append(f)
+                continue
+            try:
+                os.remove(f)
+                removed += 1
+            except FileNotFoundError:
+                pass  # concurrent expiry won the race to this file
+        for f in sidecar_debris(self.path, live):
+            if aged(f):
                 try:
                     os.remove(f)
                 except FileNotFoundError:
-                    continue  # concurrent expiry won the race to this file
-                # the bloom sidecar shares its data file's lifecycle
-                try:
-                    os.remove(f + ".bloom")
-                except OSError:
-                    pass  # no sidecar (bloom-less table / legacy inline)
-                removed += 1
+                    pass
         return removed
 
     def history(self) -> list[dict]:
         """Commit history (version, parent, commit wall-clock, commits
         count, schema id, and the commit's ``op`` annotation when one was
         recorded — e.g. a compaction's rewritten buckets)."""
-        out = []
-        v = self.version
-        while v is not None:
-            m = self._load_manifest(v)
-            out.append(
-                {
-                    "version": m["version"],
-                    "parent": m["parent"],
-                    "committed_at": m.get("committed_at"),
-                    "n_commits": len(m["commits"]),
-                    "schema_id": m["current_schema_id"],
-                    "op": m.get("op"),
-                }
-            )
-            v = m["parent"]
-        return out
+        return [
+            {
+                "version": m["version"],
+                "parent": m["parent"],
+                "committed_at": m.get("committed_at"),
+                "n_commits": len(m["commits"]),
+                "schema_id": m["current_schema_id"],
+                "op": m.get("op"),
+            }
+            for _, m in self._chain(self.version)
+        ]
 
     # -- timestamp time travel --------------------------------------------
 
@@ -1928,10 +1971,7 @@ class LakeTable:
         rewrites — e.g. expire's parent-chain trim — refresh an mtime but
         never drop a recorded stamp)."""
         v = self.version if version is None else version
-        ca = self._load_manifest(v).get("committed_at")
-        if ca is not None:
-            return float(ca)
-        return os.path.getmtime(self._manifest_path(v))
+        return self._stamp(v, self._load_manifest(v))
 
     def version_as_of(self, ts: "float | str | object") -> int:
         """Highest retained version committed at or before ``ts`` — the
@@ -1946,29 +1986,14 @@ class LakeTable:
         removed by :meth:`expire_snapshots`). The Iceberg binding gets
         this natively from the catalog (``FOR SYSTEM_TIME AS OF``)."""
         target = self._as_epoch_seconds(ts)
-        oldest: "tuple[float, int] | None" = None
-        v: int | None = self._current_version()
-        while v is not None:
-            # one manifest parse per step (manifests carry per-bucket
-            # file lists — large at 10^5+ files; committed_at() would
-            # re-parse for the stamp the manifest in hand already has)
-            m = self._load_manifest(v)
-            ca = m.get("committed_at")
-            ca = (
-                float(ca)
-                if ca is not None
-                else os.path.getmtime(self._manifest_path(v))
-            )
-            oldest = (ca, v)
+        # the chain always yields the current version, so v and ca are
+        # the oldest retained snapshot's when the loop runs out
+        for v, m in self._chain(self._current_version()):
+            ca = self._stamp(v, m)
             if ca <= target:
                 return v  # chain walk is newest-first: first hit wins
-            v = m["parent"]
-        detail = (
-            f"oldest retained snapshot is v{oldest[1]} committed at "
-            f"{oldest[0]:.6f}" if oldest else "no snapshots retained"
-        )
         raise ValueError(
-            f"as-of timestamp {ts!r} predates the retained history "
-            f"({detail}); earlier snapshots may have been removed by "
-            "expire_snapshots"
+            f"as-of timestamp {ts!r} predates the retained history (oldest "
+            f"retained snapshot is v{v} committed at {ca:.6f}); earlier "
+            "snapshots may have been removed by expire_snapshots"
         )

@@ -316,9 +316,9 @@ def collect_parquet_bloom(
 # when an equality/IN conjunct actually names a bloomed column, with an
 # mtime-keyed cache so repeated point lookups pay the IO once. The
 # sidecar shares the data file's lifecycle exactly: written (atomic
-# tmp+rename) by the same task that collects the file's metadata,
-# deleted by expire_snapshots alongside its data file, orphaned copies
-# swept with their orphaned data files. A missing/corrupt sidecar
+# tmp+rename) by the same task that collects the file's metadata, and
+# swept by expire_snapshots, with any stranded tmp, once its data file
+# is gone (plans/lake.sidecar_debris). A missing/corrupt sidecar
 # degrades to "keep the file" — same keep-on-doubt contract as every
 # other skipping layer. Legacy manifests with inline ``bloom`` entries
 # keep working unchanged.

@@ -78,40 +78,22 @@ def build_table(spark, path: str, n_rows: int):
     return LakeTable(spark, path)
 
 
-def manifest_kept(t, where: str) -> tuple[int, int, float, int]:
-    """(files the planning walk keeps, files total, planning seconds,
-    Spark jobs planning launched) — the pinned ratio, and what it cost.
-    Key routing is constant-folded on the driver, so a point lookup
-    plans with no Spark job."""
-    from sap_spark.plans.stats import (
-        entry_may_match,
-        key_membership_literals,
-        parse_conjuncts,
-        split_conjuncts_by_keys,
-    )
+def all_entries(t) -> list[dict]:
+    return [e for _, es in t.bucket_entries() for e in es]
 
+
+def manifest_kept(t, where: str) -> tuple[int, int, float, int]:
+    """(files the engine's planning walk keeps, files total, planning
+    seconds, Spark jobs planning launched) — the pinned ratio, and what
+    it cost. Key routing is constant-folded on the driver, so a point
+    lookup plans with no Spark job."""
     tracker = t.spark.sparkContext.statusTracker()
     jobs_before = set(tracker.getJobIdsForGroup())
     t0 = time.monotonic()
-    conjuncts = parse_conjuncts(t.spark, where)
-    combos = key_membership_literals(conjuncts, t.key_columns)
-    buckets = t._buckets_for_key_combos(combos) if combos else None
-    wanted = (
-        t.manifest["buckets"].items()
-        if buckets is None
-        else [(str(b), t.manifest["buckets"].get(str(b), [])) for b in buckets]
-    )
-    key_cj, other_cj = split_conjuncts_by_keys(conjuncts, t.key_columns)
-    kept = sum(
-        1
-        for _, entries in wanted
-        for e in entries
-        if entry_may_match(e, key_cj + other_cj, True)
-    )
+    kept = sum(map(len, t.plan_files(*t.where_pruning(where))))
     plan_s = time.monotonic() - t0
     plan_jobs = len(set(tracker.getJobIdsForGroup()) - jobs_before)
-    total = sum(len(es) for es in t.manifest["buckets"].values())
-    return kept, total, plan_s, plan_jobs
+    return kept, len(all_entries(t)), plan_s, plan_jobs
 
 
 def timed_count(df) -> tuple[float, int, int]:
@@ -180,17 +162,13 @@ def main() -> int:
         }
         print(name, json.dumps(results[name]), flush=True)
 
-    payload_bytes = sum(
-        os.path.getsize(e["path"])
-        for es in t.manifest["buckets"].values()
-        for e in es
-    )
+    payload_bytes = sum(os.path.getsize(e["path"]) for e in all_entries(t))
     report = {
         "rows": args.rows,
         "build_sec": round(build_sec, 1),
         "payload_bytes": payload_bytes,
         "num_buckets": t.num_buckets,
-        "files_total": sum(len(es) for es in t.manifest["buckets"].values()),
+        "files_total": len(all_entries(t)),
         "cpus": cpus,
         "queries": results,
     }
