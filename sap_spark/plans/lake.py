@@ -1002,9 +1002,12 @@ class LakeTable:
         df: DataFrame,
         n_partitions: int | None = None,
         zorder: "list[str] | None" = None,
+        phases: "dict | None" = None,
     ) -> dict[str, list[dict]]:
         """Write rows (must carry __bucket) as new immutable files; returns
-        bucket -> file entries under the current schema id.
+        bucket -> file entries under the current schema id. ``phases``, if
+        given, receives the metadata pass's timing and locality (see
+        :meth:`_collect_commit_metadata`).
 
         Repartitions on __bucket first: without it every shuffle partition
         spills a file into every bucket directory (cores × buckets small
@@ -1063,6 +1066,7 @@ class LakeTable:
             [p for paths in bucket_paths.values() for p in paths],
             stats_cols,
             bloom_cols,
+            phases,
         )
         return {
             b: [
@@ -1072,45 +1076,69 @@ class LakeTable:
             for b, paths in bucket_paths.items()
         }
 
-    # commits with at least this many files collect footer stats in the
-    # distributed pass too (a full-compaction commit at the 4096-bucket
-    # design point would otherwise serialize 4096+ footer GETs through
-    # the driver); below it one job's scheduling overhead costs more
-    # than the handful of local footer reads it parallelizes
+    # A commit collects its metadata in the one-job task pass
+    # (stats.collect_metadata_distributed) when it has at least this many
+    # files: a full-compaction commit at the 4096-bucket design point
+    # would otherwise serialize 4096+ footer GETs through the driver.
     _DISTRIBUTED_STATS_MIN_FILES = 64
+    # ...or when it must read column DATA (blooms, NaN counts) and its new
+    # files total at least this many bytes. Measured by
+    # tools/bench_metadata.py at local[2] on repo-shaped files
+    # (BENCH/METADATA_r6.md): the task pass costs ~0.3 s before it reads
+    # a byte (job + Python-worker start-up) plus ~0.055 s/MB, the driver
+    # walk ~0.115 s/MB (one blake2b per bloomed value), so the driver
+    # wins at 0.7 MB and the task pass at 6.6 MB, crossing near 4.4 MB.
+    # More executors shrink only the task pass's per-byte part, pulling
+    # the crossover toward ~2.3 MB (the driver's cost reaching the fixed
+    # 0.3 s), so the constant sits at that lower end.
+    _DISTRIBUTED_DATA_MIN_BYTES = 2 << 20
 
     def _collect_commit_metadata(
         self,
         paths: list[str],
         stats_cols: list[str],
         bloom_cols: list[str],
+        phases: "dict | None" = None,
     ) -> "dict[str, dict]":
-        """Manifest metadata for a commit's new files. Anything that must
-        read column DATA — blooms, NaN counts for float/double stats
-        columns — runs TASK-SIDE (stats.collect_metadata_distributed):
-        the write job's output bytes never serialize through the driver.
-        Footer-only collection (min/max + null counts) stays a driver
-        walk for small commits — bounded, local-FS cheap — and joins the
-        distributed pass past _DISTRIBUTED_STATS_MIN_FILES. Both paths
-        run the same collect_entry_metadata, so the manifests they
-        produce are identical."""
+        """Manifest metadata for a commit's new files, collected where the
+        commit's own size says it is cheaper: in one Spark task pass for
+        commits past _DISTRIBUTED_STATS_MIN_FILES files, or past
+        _DISTRIBUTED_DATA_MIN_BYTES when the metadata reads column data
+        (blooms, NaN counts for float/double stats columns); on the
+        driver otherwise, where a small commit's footers and column
+        chunks cost less to read than one job costs to launch. Both
+        paths run the same collect_entry_metadata, so the manifest
+        entries and sidecars they produce are identical. ``phases``, if
+        given, receives ``metadata_sec`` and ``metadata_on``
+        (``"driver"`` or ``"tasks"``)."""
         from sap_spark.plans.stats import (
             collect_entry_metadata,
             collect_metadata_distributed,
         )
 
-        if not paths or not (stats_cols or bloom_cols):
-            return {}
+        t0 = time.monotonic()
+        if not (stats_cols or bloom_cols):
+            paths = []  # nothing to collect: no footer is opened
         float_types = (T.FloatType(), T.DoubleType())
-        needs_data = bool(bloom_cols) or any(
+        reads_data = bool(bloom_cols) or any(
             f.name in stats_cols and f.dataType in float_types
             for f in self._schema_with_internal().fields
         )
-        if self.spark is not None and (
-            needs_data or len(paths) >= self._DISTRIBUTED_STATS_MIN_FILES
+        meta = None
+        if (
+            paths
+            and self.spark is not None
+            and (
+                len(paths) >= self._DISTRIBUTED_STATS_MIN_FILES
+                or reads_data
+                and (
+                    sum(map(os.path.getsize, paths))
+                    >= self._DISTRIBUTED_DATA_MIN_BYTES
+                )
+            )
         ):
             try:
-                return collect_metadata_distributed(
+                meta = collect_metadata_distributed(
                     self.spark, paths, stats_cols, bloom_cols
                 )
             except Exception as exc:  # noqa: BLE001
@@ -1127,7 +1155,13 @@ class LakeTable:
                     RuntimeWarning,
                     stacklevel=2,
                 )
-        return {p: collect_entry_metadata(p, stats_cols, bloom_cols) for p in paths}
+        on = "driver" if meta is None else "tasks"
+        if meta is None:
+            meta = {p: collect_entry_metadata(p, stats_cols, bloom_cols) for p in paths}
+        if phases is not None:
+            phases["metadata_sec"] = round(time.monotonic() - t0, 4)
+            phases["metadata_on"] = on
+        return meta
 
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> None:
         """Replace the whole table (initial load / backfill). Same
@@ -1223,7 +1257,7 @@ class LakeTable:
             return False
         # Per-phase wall timings for observability (north_rule metrics);
         # read by the pipeline into the lineage log after each merge.
-        phases: dict[str, float] = {}
+        phases: dict[str, float | str] = {}
         self.last_merge_metrics = phases
         t_start = time.monotonic()
 
@@ -1300,12 +1334,14 @@ class LakeTable:
             )
             try:
                 new_files = self._write_buckets(
-                    delta_rows, n_partitions=max(len(affected), 1)
+                    delta_rows, n_partitions=max(len(affected), 1), phases=phases
                 )
             finally:
                 if persisted is not None:
                     persisted.unpersist()
-            phases["merge_write_sec"] = round(time.monotonic() - t_phase, 4)
+            phases["merge_write_sec"] = round(
+                time.monotonic() - t_phase - phases["metadata_sec"], 4
+            )
             t_phase = time.monotonic()
             for entries in new_files.values():
                 for e in entries:
@@ -1352,7 +1388,9 @@ class LakeTable:
         merged = joined.select(*merged_cols)
 
         try:
-            new_files = self._write_buckets(merged, n_partitions=max(len(affected), 1))
+            new_files = self._write_buckets(
+                merged, n_partitions=max(len(affected), 1), phases=phases
+            )
         finally:
             if persisted is not None:
                 persisted.unpersist()
@@ -1370,7 +1408,9 @@ class LakeTable:
                 f"{sorted(affected)}; the affected list must cover every "
                 "bucket the folded batch touches"
             )
-        phases["merge_write_sec"] = round(time.monotonic() - t_phase, 4)
+        phases["merge_write_sec"] = round(
+            time.monotonic() - t_phase - phases["metadata_sec"], 4
+        )
         t_phase = time.monotonic()
         committed = self._commit_merge(
             new_files, batch_id, mor=False, replaced_buckets=affected

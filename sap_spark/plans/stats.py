@@ -35,13 +35,15 @@ tests/test_stats_pruning.py):
   groups by key, so removing rows of non-matching keys never changes a
   matching key's winner.
 
-Collection locality (the Iceberg writer-collects-stats model): anything
-reading column DATA — blooms, NaN counts — runs task-side via
-:func:`collect_metadata_distributed`; footer-only bounds/null-counts run
-driver-side for small commits (bounded, local) and join the distributed
-pass for large ones (see plans/lake.LakeTable._collect_commit_metadata).
-Both paths share :func:`collect_entry_metadata`, so manifests are
-identical regardless of where collection ran.
+Collection locality (the Iceberg writer-collects-stats model, kept for
+commits large enough to pay for it): a commit of many files, or one whose
+metadata reads column DATA — blooms, NaN counts — over more than a
+measured byte crossover, collects task-side in one Spark job via
+:func:`collect_metadata_distributed`. Every smaller commit collects on the
+driver, where reading a few footers and column chunks costs less than
+launching that job (see plans/lake.LakeTable._collect_commit_metadata).
+Both paths share :func:`collect_entry_metadata`, so manifest entries and
+sidecars are identical regardless of where collection ran.
 """
 
 from __future__ import annotations
@@ -377,7 +379,7 @@ def collect_entry_metadata(
     """Every manifest-entry metadata layer for one data file — min/max
     bounds + null counts (footer-only), NaN counts for float stats
     columns and blooms (column-data reads) — as one JSON-safe dict.
-    Shared verbatim by the driver-side footer walk and the task-side
+    Shared verbatim by the driver walk and the task-side
     distributed pass (plans/lake.py), so the manifests both produce are
     identical by construction. Per-layer failures are swallowed: stats
     are an optimization and must never fail the commit. The file's
@@ -433,49 +435,41 @@ def collect_metadata_distributed(
     spark, paths: "list[str]", stats_cols: "list[str]", bloom_cols: "list[str]"
 ) -> "dict[str, dict]":
     """Task-side manifest metadata for a commit's newly-written files:
-    one Spark job, one task per group of files, each task running
+    one Spark job with no shuffle (``parallelize(paths).mapPartitions``),
+    one task per group of files, each task running
     :func:`collect_entry_metadata` against files it reads LOCALLY
-    (shared storage on a cluster) and returning only the small JSON
-    metadata blob (bounds + the bloomed-column list — bloom bitmaps are
-    published to per-file sidecars task-side). The driver assembles
-    manifests from the collected blobs and never touches column data —
-    the Iceberg writer-collects-stats model. At the design point (10^8-
-    event epochs with ``bloom_columns=['commit']``) the old driver loop
-    serialized the entire epoch's written column bytes through one
-    Python thread; this pass scales with executor count like the write
-    job that produced the files."""
+    (shared storage on a cluster) and returning ``(path, json)`` pairs
+    of the small metadata blob (bounds + the bloomed-column list — bloom
+    bitmaps are published to per-file sidecars task-side). The driver
+    assembles manifests from the collected blobs without touching column
+    data — the Iceberg writer-collects-stats model. The job's fixed cost
+    (~0.3 s of scheduling and Python-worker start) is why small commits
+    take the driver walk instead (plans/lake.LakeTable.
+    _collect_commit_metadata); past the crossover this pass scales with
+    executor count like the write job that produced the files."""
     if not paths:
         return {}
     import json
 
     sc_cols, bl_cols = list(stats_cols or []), list(bloom_cols or [])
 
-    def _collect(batches):
-        import pandas as pd
-
+    def _collect(part):
         from sap_spark.plans.stats import collect_entry_metadata
 
-        def one(p: str) -> str:
+        for p in part:
             try:
-                return json.dumps(
+                meta = json.dumps(
                     collect_entry_metadata(p, sc_cols, bl_cols), allow_nan=False
                 )
             except Exception:  # noqa: BLE001 — stats never fail a commit
-                return "{}"
+                meta = "{}"
+            yield p, meta
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {"path": pdf["path"], "meta": [one(p) for p in pdf["path"]]}
-            )
-
-    df = spark.createDataFrame([(p,) for p in paths], "path string")
-    n = max(1, min(len(paths), int(spark.sparkContext.defaultParallelism)))
-    rows = (
-        df.repartition(n)
-        .mapInPandas(_collect, "path string, meta string")
-        .collect()  # bounded: O(files-per-commit) small JSON blobs
-    )
-    return {r["path"]: json.loads(r["meta"]) for r in rows}
+    sc = spark.sparkContext
+    n = max(1, min(len(paths), int(sc.defaultParallelism)))
+    # bounded: O(files-per-commit) small JSON blobs
+    pairs = sc.parallelize(paths, n).mapPartitions(_collect).collect()
+    return {p: json.loads(meta) for p, meta in pairs}
 
 
 def bloom_may_match(
@@ -554,9 +548,10 @@ def collect_parquet_nans(
     clean-looking float bounds while its NaN rows (which Spark orders
     LARGER than every value) match any ``>``/``>=`` predicate; a proven
     count of 0 is what re-enables upper-bound pruning on float columns
-    (:func:`file_may_match`). Reads the float columns' data, so it runs
-    task-side (plans/lake.py's distributed metadata pass), never on the
-    driver. Non-float columns are skipped without reading anything."""
+    (:func:`file_may_match`). Reads the float columns' data, so a large
+    commit runs it task-side (:func:`collect_metadata_distributed`) and a
+    small one on the driver (plans/lake.LakeTable._collect_commit_metadata).
+    Non-float columns are skipped without reading anything."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq

@@ -252,11 +252,35 @@ def test_distributed_metadata_matches_driver(spark, tmpdir_path):
     )
 
 
+BLOOM_SCHEMA = T.StructType(
+    [
+        T.StructField("k", T.LongType()),
+        T.StructField("commit", T.StringType()),
+    ]
+)
+
+
+def _bloom_rows(spark, n=100):
+    return spark.range(n).select(
+        F.col("id").alias("k"),
+        F.sha2(F.col("id").cast("string"), 256).alias("commit"),
+    )
+
+
+def _new_jobs(spark, fn):
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = fn()
+    return out, set(tracker.getJobIdsForGroup()) - before
+
+
 def test_write_path_is_task_side_for_bloom_tables(spark, tmpdir_path, monkeypatch):
-    """A bloom-opted table must collect metadata in the distributed pass
-    — the driver never reads column data (round-4 'What's wrong #1')."""
+    """A bloom commit at or above the byte crossover collects its
+    metadata in the task pass — the driver reads no column data. The
+    crossover is lowered to 1 byte so a 100-row commit crosses it."""
     import sap_spark.plans.stats as stats_mod
 
+    monkeypatch.setattr(LakeTable, "_DISTRIBUTED_DATA_MIN_BYTES", 1)
     called = {"driver_entry": 0, "distributed": 0}
     real_entry = stats_mod.collect_entry_metadata
     real_dist = stats_mod.collect_metadata_distributed
@@ -274,29 +298,99 @@ def test_write_path_is_task_side_for_bloom_tables(spark, tmpdir_path, monkeypatc
 
     monkeypatch.setattr(stats_mod, "collect_entry_metadata", spy_entry)
 
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType()),
-            T.StructField("commit", T.StringType()),
-        ]
-    )
     t = LakeTable.create(
         spark,
         tmpdir_path,
-        schema,
+        BLOOM_SCHEMA,
         ["k"],
         num_buckets=2,
         bloom_columns=["commit"],
     )
-    t.overwrite(
-        spark.range(100).select(
-            F.col("id").alias("k"),
-            F.sha2(F.col("id").cast("string"), 256).alias("commit"),
-        )
-    )
+    t.overwrite(_bloom_rows(spark))
     assert called["distributed"] == 1
     assert called["driver_entry"] == 0  # driver touched no file
     # and the blooms landed
     t = LakeTable(spark, tmpdir_path)
     entries = [e for es in t.manifest["buckets"].values() for e in es]
     assert all("bloom_ref" in e for e in entries)  # bitmaps in sidecars
+
+
+def test_small_bloom_commit_collects_on_driver_without_a_job(
+    spark, tmpdir_path, monkeypatch
+):
+    """A bloom commit below the byte crossover takes the driver walk and
+    launches no Spark job for it; its manifest entries and sidecar bytes
+    equal what the task pass writes for the same files."""
+    import json
+    import os
+
+    from sap_spark.plans.stats import bloom_sidecar_path
+
+    jobs = []
+    real = LakeTable._collect_commit_metadata
+
+    def spy(self, *args, **kwargs):
+        out, new = _new_jobs(spark, lambda: real(self, *args, **kwargs))
+        jobs.append(new)
+        return out
+
+    monkeypatch.setattr(LakeTable, "_collect_commit_metadata", spy)
+    # a float stats column too: its NaN count reads column data
+    t = _mk(spark, tmpdir_path, bloom_columns=["name"])
+    t.overwrite(_nan_rows(spark))
+    assert jobs == [set()]
+
+    t = LakeTable(spark, tmpdir_path)
+    entries = {e["path"]: e for es in t.manifest["buckets"].values() for e in es}
+    assert len(entries) >= 2
+    assert sum(os.path.getsize(p) for p in entries) < t._DISTRIBUTED_DATA_MIN_BYTES
+    assert all("bloom_ref" in e and "nan" in e for e in entries.values())
+    sidecars = {}
+    for p in entries:
+        with open(bloom_sidecar_path(p), "rb") as f:
+            sidecars[p] = f.read()
+        os.remove(bloom_sidecar_path(p))
+
+    tasks = collect_metadata_distributed(
+        spark, sorted(entries), t.stats_columns, t.bloom_columns
+    )
+    for p, e in entries.items():
+        driver_meta = {k: v for k, v in e.items() if k not in ("path", "schema_id")}
+        assert json.dumps(driver_meta, sort_keys=True) == json.dumps(
+            tasks[p], sort_keys=True
+        )
+        with open(bloom_sidecar_path(p), "rb") as f:
+            assert f.read() == sidecars[p]
+
+
+def test_task_pass_failure_falls_back_to_driver_walk(
+    spark, tmpdir_path, monkeypatch
+):
+    """A task pass that raises must not strip the commit of its metadata:
+    the commit falls back to the driver walk, says so with a
+    RuntimeWarning, and records where the metadata ran."""
+    import sap_spark.plans.stats as stats_mod
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("metadata job lost its executors")
+
+    monkeypatch.setattr(LakeTable, "_DISTRIBUTED_DATA_MIN_BYTES", 0)
+    monkeypatch.setattr(stats_mod, "collect_metadata_distributed", boom)
+    t = LakeTable.create(
+        spark,
+        tmpdir_path,
+        BLOOM_SCHEMA,
+        ["k"],
+        num_buckets=2,
+        bloom_columns=["commit"],
+    )
+    changes = _bloom_rows(spark).select(
+        "*", F.lit("I").alias("op"), F.col("k").alias("event_seq")
+    )
+    with pytest.warns(RuntimeWarning, match="falling back to the driver-side walk"):
+        assert t.merge_cdc(changes, "b0")
+    assert t.last_merge_metrics["metadata_on"] == "driver"
+    t = LakeTable(spark, tmpdir_path)
+    entries = [e for es in t.manifest["buckets"].values() for e in es]
+    assert entries
+    assert all("stats" in e and "bloom_ref" in e for e in entries)

@@ -520,3 +520,60 @@ def test_pipeline_log_dir_with_space(spark, tmpdir_path):
         .orderBy("repo", "path").toPandas().reset_index(drop=True)
     )
     assert got.equals(fold_to_frame(events.toPandas()))
+
+
+def test_lineage_bills_commit_metadata_to_its_own_phase(
+    spark, tmpdir_path, monkeypatch
+):
+    """Each merge's lineage ``merge_phases`` names the metadata pass's
+    time (``metadata_sec``) and locality (``metadata_on``), and
+    ``merge_write_sec`` no longer includes it: the phases sum to no more
+    than the merge's own wall time."""
+    import time
+
+    import sap_spark.plans.stats as stats_mod
+
+    real_entry = stats_mod.collect_entry_metadata
+
+    def slow_entry(*args):  # a visible metadata cost
+        time.sleep(0.2)
+        return real_entry(*args)
+
+    monkeypatch.setattr(stats_mod, "collect_entry_metadata", slow_entry)
+    walls = []
+    real_merge = LakeTable.merge_cdc
+
+    def timed_merge(self, *args, **kwargs):
+        t0 = time.monotonic()
+        try:
+            return real_merge(self, *args, **kwargs)
+        finally:
+            walls.append(time.monotonic() - t0)
+
+    monkeypatch.setattr(LakeTable, "merge_cdc", timed_merge)
+
+    events = gen_change_events(spark, n_events=1000, n_keys=100, events_per_token=500)
+    log_dir = f"{tmpdir_path}/log"
+    write_change_log(events, log_dir)
+    table = LakeTable.create(
+        spark, f"{tmpdir_path}/repos", TARGET_SCHEMA,
+        key_columns=["repo", "path"], num_buckets=2, merge_mode="mor",
+        bloom_columns=["commit"],
+    )
+    pipe = CdcPipeline(
+        spark, CFG, table, log_dir,
+        checkpoint_dir=f"{tmpdir_path}/ckpt", pipeline_id="phases",
+    )
+    pipe.run_available_now(timeout_sec=300)
+
+    applied = [r for r in pipe.lineage() if r["applied"]]
+    assert len(applied) == len(walls) >= 1
+    for rec, wall in zip(applied, walls):
+        ph = rec["merge_phases"]
+        assert ph["metadata_on"] == "driver"  # a small bloom commit
+        assert ph["metadata_sec"] >= 0.2
+        parts = ("fold_and_discover_sec", "merge_write_sec", "metadata_sec", "commit_sec")
+        assert sum(ph[k] for k in parts) <= wall + 0.005
+    table = LakeTable(spark, table.path)
+    entries = [e for es in table.manifest["buckets"].values() for e in es]
+    assert entries and all("bloom_ref" in e for e in entries)
