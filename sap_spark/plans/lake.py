@@ -1083,15 +1083,14 @@ class LakeTable:
     _DISTRIBUTED_STATS_MIN_FILES = 64
     # ...or when it must read column DATA (blooms, NaN counts) and its new
     # files total at least this many bytes. Measured by
-    # tools/bench_metadata.py at local[2] on repo-shaped files
-    # (BENCH/METADATA_r6.md): the task pass costs ~0.3 s before it reads
-    # a byte (job + Python-worker start-up) plus ~0.055 s/MB, the driver
-    # walk ~0.115 s/MB (one blake2b per bloomed value), so the driver
-    # wins at 0.7 MB and the task pass at 6.6 MB, crossing near 4.4 MB.
-    # More executors shrink only the task pass's per-byte part, pulling
-    # the crossover toward ~2.3 MB (the driver's cost reaching the fixed
-    # 0.3 s), so the constant sits at that lower end.
-    _DISTRIBUTED_DATA_MIN_BYTES = 2 << 20
+    # tools/bench_metadata.py on repo-shaped files, two runs per slot
+    # count (BENCH/METADATA_r6.md): the task pass costs ~0.3 s before it
+    # reads a byte (job + Python-worker start-up), the driver walk
+    # ~0.13 s/MB (one blake2b per bloomed value). The two cross at
+    # 4.2-5.7 MB on local[2] and 3.1-3.4 MB on local[4]; 4 MiB sits
+    # between, where neither slot count loses more than ~0.06 s per
+    # commit to the wrong path. Larger clusters are unmeasured.
+    _DISTRIBUTED_DATA_MIN_BYTES = 4 << 20
 
     def _collect_commit_metadata(
         self,

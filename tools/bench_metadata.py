@@ -13,7 +13,9 @@ columns (``repo, path, _event_seq``) and a bloom on ``commit``. Each size
 gets one untimed warm-up of each path, then ``--reps`` timed runs in
 alternating order; the table reports medians. Both paths must return
 identical metadata (compared as sorted JSON) and leave identical sidecar
-bytes, or the run fails. The crossover between the two columns sets
+bytes, or the run fails. The run ends by printing the crossover: the
+size, interpolated between the two measured sizes around it, past which
+the task pass is faster at every measured size. That figure sets
 ``LakeTable._DISTRIBUTED_DATA_MIN_BYTES``. ``--out FILE`` also writes the
 table as markdown (the reading of it in BENCH/METADATA_r6.md is by hand).
 
@@ -36,8 +38,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-# (rows, files) per measured commit shape
-SIZES = [(3_000, 8), (10_000, 8), (100_000, 8), (400_000, 32)]
+# (rows, files) per measured commit shape: ~66 bytes per row, so the
+# 8-file shapes step through 0.2-6.6 MB, densest around the crossover
+SIZES = [
+    (3_000, 8), (10_000, 8), (20_000, 8), (35_000, 8), (50_000, 8),
+    (65_000, 8), (80_000, 8), (100_000, 8), (400_000, 32),
+]
 STATS_COLS = ["repo", "path", "_event_seq"]
 BLOOM_COLS = ["commit"]
 
@@ -127,12 +133,34 @@ def main() -> int:
     finally:
         spark.stop()
         shutil.rmtree(workdir, ignore_errors=True)
+    cross = crossover_bytes(rows_out)
+    print(json.dumps({"cpus": args.cpus, "crossover_bytes": cross}), flush=True)
     if args.out:
-        write_md(args.out, rows_out, args.cpus, args.reps)
+        write_md(args.out, rows_out, args.cpus, args.reps, cross)
     return 0
 
 
-def write_md(out_path: str, rows: list[dict], cpus: int, reps: int) -> None:
+def crossover_bytes(rows: list[dict]) -> "int | None":
+    """Bytes past which the task pass wins at every measured size,
+    linearly interpolated on (driver - tasks) between the last size the
+    driver wins and the next one; None if the driver wins the largest
+    size, 0 if the task pass wins them all."""
+    rows = sorted(rows, key=lambda r: r["bytes"])
+    gain = [r["driver_s"] - r["tasks_s"] for r in rows]
+    if gain[-1] <= 0:
+        return None
+    i = len(rows) - 1
+    while i > 0 and gain[i - 1] > 0:
+        i -= 1
+    if i == 0:
+        return 0
+    lo, hi = rows[i - 1]["bytes"], rows[i]["bytes"]
+    return int(lo + (hi - lo) * -gain[i - 1] / (gain[i] - gain[i - 1]))
+
+
+def write_md(
+    out_path: str, rows: list[dict], cpus: int, reps: int, cross: "int | None"
+) -> None:
     lines = [
         "# Commit metadata: driver walk vs one-job task pass",
         "",
@@ -151,6 +179,11 @@ def write_md(out_path: str, rows: list[dict], cpus: int, reps: int) -> None:
             f"| {r['rows'] // 1000}k ({r['files']}) | {r['bytes'] / 1e6:.2f} MB | "
             f"{r['driver_s']:.3f} s | {r['tasks_s']:.3f} s | {faster} |"
         )
+    lines += [
+        "",
+        "Crossover: "
+        + ("none measured" if cross is None else f"{cross / 1e6:.2f} MB"),
+    ]
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
 
