@@ -53,9 +53,9 @@ class EngineConfig:
     # runtime when any single key carries at least this many surviving
     # events — the point where bounding every exchange explicitly
     # (per-(key, salt) window partitions) beats relying on
-    # partial-aggregation behavior under adversarial skew. The count rides
-    # the epoch's bucket-discovery agg over the persisted, payload-pruned
-    # winner scan, so measuring it costs no extra job.
+    # partial-aggregation behavior under adversarial skew. The count comes
+    # out of the epoch's discovery (streaming/pipeline.discover) with the
+    # bucket offsets, so measuring it costs no extra job.
     hot_key_threshold: int = 2_000_000
 
     def validate(self) -> "EngineConfig":

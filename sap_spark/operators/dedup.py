@@ -33,6 +33,16 @@ One fold implements it (``fold_changes``; the pipeline's
   included. Payload bytes never enter the winner aggregation; they cross
   the wire once, in the exchange the MERGE needs anyway.
 
+Where the pipeline finds the winners depends on the batch's size
+(``streaming/pipeline.discover``). A small batch collects ONE narrow
+projection (keys, seq, op, rocancel, cancel-seq, bucket id) in a single
+shuffle-free job, and :func:`discover_arrow` derives the cancel set,
+survivors, per-key winners with event counts and per-bucket offsets from
+it in Arrow on the driver, by the same rules as :func:`cancelled_seqs`,
+:func:`drop_cancelled` and :func:`lww_winners`; the winners and cancel
+set return to Spark as local relations. A large batch runs phase A as
+the persisted Spark jobs above. Either way phase B is unchanged.
+
 Skew is handled where it is detected, at runtime: the pipeline's winner
 scan also counts surviving events per key, and a batch whose hottest key
 reaches ``cfg.hot_key_threshold`` folds through ``lww_window`` instead —
@@ -54,6 +64,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sap_spark.config import EngineConfig
 
@@ -275,6 +286,99 @@ def _fetch_payloads(
         .agg(F.max_by(carried, order).alias("__w"))
         .select(*keys, *[F.col(f"__w.{c}").alias(c) for c in rest])
     )
+
+
+_ARROW_GROUPABLE = (
+    T.BooleanType, T.ByteType, T.ShortType, T.IntegerType, T.LongType,
+    T.FloatType, T.DoubleType, T.DecimalType, T.DateType, T.TimestampType,
+    T.TimestampNTZType, T.BinaryType,
+)
+
+
+def arrow_groups_like_spark(dtype: T.DataType) -> bool:
+    """Whether Arrow's hash grouping on a key of this Spark type finds the
+    same groups as Spark's ``groupBy``: atomic types compare by value in
+    both (floats once :func:`discover_arrow` applies Spark's
+    normalization). Collated strings and nested types do not, so a batch
+    keyed on one discovers on the Spark path."""
+    if isinstance(dtype, T.StringType):
+        return dtype.collation == "UTF8_BINARY"
+    return isinstance(dtype, _ARROW_GROUPABLE)
+
+
+def discover_arrow(batch, cfg: EngineConfig, bucket: str):
+    """Driver-side discovery over a collected narrow projection of a batch
+    (pyarrow Table of keys, seq, op, rocancel, cancel-seq and ``bucket``,
+    the table's bucket id computed by the executors). Returns
+    ``(cancelled, winners, offsets)``:
+
+    - ``cancelled``: the distinct cancelled seqs, as :func:`cancelled_seqs`
+      (None when the batch has no rocancel column);
+    - ``winners``: (key…, seq, ``__n_events``, bucket) per key over the
+      survivors of :func:`drop_cancelled`, as ``lww_winners(with_counts=
+      True)``;
+    - ``offsets``: ``{bucket: {max_seq, n_rows, max_key_events}}`` over
+      the winners, as ``plans/lake.py::bucket_offsets``.
+
+    Float keys are normalized first as Spark's grouping does (``-0.0`` →
+    ``0.0``, every NaN → one NaN): Arrow groups by bit pattern, and two
+    winners for one Spark key would break merge_cdc's ≤1-row contract.
+    Spark's xxhash64 normalizes the same way, so the executors' bucket id
+    agrees across a group."""
+    import functools
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, seq = list(cfg.key_columns), cfg.order_column
+    rc, cs = cfg.rocancel_column, cfg.cancel_seq_column
+    live, cancelled = [], None
+    if rc in batch.column_names:
+        flag = pc.fill_null(batch[rc], False)
+        cancelled = pc.unique(
+            batch[cs].filter(pc.and_(flag, pc.is_valid(batch[cs])))
+        )
+        # a NULL seq is never in the set (Spark's anti-join keeps it too)
+        live += [
+            pc.invert(flag),
+            pc.invert(pc.is_in(batch[seq], value_set=cancelled)),
+        ]
+    if cfg.op_column in batch.column_names:
+        live.append(pc.is_valid(batch[cfg.op_column]))
+    survivors = batch.filter(functools.reduce(pc.and_, live)) if live else batch
+    for k in keys:
+        col = survivors[k]
+        if pa.types.is_floating(col.type):
+            zero = pa.scalar(0.0, col.type)
+            nan = pa.scalar(float("nan"), col.type)
+            col = pc.if_else(
+                pc.is_nan(col), nan, pc.if_else(pc.equal(col, zero), zero, col)
+            )
+            survivors = survivors.set_column(
+                survivors.schema.get_field_index(k), k, col
+            )
+
+    def agg(table, by, aggs, names):
+        out = table.group_by(by).aggregate(aggs)
+        return out.rename_columns([names.get(c, c) for c in out.column_names])
+
+    winners = agg(
+        survivors, [*keys, bucket], [(seq, "max"), ([], "count_all")],
+        {f"{seq}_max": seq, "count_all": "__n_events"},
+    )
+    per_bucket = agg(
+        winners, [bucket],
+        [(seq, "max"), ([], "count_all"), ("__n_events", "max")],
+        {f"{seq}_max": "max_seq", "count_all": "n_rows",
+         "__n_events_max": "max_key_events"},
+    )
+    offsets = {
+        r.pop(bucket): r
+        for r in per_bucket.select(
+            [bucket, "max_seq", "n_rows", "max_key_events"]
+        ).to_pylist()
+    }
+    return cancelled, winners, offsets
 
 
 def fold_changes(events: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -12,7 +12,9 @@ factories, so a future Iceberg binding is done exactly when it passes
 that suite unchanged.
 
 The pipeline layer (streaming/pipeline.py) and CLI only call this
-surface: ``affected_bucket_offsets`` + ``merge_cdc`` per epoch, ``version`` /
+surface: ``bucket_column`` (the bucket id a batch's keys hash to, over
+either discovery path) or ``affected_bucket_offsets``, then ``merge_cdc``
+per epoch, ``version`` /
 ``merge_mode`` / ``num_buckets`` / ``last_merge_metrics`` for lineage and
 sizing, ``compact`` / ``expire_snapshots`` for maintenance. Keeping the
 surface this narrow is what makes the swap possible.
@@ -63,7 +65,7 @@ from __future__ import annotations
 
 from typing import Protocol, runtime_checkable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
 
 
@@ -100,6 +102,8 @@ class TableBackend(Protocol):
 
     # writes --------------------------------------------------------------
     def overwrite(self, df: DataFrame, batch_id: str | None = None) -> None: ...
+
+    def bucket_column(self, frame: DataFrame) -> Column: ...
 
     def affected_bucket_offsets(
         self,

@@ -506,6 +506,11 @@ class IcebergTable:
 
     # -- writes ------------------------------------------------------------
 
+    def bucket_column(self, frame: DataFrame) -> F.Column:
+        """The engine-hash bucket id of ``frame``'s keys — what
+        ``merge_cdc`` partition-prunes by."""
+        return bucket_expr(self.key_columns, self.num_buckets)
+
     def affected_bucket_offsets(
         self,
         events: DataFrame,
@@ -515,10 +520,7 @@ class IcebergTable:
         """Engine-hash buckets with their high-water offsets — the same
         groupBy as LakeTable's (plans/lake.py::bucket_offsets)."""
         return bucket_offsets(
-            events,
-            bucket_expr(self.key_columns, self.num_buckets),
-            seq_column,
-            count_column,
+            events, self.bucket_column(events), seq_column, count_column
         )
 
     def merge_cdc(

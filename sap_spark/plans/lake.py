@@ -172,7 +172,9 @@ def bucket_offsets(
     partition), which lets the pipeline's hot-key probe ride this
     discovery pass instead of running its own job; per-bucket it doubles
     as skew observability in lineage. Shared by both table backends so
-    the offsets have one shape."""
+    the offsets have one shape. This is the large-batch discovery; a
+    small batch derives the same offsets from one collect on the driver
+    (``operators/dedup.discover_arrow``, same dict shape)."""
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
     with_seq = seq_column is not None and seq_column in events.columns
     with_cnt = count_column is not None and count_column in events.columns
@@ -714,7 +716,7 @@ class LakeTable:
         # would return empty for existing keys, and compaction would file
         # rows under new-hash buckets while the manifest still references
         # the old layout. Narrower incoming keys are fine (cast up before
-        # hashing, see _conformed_bucket_expr); a genuinely wider key
+        # hashing, see bucket_column); a genuinely wider key
         # domain needs a new table + backfill, not in-place evolution.
         widened_keys = [c for c, _ in plan.widen_columns if c in self.key_columns]
         if widened_keys:
@@ -1191,7 +1193,7 @@ class LakeTable:
             self._replace_buckets(self._edit(batch_id), new_buckets, drop=None)
         )
 
-    def _conformed_bucket_expr(self, frame: DataFrame) -> F.Column:
+    def bucket_column(self, frame: DataFrame) -> F.Column:
         """Bucket id over key columns CAST to the table's key dtypes.
 
         xxhash64 is dtype-sensitive (an int and the equal long hash
@@ -1199,7 +1201,10 @@ class LakeTable:
         the batch to the table schema — so any discovery pass over a feed
         frame must conform key dtypes the same way, or a narrower (but
         castable) feed key dtype computes a different bucket set than the
-        merge write and every merge raises the stray-bucket guard."""
+        merge write and every merge raises the stray-bucket guard.
+        Evaluated on executors, it is also the bucket column of the
+        narrow projection a small batch's driver discovery collects
+        (streaming/pipeline.discover)."""
         dtypes = {f.name: f.dataType for f in self.schema.fields}
         cast = [F.col(k).cast(dtypes[k]) for k in self.key_columns]
         return bucket_expr(cast, self.num_buckets)
@@ -1212,9 +1217,12 @@ class LakeTable:
     ) -> "dict[int, dict]":
         """Bucket ids a batch touches, each with its high-water offset (see
         :func:`bucket_offsets`); the keys are the exact merge-pruning set.
-        Keys hash at the table's key dtypes, exactly as merge_cdc does."""
+        Keys hash at the table's key dtypes, exactly as merge_cdc does.
+        The pipeline calls it only for a batch too large to discover on
+        the driver (streaming/pipeline.discover); a small batch's offsets
+        come from the same :meth:`bucket_column` evaluated in its collect."""
         return bucket_offsets(
-            events, self._conformed_bucket_expr(events), seq_column, count_column
+            events, self.bucket_column(events), seq_column, count_column
         )
 
     def merge_cdc(

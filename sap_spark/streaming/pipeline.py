@@ -25,16 +25,19 @@ throughput metrics"): each epoch appends a JSON line to
 ``<table>/_meta/lineage.jsonl`` with the token range, event/key counts,
 timing (via ``DataFrame.observe`` during the merge job itself — no second
 pass over the batch), and ``bucket_offsets`` — the per-partition high-water
-offsets {bucket: {max_seq, n_rows, max_key_events}}, computed inside the
-same bucket-keyed agg that discovers the merge's affected buckets
-(``max_key_events`` is the bucket's hottest-key surviving-event count: the
-hot-key probe rides this agg, so probe + discovery are ONE job per epoch).
-``bucket_high_water()`` folds them across epochs for per-partition resume
-verification.
+offsets {bucket: {max_seq, n_rows, max_key_events}}, computed by the same
+discovery that finds the merge's affected buckets (``max_key_events`` is
+the bucket's hottest-key surviving-event count, so the hot-key probe
+costs no job of its own). A small epoch discovers in one collect folded
+on the driver, a large one in persisted Spark jobs (:func:`discover`);
+the ``fold`` record says which (``discovery_on``) and how long it took
+(``discover_sec``). ``bucket_high_water()`` folds the offsets across
+epochs for per-partition resume verification.
 """
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
@@ -51,6 +54,127 @@ from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.changelog import read_changelog_stream
 
 
+# A batch whose narrow discovery projection (keys, seq, op, rocancel,
+# cancel-seq, bucket id) Catalyst sizes below this many bytes discovers
+# on the driver: one collect, folded in Arrow. Larger batches, and any
+# batch whose size is unknown, run the persisted Spark jobs. Driver
+# memory sets the line, not speed: tools/bench_discovery.py
+# (BENCH/DISCOVERY_r10.md) found the driver faster at every size up to
+# 2M events (~71 MB estimated) on local[2] and local[4], while the Python
+# driver's RSS grew ~5.5 bytes per estimated byte (+193 MB at 1M events,
+# +338 MB at 2M). At 32 MiB the growth stays under ~200 MB, and 2M-event
+# epochs (bench.py's headline replay) keep the task path. No cluster was
+# measured.
+DRIVER_DISCOVERY_MAX_BYTES = 32 << 20
+
+
+@dataclass
+class Discovery:
+    """What a batch's fold and MERGE need to know before they run."""
+
+    on: str  # "driver" (one collect, folded in Arrow) or "tasks"
+    winners: DataFrame  # (key…, seq): each key's winning event_seq
+    cancelled: "DataFrame | None"  # cancelled seqs; None without rocancel
+    offsets: "dict[int, dict]"  # {bucket: {max_seq, n_rows, max_key_events}}
+    sec: float  # wall time until the offsets were known
+
+
+def _estimated_bytes(df: DataFrame) -> "int | None":
+    """Catalyst's size estimate of ``df``'s optimized plan (no job)."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return None
+
+
+@contextlib.contextmanager
+def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
+    """Find a batch's cancel set, per-key winners and bucket offsets.
+
+    The locality is chosen before any job runs. A batch keyed on types
+    Arrow groups as Spark does (``arrow_groups_like_spark``) whose narrow
+    projection Catalyst sizes below ``DRIVER_DISCOVERY_MAX_BYTES``
+    collects that projection in ONE job with no shuffle (executors compute
+    the table's ``bucket_column``) and derives everything in Arrow on the
+    driver (``operators/dedup.discover_arrow``); its winners and cancel
+    set return to Spark as local relations, which launch no job. Any
+    other batch persists the cancel set and the counted winner scan
+    (``lww_winners(with_counts=True)``) and runs ONE bucket-keyed agg over
+    them (``table.affected_bucket_offsets``); they are unpersisted when
+    the context exits. Both yield the same :class:`Discovery`."""
+    # call-time imports: tracing tools patch these module attributes
+    from sap_spark.operators.dedup import (
+        arrow_groups_like_spark,
+        cancelled_seqs,
+        discover_arrow,
+        lww_winners,
+    )
+
+    keys, seq = list(cfg.key_columns), cfg.order_column
+    t0 = time.monotonic()
+    envelope = [cfg.op_column, cfg.rocancel_column, cfg.cancel_seq_column]
+    narrow = events.select(
+        *keys, seq, *[c for c in envelope if c in events.columns],
+        table.bucket_column(events).alias("__bucket"),
+    )
+    fields = {f.name: f for f in narrow.schema.fields}
+    size = _estimated_bytes(narrow)
+    if (
+        size is not None
+        and size < DRIVER_DISCOVERY_MAX_BYTES
+        and all(arrow_groups_like_spark(fields[k].dataType) for k in keys)
+    ):
+        import pyarrow as pa
+        from pyspark.sql import types as T
+
+        spark = events.sparkSession
+        cancelled, winners, offsets = discover_arrow(
+            narrow.toArrow(), cfg, "__bucket"
+        )
+
+        def local(rows: "pa.Table", types: "dict[str, T.DataType]"):
+            return spark.createDataFrame(
+                rows.select(list(types)),
+                T.StructType([T.StructField(c, t) for c, t in types.items()]),
+            )
+
+        yield Discovery(
+            "driver",
+            local(winners, {c: fields[c].dataType for c in [*keys, seq]}),
+            None if cancelled is None else local(
+                pa.table({seq: cancelled}),
+                {seq: fields[cfg.cancel_seq_column].dataType},
+            ),
+            offsets,
+            round(time.monotonic() - t0, 4),
+        )
+        return
+    counted = cancelled = None
+    # the try spans from the FIRST persist: a discovery/fold failure
+    # mid-epoch (foreachBatch retries the epoch) must not leak cached
+    # blocks — retried persists would otherwise accumulate in executor
+    # storage memory for the session's lifetime
+    try:
+        cancelled = cancelled_seqs(events, cfg)
+        if cancelled is not None:
+            cancelled = cancelled.persist()
+        counted = lww_winners(
+            events, cfg, cancelled=cancelled, with_counts=True
+        ).persist()
+        offsets = table.affected_bucket_offsets(
+            counted, seq_column=seq, count_column="__n_events"
+        )
+        yield Discovery(
+            "tasks", counted.select(*keys, seq), cancelled, offsets,
+            round(time.monotonic() - t0, 4),
+        )
+    finally:
+        if counted is not None:
+            counted.unpersist()
+        if cancelled is not None:
+            cancelled.unpersist()
+
+
 def ingest_batch(
     events: DataFrame,
     table: LakeTable,
@@ -62,17 +186,16 @@ def ingest_batch(
 
     One straight path for every batch:
 
-    1. the cancelled-seq set is built and persisted, so its pruned scan
-       of the batch runs once, not once per fold phase;
-    2. the winner scan (``lww_winners(with_counts=True)``: key, max seq
-       and surviving-event count per key — O(keys) of ~100 B rows, from a
-       payload-pruned scan) is persisted;
-    3. ONE bucket-keyed agg over it (``table.affected_bucket_offsets``)
-       yields the exact merge buckets, the per-bucket lineage offsets
-       ``{bucket: {max_seq, n_rows, max_key_events}}`` and — as the max
-       of ``max_key_events`` over buckets, which is the max over keys —
-       the batch's hottest-key count;
-    4. the payloads are fetched through a broadcast probe of the winner
+    1. :func:`discover` finds the cancelled-seq set, each key's winning
+       seq and surviving-event count, and — bucketed by the table's own
+       ``bucket_column`` — the exact merge buckets with their lineage
+       offsets ``{bucket: {max_seq, n_rows, max_key_events}}``. A small
+       batch does this in one collect folded in Arrow on the driver; a
+       large one in persisted Spark jobs (cancel set, winner scan, one
+       bucket-keyed agg);
+    2. the batch's hottest-key count is the max of ``max_key_events``
+       over buckets, which is the max over keys;
+    3. the payloads are fetched through a broadcast probe of the winner
        set (``fetch_winner_payloads``) — or, when the hottest key carries
        at least ``cfg.hot_key_threshold`` surviving events, folded by the
        salted two-level window (``lww_window``), whose every exchange is
@@ -82,65 +205,52 @@ def ingest_batch(
 
     The payload fold stays lazy and single-pass inside the MERGE write
     job. The fold that ran (``strategy``: ``fetch`` or ``window_salted``),
-    the hottest-key count and the bucket offsets are reported through
-    ``metrics_out`` (and the pipeline's lineage).
+    the hottest-key count, where discovery ran (``discovery_on``:
+    ``driver`` or ``tasks``) and how long it took (``discover_sec``), and
+    the bucket offsets are reported through ``metrics_out`` (and the
+    pipeline's lineage).
     """
     # call-time imports: tracing tools patch these module attributes
     from sap_spark.operators.dedup import (
-        cancelled_seqs,
         drop_cancelled,
         fetch_winner_payloads,
         fold_output_columns,
         lww_window,
-        lww_winners,
     )
 
     # Replay fast path: a crash between the table commit and the
     # checkpoint commit replays the epoch with the same batch_id —
     # merge_cdc would no-op on its batch marker anyway, but only AFTER
-    # this function ran the persist/winner-scan/discovery jobs over the
-    # whole batch. One driver-side set lookup makes the replay
-    # near-free; last_merge_metrics mirrors merge_cdc's replay contract
-    # (reset so lineage never reports the previous merge's timings).
+    # this function ran discovery over the whole batch. One driver-side
+    # set lookup makes the replay near-free; last_merge_metrics mirrors
+    # merge_cdc's replay contract (reset so lineage never reports the
+    # previous merge's timings).
     if batch_id in table.committed_batches():
         table.last_merge_metrics = None
         return False
 
-    keys, seq = list(cfg.key_columns), cfg.order_column
-    winners = cancelled = None
-    # the try spans from the FIRST persist: a discovery/fold failure
-    # mid-epoch (foreachBatch retries the epoch) must not leak cached
-    # blocks — retried persists would otherwise accumulate in executor
-    # storage memory for the session's lifetime
-    try:
-        cancelled = cancelled_seqs(events, cfg)
-        if cancelled is not None:
-            cancelled = cancelled.persist()
-        winners = lww_winners(
-            events, cfg, cancelled=cancelled, with_counts=True
-        ).persist()
-        bucket_offsets = table.affected_bucket_offsets(
-            winners, seq_column=seq, count_column="__n_events"
-        )
+    with discover(events, table, cfg) as found:
         hot = max(
-            (o["max_key_events"] for o in bucket_offsets.values()), default=0
+            (o["max_key_events"] for o in found.offsets.values()), default=0
         )
         if hot >= cfg.hot_key_threshold:
             chosen = "window_salted"
             folded = lww_window(
-                drop_cancelled(events, cfg, cancelled=cancelled), cfg
+                drop_cancelled(events, cfg, cancelled=found.cancelled), cfg
             )
         else:
             chosen = "fetch"
             folded = fetch_winner_payloads(
-                events, winners.select(*keys, seq), cfg, cancelled=cancelled
+                events, found.winners, cfg, cancelled=found.cancelled
             )
         keep = fold_output_columns(events, cfg)
         folded = folded.select(*[c for c in keep if c in folded.columns])
         if metrics_out is not None:
             metrics_out["strategy"] = chosen
             metrics_out["hot_key_count"] = int(hot)
-            metrics_out["bucket_offsets"] = bucket_offsets
+            metrics_out["discovery_on"] = found.on
+            metrics_out["discover_sec"] = found.sec
+            metrics_out["bucket_offsets"] = found.offsets
         # crash-restart needs no special handling here: the manifest
         # link is the SINGLE commit step (lake.py _commit), so a dead
         # driver either committed (the replayed epoch no-ops on its
@@ -153,14 +263,9 @@ def ingest_batch(
             folded,
             batch_id,
             op_column=cfg.op_column,
-            seq_column=seq,
-            affected_buckets=sorted(bucket_offsets),
+            seq_column=cfg.order_column,
+            affected_buckets=sorted(found.offsets),
         )
-    finally:
-        if winners is not None:
-            winners.unpersist()
-        if cancelled is not None:
-            cancelled.unpersist()
 
 
 def table_lineage_path(table_path: str) -> str:

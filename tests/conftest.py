@@ -26,3 +26,12 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture()
+def spark_discovery(monkeypatch):
+    """Send every batch down the large-batch discovery path (persisted
+    Spark jobs) instead of the driver collect small test batches take."""
+    from sap_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "DRIVER_DISCOVERY_MAX_BYTES", 0)

@@ -147,3 +147,15 @@ def test_every_applied_epoch_records_bucket_offsets(spark, tmpdir_path):
     offsets = metrics["bucket_offsets"]
     assert sum(o["n_rows"] for o in offsets.values()) == 20
     assert max(o["max_seq"] for o in offsets.values()) == 20
+
+
+def test_lineage_max_key_events_on_spark_discovery(
+    spark, tmpdir_path, spark_discovery
+):
+    test_auto_pipeline_lineage_carries_max_key_events(spark, tmpdir_path)
+
+
+def test_every_epoch_records_offsets_on_spark_discovery(
+    spark, tmpdir_path, spark_discovery
+):
+    test_every_applied_epoch_records_bucket_offsets(spark, tmpdir_path)

@@ -351,3 +351,22 @@ def test_multi_writer_chaos_converges_to_union_oracle(spark, tmpdir_path, seed):
         .orderBy("repo", "path").toPandas().reset_index(drop=True)
     )
     assert still.equals(expected)
+
+
+@pytest.mark.parametrize("seed", [11, 23, 37])
+def test_crash_schedule_on_spark_discovery(spark, tmpdir_path, seed, spark_discovery):
+    test_random_crash_schedule_converges_to_oracle(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [5, 29])
+def test_crash_schedule_with_auto_expiry_on_spark_discovery(
+    spark, tmpdir_path, seed, spark_discovery
+):
+    test_random_crash_schedule_with_auto_expiry(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [7, 19])
+def test_multi_writer_chaos_on_spark_discovery(
+    spark, tmpdir_path, seed, spark_discovery
+):
+    test_multi_writer_chaos_converges_to_union_oracle(spark, tmpdir_path, seed)

@@ -577,3 +577,39 @@ def test_lineage_bills_commit_metadata_to_its_own_phase(
     table = LakeTable(spark, table.path)
     entries = [e for es in table.manifest["buckets"].values() for e in es]
     assert entries and all("bloom_ref" in e for e in entries)
+
+
+def test_lineage_says_where_discovery_ran(spark, tmpdir_path, monkeypatch):
+    """Each applied epoch's ``fold`` record names where its discovery ran
+    (``discovery_on``) and what it cost (``discover_sec``): ``driver`` for
+    a small epoch, ``tasks`` for one past ``DRIVER_DISCOVERY_MAX_BYTES``
+    (forced here by setting the constant to 0), with the same table
+    state either way."""
+    from sap_spark.streaming import pipeline
+
+    events = gen_change_events(spark, n_events=2000, n_keys=150, events_per_token=1000)
+    log_dir = f"{tmpdir_path}/log"
+    write_change_log(events, log_dir)
+    images = {}
+    for on, cap in (("driver", pipeline.DRIVER_DISCOVERY_MAX_BYTES), ("tasks", 0)):
+        monkeypatch.setattr(pipeline, "DRIVER_DISCOVERY_MAX_BYTES", cap)
+        table = LakeTable.create(
+            spark, f"{tmpdir_path}/{on}", TARGET_SCHEMA,
+            key_columns=["repo", "path"], num_buckets=4,
+        )
+        pipe = CdcPipeline(
+            spark, CFG, table, log_dir,
+            checkpoint_dir=f"{tmpdir_path}/ckpt-{on}", pipeline_id=on,
+        )
+        pipe.run_available_now(timeout_sec=300)
+        applied = [r for r in pipe.lineage() if r["applied"]]
+        assert applied
+        for rec in applied:
+            assert rec["fold"]["discovery_on"] == on
+            assert 0 <= rec["fold"]["discover_sec"] <= rec["elapsed_sec"]
+        images[on] = (
+            LakeTable(spark, table.path).read().orderBy("repo", "path")
+            .toPandas().reset_index(drop=True)
+        )
+    assert images["driver"].equals(images["tasks"])
+    assert images["driver"].equals(fold_to_frame(events.toPandas()))

@@ -175,3 +175,10 @@ def test_incremental_ingest_matches_oracle_both_modes(spark, mode, log, data):
         )
     finally:
         shutil.rmtree(wd, ignore_errors=True)
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_incremental_ingest_matches_oracle_on_spark_discovery(
+    spark, mode, spark_discovery
+):
+    test_incremental_ingest_matches_oracle_both_modes(spark, mode)
