@@ -12,9 +12,9 @@ factories, so a future Iceberg binding is done exactly when it passes
 that suite unchanged.
 
 The pipeline layer (streaming/pipeline.py) and CLI only call this
-surface: ``bucket_column`` (the bucket id a batch's keys hash to, over
-either discovery path) or ``affected_bucket_offsets``, then ``merge_cdc``
-per epoch, ``version`` /
+surface: ``bucket_column`` (the bucket id a batch's keys hash to,
+hashed at the table's key types, over either discovery path) or
+``affected_bucket_offsets``, then ``merge_cdc`` per epoch, ``version`` /
 ``merge_mode`` / ``num_buckets`` / ``last_merge_metrics`` for lineage and
 sizing, ``compact`` / ``expire_snapshots`` for maintenance. Keeping the
 surface this narrow is what makes the swap possible.
@@ -33,7 +33,9 @@ Contract laws (each has a test of the same name in the contract suite):
     (int→long, float→double); anything else raises before data moves.
 5.  **key stability** — every key lives in exactly one bucket; the key
     set of ``affected_bucket_offsets`` of a batch is the exact bucket set
-    its keys hash to.
+    its keys hash to, hashed at the table's key types (plans/lake.py
+    ``key_bucket``), so a feed typed narrower than the table (an ``int``
+    batch into a ``bigint`` key) places each key where it already lives.
 6.  **maintenance safety** — ``compact`` and ``expire_snapshots`` never
     change the user-visible row set.
 7.  **change-feed fidelity** — ``changes_between(v1, v2)`` returns the

@@ -45,7 +45,6 @@ import os
 
 from sap_spark.plans.lake import (
     LakeTable,
-    bucket_expr,
     data_file_key,
     scan_data_files,
     sidecar_debris,
@@ -439,7 +438,7 @@ def _deep_checks(spark, table, entries_all, scanned) -> list[dict]:
     Footer pass: `mapInPandas` over the (path, expected rows) list — each
     task opens only parquet footers, so the job moves metadata, not data.
     Bucket pass: one column-pruned scan of ONLY the key columns,
-    re-deriving `pmod(xxhash64(keys), num_buckets)` per row and comparing
+    re-deriving each row's bucket (`table.bucket_column`) and comparing
     per-file against the bucket the manifest filed the file under.
     """
     import pandas as pd
@@ -505,11 +504,10 @@ def _deep_checks(spark, table, entries_all, scanned) -> list[dict]:
     read_schema = T.StructType(key_fields)
     paths = [r[0] for r in rows]
     expected_bucket = {r[0]: r[1] for r in rows}
+    scan = spark.read.schema(read_schema).parquet(*paths)
     per_file = (
-        spark.read.schema(read_schema)
-        .parquet(*paths)
-        .withColumn("__file", F.input_file_name())
-        .withColumn("__derived", bucket_expr(keys, table.num_buckets))
+        scan.withColumn("__file", F.input_file_name())
+        .withColumn("__derived", table.bucket_column(scan))
         .groupBy("__file")
         .agg(F.collect_set("__derived").alias("derived"))
         .collect()

@@ -37,13 +37,14 @@ Law → Iceberg mapping (law numbers from plans/backend.py):
    reference rules C4) decides; application is DDL: ``ALTER TABLE ...
    ADD COLUMNS`` / ``ALTER COLUMN ... TYPE`` (Iceberg allows exactly the
    widenings the plugin's lattice allows: int→long, float→double).
-5. **key stability** — the table carries an explicit ``_bucket`` column
-   computed by the engine's own hash (lake.bucket_expr) and is
-   partitioned ``identity(_bucket)``; the key set of
-   ``affected_bucket_offsets`` is therefore byte-identical between
-   backends, and the MERGE's ``t._bucket IN (...)`` predicate gives
-   Iceberg partition pruning on the target scan (the documented
-   merge-pruning idiom).
+5. **key stability** — the table carries an explicit ``_bucket`` column,
+   partitioned ``identity(_bucket)``, from the placement rule both
+   backends share (lake.key_bucket): keys hash at the table's key types,
+   not the feed's (Iceberg's bucket transform hashes ints as longs for
+   the same reason), so ``affected_bucket_offsets`` is byte-identical
+   between backends even for a narrower-typed feed, and the MERGE's
+   ``t._bucket IN (...)`` predicate gives Iceberg partition pruning on
+   the target scan (the documented merge-pruning idiom).
 6. **maintenance safety** — ``compact`` = ``CALL system.rewrite_data_files``
    (+ optional tombstone purge, a checkpoint-barrier op exactly like
    LakeTable.compact); ``expire_snapshots`` = ``CALL
@@ -79,8 +80,9 @@ from sap_spark.schema.compat import (
 )
 from sap_spark.plans.lake import (
     DEFAULT_BATCH_LEDGER_RETENTION,
-    bucket_expr,
     bucket_offsets,
+    key_bucket,
+    refuse_key_widening,
 )
 
 # Internal (non-user) columns, same names and meaning as LakeTable.
@@ -254,8 +256,9 @@ def _sql_rebucket(table: str, key_columns: list[str], new_num_buckets: int) -> s
     Because the table is ``PARTITIONED BY (_bucket)`` (identity), the
     UPDATE moves rows across partitions in one Iceberg transaction —
     the engine-side analog of ``REPLACE PARTITION FIELD`` with a
-    rewrite. The hash expression is character-identical to
-    lake.bucket_expr so both backends route a key the same way."""
+    rewrite. The stored keys carry the table's key types, so this SQL
+    spelling of lake.key_bucket routes a key as both backends do
+    (tests/test_iceberg_backend.py checks the two by value)."""
     keys = ", ".join(_q(k) for k in key_columns)
     return (
         f"UPDATE {_qname(table)} SET {_q(BUCKET_COL)} = "
@@ -507,9 +510,9 @@ class IcebergTable:
     # -- writes ------------------------------------------------------------
 
     def bucket_column(self, frame: DataFrame) -> F.Column:
-        """The engine-hash bucket id of ``frame``'s keys — what
-        ``merge_cdc`` partition-prunes by."""
-        return bucket_expr(self.key_columns, self.num_buckets)
+        """The bucket id of ``frame``'s keys at the table's key types
+        (lake.key_bucket) — what ``merge_cdc`` stages and prunes by."""
+        return key_bucket([self.schema[k] for k in self.key_columns], self.num_buckets)
 
     def affected_bucket_offsets(
         self,
@@ -572,9 +575,7 @@ class IcebergTable:
                 *[c for c in user_cols if c in changes.columns],
                 F.col(seq_column).cast("long").alias(SEQ_COL),
                 (F.col(op_column) == F.lit("D")).alias(DELETED_COL),
-                bucket_expr(self.key_columns, self.num_buckets).alias(
-                    BUCKET_COL
-                ),
+                self.bucket_column(changes).alias(BUCKET_COL),
             ),
             T.StructType(
                 [f for f in self.schema.fields if f.name in changes.columns]
@@ -637,7 +638,7 @@ class IcebergTable:
             "*",
             F.lit(0).cast("long").alias(SEQ_COL),
             F.lit(False).alias(DELETED_COL),
-            bucket_expr(self.key_columns, self.num_buckets).alias(BUCKET_COL),
+            self.bucket_column(df).alias(BUCKET_COL),
         )
         writer = full.writeTo(_qname(self.path))
         if batch_id is not None:
@@ -651,23 +652,7 @@ class IcebergTable:
 
     def evolve_schema(self, incoming: T.StructType) -> bool:
         plan = plan_evolution(self.schema, incoming)  # law 4: same planner
-        # KEY columns can never change dtype (LakeTable parity): the
-        # stored identity `_bucket` values were computed by xxhash64 at
-        # the OLD dtype, so widening would route new batches' bucket
-        # pruning (`t._bucket IN (...)`) away from the partitions the
-        # existing rows live in — matched rows would stop matching and
-        # keys would silently duplicate across buckets.
-        widened_keys = [
-            c for c, _ in plan.widen_columns if c in self.key_columns
-        ]
-        if widened_keys:
-            from sap_spark.schema.compat import SchemaCompatError
-
-            raise SchemaCompatError(
-                f"cannot widen key column(s) {widened_keys}: the stored "
-                "_bucket routing is a function of the key dtype. Create a "
-                "new table with the wider key and backfill instead."
-            )
+        refuse_key_widening(plan, self.key_columns)
         if plan.is_noop:
             return False
         for stmt in evolution_ddl(self.path, plan):

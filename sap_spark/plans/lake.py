@@ -21,7 +21,8 @@ Semantics provided (and how they scale):
   of that number, never the source of truth. (On an object store the
   single-file claim is a catalog CAS — exactly Iceberg's model.)
 - **Bucketed copy-on-write MERGE**: data files are hash-bucketed by the
-  primary key (``pmod(xxhash64(keys), num_buckets)``). A CDC batch only
+  primary key: ``pmod(xxhash64(keys), num_buckets)`` at the table's key
+  types, one rule (:func:`key_bucket`) for every placement. A CDC batch only
   reads + rewrites the buckets its keys touch; untouched buckets carry
   over by reference into the new manifest. This is Iceberg COW MERGE with
   bucket-partition pruning: per-batch cost is O(touched data), not
@@ -78,6 +79,7 @@ from sap_spark.plans.stats import (
     split_conjuncts_by_keys,
 )
 from sap_spark.schema.compat import (
+    EvolutionPlan,
     SchemaCompatError,
     apply_cast_plan,
     plan_evolution,
@@ -141,10 +143,42 @@ class ConcurrentCommitError(RuntimeError):
 def bucket_expr(
     key_columns: "Sequence[str | F.Column]", num_buckets: int
 ) -> F.Column:
-    """Deterministic bucket id for a primary key: column names on the
-    write path, or key-typed literal Columns when a point lookup routes
-    its pinned keys (:meth:`LakeTable._buckets_for_key_combos`)."""
+    """The hash half of key placement, at whatever types its columns
+    carry. Tables place keys through :func:`key_bucket`, never this."""
     return F.pmod(F.xxhash64(*key_columns), F.lit(num_buckets)).cast("int")
+
+
+def key_bucket(
+    key_fields: "Sequence[T.StructField]",
+    num_buckets: int,
+    columns: "Sequence[F.Column] | None" = None,
+) -> F.Column:
+    """The bucket a key lives in: the one placement rule of both backends
+    (backend law 5). Each key-valued column (by default the key fields'
+    own columns; literals when a point lookup routes its pinned keys) is
+    cast to its key type before :func:`bucket_expr` hashes it, because
+    xxhash64 hashes an int and the equal long differently."""
+    if columns is None:
+        columns = [F.col(f.name) for f in key_fields]
+    return bucket_expr(
+        [c.cast(f.dataType) for f, c in zip(key_fields, columns)], num_buckets
+    )
+
+
+def refuse_key_widening(plan: EvolutionPlan, key_columns: "Sequence[str]") -> None:
+    """A key column never changes type: :func:`key_bucket` hashes keys at
+    the key types, so widening one would re-place every stored key —
+    merges would prune to buckets its rows are not in and insert a second
+    row, point lookups would miss. A narrower incoming key is cast up
+    before hashing; a wider key domain needs a new table and a backfill."""
+    widened = [c for c, _ in plan.widen_columns if c in key_columns]
+    if widened:
+        raise SchemaCompatError(
+            f"cannot widen key column(s) {widened}: a key's bucket is "
+            "hashed at the key type, so widening would move every stored "
+            "key to another bucket. Create a new table with the wider key "
+            "and backfill instead."
+        )
 
 
 def bucket_offsets(
@@ -644,6 +678,10 @@ class LakeTable:
         return list(self.manifest["key_columns"])
 
     @property
+    def _key_fields(self) -> list[T.StructField]:
+        return [self.schema[k] for k in self.key_columns]
+
+    @property
     def num_buckets(self) -> int:
         return int(self.manifest["num_buckets"])
 
@@ -709,23 +747,8 @@ class LakeTable:
             [f for f in incoming.fields if f.name not in INTERNAL_COLS]
         )
         plan = plan_evolution(self.schema, incoming_user)
-        # KEY columns can never change dtype: xxhash64 is dtype-sensitive
-        # (an int and the equal long hash differently), so widening a key
-        # would silently invalidate every existing file's bucket placement
-        # — merges would look in the wrong buckets, point-lookup pruning
-        # would return empty for existing keys, and compaction would file
-        # rows under new-hash buckets while the manifest still references
-        # the old layout. Narrower incoming keys are fine (cast up before
-        # hashing, see bucket_column); a genuinely wider key
-        # domain needs a new table + backfill, not in-place evolution.
-        widened_keys = [c for c, _ in plan.widen_columns if c in self.key_columns]
-        if widened_keys:
-            raise SchemaCompatError(
-                f"cannot widen key column(s) {widened_keys}: the hash-bucket "
-                "layout is a function of the key dtype, so widening would "
-                "orphan every existing file's placement. Create a new table "
-                "with the wider key and backfill instead."
-            )
+        # key types are fixed: key_bucket places keys at them
+        refuse_key_widening(plan, self.key_columns)
         if plan.is_noop:
             return False
         new_schema = plan.apply_to(self.schema)
@@ -952,7 +975,7 @@ class LakeTable:
         then yields the honest result over all buckets).
 
         Each combination becomes one column: the write path's own
-        :func:`bucket_expr` over ``cast(lit(v) AS key_dtype)`` literals,
+        :func:`key_bucket` over its literals, cast to the key types and
         projected on a one-row ``VALUES`` relation. Catalyst constant-
         folds every column, so ``collect()`` is answered by a
         LocalTableScan on the driver and planning launches no Spark job.
@@ -967,8 +990,7 @@ class LakeTable:
         ``k = 1`` numerically, so ``'01'`` matches too and routing by
         ``cast(1 AS string)`` would miss it. A decimal too wide for its
         key type fails the cast itself."""
-        fields = {f.name: f for f in self.schema.fields}
-        key_fields = [fields[k] for k in self.key_columns]
+        key_fields = self._key_fields
         rows = [tuple(c[f.name] for f in key_fields) for c in combos]
         verify = T._make_type_verifier(T.StructType(key_fields))
         try:
@@ -985,10 +1007,8 @@ class LakeTable:
         ):
             return None
         cols = [
-            bucket_expr(
-                [F.lit(v).cast(f.dataType) for f, v in zip(key_fields, row)],
-                self.num_buckets,
-            ).alias(f"b{i}")
+            key_bucket(key_fields, self.num_buckets, [F.lit(v) for v in row])
+            .alias(f"b{i}")
             for i, row in enumerate(rows)
         ]
         try:
@@ -1186,28 +1206,21 @@ class LakeTable:
             .select(*user_cols)
             .withColumn(SEQ_COL, F.lit(None).cast("long"))
             .withColumn(DELETED_COL, F.lit(False))
-            .withColumn("__bucket", bucket_expr(self.key_columns, self.num_buckets))
         )
+        prepared = prepared.withColumn("__bucket", self.bucket_column(prepared))
         new_buckets = self._write_buckets(prepared)
         self._commit(
             self._replace_buckets(self._edit(batch_id), new_buckets, drop=None)
         )
 
     def bucket_column(self, frame: DataFrame) -> F.Column:
-        """Bucket id over key columns CAST to the table's key dtypes.
-
-        xxhash64 is dtype-sensitive (an int and the equal long hash
-        differently), and merge_cdc hashes AFTER apply_cast_plan conforms
-        the batch to the table schema — so any discovery pass over a feed
-        frame must conform key dtypes the same way, or a narrower (but
-        castable) feed key dtype computes a different bucket set than the
-        merge write and every merge raises the stray-bucket guard.
-        Evaluated on executors, it is also the bucket column of the
-        narrow projection a small batch's driver discovery collects
-        (streaming/pipeline.discover)."""
-        dtypes = {f.name: f.dataType for f in self.schema.fields}
-        cast = [F.col(k).cast(dtypes[k]) for k in self.key_columns]
-        return bucket_expr(cast, self.num_buckets)
+        """Bucket id of ``frame``'s keys, hashed at the table's key types
+        (:func:`key_bucket`) — the id every write, compaction, rebucket
+        and discovery pass places a key by, so a narrower-typed feed
+        lands where the table's rows live. Evaluated on executors, it is
+        also the bucket column of the narrow projection a small batch's
+        driver discovery collects (streaming/pipeline.discover)."""
+        return key_bucket(self._key_fields, self.num_buckets)
 
     def affected_bucket_offsets(
         self,
@@ -1293,7 +1306,6 @@ class LakeTable:
                     ]
                 ),
             )
-            .withColumn("__bucket", bucket_expr(keys, self.num_buckets))
             # a null op expresses no change — keeping the row would
             # materialize a live all-null row through the NOT-MATCHED leg
             # of the full-outer merge below (keys from the source side,
@@ -1302,6 +1314,7 @@ class LakeTable:
             # the DLQ (streaming/quality.py); here they are inert.
             .where(F.col(op_column).isNotNull())
         )
+        src = src.withColumn("__bucket", self.bucket_column(src))
         # Bucket pruning: which buckets does this batch touch? When the
         # caller already knows (a cheap key-pruned scan of the winner set,
         # see affected_bucket_offsets), the folded plan stays single-pass — no
@@ -1358,9 +1371,8 @@ class LakeTable:
             phases["n_affected_buckets"] = len(affected)
             return committed
 
-        target = self.read_internal(buckets=affected).withColumn(
-            "__bucket", bucket_expr(keys, self.num_buckets)
-        )
+        target = self.read_internal(buckets=affected)
+        target = target.withColumn("__bucket", self.bucket_column(target))
 
         s = src.alias("s")
         tdf = target.alias("t")
@@ -1687,9 +1699,7 @@ class LakeTable:
             return []
         hits = (
             df.where(F.coalesce(F.col(DELETED_COL), F.lit(False)))
-            .select(
-                bucket_expr(self.key_columns, self.num_buckets).alias("__bucket")
-            )
+            .select(self.bucket_column(df).alias("__bucket"))
             .distinct()
             .collect()
         )
@@ -1769,9 +1779,7 @@ class LakeTable:
         live = self.read_internal(buckets=dirty)
         if purge_tombstones:
             live = live.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        prepared = live.withColumn(
-            "__bucket", bucket_expr(self.key_columns, self.num_buckets)
-        )
+        prepared = live.withColumn("__bucket", self.bucket_column(live))
         new_buckets = self._write_buckets(
             prepared, n_partitions=len(dirty), zorder=zorder
         )
@@ -1841,7 +1849,7 @@ class LakeTable:
         )
         live = self.read_internal()  # MOR-folded, tombstones + seq kept
         prepared = live.withColumn(
-            "__bucket", bucket_expr(self.key_columns, new_num_buckets)
+            "__bucket", key_bucket(self._key_fields, new_num_buckets)
         )
         # _write_buckets derives nothing from num_buckets except the
         # default partition count, which we pass explicitly — the new

@@ -101,7 +101,10 @@ def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
     other batch persists the cancel set and the counted winner scan
     (``lww_winners(with_counts=True)``) and runs ONE bucket-keyed agg over
     them (``table.affected_bucket_offsets``); they are unpersisted when
-    the context exits. Both yield the same :class:`Discovery`."""
+    the context exits. Both yield the same :class:`Discovery`. A frame
+    Catalyst cannot size (``Long.MaxValue``: built by
+    ``spark.createDataFrame`` from a Python list, or through an RDD)
+    always takes the task path, however small."""
     # call-time imports: tracing tools patch these module attributes
     from sap_spark.operators.dedup import (
         arrow_groups_like_spark,
@@ -191,7 +194,8 @@ def ingest_batch(
        ``bucket_column`` — the exact merge buckets with their lineage
        offsets ``{bucket: {max_seq, n_rows, max_key_events}}``. A small
        batch does this in one collect folded in Arrow on the driver; a
-       large one in persisted Spark jobs (cancel set, winner scan, one
+       large one, or one with no size estimate (a list- or RDD-built
+       frame), in persisted Spark jobs (cancel set, winner scan, one
        bucket-keyed agg);
     2. the batch's hottest-key count is the max of ``max_key_events``
        over buckets, which is the max over keys;

@@ -28,16 +28,16 @@ SCHEMA = T.StructType(
 
 
 def _lake_factory(merge_mode):
-    def make(spark, path):
+    def make(spark, path, schema=SCHEMA, key_columns=("repo", "path")):
         return LakeTable.create(
-            spark, path, SCHEMA, key_columns=["repo", "path"],
+            spark, path, schema, key_columns=list(key_columns),
             num_buckets=8, merge_mode=merge_mode,
         )
 
     return make
 
 
-def _iceberg_factory(spark, path):
+def _iceberg_factory(spark, path, schema=SCHEMA, key_columns=("repo", "path")):
     """Iceberg binding (plans/iceberg_backend.py) — runs only where a
     real catalog exists. Point SAP_SPARK_ICEBERG_CATALOG at a configured
     Iceberg catalog name to activate; anywhere else (this sandbox has no
@@ -49,7 +49,7 @@ def _iceberg_factory(spark, path):
         pytest.skip(f"catalog {catalog!r} not reachable as Iceberg")
     ident = f"{catalog}.sap_spark_contract.t{abs(hash(path)) % 10**9}"
     return IcebergTable.create(
-        spark, ident, SCHEMA, key_columns=["repo", "path"], num_buckets=8
+        spark, ident, schema, key_columns=list(key_columns), num_buckets=8
     )
 
 
@@ -69,10 +69,10 @@ def backend_name(request):
 def make_table(spark, tmpdir_path, backend_name):
     counter = [0]
 
-    def make():
+    def make(**kwargs):
         counter[0] += 1
         return BACKENDS[backend_name](
-            spark, f"{tmpdir_path}/{backend_name}-{counter[0]}"
+            spark, f"{tmpdir_path}/{backend_name}-{counter[0]}", **kwargs
         )
 
     return make
@@ -201,6 +201,35 @@ def test_bucket_stability(spark, make_table):
     # merging with the precomputed set equals merging without it
     table.merge_cdc(batch, "b1", affected_buckets=affected)
     assert len(_state(table)) == 50
+
+    # a feed typed narrower than the table (int keys, bigint key column)
+    # places each key where the same keys typed bigint already live: an
+    # upsert through it updates every stored key, never adds a second row
+    wide = make_table(
+        schema=T.StructType(
+            [
+                T.StructField("id", T.LongType(), False),
+                T.StructField("content", T.StringType(), True),
+            ]
+        ),
+        key_columns=["id"],
+    )
+    for batch_id, key_type, content, seq in (
+        ("n1", "bigint", "c", 1), ("n2", "int", "d", 101)
+    ):
+        feed = spark.createDataFrame(
+            [(i, content, "U", seq + i) for i in range(50)],
+            f"id {key_type}, content string, op string, event_seq long",
+        )
+        offsets = wide.affected_bucket_offsets(feed, seq_column="event_seq")
+        at_key_type = feed.select(
+            bucket_expr([F.col("id").cast("bigint")], wide.num_buckets).alias("b")
+        )
+        assert set(offsets) == {r["b"] for r in at_key_type.collect()}
+        assert wide.merge_cdc(feed, batch_id, affected_buckets=sorted(offsets))
+    assert sorted((r["id"], r["content"]) for r in wide.read().collect()) == [
+        (i, "d") for i in range(50)
+    ]
 
 
 def test_maintenance_preserves_state(spark, make_table):

@@ -212,3 +212,39 @@ def test_small_batch_discovers_in_one_job_and_persists_nothing(
         assert len(set(tracker.getJobIdsForGroup()) - before) == 1
         assert found.on == "driver" and found.offsets
     assert persisted == []
+
+
+def test_list_built_batch_discovers_on_tasks(spark, tmpdir_path):
+    """A frame built from a Python list has no Catalyst size estimate
+    (``Long.MaxValue``), so even a 2-row batch discovers on the task path;
+    the same rows built through Arrow discover on the driver, and both
+    leave the same table image."""
+    schema = T.StructType(
+        [T.StructField(c, t, True) for c, t in ENVELOPE]
+        + [T.StructField(c, T.StringType(), True) for c in ("repo", "path", "content")]
+    )
+    rows = [
+        ("D000", 1, "I", False, None, "r", "a", "x"),
+        ("D000", 2, "I", False, None, "r", "b", "y"),
+    ]
+    cfg = EngineConfig(payload_columns=("content",), num_buckets=4).validate()
+    built = {
+        "tasks": spark.createDataFrame(rows, schema),
+        "driver": spark.createDataFrame(
+            pa.Table.from_pylist(
+                [dict(zip(schema.names, r)) for r in rows], to_arrow_schema(schema)
+            ),
+            schema,
+        ),
+    }
+    images = {}
+    for on, events in built.items():
+        table = LakeTable.create(
+            spark, f"{tmpdir_path}/{on}", schema[-3:], key_columns=["repo", "path"],
+            num_buckets=4,
+        )
+        metrics: dict = {}
+        assert pipeline.ingest_batch(events, table, cfg, "b0", metrics)
+        assert metrics["discovery_on"] == on
+        images[on] = sorted(map(tuple, LakeTable(spark, table.path).read().collect()))
+    assert images["tasks"] == images["driver"] == [("r", "a", "x"), ("r", "b", "y")]

@@ -9,7 +9,10 @@ mirrors (version-gate guard, tombstones-not-deletes, partition-pruned
 merge, WAP publish, evolution lattice DDL).
 """
 
+from decimal import Decimal
+
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sap_spark.plans.iceberg_backend import (
@@ -119,6 +122,33 @@ def test_rebucket_sql_matches_engine_hash():
         "UPDATE `ice`.`cdc`.`repos` SET `_bucket` = "
         "CAST(pmod(xxhash64(`repo`, `path`), 19) AS INT)"
     )
+
+
+@pytest.mark.parametrize(
+    "ddl, rows",
+    [
+        ("k int", [(0,), (1,), (-7,), (2**31 - 1,), (None,)]),
+        ("k bigint", [(0,), (1,), (-7,), (2**40,)]),
+        ("k string", [("",), ("a",), ("A",), ("01",)]),
+        ("k decimal(10,2)", [(Decimal(v),) for v in ("0.00", "1.10", "-3.25")]),
+        ("k1 string, k2 int", [("a", 1), ("a", 2), ("b", 1), ("", -1)]),
+    ],
+)
+def test_rebucket_sql_places_keys_like_key_bucket(spark, ddl, rows):
+    """Law 9 by value: the UPDATE's SQL spelling of the hash, evaluated
+    over stored key columns, gives every row the bucket lake.key_bucket
+    gives it, so a reshard leaves each key where both backends route it."""
+    from sap_spark.plans.lake import key_bucket
+
+    frame = spark.createDataFrame(rows, ddl)
+    keys = frame.columns
+    for n in (8, 19):
+        expr = _sql_rebucket(TABLE, keys, n).split(" = ", 1)[1]
+        got = frame.select(
+            F.expr(expr).alias("sql"),
+            key_bucket(frame.schema.fields, n).alias("rule"),
+        ).collect()
+        assert [r["sql"] for r in got] == [r["rule"] for r in got]
 
 
 def test_set_property_escapes_quotes():

@@ -89,28 +89,37 @@ class _FakeCatalog:
 class FakeSpark:
     """Records every catalog-boundary call; DataFrame work stays real."""
 
-    def __init__(self, real):
+    def __init__(self, real, full_schema=FULL_SCHEMA):
         self.log: list = []
         self.conf = _FakeConf(self.log)
         self.catalog = _FakeCatalog(self.log, real)
         self._real = real
+        self.full_schema = full_schema
         self.props_rows: list = []
+        self.staged: list = []  # rows of the source view the last MERGE read
 
     def sql(self, q):
         self.log.append(("sql", q))
+        if q.startswith("MERGE INTO"):
+            # the temp view exists on the REAL session right now —
+            # snapshot what the binding actually staged
+            view = q.split(" USING ")[1].split(" ")[0].strip("`")
+            self.staged = self._real.table(view).collect()
         if q.startswith("SHOW TBLPROPERTIES"):
             return _Result(self.props_rows)
         return _Result([])  # history/snapshots/DML: empty catalog
 
     def table(self, name):
-        return self._real.createDataFrame([], FULL_SCHEMA)
+        return self._real.createDataFrame([], self.full_schema)
 
     def sqls(self):
         return [x[1] for x in self.log if x[0] == "sql"]
 
 
-def _table(spark) -> tuple[IcebergTable, FakeSpark]:
-    fake = FakeSpark(spark)
+def _table(
+    spark, full_schema=FULL_SCHEMA, keys=KEYS
+) -> tuple[IcebergTable, FakeSpark]:
+    fake = FakeSpark(spark, full_schema)
     t = IcebergTable.__new__(IcebergTable)
     t.spark = fake
     t.path = TABLE
@@ -118,7 +127,7 @@ def _table(spark) -> tuple[IcebergTable, FakeSpark]:
     t._ancestry = []
     t.version = 0
     t._props = {
-        PROP_KEYS: json.dumps(KEYS),
+        PROP_KEYS: json.dumps(keys),
         PROP_BUCKETS: "8",
         PROP_BATCHES: "[]",
     }
@@ -301,35 +310,7 @@ def test_merge_cdc_null_op_rows_are_inert(spark):
     would compute a NULL _deleted for the NOT NULL internal column and
     corrupt (or fail) the MERGE. The staged source view must carry only
     the valid rows, with no null _deleted."""
-
-    class _ViewInspectingSpark(FakeSpark):
-        def sql(self, q):
-            if q.startswith("MERGE INTO"):
-                # the temp view exists on the REAL session right now —
-                # snapshot what the binding actually staged
-                view = q.split(" USING ")[1].split(" ")[0].strip("`")
-                staged = self._real.table(view).collect()
-                self.log.append(
-                    (
-                        "staged",
-                        len(staged),
-                        sum(1 for r in staged if r["_deleted"] is None),
-                    )
-                )
-            return super().sql(q)
-
-    fake = _ViewInspectingSpark(spark)
-    t = IcebergTable.__new__(IcebergTable)
-    t.spark = fake
-    t.path = TABLE
-    t.catalog, t.namespace, t.table = TABLE.split(".")
-    t._ancestry = []
-    t.version = 0
-    t._props = {
-        PROP_KEYS: json.dumps(KEYS),
-        PROP_BUCKETS: "8",
-        PROP_BATCHES: "[]",
-    }
+    t, fake = _table(spark)
     changes = spark.createDataFrame(
         [
             ("r1", "f1", "body", "I", 1),
@@ -338,8 +319,8 @@ def test_merge_cdc_null_op_rows_are_inert(spark):
         "repo string, path string, content string, op string, event_seq long",
     )
     assert t.merge_cdc(changes, "epoch-1", affected_buckets=[1, 2, 3]) is True
-    staged = next(e for e in fake.log if e[0] == "staged")
-    assert staged == ("staged", 1, 0)  # one valid row, zero null _deleted
+    # one valid row, zero null _deleted
+    assert [r["_deleted"] for r in fake.staged] == [False]
 
 
 def test_evolve_schema_rejects_key_widening(spark):
@@ -359,22 +340,7 @@ def test_evolve_schema_rejects_key_widening(spark):
         ]
     )
 
-    class _IntKeySpark(FakeSpark):
-        def table(self, name):
-            return self._real.createDataFrame([], int_key_full)
-
-    fake = _IntKeySpark(spark)
-    t = IcebergTable.__new__(IcebergTable)
-    t.spark = fake
-    t.path = TABLE
-    t.catalog, t.namespace, t.table = TABLE.split(".")
-    t._ancestry = []
-    t.version = 0
-    t._props = {
-        PROP_KEYS: json.dumps(["id"]),
-        PROP_BUCKETS: "8",
-        PROP_BATCHES: "[]",
-    }
+    t, fake = _table(spark, int_key_full, keys=["id"])
     wide = T.StructType(
         [
             T.StructField("id", T.LongType(), True),
@@ -428,6 +394,48 @@ def test_affected_bucket_offsets_is_engine_hash_groupby(spark):
         for b, o in offsets.items()
     } == expected
     assert fake.sqls() == []
+
+
+def test_narrower_feed_places_keys_at_table_types(spark, tmpdir_path):
+    """An int-typed batch into a bigint-key table places each key where
+    the same keys typed bigint live, and where LakeTable puts them:
+    ``bucket_column``, the keys of ``affected_bucket_offsets`` and the
+    ``_bucket`` merge_cdc stages all hash at the table's key type.
+    xxhash64 hashes an int and the equal long differently, so hashing
+    the feed's type would prune the MERGE (``t._bucket IN (...)``) away
+    from a stored key's partition and insert a second row for it."""
+    from sap_spark.plans.lake import LakeTable, bucket_expr
+
+    user = T.StructType(
+        [
+            T.StructField("id", T.LongType(), True),
+            T.StructField("v", T.StringType(), True),
+        ]
+    )
+    full = T.StructType(list(user.fields) + list(FULL_SCHEMA.fields[-3:]))
+    t, fake = _table(spark, full, keys=["id"])
+    lake = LakeTable.create(
+        spark, f"{tmpdir_path}/lake", user, key_columns=["id"], num_buckets=8
+    )
+    rows = [(i, f"v{i}", "U", i + 1) for i in range(20)]
+    ints, longs = (
+        spark.createDataFrame(rows, f"id {k}, v string, op string, event_seq long")
+        for k in ("int", "bigint")
+    )
+
+    def ids(frame, bucket):
+        got = frame.select("id", bucket.alias("b")).collect()
+        return {r["id"]: r["b"] for r in got}
+
+    at_table_type = ids(longs, bucket_expr(["id"], 8))
+    assert ids(ints, bucket_expr(["id"], 8)) != at_table_type  # the hazard
+    for frame in (ints, longs):
+        assert ids(frame, t.bucket_column(frame)) == at_table_type
+        assert ids(frame, lake.bucket_column(frame)) == at_table_type
+    offsets = t.affected_bucket_offsets(ints, seq_column="event_seq")
+    assert set(offsets) == set(at_table_type.values())
+    assert t.merge_cdc(ints, "epoch-1", affected_buckets=sorted(offsets))
+    assert {r["id"]: r["_bucket"] for r in fake.staged} == at_table_type
 
 
 def test_pipelines_reject_epoch_tail_options_iceberg_lacks(spark, tmpdir_path):
