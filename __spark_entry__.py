@@ -625,9 +625,9 @@ _DOCS_SHA256_SQL = """
 
 # ---------------------------------------------------------------------------
 # training-data-pipeline queries. Most are oracle-checked (docs_quality_lang,
-# docs_stratified_sample, packing, snapshot-diff, …); the hash-seeded /
-# UDF-backed ones (neardup methods, ANN, media features) are rows-only with
-# exact semantics pinned in pytest — see the oracle_sql() trailer comment.
+# docs_stratified_sample, packing, snapshot-diff, near-dup methods, …);
+# only the approximate top-k ANN query (emb_ann_methods) is rows-only, with
+# its semantics pinned in pytest — see the oracle_sql() trailer comment.
 # ---------------------------------------------------------------------------
 
 
@@ -1097,66 +1097,6 @@ def _emb_ann_methods(spark: SparkSession, sf_dir: str) -> DataFrame:
     ivf = ann_ivf(assigned, centroids, "vec_id", "embedding", q, k=10, nprobe=8)
     return lsh.select(F.lit("lsh").alias("method"), "vec_id", "cosine").unionByName(
         ivf.select(F.lit("ivf").alias("method"), "vec_id", "cosine")
-    )
-
-
-def _assets_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal image, audio AND video-container feature extraction
-    over binary assets in one contract query, Arrow-batched via
-    mapInPandas. Most generated payloads are REAL media — netpbm/PNG/
-    JPEG/GIF/BMP images, PCM+ADPCM WAV clips, MJPEG AVIs, MP4
-    containers — and decode to true dims/luma/a-hash/duration/RMS/
-    codec/fps metadata; only coded MP4 samples stay env-gated. Each
-    modality's typed feature row is serialized to JSON so the schemas
-    union; exact per-feature values are pinned in
-    tests/test_multimodal.py and tests/test_mp4_meta.py."""
-    from sap_spark.functions.multimodal import (
-        extract_audio_features,
-        extract_audio_meta,
-        extract_image_features,
-        extract_video_meta,
-        gen_assets,
-    )
-
-    assets = gen_assets(spark, 200)
-    img = extract_image_features(assets)
-    aud = extract_audio_features(assets)
-    img_feats = img.select(
-        F.lit("image").alias("modality"),
-        "asset_id",
-        F.to_json(F.struct(*[c for c in img.columns if c != "asset_id"])).alias(
-            "features_json"
-        ),
-    )
-    aud_feats = aud.select(
-        F.lit("audio").alias("modality"),
-        "asset_id",
-        F.to_json(F.struct(*[c for c in aud.columns if c != "asset_id"])).alias(
-            "features_json"
-        ),
-    )
-    vid = extract_video_meta(assets)
-    vid_feats = vid.select(
-        F.lit("video").alias("modality"),
-        "asset_id",
-        F.to_json(F.struct(*[c for c in vid.columns if c != "asset_id"])).alias(
-            "features_json"
-        ),
-    )
-    # container-level audio typing (MP3 frame walk / FLAC STREAMINFO /
-    # WAV fmt+fact) — real metadata even where sample decode is gated
-    am = extract_audio_meta(assets)
-    am_feats = am.select(
-        F.lit("audio_meta").alias("modality"),
-        "asset_id",
-        F.to_json(F.struct(*[c for c in am.columns if c != "asset_id"])).alias(
-            "features_json"
-        ),
-    )
-    return (
-        img_feats.unionByName(aud_feats)
-        .unionByName(vid_feats)
-        .unionByName(am_feats)
     )
 
 
@@ -2390,9 +2330,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "docs_neardup_methods": _docs_neardup_methods,
         "emb_cosine_dedup": _emb_cosine_dedup,
         "cdc_token_progress": _cdc_token_progress,
-        # rows-only (approx top-k / media-codec UDFs; pytest-pinned)
+        # rows-only (approximate top-k; pytest-pinned)
         "emb_ann_methods": _emb_ann_methods,
-        "assets_media_features": _assets_media_features,
     }
 
 
@@ -2460,7 +2399,6 @@ def oracle_sql() -> dict[str, str]:
         # (exact verify stages + recall-1 candidates; portable sha256
         # SimHash — see _docs_neardup_methods docstring)
         "docs_neardup_methods": _DOCS_NEARDUP_SQL,
-        # intentionally no oracle for: emb_ann_methods /
-        # assets_media_features (approximate top-k / media-codec UDF
-        # operators — semantics pinned in tests).
+        # intentionally no oracle for: emb_ann_methods (approximate
+        # top-k — semantics pinned in tests).
     }
