@@ -1,5 +1,5 @@
 """GIF codec in pure numpy + stdlib — the real-codec tier for
-``image/gif`` assets, including animation (sap_spark.functions.multimodal).
+``image/gif`` payloads, including animation.
 
 Implemented from the public GIF87a/GIF89a specification: logical screen
 descriptor, global/local color tables, variable-width LZW decode (clear/
@@ -13,7 +13,7 @@ palette-exact.
 
 Scope/honesty: ValueError for structurally broken streams (the caller
 nulls the row / drops the asset, never kills the job); a pixel cap
-bounds decode cost like the PNG/JPEG tiers."""
+bounds decode cost like the JPEG tier."""
 
 from __future__ import annotations
 

@@ -1,5 +1,5 @@
 """Baseline JPEG codec in pure numpy + stdlib — the real-codec tier for
-``image/jpeg`` assets (sap_spark.functions.multimodal).
+``image/jpeg`` payloads.
 
 Everything here is implemented from the public ITU-T T.81 spec: baseline
 sequential DCT (SOF0, and SOF1's identical Huffman path) AND progressive
@@ -10,8 +10,8 @@ samples, grayscale and YCbCr with any 1-2x sampling factors (covers
 default Huffman tables (the MJPEG convention), and the Annex K "typical"
 quant / Huffman tables for the encoder. Out of scope — arithmetic
 coding, 12-bit, hierarchical, >3 components (CMYK) — raises
-``ValueError``, which the multimodal feature extractors turn into the
-all-null row (one bad upload must never kill the job).
+``ValueError``, so a caller can null the row instead of failing the
+job on one bad upload.
 
 Performance honesty: Huffman entropy decode is a per-symbol Python loop
 (everything after it — dequant, zigzag, IDCT, upsample, color convert —
@@ -21,12 +21,9 @@ a hold-register bit reader with the whole per-block loop fused into
 one locals-only method (``_BitReader.decode_block``) — measured at
 ~1.7 MP/s / ~0.48 MB/s warm on a quality-85 4:2:0 photo-like 1 MP
 image (2.2x the round-4 bit-at-a-time walk; output verified
-bit-identical). Correct, deterministic, and fine for the
-feature-extraction batch sizes this tier tests, but a production
-deployment swaps ``parse_jpeg`` for libjpeg-turbo (PIL) exactly like
-the other codec stubs — the Spark-side plumbing is identical. A
-pixel-count cap bounds worst-case decode cost the same way the PNG
-decoder caps inflation.
+bit-identical). Correct and deterministic, but a production
+deployment would use libjpeg-turbo (PIL) instead. A
+pixel-count cap bounds worst-case decode cost.
 
 Reference parity note: the reference plugin carries media metadata only,
 never bytes (StreamProperty, SapODataConstants.java:220-233); this tier

@@ -11,8 +11,7 @@ that matter at 100 TB — without decoding a single granule.
 
 Decoding the coded SAMPLES (hybrid filterbank, Huffman spectra, IMDCT)
 is NOT implemented — that codec genuinely cannot be reimplemented
-here; sample decode stays behind the CodecUnavailableError gate in
-multimodal.py, exactly like H.264/AAC in the MP4 tier.
+here, exactly like H.264/AAC in the MP4 tier.
 
 FLAC gets the same treatment one level cheaper: the mandatory first
 metadata block (STREAMINFO) carries sample rate, channels, bit depth

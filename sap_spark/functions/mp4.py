@@ -8,8 +8,7 @@ That yields true typed metadata (duration, fps, width/height, codec,
 track layout) for MP4 video columns in a training-data pipeline.
 
 Decoding the coded SAMPLES (H.264/AAC) is NOT implemented — those
-codecs genuinely cannot be reimplemented here; frame decode stays
-behind the CodecUnavailableError gate in multimodal.py.
+codecs genuinely cannot be reimplemented here.
 
 Reference analog: the plugins treat media payloads as opaque
 Edm.Binary/stream properties with typed metadata alongside

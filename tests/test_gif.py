@@ -1,5 +1,5 @@
 """GIF codec (sap_spark.functions.gif): LZW, palettes, animation,
-transparency, and the multimodal wiring. GIF is palette-lossless, so
+and transparency. GIF is palette-lossless, so
 encode→decode equality is EXACT — round trips here prove both directions
 bit-for-bit, and third-party decode (stdlib-shipped icon GIFs were
 verified during development) anchors the decoder independently."""
@@ -97,53 +97,6 @@ def test_corrupt_and_truncated_raise_value_error():
     except ValueError:
         pass
     assert parse_gif(b"NOTGIF" + blob) is None  # wrong magic → stub tier
-
-
-def test_gif_tier_feature_extraction_and_resize(spark):
-    from sap_spark.functions.multimodal import (
-        extract_image_features,
-        resize_images,
-    )
-
-    pal = _pal(32)
-    idx = np.random.default_rng(9).integers(0, 32, size=(20, 40), dtype=np.uint8)
-    blob = encode_gif(palette=pal, indexed_frames=[idx], transparent=5)
-    df = spark.createDataFrame(
-        [(1, bytearray(blob))], "asset_id long, payload binary"
-    )
-    feat = extract_image_features(df).collect()[0]
-    assert feat["width"] == 40 and feat["height"] == 20 and feat["channels"] == 3
-    row = resize_images(df, target_px=10).collect()[0]
-    assert row["format"] == "gif"
-    pal2, idx2, t2 = parse_gif_indexed(bytes(row["resized_png"]))
-    # palette-space resize: same palette, same transparency, NN indices
-    assert np.array_equal(pal2[: len(pal)], pal) and t2 == 5
-    assert idx2.shape == (5, 10)
-    rows = (np.arange(5) * 20) // 5
-    cols = (np.arange(10) * 40) // 10
-    assert np.array_equal(idx2, idx[np.ix_(rows, cols)])
-
-
-def test_animated_gif_frame_sampling(spark):
-    from sap_spark.functions.multimodal import sample_video_frames, _parse_png
-
-    pal = _pal(16)
-    rng = np.random.default_rng(11)
-    f = [rng.integers(0, 16, size=(10, 14), dtype=np.uint8) for _ in range(6)]
-    blob = encode_gif(palette=pal, indexed_frames=f)
-    df = spark.createDataFrame(
-        [(3, bytearray(blob))], "asset_id long, payload binary"
-    )
-    rows = (
-        sample_video_frames(df, every_n=2, max_frames=3)
-        .orderBy("frame_idx")
-        .collect()
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2, 4]
-    for r in rows:
-        assert np.array_equal(
-            _parse_png(bytes(r["frame_png"])), pal[f[r["frame_idx"]]]
-        )
 
 
 try:

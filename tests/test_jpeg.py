@@ -137,121 +137,6 @@ def test_decoder_handles_16bit_quant_tables():
     assert np.array_equal(parse_jpeg(patched), plain)
 
 
-def test_jpeg_tier_in_feature_extraction(spark):
-    """e2e through the Spark plumbing: real JPEG payloads produce true
-    dims/channels/luma; a progressive-marked JPEG nulls out without
-    killing the job."""
-    from sap_spark.functions.multimodal import extract_image_features
-
-    img = _smooth_rgb(20, 30)
-    good = encode_jpeg(img, quality=90)
-    prog = bytearray(good)
-    prog[prog.find(b"\xff\xc0") + 1] = 0xC2
-    rows = [(1, bytearray(good)), (2, bytearray(bytes(prog)))]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    got = {r["asset_id"]: r.asDict() for r in extract_image_features(df).collect()}
-    assert got[1]["width"] == 30 and got[1]["height"] == 20
-    assert got[1]["channels"] == 3
-    expected_luma = float(
-        (
-            0.299 * img[..., 0] + 0.587 * img[..., 1] + 0.114 * img[..., 2]
-        ).mean()
-        / 255.0
-    )
-    assert abs(got[1]["mean_luma"] - expected_luma) < 0.02
-    assert got[2]["width"] is None and got[2]["phash"] is None
-
-
-def test_jpeg_resize_through_spark(spark):
-    from sap_spark.functions.multimodal import resize_images
-
-    img = _smooth_rgb(32, 64)
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_jpeg(img, quality=90)))],
-        "asset_id long, payload binary",
-    )
-    row = resize_images(df, target_px=16).collect()[0]
-    assert row["format"] == "jpeg"
-    out = parse_jpeg(bytes(row["resized_png"]))
-    assert out.shape == (8, 16, 3)  # aspect preserved, long side 16
-
-
-def test_avi_mjpeg_round_trip_and_frame_sampling(spark):
-    """MJPEG-in-AVI: the RIFF writer/walker round-trips frame payloads
-    byte-exactly, and sample_video_frames returns REAL PNG frames whose
-    pixels match a direct decode of the same JPEG frames."""
-    from sap_spark.functions.multimodal import (
-        _avi_mjpeg_frames,
-        _gen_avi_mjpeg,
-        _parse_png,
-        sample_video_frames,
-    )
-
-    frames = [
-        encode_jpeg(_smooth_rgb(16, 24, seed=s), quality=90) for s in range(5)
-    ]
-    avi = _gen_avi_mjpeg(frames, 24, 16)
-    assert _avi_mjpeg_frames(avi) == frames
-
-    df = spark.createDataFrame(
-        [(7, bytearray(avi))], "asset_id long, payload binary"
-    )
-    rows = (
-        sample_video_frames(df, every_n=2, max_frames=2)
-        .orderBy("frame_idx")
-        .collect()
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2]
-    for r in rows:
-        got = _parse_png(bytes(r["frame_png"]))
-        assert np.array_equal(got, parse_jpeg(frames[r["frame_idx"]]))
-
-
-def test_avi_corrupt_and_foreign_codec_yield_no_rows(spark):
-    from sap_spark.functions.multimodal import (
-        _avi_mjpeg_frames,
-        _gen_avi_mjpeg,
-        sample_video_frames,
-    )
-
-    frames = [encode_jpeg(_smooth_rgb(8, 8), quality=85)]
-    good = _gen_avi_mjpeg(frames, 8, 8)
-    # a non-JPEG payload in the frame chunk = some other codec → no frames
-    foreign = _gen_avi_mjpeg([b"\x00" * 40], 8, 8)
-    assert _avi_mjpeg_frames(foreign) == []
-    # truncated RIFF raises at the codec level…
-    with pytest.raises(ValueError):
-        _avi_mjpeg_frames(good[:40] + b"\xff" * 8)
-    # …and both contribute zero rows (not a crash) through the operator
-    df = spark.createDataFrame(
-        [(1, bytearray(foreign)), (2, bytearray(good[: len(good) // 2]))],
-        "asset_id long, payload binary",
-    )
-    assert sample_video_frames(df, every_n=1).count() == 0
-
-
-def test_gen_assets_includes_real_avi_tier(spark):
-    """id%6==5, (id//6)%4==1 rows are real MJPEG AVIs: frame sampling
-    yields PNG frames for them and digest stubs for the opaque mp4 rows."""
-    from sap_spark.functions.multimodal import gen_assets, sample_video_frames
-
-    assets = gen_assets(spark, 48)
-    rows = sample_video_frames(assets, every_n=1, max_frames=3).collect()
-    by_id: dict[int, list] = {}
-    for r in rows:
-        by_id.setdefault(r["asset_id"] % 48, []).append(bytes(r["frame_png"]))
-    avi_ids = [i for i in range(48) if i % 6 == 5 and (i // 6) % 4 == 1]
-    gif_ids = [i for i in range(48) if i % 6 == 5 and (i // 6) % 8 == 3]
-    assert avi_ids and gif_ids and all(
-        all(f[:8] == b"\x89PNG\r\n\x1a\n" for f in by_id[i])
-        for i in avi_ids + gif_ids
-    )
-    mp4_ids = [i for i in range(48) if i % 6 == 5 and (i // 6) % 8 == 7]
-    assert mp4_ids and all(
-        all(len(f) == 32 for f in by_id[i]) for i in mp4_ids
-    )
-
-
 def test_fuzzed_jpeg_never_escapes_the_error_contract():
     """Production contract: for ANY bytes, parse_jpeg returns an array,
     returns None (not JPEG by signature), or raises ValueError — never
@@ -469,33 +354,6 @@ def test_mjpeg_frames_without_dht_use_default_tables():
         i += 1
     assert b"\xff\xc4" not in bytes(stripped)
     assert np.array_equal(parse_jpeg(bytes(stripped)), plain)
-
-
-def test_avi_sampling_decodes_only_wanted_frames(spark):
-    """Frame sampling must JPEG-decode only the sampled frames: an AVI
-    whose NON-sampled frames are corrupt still yields the sampled rows
-    (decoding everything would throw and zero out the asset)."""
-    from sap_spark.functions.multimodal import (
-        _gen_avi_mjpeg,
-        _parse_png,
-        sample_video_frames,
-    )
-
-    good = [encode_jpeg(_smooth_rgb(8, 8, seed=s), quality=85) for s in (0, 1)]
-    corrupt = good[0][:3] + b"\x00" * 40  # JPEG by signature, broken body
-    frames = [good[0], corrupt, good[1], corrupt, corrupt]
-    avi = _gen_avi_mjpeg(frames, 8, 8)
-    df = spark.createDataFrame(
-        [(1, bytearray(avi))], "asset_id long, payload binary"
-    )
-    rows = (
-        sample_video_frames(df, every_n=2, max_frames=2)
-        .orderBy("frame_idx")
-        .collect()
-    )
-    assert [r["frame_idx"] for r in rows] == [0, 2]
-    for r, src in zip(rows, good):
-        assert np.array_equal(_parse_png(bytes(r["frame_png"])), parse_jpeg(src))
 
 
 def test_progressive_successive_approximation_known_answer():

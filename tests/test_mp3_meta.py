@@ -1,4 +1,4 @@
-"""MP3/FLAC audio-metadata tier (functions/mp3.py) + extract_audio_meta.
+"""MP3/FLAC audio-metadata tier (functions/mp3.py).
 
 Known-answer fixtures are HAND-ASSEMBLED from the public MPEG-audio and
 FLAC bit layouts (frame-header fields, Xing offset after layer-III side
@@ -185,74 +185,6 @@ def test_flac_contract():
         parse_flac_streaminfo(_flac_blob(rate=0))
 
 
-def test_extract_audio_meta_end_to_end(spark):
-    """One mapInPandas pass types MP3, FLAC and WAV blobs side by side;
-    None payloads and junk yield the all-null row, never an error."""
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(2)
-        wf.setsampwidth(2)
-        wf.setframerate(16000)
-        wf.writeframes(b"\x00\x00" * 2 * 8000)
-    rows = [
-        (1, bytearray(b"".join(_frame_bytes() for _ in range(10)))),
-        (2, bytearray(_flac_blob())),
-        (3, bytearray(buf.getvalue())),
-        (4, None),
-        (5, bytearray(b"definitely-not-audio")),
-        (6, bytearray(b"RIFF\x04\x00\x00\x00WAVEjunk")),  # corrupt WAV
-    ]
-    from sap_spark.functions.multimodal import extract_audio_meta
-
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    got = {r["asset_id"]: r.asDict() for r in extract_audio_meta(df).collect()}
-    assert got[1]["container"] == "mp3" and got[1]["n_frames"] == 10
-    assert got[1]["codec"] == "mpeg1-layer3"
-    assert got[2]["container"] == "flac" and got[2]["duration_sec"] == 2.0
-    assert got[3]["container"] == "wav" and got[3]["codec"] == "pcm"
-    assert got[3]["duration_sec"] == 0.5 and got[3]["n_channels"] == 2
-    assert got[3]["bitrate_kbps"] == round(16000 * 2 * 2 * 8 / 1000)
-    for null_id in (4, 5, 6):
-        assert all(
-            got[null_id][k] is None
-            for k in ("container", "duration_sec", "sample_rate", "codec")
-        ), got[null_id]
-
-
-def test_wav_meta_fact_chunk_and_block_coded(spark):
-    """A fact chunk pins the frame count for block-coded formats; an
-    MP3-in-WAV (tag 0x55) without fact reports None duration rather
-    than a wrong one."""
-    import struct as s
-
-    def wav(tag, ch, rate, bits, data_len, fact=None, byte_rate=0):
-        fmt = s.pack("<HHIIHH", tag, ch, rate, byte_rate, 1, bits)
-        chunks = b"fmt " + s.pack("<I", len(fmt)) + fmt
-        if fact is not None:
-            chunks += b"fact" + s.pack("<I", 4) + s.pack("<I", fact)
-        chunks += b"data" + s.pack("<I", data_len) + b"\x00" * data_len
-        return b"RIFF" + s.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-    from sap_spark.functions.multimodal import extract_audio_meta
-
-    rows = [
-        # G.711 u-law with a fact chunk: 4000 frames @ 8 kHz = 0.5 s
-        (1, bytearray(wav(7, 1, 8000, 8, 4000, fact=4000, byte_rate=8000))),
-        # MP3-in-WAV, no fact: typed but duration honestly unknown
-        (2, bytearray(wav(0x55, 2, 44100, 0, 512))),
-    ]
-    df = spark.createDataFrame(rows, "asset_id long, payload binary")
-    got = {r["asset_id"]: r.asDict() for r in extract_audio_meta(df).collect()}
-    assert got[1]["codec"] == "g711-ulaw" and got[1]["duration_sec"] == 0.5
-    assert got[1]["bitrate_kbps"] == 64
-    assert got[2]["codec"] == "mp3-in-wav"
-    assert got[2]["duration_sec"] is None and got[2]["n_frames"] is None
-    assert got[2]["sample_rate"] == 44100
-
-
 def test_encode_mp3_round_trip_and_validation():
     from sap_spark.functions.mp3 import encode_flac, encode_mp3
 
@@ -272,43 +204,3 @@ def test_encode_mp3_round_trip_and_validation():
         encode_mp3(4, bitrate_kbps=123)  # not an MPEG1-L3 table rate
     with pytest.raises(ValueError):
         encode_flac(sample_rate=0)
-
-
-def test_gen_assets_mp3_flac_tier(spark):
-    """gen_assets routes some audio slots through the metadata-real
-    MP3/FLAC encoders; extract_audio_meta must type them and the real
-    WAV/ADPCM slots side by side."""
-    from sap_spark.functions.multimodal import extract_audio_meta, gen_assets
-
-    # audio slots are i%3==1; (i//3)%8==2 -> MP3 (i=7+24k), ==6 -> FLAC
-    # (i=19+24k); parameters rotate on the per-tier index j=i//24
-    assets = gen_assets(spark, 48).filter("asset_id in (7, 31, 19, 43, 4)")
-    got = {r["asset_id"]: r.asDict() for r in extract_audio_meta(assets).collect()}
-    assert got[7]["container"] == "mp3" and got[7]["codec"] == "mpeg1-layer3"
-    assert (got[7]["n_frames"], got[7]["n_channels"]) == (4, 1)  # j=0, Xing
-    assert got[7]["vbr"] is True  # Xing-tagged
-    assert (got[31]["n_frames"], got[31]["n_channels"]) == (5, 2)  # j=1, CBR
-    assert got[31]["vbr"] is False
-    # Xing frame excluded from the mean: reads the table rate exactly
-    assert got[7]["bitrate_kbps"] == 96 and got[31]["bitrate_kbps"] == 128
-    assert got[19]["container"] == "flac" and got[19]["sample_rate"] == 22050
-    assert got[43]["sample_rate"] == 44100  # variety across FLAC slots
-    assert got[4]["container"] == "wav"  # IMA ADPCM slot still types as WAV
-
-
-def test_audio_meta_int32_overflow_nulls_out(spark):
-    """A Xing header declaring 2^31+5 frames is wire-legal uint32 but
-    exceeds the Int32 schema column: the field nulls out and the task
-    survives (the batch-level astype must never see the overflow)."""
-    from sap_spark.functions.mp3 import encode_mp3
-    from sap_spark.functions.multimodal import extract_audio_meta
-
-    blob = bytearray(encode_mp3(3, xing=True))
-    off = 4 + 32 + 8  # MPEG1 stereo side info + Xing magic + flags
-    blob[off : off + 4] = struct.pack(">I", (1 << 31) + 5)
-    df = spark.createDataFrame(
-        [(1, bytes(blob))], "asset_id long, payload binary"
-    )
-    (r,) = extract_audio_meta(df).collect()
-    assert r["container"] == "mp3" and r["sample_rate"] == 44100
-    assert r["n_frames"] is None  # overflowed field nulled, row kept

@@ -1,4 +1,4 @@
-"""MP4 container metadata tier (functions/mp4.py) + extract_video_meta.
+"""MP4 container metadata tier (functions/mp4.py).
 
 Validation strategy (no MP4 sample files exist in this sandbox, unlike
 the JPEG/GIF third-party fixtures): a HAND-ASSEMBLED box stream with
@@ -185,36 +185,3 @@ def test_gif_meta_structural_walk():
         gif_meta(b"GIF89a" + b"\x00" * 3)
     with pytest.raises(ValueError):
         gif_meta(b"GIF89a\x09\x00\x07\x00\x00\x00\x00\xff")  # bad block
-
-
-def test_extract_video_meta_distributed(spark):
-    """extract_video_meta over gen_assets: AVI, animated GIF and MP4
-    rows carry real container metadata; images/audio rows null out.
-    1 row in -> 1 row out."""
-    from sap_spark.functions.multimodal import extract_video_meta, gen_assets
-
-    assets = gen_assets(spark, 60)
-    got = {r["asset_id"]: r.asDict()
-           for r in extract_video_meta(assets).collect()}
-    assert len(got) == 60
-    kinds = {}
-    for aid, r in got.items():
-        if r["container"]:
-            kinds.setdefault(r["container"], []).append(aid)
-    assert set(kinds) == {"avi", "gif", "mp4"}
-    for aid in kinds["mp4"]:
-        r = got[aid]
-        assert r["video_codec"] == "avc1"
-        assert r["n_tracks"] == 2
-        assert r["width"] >= 320 and r["height"] >= 240
-        assert r["fps"] == round(r["n_frames"] / r["duration_sec"], 6)
-    for aid in kinds["avi"]:
-        assert got[aid]["video_codec"] == "MJPG"
-        assert got[aid]["fps"] == 10.0
-    for aid in kinds["gif"]:
-        assert got[aid]["video_codec"] == "gif-lzw"
-        assert got[aid]["n_frames"] >= 2
-    # non-video assets: the all-null row, not a dropped row
-    for aid, r in got.items():
-        if r["container"] is None:
-            assert r["duration_sec"] is None and r["n_frames"] is None
