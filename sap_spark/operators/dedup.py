@@ -41,7 +41,11 @@ survivors, per-key winners with event counts and per-bucket offsets from
 it in Arrow on the driver, by the same rules as :func:`cancelled_seqs`,
 :func:`drop_cancelled` and :func:`lww_winners`; the winners and cancel
 set return to Spark as local relations. A large batch runs phase A as
-the persisted Spark jobs above. Either way phase B is unchanged.
+the persisted Spark jobs above. Either way phase B is unchanged — except
+for a small batch bound for a merge-on-read table, which collects the
+whole batch instead, payload included: :func:`fold_arrow` then picks
+each key's winning row in Arrow too, and the table writes those rows
+from the driver (``plans/lake.py::LakeTable.merge_cdc``).
 
 Skew is handled where it is detected, at runtime: the pipeline's winner
 scan also counts surviving events per key, and a batch whose hottest key
@@ -306,32 +310,18 @@ def arrow_groups_like_spark(dtype: T.DataType) -> bool:
     return isinstance(dtype, _ARROW_GROUPABLE)
 
 
-def discover_arrow(batch, cfg: EngineConfig, bucket: str):
-    """Driver-side discovery over a collected narrow projection of a batch
-    (pyarrow Table of keys, seq, op, rocancel, cancel-seq and ``bucket``,
-    the table's bucket id computed by the executors). Returns
-    ``(cancelled, winners, offsets)``:
-
-    - ``cancelled``: the distinct cancelled seqs, as :func:`cancelled_seqs`
-      (None when the batch has no rocancel column);
-    - ``winners``: (key…, seq, ``__n_events``, bucket) per key over the
-      survivors of :func:`drop_cancelled`, as ``lww_winners(with_counts=
-      True)``;
-    - ``offsets``: ``{bucket: {max_seq, n_rows, max_key_events}}`` over
-      the winners, as ``plans/lake.py::bucket_offsets``.
-
-    Float keys are normalized first as Spark's grouping does (``-0.0`` →
-    ``0.0``, every NaN → one NaN): Arrow groups by bit pattern, and two
-    winners for one Spark key would break merge_cdc's ≤1-row contract.
-    Spark's xxhash64 normalizes the same way, so the executors' bucket id
-    agrees across a group."""
+def _arrow_survivors(batch, cfg: EngineConfig):
+    """``(cancelled, survivors)`` of a collected batch, by the rules of
+    :func:`cancelled_seqs` and :func:`drop_cancelled`, with float keys
+    normalized as Spark's grouping does (``-0.0`` → ``0.0``, every NaN →
+    one NaN): Arrow groups by bit pattern, and two winners for one Spark
+    key would break merge_cdc's ≤1-row contract."""
     import functools
 
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    keys, seq = list(cfg.key_columns), cfg.order_column
-    rc, cs = cfg.rocancel_column, cfg.cancel_seq_column
+    seq, rc, cs = cfg.order_column, cfg.rocancel_column, cfg.cancel_seq_column
     live, cancelled = [], None
     if rc in batch.column_names:
         flag = pc.fill_null(batch[rc], False)
@@ -346,7 +336,7 @@ def discover_arrow(batch, cfg: EngineConfig, bucket: str):
     if cfg.op_column in batch.column_names:
         live.append(pc.is_valid(batch[cfg.op_column]))
     survivors = batch.filter(functools.reduce(pc.and_, live)) if live else batch
-    for k in keys:
+    for k in cfg.key_columns:
         col = survivors[k]
         if pa.types.is_floating(col.type):
             zero = pa.scalar(0.0, col.type)
@@ -357,6 +347,28 @@ def discover_arrow(batch, cfg: EngineConfig, bucket: str):
             survivors = survivors.set_column(
                 survivors.schema.get_field_index(k), k, col
             )
+    return cancelled, survivors
+
+
+def discover_arrow(batch, cfg: EngineConfig, bucket: str):
+    """Driver-side discovery over a collected narrow projection of a batch
+    (pyarrow Table of keys, seq, op, rocancel, cancel-seq and ``bucket``,
+    the table's bucket id computed by the executors). Returns
+    ``(cancelled, winners, offsets)``:
+
+    - ``cancelled``: the distinct cancelled seqs, as :func:`cancelled_seqs`
+      (None when the batch has no rocancel column);
+    - ``winners``: (key…, seq, ``__n_events``, bucket) per key over the
+      survivors of :func:`drop_cancelled`, as ``lww_winners(with_counts=
+      True)``;
+    - ``offsets``: ``{bucket: {max_seq, n_rows, max_key_events}}`` over
+      the winners, as ``plans/lake.py::bucket_offsets``.
+
+    Float keys are normalized first (:func:`_arrow_survivors`). Spark's
+    xxhash64 normalizes the same way, so the executors' bucket id agrees
+    across a group."""
+    keys, seq = list(cfg.key_columns), cfg.order_column
+    cancelled, survivors = _arrow_survivors(batch, cfg)
 
     def agg(table, by, aggs, names):
         out = table.group_by(by).aggregate(aggs)
@@ -379,6 +391,45 @@ def discover_arrow(batch, cfg: EngineConfig, bucket: str):
         ).to_pylist()
     }
     return cancelled, winners, offsets
+
+
+def fold_arrow(batch, cfg: EngineConfig):
+    """Each key's winning row of a batch collected whole on the driver
+    (pyarrow Table): the rows :func:`fetch_winner_payloads` returns,
+    without the token, rocancel and cancel-seq labels; other columns
+    (such as the bucket id) ride along.
+
+    The fetch keeps each key's survivors at its winning (max) seq —
+    survivors ⋈ winners on keys+seq — and of those the largest-token
+    delivery (``_fetch_payloads``' rule). Here one sort of the survivors
+    (:func:`_arrow_survivors`) by (seq, token) descending, nulls last,
+    and the first row of each key group pick the same row; rows with a
+    NULL key or seq, which that inner join never matches, go first."""
+    import functools
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    keys, seq, tok = list(cfg.key_columns), cfg.order_column, cfg.token_column
+    _, survivors = _arrow_survivors(batch, cfg)
+    survivors = survivors.filter(
+        functools.reduce(
+            pc.and_, [pc.is_valid(survivors[c]) for c in [*keys, seq]]
+        )
+    )
+    order = [(c, "descending") for c in (seq, tok) if c in survivors.column_names]
+    ranked = pc.sort_indices(survivors, sort_keys=order, null_placement="at_end")
+    ranks = pa.table(
+        {
+            **{k: survivors[k].take(ranked) for k in keys},
+            "__rank": pa.array(range(len(ranked)), pa.int64()),
+        }
+    )
+    first = ranks.group_by(keys).aggregate([("__rank", "min")])["__rank_min"]
+    labels = {tok, cfg.rocancel_column, cfg.cancel_seq_column}
+    return survivors.take(ranked.take(first)).drop_columns(
+        [c for c in survivors.column_names if c in labels]
+    )
 
 
 def fold_changes(events: DataFrame, cfg: EngineConfig) -> DataFrame:

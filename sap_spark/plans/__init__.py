@@ -1,7 +1,2 @@
 """Physical table layer: LakeTable (bucketed snapshot parquet format with
 atomic commits, idempotent CDC MERGE, schema evolution, time travel)."""
-
-from sap_spark.plans.backend import TableBackend
-from sap_spark.plans.lake import LakeTable, bucket_expr
-
-__all__ = ["LakeTable", "TableBackend", "bucket_expr"]

@@ -14,7 +14,10 @@ that suite unchanged.
 The pipeline layer (streaming/pipeline.py) and CLI only call this
 surface: ``bucket_column`` (the bucket id a batch's keys hash to,
 hashed at the table's key types, over either discovery path) or
-``affected_bucket_offsets``, then ``merge_cdc`` per epoch, ``version`` /
+``affected_bucket_offsets``, then ``merge_cdc`` per epoch (a DataFrame,
+or a pyarrow Table when a small merge-on-read batch was folded on the
+driver: ``LakeTable`` writes that from the driver, ``IcebergTable`` and a
+COW ``LakeTable`` stage it as a local relation), ``version`` /
 ``merge_mode`` / ``num_buckets`` / ``last_merge_metrics`` for lineage and
 sizing, ``compact`` / ``expire_snapshots`` for maintenance. Keeping the
 surface this narrow is what makes the swap possible.
@@ -65,10 +68,13 @@ an exception whose recovery is reload-and-retry.
 
 from __future__ import annotations
 
-from typing import Protocol, runtime_checkable
+from typing import TYPE_CHECKING, Protocol, runtime_checkable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 @runtime_checkable
@@ -79,8 +85,9 @@ class TableBackend(Protocol):
     path: str
     version: int
     # per-phase timings of the last ``merge_cdc`` for the epoch's lineage
-    # record (``merge_phases``); None after a replayed batch or when the
-    # backend does not time its merge phases
+    # record (``merge_phases``), with ``write_on`` (``driver``/``tasks``);
+    # None after a replayed batch or when the backend does not time its
+    # merge phases (the pipeline then records ``{"write_on": "tasks"}``)
     last_merge_metrics: "dict | None"
 
     @property
@@ -116,7 +123,7 @@ class TableBackend(Protocol):
 
     def merge_cdc(
         self,
-        changes: DataFrame,
+        changes: "DataFrame | pa.Table",
         batch_id: str,
         op_column: str = "op",
         seq_column: str = "event_seq",

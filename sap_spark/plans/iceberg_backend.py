@@ -67,6 +67,7 @@ from __future__ import annotations
 
 import json
 import re
+from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,10 +81,14 @@ from sap_spark.schema.compat import (
 )
 from sap_spark.plans.lake import (
     DEFAULT_BATCH_LEDGER_RETENTION,
+    arrow_frame,
     bucket_offsets,
     key_bucket,
     refuse_key_widening,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Internal (non-user) columns, same names and meaning as LakeTable.
 SEQ_COL = "_seq"
@@ -528,14 +533,19 @@ class IcebergTable:
 
     def merge_cdc(
         self,
-        changes: DataFrame,
+        changes: "DataFrame | pa.Table",
         batch_id: str,
         op_column: str = "op",
         seq_column: str = "event_seq",
         affected_buckets: list[int] | None = None,
     ) -> bool:
+        """One WAP-staged ``MERGE INTO`` (module doc). A pyarrow Table
+        (a batch folded on the driver) is staged as a local-relation
+        DataFrame first, so it merges exactly as a DataFrame does."""
         if batch_id in self.committed_batches():
             return False  # law 2: replay is a no-op
+        if not isinstance(changes, DataFrame):
+            changes = arrow_frame(self.spark, changes)
         if affected_buckets is not None and not affected_buckets:
             # An all-cancelled (or empty) batch touches no buckets.
             # LakeTable commits it as a no-op; here a MERGE would stage

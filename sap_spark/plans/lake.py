@@ -65,6 +65,7 @@ import os
 import time
 import uuid
 from collections.abc import Iterable, Iterator, Sequence
+from typing import TYPE_CHECKING
 
 from pyspark.errors import ArithmeticException
 from pyspark.sql import DataFrame, SparkSession
@@ -84,6 +85,9 @@ from sap_spark.schema.compat import (
     apply_cast_plan,
     plan_evolution,
 )
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 # Internal columns (never exposed by read()).
 SEQ_COL = "_event_seq"
@@ -228,6 +232,62 @@ def bucket_offsets(
         }
         for r in rows
     }
+
+
+# Column types a merge-on-read batch may be written with from the driver
+# (LakeTable._write_arrow_buckets): the atomic types a table column can
+# have (schema/compat.py) whose pyarrow-written parquet reads back
+# identically through ``spark.read.schema(...)`` (tests/test_driver_write.py
+# round-trips each). Collated strings and nested types are out.
+_DRIVER_WRITE_TYPES = (
+    T.StringType, T.BooleanType, T.IntegerType, T.LongType, T.FloatType,
+    T.DoubleType, T.DecimalType, T.TimestampType, T.BinaryType,
+)
+# Spark's parquet codec names -> pyarrow's; lzo and Spark's lz4 framings
+# have no pyarrow writer here, so a session using them writes on tasks.
+_PYARROW_CODECS = {
+    "none": "none", "uncompressed": "none", "snappy": "snappy",
+    "gzip": "gzip", "zstd": "zstd", "brotli": "brotli",
+}
+
+
+def driver_write_codec(spark: SparkSession, schema: T.StructType) -> "str | None":
+    """The pyarrow codec a merge-on-read batch of ``schema`` is written
+    with from the driver, or None when it must take the Spark write: a
+    column type outside ``_DRIVER_WRITE_TYPES``, or a session parquet
+    codec (``spark.sql.parquet.compression.codec``) with no pyarrow
+    equivalent."""
+    import pyarrow as pa
+
+    for f in schema.fields:
+        dt = f.dataType
+        if not isinstance(dt, _DRIVER_WRITE_TYPES) or (
+            isinstance(dt, T.StringType) and dt.collation != "UTF8_BINARY"
+        ):
+            return None
+    name = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
+    codec = _PYARROW_CODECS.get(name.lower())
+    if codec is None or (codec != "none" and not pa.Codec.is_available(codec)):
+        return None
+    return codec
+
+
+def arrow_schema(rows) -> T.StructType:
+    """The Spark schema of a pyarrow Table (Spark's own Arrow mapping),
+    without the ``__bucket`` column an Arrow batch may carry."""
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    return T.StructType(
+        [f for f in from_arrow_schema(rows.schema).fields if f.name != "__bucket"]
+    )
+
+
+def arrow_frame(spark: SparkSession, rows) -> DataFrame:
+    """A pyarrow Table as a DataFrame (a local relation: no job), for a
+    backend that merges an Arrow batch through Spark."""
+    if "__bucket" in rows.column_names:
+        rows = rows.drop_columns(["__bucket"])
+    return spark.createDataFrame(rows, arrow_schema(rows))
 
 
 # Iceberg-style write-target file size; buckets ≈ payload / this.
@@ -1075,19 +1135,25 @@ class LakeTable:
             # the per-file bounds become the skipping unit
             writer = writer.option("maxRecordsPerFile", int(self.max_records_per_file))
         writer.partitionBy("__bucket").mode("overwrite").parquet(commit_dir)
-        sid = self.manifest["current_schema_id"]
-        stats_cols = self.stats_columns
-        bloom_cols = self.bloom_columns
         bucket_paths: dict[str, list[str]] = {}
         for bdir in glob.glob(os.path.join(commit_dir, "__bucket=*")):
             b = bdir.rsplit("=", 1)[1]
             paths = sorted(glob.glob(os.path.join(bdir, "*.parquet")))
             if paths:
                 bucket_paths[b] = paths
+        return self._file_entries(bucket_paths, phases)
+
+    def _file_entries(
+        self, bucket_paths: "dict[str, list[str]]", phases: "dict | None"
+    ) -> dict[str, list[dict]]:
+        """bucket -> manifest entries of a commit's new files, under the
+        current schema id, with their metadata
+        (:meth:`_collect_commit_metadata`)."""
+        sid = self.manifest["current_schema_id"]
         meta_by_path = self._collect_commit_metadata(
             [p for paths in bucket_paths.values() for p in paths],
-            stats_cols,
-            bloom_cols,
+            self.stats_columns,
+            self.bloom_columns,
             phases,
         )
         return {
@@ -1097,6 +1163,57 @@ class LakeTable:
             ]
             for b, paths in bucket_paths.items()
         }
+
+    def _write_arrow_buckets(
+        self, rows, codec: str, phases: "dict | None" = None
+    ) -> dict[str, list[dict]]:
+        """:meth:`_write_buckets` for rows already on the driver: a
+        pyarrow Table of the current schema's columns plus ``__bucket``,
+        written with pyarrow under the same layout
+        (``data/<uuid>/__bucket=N/``) and the table's write layout —
+        each bucket's rows sorted by ``sort_columns`` (ascending, nulls
+        first, as ``sortWithinPartitions``), sliced into files of at most
+        ``max_records_per_file`` rows, else one file per bucket — then
+        described by the same :meth:`_collect_commit_metadata`."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
+        names = [f.name for f in self._schema_with_internal().fields]
+        order = [("__bucket", "ascending")] + [
+            (c, "ascending") for c in self.sort_columns if c in names
+        ]
+        rows = rows.take(
+            pc.sort_indices(rows, sort_keys=order, null_placement="at_start")
+        )
+        cap = self.max_records_per_file or max(rows.num_rows, 1)
+        bucket_paths: dict[str, list[str]] = {}
+        start = 0
+        runs = pc.value_counts(rows["__bucket"]).to_pylist()
+        for run in sorted(runs, key=lambda r: r["values"]):  # = row order
+            b, n = str(run["values"]), run["counts"]
+            part = rows.slice(start, n).select(names)
+            start += n
+            bdir = os.path.join(commit_dir, f"__bucket={b}")
+            os.makedirs(bdir)
+            for i, lo in enumerate(range(0, n, cap)):
+                piece = part.slice(lo, cap)
+                path = os.path.join(bdir, f"part-{i:05d}-{uuid.uuid4().hex}.parquet")
+                # the file Spark's writer would make, as reads see it:
+                # page indexes, zstd at its level 3, and dictionaries
+                # only where values repeat (it falls back to plain pages
+                # elsewhere); pyarrow's defaults read measurably slower
+                pq.write_table(
+                    piece, path, compression=codec,
+                    compression_level=3 if codec == "zstd" else None,
+                    use_dictionary=[
+                        c for c in names
+                        if 2 * pc.count_distinct(piece[c]).as_py() <= piece.num_rows
+                    ],
+                    write_page_index=True,
+                )
+                bucket_paths.setdefault(b, []).append(path)
+        return self._file_entries(bucket_paths, phases)
 
     # A commit collects its metadata in the one-job task pass
     # (stats.collect_metadata_distributed) when it has at least this many
@@ -1240,13 +1357,15 @@ class LakeTable:
 
     def merge_cdc(
         self,
-        changes: DataFrame,
+        changes: "DataFrame | pa.Table",
         batch_id: str,
         op_column: str = "op",
         seq_column: str = "event_seq",
         affected_buckets: list[int] | None = None,
     ) -> bool:
-        """Apply a folded CDC batch (≤1 row per key, from fold_changes).
+        """Apply a folded CDC batch (≤1 row per key, from fold_changes, or
+        a pyarrow Table folded on the driver by ``operators/dedup.
+        fold_arrow``).
 
         Equivalent Iceberg statement::
 
@@ -1269,6 +1388,17 @@ class LakeTable:
         Scale: only buckets containing changed keys are read and rewritten;
         the join inside a bucket set is keys-vs-keys with AQE free to
         broadcast the (small) change side.
+
+        Arrow input: a merge-on-read table writes it from the driver with
+        pyarrow (:meth:`_merge_arrow`; no Spark job) when it carries every
+        current-schema column at its type, op, seq and each row's
+        ``__bucket`` (the table's :meth:`bucket_column`, which the
+        pipeline's discovery collect evaluates on executors), and
+        :func:`driver_write_codec` allows the schema and session codec.
+        Otherwise, and on a COW table, it becomes a local-relation
+        DataFrame (:func:`arrow_frame`) and merges as any other.
+        ``last_merge_metrics["write_on"]`` says which ran: ``driver`` or
+        ``tasks``.
         """
         # Reset BEFORE the no-op check: a replayed epoch must not report the
         # previous merge's phase timings in its lineage record.
@@ -1281,15 +1411,33 @@ class LakeTable:
         self.last_merge_metrics = phases
         t_start = time.monotonic()
 
+        arrow = None if isinstance(changes, DataFrame) else changes
+        fields = (changes.schema if arrow is None else arrow_schema(arrow)).fields
         # Schema-evolution gate BEFORE the apply (SURVEY.md §7 step 5).
         change_user_schema = T.StructType(
             [
                 f
-                for f in changes.schema.fields
+                for f in fields
                 if f.name not in (op_column, seq_column, *INTERNAL_COLS)
             ]
         )
         self.evolve_schema(change_user_schema)
+        if arrow is not None:
+            codec = self.merge_mode == "mor" and driver_write_codec(
+                self.spark, self.schema
+            )
+            want = {f.name: f.dataType for f in self.schema.fields}
+            want.update({op_column: T.StringType(), seq_column: T.LongType()})
+            have = {f.name: f.dataType for f in fields}
+            if codec and "__bucket" in arrow.column_names and all(
+                have.get(c) == dt for c, dt in want.items()
+            ):
+                return self._merge_arrow(
+                    arrow, batch_id, op_column, seq_column, affected_buckets,
+                    codec, phases, t_start,
+                )
+            changes = arrow_frame(self.spark, arrow)
+        phases["write_on"] = "tasks"
 
         keys = self.key_columns
         user_cols = [f.name for f in self.schema.fields]
@@ -1359,17 +1507,7 @@ class LakeTable:
             finally:
                 if persisted is not None:
                     persisted.unpersist()
-            phases["merge_write_sec"] = round(
-                time.monotonic() - t_phase - phases["metadata_sec"], 4
-            )
-            t_phase = time.monotonic()
-            for entries in new_files.values():
-                for e in entries:
-                    e["kind"] = "delta"
-            committed = self._commit_merge(new_files, batch_id, mor=True)
-            phases["commit_sec"] = round(time.monotonic() - t_phase, 4)
-            phases["n_affected_buckets"] = len(affected)
-            return committed
+            return self._commit_deltas(new_files, batch_id, affected, phases, t_phase)
 
         target = self.read_internal(buckets=affected)
         target = target.withColumn("__bucket", self.bucket_column(target))
@@ -1434,6 +1572,77 @@ class LakeTable:
         committed = self._commit_merge(
             new_files, batch_id, mor=False, replaced_buckets=affected
         )
+        phases["commit_sec"] = round(time.monotonic() - t_phase, 4)
+        phases["n_affected_buckets"] = len(affected)
+        return committed
+
+    def _merge_arrow(
+        self,
+        rows: "pa.Table",
+        batch_id: str,
+        op_column: str,
+        seq_column: str,
+        affected_buckets: "list[int] | None",
+        codec: str,
+        phases: dict,
+        t_start: float,
+    ) -> bool:
+        """The merge-on-read apply of a driver-folded batch: the same delta
+        rows as the Spark branch of :meth:`merge_cdc` (null-op rows
+        dropped, a delete's payload nulled, ``_event_seq``/``_deleted``
+        from seq/op), written by :meth:`_write_arrow_buckets`, then the
+        same commit."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rows = rows.filter(pc.is_valid(rows[op_column]))
+        is_del = pc.equal(rows[op_column], "D")
+        keys = set(self.key_columns)
+        cols = {
+            f.name: rows[f.name]
+            if f.name in keys
+            else pc.if_else(
+                is_del, pa.nulls(rows.num_rows, rows[f.name].type), rows[f.name]
+            )
+            for f in self.schema.fields
+        }
+        delta = pa.table(
+            {
+                **cols,
+                SEQ_COL: rows[seq_column],
+                DELETED_COL: is_del,
+                "__bucket": rows["__bucket"],
+            }
+        )
+        affected = sorted(
+            pc.unique(delta["__bucket"]).to_pylist()
+            if affected_buckets is None
+            else affected_buckets
+        )
+        phases["write_on"] = "driver"
+        phases["fold_and_discover_sec"] = round(time.monotonic() - t_start, 4)
+        t_phase = time.monotonic()
+        new_files = self._write_arrow_buckets(delta, codec, phases)
+        return self._commit_deltas(new_files, batch_id, affected, phases, t_phase)
+
+    def _commit_deltas(
+        self,
+        new_files: "dict[str, list[dict]]",
+        batch_id: str,
+        affected: "list[int]",
+        phases: dict,
+        t_phase: float,
+    ) -> bool:
+        """Commit a merge-on-read batch's delta files and time the write
+        (since ``t_phase``, less the metadata pass) and the commit."""
+        phases["merge_write_sec"] = round(
+            time.monotonic() - t_phase - phases["metadata_sec"], 4
+        )
+        t_phase = time.monotonic()
+        for entries in new_files.values():
+            for e in entries:
+                e["kind"] = "delta"
+        committed = self._commit_merge(new_files, batch_id, mor=True)
         phases["commit_sec"] = round(time.monotonic() - t_phase, 4)
         phases["n_affected_buckets"] = len(affected)
         return committed

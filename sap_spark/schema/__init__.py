@@ -1,30 +1,2 @@
 """Schema system: EDM-style type registry (inference) + compatibility /
 evolution rules."""
-
-from sap_spark.schema.edm import (
-    PropertyMetadata,
-    EntityType,
-    edm_to_spark_type,
-    entity_type_to_struct,
-    infer_schema,
-)
-from sap_spark.schema.compat import (
-    SchemaCompatError,
-    validate_schema_types,
-    validate_fields_match,
-    plan_evolution,
-    apply_cast_plan,
-)
-
-__all__ = [
-    "PropertyMetadata",
-    "EntityType",
-    "edm_to_spark_type",
-    "entity_type_to_struct",
-    "infer_schema",
-    "SchemaCompatError",
-    "validate_schema_types",
-    "validate_fields_match",
-    "plan_evolution",
-    "apply_cast_plan",
-]

@@ -1,33 +1,3 @@
 """Sources: change-log readers (batch + streaming), OData wire-format feed
 parsing, query-option pushdown surface, deterministic synthetic data
 generators."""
-
-from sap_spark.sources.datagen import gen_change_events, gen_repos
-from sap_spark.sources.changelog import (
-    read_changelog,
-    read_changelog_stream,
-    ODataQueryOptions,
-    apply_query_options,
-)
-from sap_spark.sources.odata_feed import (
-    feed_control,
-    parse_feed,
-    parse_feed_documents,
-    stage_feed_pages,
-)
-from sap_spark.sources.odata_filter import ODataFilterError, parse_odata_filter
-
-__all__ = [
-    "ODataFilterError",
-    "parse_odata_filter",
-    "stage_feed_pages",
-    "gen_change_events",
-    "gen_repos",
-    "read_changelog",
-    "read_changelog_stream",
-    "ODataQueryOptions",
-    "apply_query_options",
-    "feed_control",
-    "parse_feed",
-    "parse_feed_documents",
-]

@@ -1,6 +1,1 @@
 """Structured Streaming CDC pipeline."""
-
-from sap_spark.streaming.aggregates import op_rates, session_rollup, token_progress
-from sap_spark.streaming.pipeline import CdcPipeline, ingest_batch
-
-__all__ = ["CdcPipeline", "ingest_batch", "op_rates", "session_rollup", "token_progress"]

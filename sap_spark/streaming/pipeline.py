@@ -31,8 +31,11 @@ the bucket's hottest-key surviving-event count, so the hot-key probe
 costs no job of its own). A small epoch discovers in one collect folded
 on the driver, a large one in persisted Spark jobs (:func:`discover`);
 the ``fold`` record says which (``discovery_on``) and how long it took
-(``discover_sec``). ``bucket_high_water()`` folds the offsets across
-epochs for per-partition resume verification.
+(``discover_sec``). A small epoch bound for a merge-on-read table
+collects whole and commits from the driver: ``fold.strategy`` is
+``arrow`` and ``merge_phases.write_on`` is ``driver`` (``tasks`` for
+every Spark-written merge). ``bucket_high_water()`` folds the offsets
+across epochs for per-partition resume verification.
 """
 
 from __future__ import annotations
@@ -48,24 +51,32 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from sap_spark.config import ConfigError, EngineConfig
 from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.changelog import read_changelog_stream
 
 
-# A batch whose narrow discovery projection (keys, seq, op, rocancel,
-# cancel-seq, bucket id) Catalyst sizes below this many bytes discovers
-# on the driver: one collect, folded in Arrow. Larger batches, and any
-# batch whose size is unknown, run the persisted Spark jobs. Driver
-# memory sets the line, not speed: tools/bench_discovery.py
-# (BENCH/DISCOVERY_r10.md) found the driver faster at every size up to
-# 2M events (~71 MB estimated) on local[2] and local[4], while the Python
-# driver's RSS grew ~5.5 bytes per estimated byte (+193 MB at 1M events,
-# +338 MB at 2M). At 32 MiB the growth stays under ~200 MB, and 2M-event
-# epochs (bench.py's headline replay) keep the task path. No cluster was
-# measured.
-DRIVER_DISCOVERY_MAX_BYTES = 32 << 20
+# A batch whose collected projection Catalyst sizes below this many bytes
+# discovers on the driver: one collect, folded in Arrow. The projection is
+# the whole batch, payload included, for a merge-on-read table that can
+# take driver-written rows (_whole_batch below), and the
+# narrow one (keys, seq, op, rocancel, cancel-seq, bucket id) otherwise.
+# Larger batches, and any batch whose size is unknown, run the persisted
+# Spark jobs. Driver memory on whole projections sets the line: Catalyst
+# estimates compressed parquet bytes, and datagen's whole batches held
+# ~18 Arrow bytes and grew the Python driver's RSS by ~56 bytes per
+# estimated byte (tools/bench_discovery.py --mor, BENCH/MOR_DRIVER_r13.md:
+# +236-241 MB at 64k events / 4.1 MB, +543-546 MB at 150k / 9.8 MB). The
+# driver epoch was faster at every size to 150k events on local[2] and
+# local[4] (0.29 vs 1.17-1.38 s at 5k, 0.82-0.86 vs 1.32-1.60 s at 64k),
+# so 4 MiB keeps speed and bounds the growth near 250 MB. A narrow
+# projection is about half a whole one per event (BENCH/DISCOVERY_r10.md),
+# so the same line sends COW batches past ~120k events to the task path,
+# which costs them ~0.3-0.4 s per epoch up to 1M events; no benchmark
+# batch is in that range. No cluster was measured.
+DRIVER_DISCOVERY_MAX_BYTES = 4 << 20
 
 
 @dataclass
@@ -73,10 +84,16 @@ class Discovery:
     """What a batch's fold and MERGE need to know before they run."""
 
     on: str  # "driver" (one collect, folded in Arrow) or "tasks"
-    winners: DataFrame  # (key…, seq): each key's winning event_seq
+    # (key…, seq): each key's winning event_seq; None when ``rows`` holds
+    # the folded batch
+    winners: "DataFrame | None"
     cancelled: "DataFrame | None"  # cancelled seqs; None without rocancel
     offsets: "dict[int, dict]"  # {bucket: {max_seq, n_rows, max_key_events}}
-    sec: float  # wall time until the offsets were known
+    sec: float  # wall time until the offsets (and ``rows``) were known
+    # the whole batch folded on the driver (pyarrow Table, one row per
+    # key with its ``__bucket``): a small batch bound for a merge-on-read
+    # table; None on every other batch
+    rows: "object | None" = None
 
 
 def _estimated_bytes(df: DataFrame) -> "int | None":
@@ -87,22 +104,77 @@ def _estimated_bytes(df: DataFrame) -> "int | None":
         return None
 
 
+def _whole_batch(
+    events: DataFrame, table: LakeTable, cfg: EngineConfig
+) -> "DataFrame | None":
+    """The projection a batch bound for a merge-on-read table collects
+    whole: keys and payload cast to the schema the merge will evolve the
+    table to (the merge's own ``apply_cast_plan``), plus seq, token, op,
+    rocancel, cancel-seq and the table's ``bucket_column``. None — the
+    batch keeps the narrow projection and today's Spark fold and write —
+    on a COW table, when the batch's columns need a schema change the
+    table refuses (the merge then raises as ever), or when
+    ``plans/lake.py::driver_write_codec`` rejects a column type or the
+    session codec."""
+    # call-time import: tests patch this module attribute
+    from sap_spark.plans import lake
+    from sap_spark.schema.compat import (
+        SchemaCompatError,
+        apply_cast_plan,
+        plan_evolution,
+    )
+
+    if table.merge_mode != "mor":
+        return None
+    envelope = [
+        cfg.order_column, cfg.token_column, cfg.op_column,
+        cfg.rocancel_column, cfg.cancel_seq_column,
+    ]
+    user = T.StructType(
+        [
+            f for f in events.schema.fields
+            if f.name not in (*envelope, *lake.INTERNAL_COLS)
+        ]
+    )
+    try:
+        plan = plan_evolution(table.schema, user)
+        lake.refuse_key_widening(plan, table.key_columns)
+    except SchemaCompatError:
+        return None
+    schema = plan.apply_to(table.schema)
+    if lake.driver_write_codec(events.sparkSession, schema) is None:
+        return None
+    wide = apply_cast_plan(
+        events,
+        T.StructType(
+            [*schema.fields, *[events.schema[c] for c in envelope if c in events.columns]]
+        ),
+    )
+    return wide.withColumn("__bucket", table.bucket_column(wide))
+
+
 @contextlib.contextmanager
 def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
     """Find a batch's cancel set, per-key winners and bucket offsets.
 
     The locality is chosen before any job runs. A batch keyed on types
-    Arrow groups as Spark does (``arrow_groups_like_spark``) whose narrow
+    Arrow groups as Spark does (``arrow_groups_like_spark``) whose
     projection Catalyst sizes below ``DRIVER_DISCOVERY_MAX_BYTES``
-    collects that projection in ONE job with no shuffle (executors compute
-    the table's ``bucket_column``) and derives everything in Arrow on the
-    driver (``operators/dedup.discover_arrow``); its winners and cancel
-    set return to Spark as local relations, which launch no job. Any
-    other batch persists the cancel set and the counted winner scan
-    (``lww_winners(with_counts=True)``) and runs ONE bucket-keyed agg over
-    them (``table.affected_bucket_offsets``); they are unpersisted when
-    the context exits. Both yield the same :class:`Discovery`. A frame
-    Catalyst cannot size (``Long.MaxValue``: built by
+    collects it in ONE job with no shuffle (executors compute the table's
+    ``bucket_column``) and derives everything in Arrow on the driver
+    (``operators/dedup.discover_arrow``). Bound for a merge-on-read
+    table, the batch collects whole (:func:`_whole_batch`) and
+    ``operators/dedup.fold_arrow`` folds it too: ``rows`` carries one
+    row per key to ``merge_cdc``, which writes them from the driver.
+    Otherwise (a COW table, a batch the whole projection does not fit)
+    it collects the narrow projection (keys, seq, op, rocancel,
+    cancel-seq, bucket id), and its winners and cancel set return to
+    Spark as local relations, which launch no job. Any other batch
+    persists the cancel set and the counted winner scan
+    (``lww_winners(with_counts=True)``) and runs ONE bucket-keyed agg
+    over them (``table.affected_bucket_offsets``); they are unpersisted
+    when the context exits. All yield the same :class:`Discovery`. A
+    frame Catalyst cannot size (``Long.MaxValue``: built by
     ``spark.createDataFrame`` from a Python list, or through an RDD)
     always takes the task path, however small."""
     # call-time imports: tracing tools patch these module attributes
@@ -110,6 +182,7 @@ def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
         arrow_groups_like_spark,
         cancelled_seqs,
         discover_arrow,
+        fold_arrow,
         lww_winners,
     )
 
@@ -120,20 +193,36 @@ def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
         *keys, seq, *[c for c in envelope if c in events.columns],
         table.bucket_column(events).alias("__bucket"),
     )
-    fields = {f.name: f for f in narrow.schema.fields}
-    size = _estimated_bytes(narrow)
-    if (
-        size is not None
-        and size < DRIVER_DISCOVERY_MAX_BYTES
-        and all(arrow_groups_like_spark(fields[k].dataType) for k in keys)
-    ):
+
+    def on_driver(proj: "DataFrame | None") -> bool:
+        if proj is None:
+            return False
+        size = _estimated_bytes(proj)
+        types = {f.name: f.dataType for f in proj.schema.fields}
+        return (
+            size is not None
+            and size < DRIVER_DISCOVERY_MAX_BYTES
+            and all(arrow_groups_like_spark(types[k]) for k in keys)
+        )
+
+    whole = _whole_batch(events, table, cfg)
+    collect = next((p for p in (whole, narrow) if on_driver(p)), None)
+    if collect is not None:
         import pyarrow as pa
-        from pyspark.sql import types as T
 
         spark = events.sparkSession
+        batch = collect.toArrow()
         cancelled, winners, offsets = discover_arrow(
-            narrow.toArrow(), cfg, "__bucket"
+            batch.select(narrow.columns), cfg, "__bucket"
         )
+        if collect is whole:
+            rows = fold_arrow(batch, cfg)
+            yield Discovery(
+                "driver", None, None, offsets,
+                round(time.monotonic() - t0, 4), rows,
+            )
+            return
+        fields = {f.name: f for f in narrow.schema.fields}
 
         def local(rows: "pa.Table", types: "dict[str, T.DataType]"):
             return spark.createDataFrame(
@@ -199,16 +288,20 @@ def ingest_batch(
        bucket-keyed agg);
     2. the batch's hottest-key count is the max of ``max_key_events``
        over buckets, which is the max over keys;
-    3. the payloads are fetched through a broadcast probe of the winner
-       set (``fetch_winner_payloads``) — or, when the hottest key carries
-       at least ``cfg.hot_key_threshold`` surviving events, folded by the
-       salted two-level window (``lww_window``), whose every exchange is
-       explicitly bounded (per-(key, salt) partitions of ≤
-       hot/salt_partitions rows) instead of relying on partial
-       aggregation under adversarial skew.
+    3. a small batch bound for a merge-on-read table was collected whole
+       and folded in Arrow by discovery (``arrow``): its rows go to
+       ``merge_cdc`` as a pyarrow Table and are written from the driver.
+       Every other batch fetches its payloads through a broadcast probe
+       of the winner set (``fetch_winner_payloads``) — or, when the
+       hottest key carries at least ``cfg.hot_key_threshold`` surviving
+       events, folds by the salted two-level window (``lww_window``),
+       whose every exchange is explicitly bounded (per-(key, salt)
+       partitions of ≤ hot/salt_partitions rows) instead of relying on
+       partial aggregation under adversarial skew.
 
-    The payload fold stays lazy and single-pass inside the MERGE write
-    job. The fold that ran (``strategy``: ``fetch`` or ``window_salted``),
+    The Spark payload fold stays lazy and single-pass inside the MERGE
+    write job. The fold that ran (``strategy``: ``arrow``, ``fetch`` or
+    ``window_salted``),
     the hottest-key count, where discovery ran (``discovery_on``:
     ``driver`` or ``tasks``) and how long it took (``discover_sec``), and
     the bucket offsets are reported through ``metrics_out`` (and the
@@ -237,18 +330,21 @@ def ingest_batch(
         hot = max(
             (o["max_key_events"] for o in found.offsets.values()), default=0
         )
-        if hot >= cfg.hot_key_threshold:
-            chosen = "window_salted"
-            folded = lww_window(
-                drop_cancelled(events, cfg, cancelled=found.cancelled), cfg
-            )
+        if found.rows is not None:
+            chosen, folded = "arrow", found.rows
         else:
-            chosen = "fetch"
-            folded = fetch_winner_payloads(
-                events, found.winners, cfg, cancelled=found.cancelled
-            )
-        keep = fold_output_columns(events, cfg)
-        folded = folded.select(*[c for c in keep if c in folded.columns])
+            if hot >= cfg.hot_key_threshold:
+                chosen = "window_salted"
+                folded = lww_window(
+                    drop_cancelled(events, cfg, cancelled=found.cancelled), cfg
+                )
+            else:
+                chosen = "fetch"
+                folded = fetch_winner_payloads(
+                    events, found.winners, cfg, cancelled=found.cancelled
+                )
+            keep = fold_output_columns(events, cfg)
+            folded = folded.select(*[c for c in keep if c in folded.columns])
         if metrics_out is not None:
             metrics_out["strategy"] = chosen
             metrics_out["hot_key_count"] = int(hot)
@@ -270,6 +366,15 @@ def ingest_batch(
             seq_column=cfg.order_column,
             affected_buckets=sorted(found.offsets),
         )
+
+
+def merge_phases(table: LakeTable) -> dict:
+    """An applied epoch's lineage ``merge_phases``: the table's
+    ``last_merge_metrics``, which always name where the merge wrote
+    (``write_on``: ``driver`` or ``tasks``). A backend that times no
+    phases (``IcebergTable``: one ``MERGE INTO``, run by Spark tasks)
+    records ``{"write_on": "tasks"}``, so every record has the field."""
+    return table.last_merge_metrics or {"write_on": "tasks"}
 
 
 def table_lineage_path(table_path: str) -> str:
@@ -308,7 +413,10 @@ def fold_lineage(records: list[dict]) -> dict:
       crash-retried epochs;
     - ``bucket_high_water`` keys are ints (JSON object keys arrive as
       strings) and only applied epochs with recorded offsets contribute;
-    - ``events``/``epochs_applied``/``max_token`` cover applied epochs.
+    - ``events``/``epochs_applied``/``max_token`` cover applied epochs;
+    - ``fold_strategy`` and ``write_on`` count applied epochs by the
+      fold that ran (``fold.strategy``) and where the merge wrote
+      (``merge_phases.write_on``).
     """
     out: dict = {
         "epochs_applied": 0,
@@ -316,6 +424,8 @@ def fold_lineage(records: list[dict]) -> dict:
         "quarantined": 0,
         "max_token": None,
         "bucket_high_water": {},
+        "fold_strategy": {},
+        "write_on": {},
     }
     last_quarantined: dict = {}
     for r in records:
@@ -324,6 +434,12 @@ def fold_lineage(records: list[dict]) -> dict:
             continue
         out["epochs_applied"] += 1
         out["events"] += r.get("n_events") or 0
+        for field, value in (
+            ("fold_strategy", (r.get("fold") or {}).get("strategy")),
+            ("write_on", (r.get("merge_phases") or {}).get("write_on")),
+        ):
+            if value is not None:
+                out[field][value] = out[field].get(value, 0) + 1
         mt = r.get("max_token")
         if mt is not None and (out["max_token"] is None or mt > out["max_token"]):
             out["max_token"] = mt
@@ -1021,7 +1137,7 @@ class CdcPipeline:
             "elapsed_sec": round(elapsed, 4),
             "fold": fold_metrics or None,
             "bucket_offsets": bucket_offsets,
-            "merge_phases": table.last_merge_metrics,
+            "merge_phases": merge_phases(table) if applied else None,
             "compacted_buckets": compacted,
             "compact_sec": compact_sec,
             "expired_files": expired_files,
@@ -1082,8 +1198,6 @@ def odata_delta_pipeline(
     and epoch-retry no-ops all apply unchanged — a delta token here is one
     (or more) whole response pages, exactly SAP ODP's delta-unit contract.
     """
-    from pyspark.sql import types as T
-
     from sap_spark.sources.odata_feed import delta_feed_to_changelog
 
     def transform(df: DataFrame) -> DataFrame:

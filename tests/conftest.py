@@ -35,3 +35,13 @@ def spark_discovery(monkeypatch):
     from sap_spark.streaming import pipeline
 
     monkeypatch.setattr(pipeline, "DRIVER_DISCOVERY_MAX_BYTES", 0)
+
+
+@pytest.fixture()
+def spark_write(monkeypatch):
+    """Keep every merge-on-read batch on the Spark fold and write: no
+    batch is collected whole and written from the driver, as for a batch
+    past the whole-batch line but inside the narrow one."""
+    from sap_spark.plans import lake
+
+    monkeypatch.setattr(lake, "driver_write_codec", lambda spark, schema: None)

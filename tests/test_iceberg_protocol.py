@@ -112,6 +112,9 @@ class FakeSpark:
     def table(self, name):
         return self._real.createDataFrame([], self.full_schema)
 
+    def createDataFrame(self, *args, **kwargs):  # a local relation, no catalog
+        return self._real.createDataFrame(*args, **kwargs)
+
     def sqls(self):
         return [x[1] for x in self.log if x[0] == "sql"]
 
@@ -465,3 +468,38 @@ def test_pipelines_reject_epoch_tail_options_iceberg_lacks(spark, tmpdir_path):
     # without the options the Iceberg table is a valid pipeline target
     CdcPipeline(spark, cfg, t, log, ckpt)
     assert fake.sqls() == []
+
+
+def test_merge_cdc_stages_an_arrow_batch_like_a_dataframe(spark):
+    """A batch folded on the driver reaches ``merge_cdc`` as a pyarrow
+    Table (with the ``__bucket`` its discovery collect carried). The
+    binding stages it as a local relation and emits the same WAP
+    statement sequence and the same staged rows as for the equal
+    DataFrame, with ``_bucket`` hashed by the binding itself."""
+    import pyarrow as pa
+
+    frame = _changes(spark)
+    arrow = frame.toArrow().append_column(
+        "__bucket", pa.array([99], pa.int32())  # not the binding's hash
+    )
+    runs = {}
+    for name, changes in (("frame", frame), ("arrow", arrow)):
+        t, fake = _table(spark)
+        assert t.merge_cdc(changes, "epoch-1", affected_buckets=[3]) is True
+        view = next(e[1] for e in fake.log if e[0] == "dropTempView")
+        runs[name] = (
+            [e if e[0] != "dropTempView" else (e[0],) for e in fake.log
+             if not (e[0] == "sql" and ".history" in e[1])],
+            view,
+            [r.asDict() for r in fake.staged],
+        )
+        assert t.last_merge_metrics is None
+    (log_f, view_f, staged_f), (log_a, view_a, staged_a) = (
+        runs["frame"], runs["arrow"]
+    )
+    assert [
+        (e[0], e[1].replace(view_a, view_f)) if e[0] == "sql" else e
+        for e in log_a
+    ] == log_f
+    assert staged_a == staged_f
+    assert staged_a[0]["_bucket"] != 99

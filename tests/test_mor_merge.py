@@ -209,3 +209,35 @@ def test_mor_write_amplification_is_batch_sized(spark, tmpdir_path):
             (F.col("repo") == "org0/repo1") & (F.col("path") == "src/x/upd.py")
         ).collect()
         assert [r["content"] for r in row] == ["tiny update"]
+
+
+# The tests above write each small merge-on-read epoch from the driver
+# (pyarrow delta files); these run them again on the Spark fold and write.
+
+
+def test_mor_pipeline_equals_cow_and_oracle_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_mor_pipeline_equals_cow_and_oracle(spark, tmpdir_path)
+
+
+def test_mor_out_of_order_tokens_version_gate_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_mor_out_of_order_tokens_version_gate(spark, tmpdir_path)
+
+
+def test_mor_replayed_batch_is_noop_on_spark_write(spark, tmpdir_path, spark_write):
+    test_mor_replayed_batch_is_noop(spark, tmpdir_path)
+
+
+def test_mor_schema_evolution_across_deltas_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_mor_schema_evolution_across_deltas(spark, tmpdir_path)
+
+
+def test_mor_write_amplification_is_batch_sized_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_mor_write_amplification_is_batch_sized(spark, tmpdir_path)

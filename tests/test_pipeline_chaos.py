@@ -370,3 +370,100 @@ def test_multi_writer_chaos_on_spark_discovery(
     spark, tmpdir_path, seed, spark_discovery
 ):
     test_multi_writer_chaos_converges_to_union_oracle(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [11, 23, 37])
+def test_crash_schedule_on_spark_write(spark, tmpdir_path, seed, spark_write):
+    test_random_crash_schedule_converges_to_oracle(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [5, 29])
+def test_crash_schedule_with_auto_expiry_on_spark_write(
+    spark, tmpdir_path, seed, spark_write
+):
+    test_random_crash_schedule_with_auto_expiry(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [7, 19])
+def test_multi_writer_chaos_on_spark_write(spark, tmpdir_path, seed, spark_write):
+    test_multi_writer_chaos_converges_to_union_oracle(spark, tmpdir_path, seed)
+
+
+@pytest.mark.parametrize("seed", [3, 17])
+def test_crash_after_driver_write_before_commit(spark, tmpdir_path, seed):
+    """A merge-on-read epoch written from the driver dies after pyarrow
+    wrote its delta files and before ``_commit_merge`` runs. The files
+    are never referenced, the table stays readable, the resumed pipeline
+    converges to the oracle fold, and expiry reclaims the files."""
+    import glob
+
+    from sap_spark.plans.lake import data_file_key, scan_data_files
+
+    rng = random.Random(seed)
+    events = gen_change_events(
+        spark, n_events=2000, n_keys=200, events_per_token=250,
+        skew=3.0, rocancel_rate=0.05, dup_rate=0.05,
+    ).cache()
+    expected = fold_to_frame(events.toPandas())
+    log_dir = f"{tmpdir_path}/log"
+    write_change_log(events, log_dir)
+    table = LakeTable.create(
+        spark, f"{tmpdir_path}/repos", TARGET_SCHEMA,
+        key_columns=["repo", "path"], num_buckets=4, merge_mode="mor",
+    )
+    real_write = LakeTable._write_arrow_buckets
+    crashed: list[int] = []
+
+    def write_then_crash(self, *args, **kwargs):
+        out = real_write(self, *args, **kwargs)
+        if len(crashed) < MAX_CRASHES and rng.random() < 0.5:
+            crashed.append(sum(len(es) for es in out.values()))
+            raise RuntimeError("chaos: crash after the driver write")
+        return out
+
+    LakeTable._write_arrow_buckets = write_then_crash
+    attempts = 0
+    try:
+        while True:
+            attempts += 1
+            assert attempts <= MAX_ATTEMPTS, "chaos run did not converge"
+            pipe = CdcPipeline(
+                spark, CFG, LakeTable(spark, table.path), log_dir,
+                checkpoint_dir=f"{tmpdir_path}/ckpt",
+                max_files_per_trigger=rng.choice([1, 2]),
+                pipeline_id=f"driver-write-chaos-{seed}",
+            )
+            try:
+                pipe.run_available_now(timeout_sec=600)
+                break
+            except Exception as exc:  # noqa: BLE001 — must be OUR crash
+                assert "chaos:" in str(exc), f"non-injected failure: {exc!r}"
+            survivor = LakeTable(spark, table.path)
+            survivor.read().count()
+    finally:
+        LakeTable._write_arrow_buckets = real_write
+    assert crashed, "the schedule never crashed after a driver write"
+
+    def unreferenced() -> set:
+        live = LakeTable(spark, table.path)
+        return set(scan_data_files(table.path)) - {
+            data_file_key(e["path"]) for _, es in live.bucket_entries() for e in es
+        }
+
+    final = LakeTable(spark, table.path)
+    assert len(unreferenced()) >= sum(crashed)  # the crashed writes
+    got = final.read().orderBy("repo", "path").toPandas().reset_index(drop=True)
+    assert got.equals(expected), f"seed={seed}: {len(crashed)} crashes"
+    applied = [r for r in pipe.lineage() if r["applied"]]
+    assert applied and all(
+        r["merge_phases"]["write_on"] == "driver" for r in applied
+    )
+
+    final.expire_snapshots(keep_last=1)
+    assert not unreferenced()
+    assert glob.glob(f"{table.path}/data/*/__bucket=*/*.parquet")
+    still = (
+        LakeTable(spark, table.path).read()
+        .orderBy("repo", "path").toPandas().reset_index(drop=True)
+    )
+    assert still.equals(expected)

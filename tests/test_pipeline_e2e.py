@@ -613,3 +613,11 @@ def test_lineage_says_where_discovery_ran(spark, tmpdir_path, monkeypatch):
         )
     assert images["driver"].equals(images["tasks"])
     assert images["driver"].equals(fold_to_frame(events.toPandas()))
+
+
+def test_lineage_bills_commit_metadata_on_spark_write(
+    spark, tmpdir_path, monkeypatch, spark_write
+):
+    test_lineage_bills_commit_metadata_to_its_own_phase(
+        spark, tmpdir_path, monkeypatch
+    )

@@ -182,3 +182,7 @@ def test_incremental_ingest_matches_oracle_on_spark_discovery(
     spark, mode, spark_discovery
 ):
     test_incremental_ingest_matches_oracle_both_modes(spark, mode)
+
+
+def test_incremental_mor_ingest_matches_oracle_on_spark_write(spark, spark_write):
+    test_incremental_ingest_matches_oracle_both_modes(spark, "mor")

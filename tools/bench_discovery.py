@@ -24,7 +24,26 @@ during the first driver-path discovery of that size (sampled every 5 ms;
 the JVM heap's own growth policy shows in its figure). ``--out FILE``
 also writes the table as markdown.
 
+``--mor`` times whole epochs instead: ``ingest_batch`` of the same batch
+into a fresh merge-on-read table, on the two paths such a batch can take:
+
+- driver: the whole batch collected in one job, folded in Arrow
+  (``operators/dedup.fold_arrow``) and written as pyarrow delta files
+  from the driver (forced by lifting ``DRIVER_DISCOVERY_MAX_BYTES``);
+- spark: what a batch past the whole-batch line runs (the driver write
+  disabled, the constant at its value): narrow driver discovery while the
+  narrow projection fits, persisted Spark jobs beyond, then the Spark
+  fetch fold and write.
+
+Per size it reports Catalyst's estimate of the whole projection (what the
+constant is compared with), its Arrow bytes, both medians and the RSS
+growth of the first driver-path epoch. Both paths must leave tables with
+the same ``table_fingerprint`` or the run fails. The driver path is
+skipped (and its columns left empty) past ``--max-driver-mb`` of
+estimate, to bound this process's memory.
+
     python tools/bench_discovery.py [--cpus 2] [--reps 5] [--out FILE]
+    python tools/bench_discovery.py --mor [--cpus 2] [--reps 3] [--out FILE]
 """
 
 from __future__ import annotations
@@ -155,12 +174,93 @@ def narrow_stats(events, table, cfg) -> tuple[int, int]:
     return _estimated_bytes(narrow), narrow.toArrow().nbytes
 
 
+def measure_mor(spark, events, n: int, schema, cfg, workdir: str, args) -> dict:
+    """Whole merge-on-read epochs on the driver and the Spark path."""
+    from sap_spark.plans import lake
+    from sap_spark.plans.doctor import table_fingerprint
+    from sap_spark.streaming import pipeline
+
+    default_cap = pipeline.DRIVER_DISCOVERY_MAX_BYTES
+    real_codec = lake.driver_write_codec
+    whole = pipeline._whole_batch(
+        events, lake.LakeTable.create(
+            spark, os.path.join(workdir, f"probe{n}"), schema,
+            key_columns=list(cfg.key_columns), num_buckets=8, merge_mode="mor",
+        ), cfg,
+    )
+    est = pipeline._estimated_bytes(whole)
+    legs = ["spark"]
+    if est < args.max_driver_mb * 1e6:
+        legs.insert(0, "driver")
+    runs = {"n": 0}
+
+    def epoch(leg: str, keep: bool = False):
+        pipeline.DRIVER_DISCOVERY_MAX_BYTES = 1 << 62 if leg == "driver" else default_cap
+        lake.driver_write_codec = real_codec if leg == "driver" else (
+            lambda spark, schema: None
+        )
+        runs["n"] += 1
+        root = os.path.join(workdir, f"mor{runs['n']}")
+        table = lake.LakeTable.create(
+            spark, root, schema, key_columns=list(cfg.key_columns),
+            num_buckets=8, merge_mode="mor",
+        )
+        metrics: dict = {}
+        t0 = time.perf_counter()
+        pipeline.ingest_batch(events, table, cfg, "b0", metrics_out=metrics)
+        took = time.perf_counter() - t0
+        want = "arrow" if leg == "driver" else ("fetch", "window_salted")
+        if metrics["strategy"] not in want:
+            raise AssertionError(f"forced {leg} epoch folded by {metrics['strategy']}")
+        out = (took, table_fingerprint(spark, lake.LakeTable(spark, root)) if keep else None)
+        shutil.rmtree(root, ignore_errors=True)
+        return out
+
+    try:
+        growth: dict = {}
+        if "driver" in legs:
+            proc = getattr(spark.sparkContext._gateway, "proc", None)
+            growth = rss_growth(
+                {"py": "self", **({"jvm": proc.pid} if proc is not None else {})},
+                lambda: epoch("driver"),
+            )
+        prints = {leg: epoch(leg, keep=True)[1] for leg in legs}  # warm-up
+        if len(set(map(json.dumps, prints.values()))) != 1:
+            raise AssertionError("driver and spark epochs left different tables")
+        times: dict = {leg: [] for leg in legs}
+        for i in range(args.reps):
+            for leg in legs if i % 2 == 0 else legs[::-1]:
+                times[leg].append(epoch(leg)[0])
+    finally:
+        pipeline.DRIVER_DISCOVERY_MAX_BYTES = default_cap
+        lake.driver_write_codec = real_codec
+    med = {leg: round(statistics.median(v), 3) for leg, v in times.items()}
+    return {
+        "estimate_bytes": est,
+        "arrow_bytes": whole.toArrow().nbytes if "driver" in legs else None,
+        "driver_s": med.get("driver"),
+        "spark_s": med["spark"],
+        "py_rss_growth_mb": growth.get("py"),
+        "jvm_rss_growth_mb": growth.get("jvm"),
+    }
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=2, help="local[N] task slots")
-    ap.add_argument("--reps", type=int, default=5)
+    ap.add_argument("--reps", type=int, default=None,
+                    help="timed runs per path (default 5; 3 with --mor)")
     ap.add_argument("--out", default=None)
+    ap.add_argument("--mor", action="store_true",
+                    help="time whole merge-on-read epochs (see module doc)")
+    ap.add_argument("--max-driver-mb", type=float, default=256,
+                    help="with --mor: skip the driver path past this estimate")
+    ap.add_argument("--sizes", default=None,
+                    help="comma-separated event counts (default: 5k to 2M)")
     args = ap.parse_args()
+    if args.reps is None:
+        args.reps = 3 if args.mor else 5
+    sizes = [int(n) for n in args.sizes.split(",")] if args.sizes else SIZES
 
     from pyspark.sql import types as T
 
@@ -184,7 +284,7 @@ def main() -> int:
             spark, os.path.join(workdir, "t"), schema,
             key_columns=["repo", "path"], num_buckets=8,
         )
-        for n in SIZES:
+        for n in sizes:
             log = os.path.join(workdir, f"log{n}")
             write_change_log(
                 gen_change_events(
@@ -194,13 +294,18 @@ def main() -> int:
                 log,
             )
             events = spark.read.parquet(log)
-            est, arrow_bytes = narrow_stats(events, table, cfg)
-            row = {
-                "events": n,
-                "estimate_bytes": est,
-                "arrow_bytes": arrow_bytes,
-                **measure(spark, events, table, cfg, args.reps),
-            }
+            if args.mor:
+                row = {"events": n, **measure_mor(
+                    spark, events, n, schema, cfg, workdir, args
+                )}
+            else:
+                est, arrow_bytes = narrow_stats(events, table, cfg)
+                row = {
+                    "events": n,
+                    "estimate_bytes": est,
+                    "arrow_bytes": arrow_bytes,
+                    **measure(spark, events, table, cfg, args.reps),
+                }
             rows_out.append(row)
             print(json.dumps(row), flush=True)
             shutil.rmtree(log, ignore_errors=True)
@@ -208,7 +313,9 @@ def main() -> int:
         spark.stop()
         shutil.rmtree(workdir, ignore_errors=True)
     if args.out:
-        write_md(args.out, rows_out, args.cpus, args.reps)
+        (write_md_mor if args.mor else write_md)(
+            args.out, rows_out, args.cpus, args.reps
+        )
     return 0
 
 
@@ -232,6 +339,38 @@ def write_md(out_path: str, rows: list[dict], cpus: int, reps: int) -> None:
             f"| {r['arrow_bytes'] / 1e6:.2f} MB | {r['driver_s']:.3f} s "
             f"| {r['tasks_s']:.3f} s | {faster} | {r['py_rss_growth_mb']} MB "
             f"| {r['jvm_rss_growth_mb']} MB |"
+        )
+    with open(out_path, "w") as f:
+        f.write("\n".join(lines) + "\n")
+
+
+def write_md_mor(out_path: str, rows: list[dict], cpus: int, reps: int) -> None:
+    def cell(v, fmt):
+        return "—" if v is None else fmt.format(v)
+
+    lines = [
+        "# Merge-on-read epochs: driver write vs Spark write",
+        "",
+        f"`python tools/bench_discovery.py --mor --cpus {cpus} --reps {reps}`: "
+        f"local[{cpus}], `ingest_batch` of one datagen batch into a fresh "
+        f"8-bucket merge-on-read table, medians of {reps} after one warm-up "
+        "of each path. Both paths left tables with the same fingerprint at "
+        "every size they both ran.",
+        "",
+        "| events | estimate | Arrow bytes | driver | spark | faster "
+        "| Python RSS growth | JVM RSS growth |",
+        "|---|---|---|---|---|---|---|---|",
+    ]
+    for r in rows:
+        faster = "—" if r["driver_s"] is None else (
+            "driver" if r["driver_s"] < r["spark_s"] else "spark"
+        )
+        lines.append(
+            f"| {r['events']} | {r['estimate_bytes'] / 1e6:.2f} MB "
+            f"| {cell(r['arrow_bytes'] and r['arrow_bytes'] / 1e6, '{:.2f} MB')} "
+            f"| {cell(r['driver_s'], '{:.3f} s')} | {r['spark_s']:.3f} s | {faster} "
+            f"| {cell(r['py_rss_growth_mb'], '{} MB')} "
+            f"| {cell(r['jvm_rss_growth_mb'], '{} MB')} |"
         )
     with open(out_path, "w") as f:
         f.write("\n".join(lines) + "\n")
