@@ -350,6 +350,28 @@ def _arrow_survivors(batch, cfg: EngineConfig):
     return cancelled, survivors
 
 
+def _arrow_group(table, by, aggs, names):
+    out = table.group_by(by).aggregate(aggs)
+    return out.rename_columns([names.get(c, c) for c in out.column_names])
+
+
+def _arrow_offsets(winners, seq: str, bucket: str) -> "dict[int, dict]":
+    """``plans/lake.py::bucket_offsets`` over Arrow winners (key…, seq,
+    ``__n_events``, bucket)."""
+    per_bucket = _arrow_group(
+        winners, [bucket],
+        [(seq, "max"), ([], "count_all"), ("__n_events", "max")],
+        {f"{seq}_max": "max_seq", "count_all": "n_rows",
+         "__n_events_max": "max_key_events"},
+    )
+    return {
+        r.pop(bucket): r
+        for r in per_bucket.select(
+            [bucket, "max_seq", "n_rows", "max_key_events"]
+        ).to_pylist()
+    }
+
+
 def discover_arrow(batch, cfg: EngineConfig, bucket: str):
     """Driver-side discovery over a collected narrow projection of a batch
     (pyarrow Table of keys, seq, op, rocancel, cancel-seq and ``bucket``,
@@ -369,42 +391,31 @@ def discover_arrow(batch, cfg: EngineConfig, bucket: str):
     across a group."""
     keys, seq = list(cfg.key_columns), cfg.order_column
     cancelled, survivors = _arrow_survivors(batch, cfg)
-
-    def agg(table, by, aggs, names):
-        out = table.group_by(by).aggregate(aggs)
-        return out.rename_columns([names.get(c, c) for c in out.column_names])
-
-    winners = agg(
+    winners = _arrow_group(
         survivors, [*keys, bucket], [(seq, "max"), ([], "count_all")],
         {f"{seq}_max": seq, "count_all": "__n_events"},
     )
-    per_bucket = agg(
-        winners, [bucket],
-        [(seq, "max"), ([], "count_all"), ("__n_events", "max")],
-        {f"{seq}_max": "max_seq", "count_all": "n_rows",
-         "__n_events_max": "max_key_events"},
-    )
-    offsets = {
-        r.pop(bucket): r
-        for r in per_bucket.select(
-            [bucket, "max_seq", "n_rows", "max_key_events"]
-        ).to_pylist()
-    }
-    return cancelled, winners, offsets
+    return cancelled, winners, _arrow_offsets(winners, seq, bucket)
 
 
-def fold_arrow(batch, cfg: EngineConfig):
-    """Each key's winning row of a batch collected whole on the driver
-    (pyarrow Table): the rows :func:`fetch_winner_payloads` returns,
-    without the token, rocancel and cancel-seq labels; other columns
-    (such as the bucket id) ride along.
+def fold_arrow(batch, cfg: EngineConfig, bucket: str):
+    """Discovery and fold of a batch collected whole on the driver
+    (pyarrow Table, payload included), in one pass over its survivors
+    (:func:`_arrow_survivors`). Returns ``(offsets, rows)``:
+
+    - ``offsets``: as :func:`discover_arrow` returns them;
+    - ``rows``: each key's winning row, the rows
+      :func:`fetch_winner_payloads` returns, without the token, rocancel
+      and cancel-seq labels; other columns (``bucket``) ride along.
 
     The fetch keeps each key's survivors at its winning (max) seq —
     survivors ⋈ winners on keys+seq — and of those the largest-token
     delivery (``_fetch_payloads``' rule). Here one sort of the survivors
-    (:func:`_arrow_survivors`) by (seq, token) descending, nulls last,
-    and the first row of each key group pick the same row; rows with a
-    NULL key or seq, which that inner join never matches, go first."""
+    by (seq, token) descending, nulls last, ranks them; one group-by on
+    (key…, bucket) counts each key's survivors, takes its max seq (the
+    winners) and its first-ranked row, which is the fetched one. A key
+    whose winner has a NULL key or seq, which that inner join never
+    matches, yields no row."""
     import functools
 
     import pyarrow as pa
@@ -412,24 +423,26 @@ def fold_arrow(batch, cfg: EngineConfig):
 
     keys, seq, tok = list(cfg.key_columns), cfg.order_column, cfg.token_column
     _, survivors = _arrow_survivors(batch, cfg)
-    survivors = survivors.filter(
-        functools.reduce(
-            pc.and_, [pc.is_valid(survivors[c]) for c in [*keys, seq]]
-        )
-    )
     order = [(c, "descending") for c in (seq, tok) if c in survivors.column_names]
     ranked = pc.sort_indices(survivors, sort_keys=order, null_placement="at_end")
-    ranks = pa.table(
-        {
-            **{k: survivors[k].take(ranked) for k in keys},
-            "__rank": pa.array(range(len(ranked)), pa.int64()),
-        }
+    winners = _arrow_group(
+        pa.table(
+            {
+                **{c: survivors[c].take(ranked) for c in [*keys, bucket, seq]},
+                "__rank": pa.array(range(len(ranked)), pa.int64()),
+            }
+        ),
+        [*keys, bucket],
+        [(seq, "max"), ([], "count_all"), ("__rank", "min")],
+        {f"{seq}_max": seq, "count_all": "__n_events"},
     )
-    first = ranks.group_by(keys).aggregate([("__rank", "min")])["__rank_min"]
+    rows = survivors.take(ranked.take(winners["__rank_min"]))
+    rows = rows.filter(
+        functools.reduce(pc.and_, [pc.is_valid(rows[c]) for c in [*keys, seq]])
+    )
     labels = {tok, cfg.rocancel_column, cfg.cancel_seq_column}
-    return survivors.take(ranked.take(first)).drop_columns(
-        [c for c in survivors.column_names if c in labels]
-    )
+    rows = rows.drop_columns([c for c in rows.column_names if c in labels])
+    return _arrow_offsets(winners, seq, bucket), rows
 
 
 def fold_changes(events: DataFrame, cfg: EngineConfig) -> DataFrame:

@@ -235,7 +235,7 @@ def bucket_offsets(
 
 
 # Column types a merge-on-read batch may be written with from the driver
-# (LakeTable._write_arrow_buckets): the atomic types a table column can
+# (LakeTable.driver_write_schema): the atomic types a table column can
 # have (schema/compat.py) whose pyarrow-written parquet reads back
 # identically through ``spark.read.schema(...)`` (tests/test_driver_write.py
 # round-trips each). Collated strings and nested types are out.
@@ -251,20 +251,12 @@ _PYARROW_CODECS = {
 }
 
 
-def driver_write_codec(spark: SparkSession, schema: T.StructType) -> "str | None":
-    """The pyarrow codec a merge-on-read batch of ``schema`` is written
-    with from the driver, or None when it must take the Spark write: a
-    column type outside ``_DRIVER_WRITE_TYPES``, or a session parquet
-    codec (``spark.sql.parquet.compression.codec``) with no pyarrow
-    equivalent."""
+def _pyarrow_codec(spark: SparkSession) -> "str | None":
+    """pyarrow's name for the session's parquet codec
+    (``spark.sql.parquet.compression.codec``), or None when pyarrow has
+    no writer for it."""
     import pyarrow as pa
 
-    for f in schema.fields:
-        dt = f.dataType
-        if not isinstance(dt, _DRIVER_WRITE_TYPES) or (
-            isinstance(dt, T.StringType) and dt.collation != "UTF8_BINARY"
-        ):
-            return None
     name = spark.conf.get("spark.sql.parquet.compression.codec", "snappy")
     codec = _PYARROW_CODECS.get(name.lower())
     if codec is None or (codec != "none" and not pa.Codec.is_available(codec)):
@@ -1165,26 +1157,40 @@ class LakeTable:
         }
 
     def _write_arrow_buckets(
-        self, rows, codec: str, phases: "dict | None" = None
+        self, rows, phases: "dict | None" = None
     ) -> dict[str, list[dict]]:
         """:meth:`_write_buckets` for rows already on the driver: a
         pyarrow Table of the current schema's columns plus ``__bucket``,
-        written with pyarrow under the same layout
+        written with pyarrow in the session's codec under the same layout
         (``data/<uuid>/__bucket=N/``) and the table's write layout —
-        each bucket's rows sorted by ``sort_columns`` (ascending, nulls
-        first, as ``sortWithinPartitions``), sliced into files of at most
+        each bucket's rows sorted by ``sort_columns`` as
+        ``sortWithinPartitions`` sorts them (ascending, nulls first, NaN
+        after every number), sliced into files of at most
         ``max_records_per_file`` rows, else one file per bucket — then
         described by the same :meth:`_collect_commit_metadata`."""
+        import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
+        codec = _pyarrow_codec(self.spark)
+        if codec is None:  # the session codec changed since discovery
+            raise ValueError(
+                "session parquet codec has no pyarrow writer; retry the batch"
+            )
         commit_dir = os.path.join(self.path, "data", uuid.uuid4().hex)
         names = [f.name for f in self._schema_with_internal().fields]
-        order = [("__bucket", "ascending")] + [
-            (c, "ascending") for c in self.sort_columns if c in names
-        ]
+        order = [rows["__bucket"]]
+        for c in (c for c in self.sort_columns if c in names):
+            if pa.types.is_floating(rows[c].type):
+                # Arrow places NaN with the nulls; Spark sorts it last
+                order.append(pc.is_nan(rows[c]))
+            order.append(rows[c])
         rows = rows.take(
-            pc.sort_indices(rows, sort_keys=order, null_placement="at_start")
+            pc.sort_indices(
+                pa.table({str(i): a for i, a in enumerate(order)}),
+                sort_keys=[(str(i), "ascending") for i in range(len(order))],
+                null_placement="at_start",
+            )
         )
         cap = self.max_records_per_file or max(rows.num_rows, 1)
         bucket_paths: dict[str, list[str]] = {}
@@ -1355,6 +1361,32 @@ class LakeTable:
             events, self.bucket_column(events), seq_column, count_column
         )
 
+    def driver_write_schema(self, user: T.StructType) -> "T.StructType | None":
+        """Whether a batch whose user columns are ``user`` may be folded
+        and written from the driver: the schema this table will have once
+        :meth:`merge_cdc` evolves it for that batch, or None when the
+        batch takes the Spark fold and write — a COW table, a schema
+        change the table refuses (the merge then raises as ever), a
+        column type outside ``_DRIVER_WRITE_TYPES`` or a session parquet
+        codec pyarrow cannot write (:func:`_pyarrow_codec`). The one
+        place this is decided; ``merge_cdc`` trusts an Arrow batch that
+        carries ``__bucket``."""
+        if self.merge_mode != "mor" or _pyarrow_codec(self.spark) is None:
+            return None
+        try:
+            plan = plan_evolution(self.schema, user)
+            refuse_key_widening(plan, self.key_columns)
+        except SchemaCompatError:
+            return None
+        schema = plan.apply_to(self.schema)
+        for f in schema.fields:
+            dt = f.dataType
+            if not isinstance(dt, _DRIVER_WRITE_TYPES) or (
+                isinstance(dt, T.StringType) and dt.collation != "UTF8_BINARY"
+            ):
+                return None
+        return schema
+
     def merge_cdc(
         self,
         changes: "DataFrame | pa.Table",
@@ -1389,16 +1421,15 @@ class LakeTable:
         the join inside a bucket set is keys-vs-keys with AQE free to
         broadcast the (small) change side.
 
-        Arrow input: a merge-on-read table writes it from the driver with
-        pyarrow (:meth:`_merge_arrow`; no Spark job) when it carries every
-        current-schema column at its type, op, seq and each row's
-        ``__bucket`` (the table's :meth:`bucket_column`, which the
-        pipeline's discovery collect evaluates on executors), and
-        :func:`driver_write_codec` allows the schema and session codec.
-        Otherwise, and on a COW table, it becomes a local-relation
-        DataFrame (:func:`arrow_frame`) and merges as any other.
-        ``last_merge_metrics["write_on"]`` says which ran: ``driver`` or
-        ``tasks``.
+        Arrow input: a merge-on-read table writes a batch that carries
+        each row's ``__bucket`` (the table's :meth:`bucket_column`, which
+        the pipeline's discovery collect evaluates on executors) from the
+        driver with pyarrow (:meth:`_merge_arrow`; no Spark job). The
+        caller has asked :meth:`driver_write_schema` first; this method
+        trusts it. Without ``__bucket``, and on a COW table, the batch
+        becomes a local-relation DataFrame (:func:`arrow_frame`) and
+        merges as any other. ``last_merge_metrics["write_on"]`` says
+        which ran: ``driver`` or ``tasks``.
         """
         # Reset BEFORE the no-op check: a replayed epoch must not report the
         # previous merge's phase timings in its lineage record.
@@ -1423,18 +1454,10 @@ class LakeTable:
         )
         self.evolve_schema(change_user_schema)
         if arrow is not None:
-            codec = self.merge_mode == "mor" and driver_write_codec(
-                self.spark, self.schema
-            )
-            want = {f.name: f.dataType for f in self.schema.fields}
-            want.update({op_column: T.StringType(), seq_column: T.LongType()})
-            have = {f.name: f.dataType for f in fields}
-            if codec and "__bucket" in arrow.column_names and all(
-                have.get(c) == dt for c, dt in want.items()
-            ):
+            if self.merge_mode == "mor" and "__bucket" in arrow.column_names:
                 return self._merge_arrow(
                     arrow, batch_id, op_column, seq_column, affected_buckets,
-                    codec, phases, t_start,
+                    phases, t_start,
                 )
             changes = arrow_frame(self.spark, arrow)
         phases["write_on"] = "tasks"
@@ -1583,29 +1606,33 @@ class LakeTable:
         op_column: str,
         seq_column: str,
         affected_buckets: "list[int] | None",
-        codec: str,
         phases: dict,
         t_start: float,
     ) -> bool:
         """The merge-on-read apply of a driver-folded batch: the same delta
         rows as the Spark branch of :meth:`merge_cdc` (null-op rows
         dropped, a delete's payload nulled, ``_event_seq``/``_deleted``
-        from seq/op), written by :meth:`_write_arrow_buckets`, then the
-        same commit."""
+        from seq/op, columns cast to the current schema as
+        ``apply_cast_plan`` casts them: a column the batch lacks is NULL),
+        written by :meth:`_write_arrow_buckets`, then the same commit."""
         import pyarrow as pa
         import pyarrow.compute as pc
+        from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
 
         rows = rows.filter(pc.is_valid(rows[op_column]))
         is_del = pc.equal(rows[op_column], "D")
         keys = set(self.key_columns)
-        cols = {
-            f.name: rows[f.name]
-            if f.name in keys
-            else pc.if_else(
-                is_del, pa.nulls(rows.num_rows, rows[f.name].type), rows[f.name]
+        cols = {}
+        for f in self.schema.fields:
+            if f.name not in rows.column_names:
+                col = pa.nulls(rows.num_rows, to_arrow_type(f.dataType))
+            elif from_arrow_type(rows[f.name].type) != f.dataType:
+                col = rows[f.name].cast(to_arrow_type(f.dataType))
+            else:
+                col = rows[f.name]
+            cols[f.name] = col if f.name in keys else pc.if_else(
+                is_del, pa.nulls(rows.num_rows, col.type), col
             )
-            for f in self.schema.fields
-        }
         delta = pa.table(
             {
                 **cols,
@@ -1622,7 +1649,7 @@ class LakeTable:
         phases["write_on"] = "driver"
         phases["fold_and_discover_sec"] = round(time.monotonic() - t_start, 4)
         t_phase = time.monotonic()
-        new_files = self._write_arrow_buckets(delta, codec, phases)
+        new_files = self._write_arrow_buckets(delta, phases)
         return self._commit_deltas(new_files, batch_id, affected, phases, t_phase)
 
     def _commit_deltas(

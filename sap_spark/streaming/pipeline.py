@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sap_spark.config import ConfigError, EngineConfig
-from sap_spark.plans.lake import LakeTable
+from sap_spark.plans.lake import INTERNAL_COLS, LakeTable
 from sap_spark.sources.changelog import read_changelog_stream
 
 
@@ -107,42 +107,31 @@ def _estimated_bytes(df: DataFrame) -> "int | None":
 def _whole_batch(
     events: DataFrame, table: LakeTable, cfg: EngineConfig
 ) -> "DataFrame | None":
-    """The projection a batch bound for a merge-on-read table collects
-    whole: keys and payload cast to the schema the merge will evolve the
-    table to (the merge's own ``apply_cast_plan``), plus seq, token, op,
-    rocancel, cancel-seq and the table's ``bucket_column``. None — the
-    batch keeps the narrow projection and today's Spark fold and write —
-    on a COW table, when the batch's columns need a schema change the
-    table refuses (the merge then raises as ever), or when
-    ``plans/lake.py::driver_write_codec`` rejects a column type or the
-    session codec."""
-    # call-time import: tests patch this module attribute
-    from sap_spark.plans import lake
-    from sap_spark.schema.compat import (
-        SchemaCompatError,
-        apply_cast_plan,
-        plan_evolution,
-    )
+    """The projection a batch collects whole when its table can write it
+    from the driver (``LakeTable.driver_write_schema``): keys and payload
+    cast to the schema the merge will evolve the table to (the merge's
+    own ``apply_cast_plan``), plus seq, token, op, rocancel, cancel-seq
+    and the table's ``bucket_column``. None — the batch keeps the narrow
+    projection and today's Spark fold and write — when the table says no,
+    and for any backend but ``LakeTable`` (``IcebergTable`` merges every
+    batch in one Spark ``MERGE INTO``)."""
+    from sap_spark.schema.compat import apply_cast_plan
 
-    if table.merge_mode != "mor":
+    if not isinstance(table, LakeTable):
         return None
     envelope = [
         cfg.order_column, cfg.token_column, cfg.op_column,
         cfg.rocancel_column, cfg.cancel_seq_column,
     ]
-    user = T.StructType(
-        [
-            f for f in events.schema.fields
-            if f.name not in (*envelope, *lake.INTERNAL_COLS)
-        ]
+    schema = table.driver_write_schema(
+        T.StructType(
+            [
+                f for f in events.schema.fields
+                if f.name not in (*envelope, *INTERNAL_COLS)
+            ]
+        )
     )
-    try:
-        plan = plan_evolution(table.schema, user)
-        lake.refuse_key_widening(plan, table.key_columns)
-    except SchemaCompatError:
-        return None
-    schema = plan.apply_to(table.schema)
-    if lake.driver_write_codec(events.sparkSession, schema) is None:
+    if schema is None:
         return None
     wide = apply_cast_plan(
         events,
@@ -161,15 +150,16 @@ def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
     Arrow groups as Spark does (``arrow_groups_like_spark``) whose
     projection Catalyst sizes below ``DRIVER_DISCOVERY_MAX_BYTES``
     collects it in ONE job with no shuffle (executors compute the table's
-    ``bucket_column``) and derives everything in Arrow on the driver
-    (``operators/dedup.discover_arrow``). Bound for a merge-on-read
-    table, the batch collects whole (:func:`_whole_batch`) and
-    ``operators/dedup.fold_arrow`` folds it too: ``rows`` carries one
-    row per key to ``merge_cdc``, which writes them from the driver.
-    Otherwise (a COW table, a batch the whole projection does not fit)
-    it collects the narrow projection (keys, seq, op, rocancel,
-    cancel-seq, bucket id), and its winners and cancel set return to
-    Spark as local relations, which launch no job. Any other batch
+    ``bucket_column``) and derives everything in Arrow on the driver.
+    Bound for a ``LakeTable`` that can write it from the driver (a
+    merge-on-read table: :func:`_whole_batch`), the batch collects whole
+    and ``operators/dedup.fold_arrow`` discovers and folds it in one
+    pass: ``rows`` carries one row per key to ``merge_cdc``, which
+    writes them from the driver. Otherwise (a COW or Iceberg table, a
+    batch the whole projection does not fit) it collects the narrow
+    projection (keys, seq, op, rocancel, cancel-seq, bucket id) for
+    ``operators/dedup.discover_arrow``, and its winners and cancel set
+    return to Spark as local relations, which launch no job. Any other batch
     persists the cancel set and the counted winner scan
     (``lww_winners(with_counts=True)``) and runs ONE bucket-keyed agg
     over them (``table.affected_bucket_offsets``); they are unpersisted
@@ -210,18 +200,16 @@ def discover(events: DataFrame, table: LakeTable, cfg: EngineConfig):
     if collect is not None:
         import pyarrow as pa
 
-        spark = events.sparkSession
         batch = collect.toArrow()
-        cancelled, winners, offsets = discover_arrow(
-            batch.select(narrow.columns), cfg, "__bucket"
-        )
         if collect is whole:
-            rows = fold_arrow(batch, cfg)
+            offsets, rows = fold_arrow(batch, cfg, "__bucket")
             yield Discovery(
                 "driver", None, None, offsets,
                 round(time.monotonic() - t0, 4), rows,
             )
             return
+        spark = events.sparkSession
+        cancelled, winners, offsets = discover_arrow(batch, cfg, "__bucket")
         fields = {f.name: f for f in narrow.schema.fields}
 
         def local(rows: "pa.Table", types: "dict[str, T.DataType]"):

@@ -42,6 +42,6 @@ def spark_write(monkeypatch):
     """Keep every merge-on-read batch on the Spark fold and write: no
     batch is collected whole and written from the driver, as for a batch
     past the whole-batch line but inside the narrow one."""
-    from sap_spark.plans import lake
+    from sap_spark.plans.lake import LakeTable
 
-    monkeypatch.setattr(lake, "driver_write_codec", lambda spark, schema: None)
+    monkeypatch.setattr(LakeTable, "driver_write_schema", lambda self, user: None)

@@ -13,6 +13,7 @@ from __future__ import annotations
 import datetime
 import decimal
 import json
+import math
 import random
 
 import pyarrow as pa
@@ -21,7 +22,6 @@ import pytest
 from pyspark.sql import types as T
 
 from sap_spark.config import EngineConfig
-from sap_spark.plans import lake
 from sap_spark.plans.doctor import table_fingerprint
 from sap_spark.plans.lake import LakeTable
 from sap_spark.sources.datagen import write_change_log
@@ -58,7 +58,8 @@ def _typed(v: int) -> tuple:
     if v % 7 == 0:
         return (None,) * len(PAYLOAD)
     return (
-        f"s{v % 13}-{v}", v % 2 == 0, v * 7, v * 10**10, v / 4, v / 3,
+        f"s{v % 13}-{v}", v % 2 == 0, v * 7, v * 10**10, v / 4,
+        float("nan") if v % 11 == 0 else v / 3,
         decimal.Decimal(v * 7).scaleb(-2),
         datetime.datetime(2021, 1, 1) + datetime.timedelta(seconds=v * 37),
         bytes([v % 256, 7]),
@@ -104,7 +105,7 @@ def _ingest(spark, root, log_dir, schema, driver: bool, monkeypatch,
     """Run one log into a fresh merge-on-read table on either path."""
     with monkeypatch.context() as m:
         if not driver:
-            m.setattr(lake, "driver_write_codec", lambda spark, schema: None)
+            m.setattr(LakeTable, "driver_write_schema", lambda self, user: None)
         LakeTable.create(
             spark, root, T.StructType([f for f in schema if f not in ENVELOPE]),
             key_columns=["k", "n"], num_buckets=4, merge_mode="mor",
@@ -120,8 +121,19 @@ def _ingest(spark, root, log_dir, schema, driver: bool, monkeypatch,
     return LakeTable(spark, root)
 
 
+def _nan(v):
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
 def _rows(frame) -> list:
-    return sorted(map(tuple, frame.collect()), key=repr)
+    """A frame's rows in a stable order, NaN made comparable."""
+    return sorted((tuple(map(_nan, r)) for r in frame.collect()), key=repr)
+
+
+def _spark_order(v) -> tuple:
+    """``sortWithinPartitions``' ascending order of a double: nulls first,
+    NaN after every number."""
+    return (v is not None, v is not None and math.isnan(v), v)
 
 
 def _same_table(spark, got: LakeTable, want: LakeTable, bloom_probe=None):
@@ -160,11 +172,13 @@ def _applied(t: LakeTable) -> list:
 
 def test_every_allowed_type_matches_spark_write(spark, tmpdir_path, monkeypatch):
     """Every allowed payload type, with the table's write layout (sorted
-    by ``i``, at most 5 rows a file) and a bloom column."""
+    by the double ``d``, NULLs and NaNs included, at most 5 rows a file)
+    and a bloom column. Each bucket's files hold the same slices of its
+    rows on both paths."""
     schema = T.StructType([*ENVELOPE, *KEYS, *PAYLOAD])
     log_dir = f"{tmpdir_path}/log"
     write_change_log(spark.createDataFrame(_adversarial_log(1), schema), log_dir)
-    layout = dict(sort_columns=["i"], max_records_per_file=5, bloom_columns=["s"])
+    layout = dict(sort_columns=["d"], max_records_per_file=5, bloom_columns=["s"])
     driver, tasks = (
         _ingest(spark, f"{tmpdir_path}/{name}", log_dir, schema, on, monkeypatch,
                 **layout)
@@ -175,12 +189,25 @@ def test_every_allowed_type_matches_spark_write(spark, tmpdir_path, monkeypatch)
     assert {r["merge_phases"]["write_on"] for r in _applied(tasks)} == {"tasks"}
     probe = [f"s = 's{v % 13}-{v}'" for v in (3, 41, 88)] + ["s = 'absent'"]
     _same_table(spark, driver, tasks, probe)
-    # each file a slice of its bucket's rows sorted by i, nulls first
-    for _, entries in driver.bucket_entries():
-        assert all(pq.ParquetFile(e["path"]).metadata.num_rows <= 5 for e in entries)
-        for e in entries:
-            col = pq.read_table(e["path"], columns=["i"])["i"].to_pylist()
-            assert col == sorted(col, key=lambda v: (v is not None, v))
+    # each commit's files a slice of its bucket's rows in Spark's order of d
+    slices = []
+    for t in (driver, tasks):
+        files = []
+        for b, entries in t.bucket_entries():
+            commits: dict = {}
+            for e in sorted(entries, key=lambda e: e["path"]):
+                commit = e["path"].split("/__bucket=")[0]
+                commits.setdefault(commit, []).append(
+                    pq.read_table(e["path"], columns=["d"])["d"].to_pylist()
+                )
+            for cols in commits.values():
+                assert all(0 < len(c) <= 5 for c in cols)
+                flat = [v for c in cols for v in c]
+                assert flat == sorted(flat, key=_spark_order), (t.path, b)
+                files.append((b, [repr(list(map(_nan, c))) for c in cols]))
+        slices.append(sorted(files))
+    assert slices[0] == slices[1]
+    assert any("NaN" in c for _, cs in slices[0] for c in cs)
 
 
 @pytest.mark.parametrize("seed", [2, 9])
@@ -273,8 +300,12 @@ def test_lineage_record_shape(spark, tmpdir_path, monkeypatch, capsys):
 def test_driver_write_falls_back_to_tasks(spark, tmpdir_path, monkeypatch):
     """The driver write runs only where pyarrow writes what Spark would
     read back: a session codec with no pyarrow writer, a column type
-    outside the allow-list, a COW table and an Arrow batch without its
-    ``__bucket`` all merge on tasks, to the same rows."""
+    outside the allow-list, a refused key widening, a COW table, an
+    Iceberg table and an Arrow batch without its ``__bucket`` all merge
+    on tasks, to the same rows."""
+    from sap_spark.plans.iceberg_backend import IcebergTable
+    from sap_spark.streaming.pipeline import _whole_batch
+
     schema = T.StructType([*ENVELOPE, *KEYS, T.StructField("s", T.StringType(), True)])
     rows = _adversarial_log(4, lambda v: (f"v{v}",), 1, tokens=2)
     log_dir = f"{tmpdir_path}/log"
@@ -289,9 +320,25 @@ def test_driver_write_falls_back_to_tasks(spark, tmpdir_path, monkeypatch):
     assert {r["merge_phases"]["write_on"] for r in _applied(lz4)} == {"tasks"}
     assert _rows(lz4.read_internal()) == _rows(driver.read_internal())
 
-    user = T.StructType([*KEYS, T.StructField("tags", T.ArrayType(T.StringType()))])
-    assert lake.driver_write_codec(spark, user) is None
-    assert lake.driver_write_codec(spark, T.StructType(KEYS)) == codec.lower()
+    user = T.StructType([*KEYS, T.StructField("s", T.StringType(), True)])
+    assert driver.driver_write_schema(user) == user
+    wider = T.StructType([*KEYS, T.StructField("s2", T.StringType(), True)])
+    assert driver.driver_write_schema(wider).names == ["k", "n", "s", "s2"]
+    tags = T.StructType([*KEYS, T.StructField("tags", T.ArrayType(T.StringType()))])
+    assert driver.driver_write_schema(tags) is None
+    widened_key = T.StructType([KEYS[0], T.StructField("n", T.LongType(), True)])
+    assert driver.driver_write_schema(widened_key) is None
+    cow = LakeTable.create(
+        spark, f"{tmpdir_path}/cow", user, key_columns=["k", "n"],
+        num_buckets=4, merge_mode="cow",
+    )
+    assert cow.driver_write_schema(user) is None
+    # an Iceberg table (merge-on-read by default) merges every batch in
+    # one Spark MERGE INTO: discovery never collects a batch whole for it
+    iceberg = IcebergTable.__new__(IcebergTable)
+    iceberg._props = {}
+    assert iceberg.merge_mode == "mor"
+    assert _whole_batch(spark.read.parquet(log_dir), iceberg, CFG) is None
 
     batch = pa.table({
         "k": ["a", "b"], "n": pa.array([1, 2], pa.int32()),

@@ -38,12 +38,13 @@ into a fresh merge-on-read table, on the two paths such a batch can take:
 Per size it reports Catalyst's estimate of the whole projection (what the
 constant is compared with), its Arrow bytes, both medians and the RSS
 growth of the first driver-path epoch. Both paths must leave tables with
-the same ``table_fingerprint`` or the run fails. The driver path is
-skipped (and its columns left empty) past ``--max-driver-mb`` of
-estimate, to bound this process's memory.
+the same ``table_fingerprint`` or the run fails. ``--mor`` runs its own
+sizes (``MOR_SIZES``), and skips the driver path (its columns left
+empty) past ``DRIVER_LEG_MAX_BYTES`` of estimate, to bound this
+process's memory.
 
     python tools/bench_discovery.py [--cpus 2] [--reps 5] [--out FILE]
-    python tools/bench_discovery.py --mor [--cpus 2] [--reps 3] [--out FILE]
+    python tools/bench_discovery.py --mor [--cpus 2] [--reps 5] [--out FILE]
 """
 
 from __future__ import annotations
@@ -61,6 +62,14 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SIZES = [5_000, 32_000, 200_000, 1_000_000, 2_000_000]
+# --mor: denser around DRIVER_DISCOVERY_MAX_BYTES (64k events ~ 4 MB of
+# whole-batch estimate)
+MOR_SIZES = [
+    5_000, 32_000, 64_000, 100_000, 150_000, 200_000, 1_000_000, 2_000_000,
+]
+# --mor runs no driver epoch past this whole-batch estimate: its Arrow
+# copy is ~18x the estimate (1M events: 67 MB estimate, ~1.2 GB Arrow)
+DRIVER_LEG_MAX_BYTES = 16 << 20
 EVENTS_PER_TOKEN = 8_000
 
 
@@ -174,14 +183,14 @@ def narrow_stats(events, table, cfg) -> tuple[int, int]:
     return _estimated_bytes(narrow), narrow.toArrow().nbytes
 
 
-def measure_mor(spark, events, n: int, schema, cfg, workdir: str, args) -> dict:
+def measure_mor(spark, events, n: int, schema, cfg, workdir: str, reps: int) -> dict:
     """Whole merge-on-read epochs on the driver and the Spark path."""
     from sap_spark.plans import lake
     from sap_spark.plans.doctor import table_fingerprint
     from sap_spark.streaming import pipeline
 
     default_cap = pipeline.DRIVER_DISCOVERY_MAX_BYTES
-    real_codec = lake.driver_write_codec
+    real_gate = lake.LakeTable.driver_write_schema
     whole = pipeline._whole_batch(
         events, lake.LakeTable.create(
             spark, os.path.join(workdir, f"probe{n}"), schema,
@@ -190,14 +199,14 @@ def measure_mor(spark, events, n: int, schema, cfg, workdir: str, args) -> dict:
     )
     est = pipeline._estimated_bytes(whole)
     legs = ["spark"]
-    if est < args.max_driver_mb * 1e6:
+    if est < DRIVER_LEG_MAX_BYTES:
         legs.insert(0, "driver")
     runs = {"n": 0}
 
     def epoch(leg: str, keep: bool = False):
         pipeline.DRIVER_DISCOVERY_MAX_BYTES = 1 << 62 if leg == "driver" else default_cap
-        lake.driver_write_codec = real_codec if leg == "driver" else (
-            lambda spark, schema: None
+        lake.LakeTable.driver_write_schema = real_gate if leg == "driver" else (
+            lambda self, user: None
         )
         runs["n"] += 1
         root = os.path.join(workdir, f"mor{runs['n']}")
@@ -228,12 +237,12 @@ def measure_mor(spark, events, n: int, schema, cfg, workdir: str, args) -> dict:
         if len(set(map(json.dumps, prints.values()))) != 1:
             raise AssertionError("driver and spark epochs left different tables")
         times: dict = {leg: [] for leg in legs}
-        for i in range(args.reps):
+        for i in range(reps):
             for leg in legs if i % 2 == 0 else legs[::-1]:
                 times[leg].append(epoch(leg)[0])
     finally:
         pipeline.DRIVER_DISCOVERY_MAX_BYTES = default_cap
-        lake.driver_write_codec = real_codec
+        lake.LakeTable.driver_write_schema = real_gate
     med = {leg: round(statistics.median(v), 3) for leg, v in times.items()}
     return {
         "estimate_bytes": est,
@@ -248,19 +257,11 @@ def measure_mor(spark, events, n: int, schema, cfg, workdir: str, args) -> dict:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--cpus", type=int, default=2, help="local[N] task slots")
-    ap.add_argument("--reps", type=int, default=None,
-                    help="timed runs per path (default 5; 3 with --mor)")
+    ap.add_argument("--reps", type=int, default=5)
     ap.add_argument("--out", default=None)
     ap.add_argument("--mor", action="store_true",
                     help="time whole merge-on-read epochs (see module doc)")
-    ap.add_argument("--max-driver-mb", type=float, default=256,
-                    help="with --mor: skip the driver path past this estimate")
-    ap.add_argument("--sizes", default=None,
-                    help="comma-separated event counts (default: 5k to 2M)")
     args = ap.parse_args()
-    if args.reps is None:
-        args.reps = 3 if args.mor else 5
-    sizes = [int(n) for n in args.sizes.split(",")] if args.sizes else SIZES
 
     from pyspark.sql import types as T
 
@@ -284,7 +285,7 @@ def main() -> int:
             spark, os.path.join(workdir, "t"), schema,
             key_columns=["repo", "path"], num_buckets=8,
         )
-        for n in sizes:
+        for n in MOR_SIZES if args.mor else SIZES:
             log = os.path.join(workdir, f"log{n}")
             write_change_log(
                 gen_change_events(
@@ -296,7 +297,7 @@ def main() -> int:
             events = spark.read.parquet(log)
             if args.mor:
                 row = {"events": n, **measure_mor(
-                    spark, events, n, schema, cfg, workdir, args
+                    spark, events, n, schema, cfg, workdir, args.reps
                 )}
             else:
                 est, arrow_bytes = narrow_stats(events, table, cfg)
