@@ -318,7 +318,6 @@ def _arrow_survivors(batch, cfg: EngineConfig):
     key would break merge_cdc's ≤1-row contract."""
     import functools
 
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     seq, rc, cs = cfg.order_column, cfg.rocancel_column, cfg.cancel_seq_column
@@ -336,18 +335,27 @@ def _arrow_survivors(batch, cfg: EngineConfig):
     if cfg.op_column in batch.column_names:
         live.append(pc.is_valid(batch[cfg.op_column]))
     survivors = batch.filter(functools.reduce(pc.and_, live)) if live else batch
-    for k in cfg.key_columns:
-        col = survivors[k]
+    return cancelled, normalize_float_keys(survivors, cfg.key_columns)
+
+
+def normalize_float_keys(table, keys):
+    """``table`` with its float/double ``keys`` normalized as Spark's
+    grouping normalizes them (``-0.0`` → ``0.0``, every NaN → one NaN),
+    so that Arrow's hash grouping, which compares bit patterns, finds
+    Spark's groups."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    for k in keys:
+        col = table[k]
         if pa.types.is_floating(col.type):
             zero = pa.scalar(0.0, col.type)
             nan = pa.scalar(float("nan"), col.type)
             col = pc.if_else(
                 pc.is_nan(col), nan, pc.if_else(pc.equal(col, zero), zero, col)
             )
-            survivors = survivors.set_column(
-                survivors.schema.get_field_index(k), k, col
-            )
-    return cancelled, survivors
+            table = table.set_column(table.schema.get_field_index(k), k, col)
+    return table
 
 
 def _arrow_group(table, by, aggs, names):

@@ -234,6 +234,35 @@ def bucket_offsets(
     }
 
 
+# The one line between driver and task work on small data. A batch whose
+# collected projection Catalyst sizes below this many bytes discovers on
+# the driver (streaming/pipeline.discover): one collect, folded in Arrow.
+# The projection is the whole batch, payload included, for a
+# merge-on-read table that can take driver-written rows
+# (pipeline._whole_batch), and the narrow one (keys, seq, op, rocancel,
+# cancel-seq, bucket id) otherwise. Larger batches, and any batch whose
+# size is unknown, run the persisted Spark jobs. Driver memory on whole
+# projections sets the line: Catalyst estimates compressed parquet bytes,
+# and datagen's whole batches held ~18 Arrow bytes and grew the Python
+# driver's RSS by ~56 bytes per estimated byte (tools/bench_discovery.py
+# --mor, BENCH/MOR_DRIVER_r13.md: +236-241 MB at 64k events / 4.1 MB,
+# +543-546 MB at 150k / 9.8 MB). The driver epoch was faster at every
+# size to 150k events on local[2] and local[4] (0.29 vs 1.17-1.38 s at
+# 5k, 0.82-0.86 vs 1.32-1.60 s at 64k), so 4 MiB keeps speed and bounds
+# the growth near 250 MB. A narrow projection is about half a whole one
+# per event (BENCH/DISCOVERY_r10.md), so the same line sends COW batches
+# past ~120k events to the task path, which costs them ~0.3-0.4 s per
+# epoch up to 1M events; no benchmark batch is in that range.
+# LakeTable.compact folds dirty buckets on the driver below the same
+# line, compared with the summed on-disk bytes of their files (what
+# Catalyst estimates a parquet scan of them at). tools/bench_compact.py
+# (BENCH/COMPACT_r14.md) found the same memory ratio there, ~58 bytes of
+# Python RSS per on-disk byte (+61 MB at the 1.2 MB mor_serving table,
+# +238-248 MB at 4.1 MB), and the driver fold faster to 8 MB on local[2]
+# and local[4] (0.28-0.29 vs 0.76-0.94 s at 1.2 MB, 0.80 vs 1.27-1.39 s
+# at 4.1 MB), so the line stays 4 MiB. No cluster was measured.
+DRIVER_DISCOVERY_MAX_BYTES = 4 << 20
+
 # Column types a merge-on-read batch may be written with from the driver
 # (LakeTable.driver_write_schema): the atomic types a table column can
 # have (schema/compat.py) whose pyarrow-written parquet reads back
@@ -341,6 +370,9 @@ class LakeTable:
 
     # phase timings of the last merge_cdc (None until one applies)
     last_merge_metrics: "dict | None" = None
+    # where the last compact() folded its buckets: "driver" or "tasks"
+    # (None until one rewrites, and after a compact with nothing to do)
+    last_compact_on: "str | None" = None
 
     def __init__(
         self,
@@ -1941,6 +1973,95 @@ class LakeTable:
         )
         return sorted(r["__bucket"] for r in hits)
 
+    def _compacts_on_driver(
+        self, dirty: list[int], zorder: "list[str] | None"
+    ) -> bool:
+        """Whether :meth:`compact` folds ``dirty`` on the driver: a linear
+        rewrite (no ``zorder``) of a table :meth:`driver_write_schema`
+        accepts as it stands, keyed on types Arrow groups as Spark does,
+        whose dirty buckets' files sum to fewer on-disk bytes than
+        ``DRIVER_DISCOVERY_MAX_BYTES`` (Catalyst's estimate of a parquet
+        scan is that same sum). The one place this is decided."""
+        from sap_spark.operators.dedup import arrow_groups_like_spark
+
+        if zorder or self.driver_write_schema(self.schema) is None:
+            return False
+        if not all(arrow_groups_like_spark(f.dataType) for f in self._key_fields):
+            return False
+        size = sum(
+            os.path.getsize(e["path"])
+            for _, entries in self.bucket_entries(dirty)
+            for e in entries
+        )
+        return size < DRIVER_DISCOVERY_MAX_BYTES
+
+    def _read_arrow_buckets(self, buckets: list[int]) -> "pa.Table":
+        """``read_internal(buckets=buckets)`` read and folded on the driver,
+        as a pyarrow Table with each row's ``__bucket`` (the bucket its
+        file is listed under; nothing is hashed). Each file is read with
+        pyarrow and conformed to the current internal schema's Arrow types
+        as :meth:`_read_files` conforms it (a column its schema lacked is
+        NULL, a widened one is cast). A bucket holding delta files folds
+        as :meth:`_fold_latest` does: float keys normalized as Spark
+        groups them, each key's row with the largest
+        ``coalesce(_event_seq, -1)`` wins, and a tie (a re-delivered
+        event) goes to the row read last. Base-only buckets pass through
+        as read."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from sap_spark.operators.dedup import normalize_float_keys
+
+        target = to_arrow_schema(self._schema_with_internal())
+        # nullable throughout, as Spark writes every parquet column
+        schema = pa.schema(
+            [*(f.with_nullable(True) for f in target), ("__bucket", pa.int32())]
+        )
+        parts = {False: [], True: []}  # by "the bucket has delta files"
+        for b, entries in self.bucket_entries(buckets):
+            for e in entries:
+                got = pq.read_table(
+                    e["path"], partitioning=None, coerce_int96_timestamp_unit="us"
+                )
+                cols = [
+                    got[f.name].cast(f.type, safe=False)
+                    if f.name in got.column_names
+                    else pa.nulls(got.num_rows, f.type)
+                    for f in target
+                ]
+                cols.append(pa.array(np.full(got.num_rows, int(b), np.int32)))
+                parts[any(e.get("kind") == "delta" for e in entries)].append(
+                    pa.Table.from_arrays(cols, schema=schema)
+                )
+        empty = schema.empty_table()
+        base = pa.concat_tables([empty, *parts[False]])
+        rows = normalize_float_keys(
+            pa.concat_tables([empty, *parts[True]]), self.key_columns
+        )
+        ranked = pc.sort_indices(
+            pa.table(
+                {
+                    "seq": pc.fill_null(rows[SEQ_COL], -1),
+                    "pos": pa.array(np.arange(rows.num_rows)),
+                }
+            ),
+            sort_keys=[("seq", "descending"), ("pos", "descending")],
+        )
+        firsts = (
+            pa.table(
+                {
+                    **{k: rows[k].take(ranked) for k in self.key_columns},
+                    "__rank": pa.array(np.arange(rows.num_rows)),
+                }
+            )
+            .group_by(self.key_columns, use_threads=False)
+            .aggregate([("__rank", "min")])
+        )
+        return pa.concat_tables([base, rows.take(ranked.take(firsts["__rank_min"]))])
+
     def compact(
         self,
         only_dirty: bool = True,
@@ -1986,7 +2107,18 @@ class LakeTable:
         that is what lets ``read(where=...)`` skip on ANY of the
         clustered columns, not just the first sort key. Usually run
         with ``only_dirty=False``: clustering only the dirty buckets
-        leaves the rest linear."""
+        leaves the rest linear.
+
+        Where it runs (:meth:`_compacts_on_driver` decides, and
+        ``last_compact_on`` records it): a linear rewrite of a table
+        :meth:`driver_write_schema` accepts, whose dirty buckets' files
+        sum below ``DRIVER_DISCOVERY_MAX_BYTES`` on disk, folds on the
+        driver — pyarrow reads the files (:meth:`_read_arrow_buckets`),
+        Arrow keeps each key's latest row, and :meth:`_write_arrow_buckets`
+        writes the result with the table's layout, no Spark job. Every
+        other compaction (``zorder``, larger buckets, a COW table, a type
+        or codec the driver writer refuses) reads, folds and writes
+        through Spark. Both commit the same way."""
         # restrict the candidate universe FIRST so a selective compaction
         # never pays the tombstone key/flag scan over buckets outside the
         # requested subset (O(subset), not O(table))
@@ -2010,15 +2142,28 @@ class LakeTable:
                 dirty = delta
         else:
             dirty = sorted(universe)
+        self.last_compact_on = None
         if not dirty:
             return []
-        live = self.read_internal(buckets=dirty)
-        if purge_tombstones:
-            live = live.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
-        prepared = live.withColumn("__bucket", self.bucket_column(live))
-        new_buckets = self._write_buckets(
-            prepared, n_partitions=len(dirty), zorder=zorder
-        )
+        if self._compacts_on_driver(dirty, zorder):
+            import pyarrow.compute as pc
+
+            self.last_compact_on = "driver"
+            rows = self._read_arrow_buckets(dirty)
+            if purge_tombstones:
+                rows = rows.filter(
+                    pc.invert(pc.fill_null(rows[DELETED_COL], False))
+                )
+            new_buckets = self._write_arrow_buckets(rows)
+        else:
+            self.last_compact_on = "tasks"
+            live = self.read_internal(buckets=dirty)
+            if purge_tombstones:
+                live = live.where(~F.coalesce(F.col(DELETED_COL), F.lit(False)))
+            prepared = live.withColumn("__bucket", self.bucket_column(live))
+            new_buckets = self._write_buckets(
+                prepared, n_partitions=len(dirty), zorder=zorder
+            )
         manifest = self._replace_buckets(self._edit(), new_buckets, drop=dirty)
         # self-describing commit: if the caller crashes between this commit
         # and its own bookkeeping (e.g. the pipeline's lineage append), the

@@ -145,7 +145,13 @@ def collect_parquet_stats(path: str, columns: "list[str]", pf=None) -> dict:
             if st is None or not st.has_min_max:
                 dead.add(name)
                 continue
-            lo, hi = _encode_bound(st.min), _encode_bound(st.max)
+            try:
+                lo, hi = _encode_bound(st.min), _encode_bound(st.max)
+            except Exception:  # noqa: BLE001 — one column, not the file
+                # pyarrow cannot decode some bounds (the int-backed
+                # decimals Spark writes): that column is unbounded, the
+                # file's other columns keep theirs
+                lo = hi = None
             if lo is None or hi is None:
                 dead.add(name)
                 continue

@@ -34,8 +34,11 @@ the ``fold`` record says which (``discovery_on``) and how long it took
 (``discover_sec``). A small epoch bound for a merge-on-read table
 collects whole and commits from the driver: ``fold.strategy`` is
 ``arrow`` and ``merge_phases.write_on`` is ``driver`` (``tasks`` for
-every Spark-written merge). ``bucket_high_water()`` folds the offsets
-across epochs for per-partition resume verification.
+every Spark-written merge). An epoch that auto-compacts records how
+long it took (``compact_sec``) and where the fold ran (``compact_on``:
+``driver`` or ``tasks``; both null on other epochs).
+``bucket_high_water()`` folds the offsets across epochs for
+per-partition resume verification.
 """
 
 from __future__ import annotations
@@ -54,29 +57,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sap_spark.config import ConfigError, EngineConfig
-from sap_spark.plans.lake import INTERNAL_COLS, LakeTable
+from sap_spark.plans.lake import (
+    DRIVER_DISCOVERY_MAX_BYTES,
+    INTERNAL_COLS,
+    LakeTable,
+)
 from sap_spark.sources.changelog import read_changelog_stream
-
-
-# A batch whose collected projection Catalyst sizes below this many bytes
-# discovers on the driver: one collect, folded in Arrow. The projection is
-# the whole batch, payload included, for a merge-on-read table that can
-# take driver-written rows (_whole_batch below), and the
-# narrow one (keys, seq, op, rocancel, cancel-seq, bucket id) otherwise.
-# Larger batches, and any batch whose size is unknown, run the persisted
-# Spark jobs. Driver memory on whole projections sets the line: Catalyst
-# estimates compressed parquet bytes, and datagen's whole batches held
-# ~18 Arrow bytes and grew the Python driver's RSS by ~56 bytes per
-# estimated byte (tools/bench_discovery.py --mor, BENCH/MOR_DRIVER_r13.md:
-# +236-241 MB at 64k events / 4.1 MB, +543-546 MB at 150k / 9.8 MB). The
-# driver epoch was faster at every size to 150k events on local[2] and
-# local[4] (0.29 vs 1.17-1.38 s at 5k, 0.82-0.86 vs 1.32-1.60 s at 64k),
-# so 4 MiB keeps speed and bounds the growth near 250 MB. A narrow
-# projection is about half a whole one per event (BENCH/DISCOVERY_r10.md),
-# so the same line sends COW batches past ~120k events to the task path,
-# which costs them ~0.3-0.4 s per epoch up to 1M events; no benchmark
-# batch is in that range. No cluster was measured.
-DRIVER_DISCOVERY_MAX_BYTES = 4 << 20
 
 
 @dataclass
@@ -404,7 +390,8 @@ def fold_lineage(records: list[dict]) -> dict:
     - ``events``/``epochs_applied``/``max_token`` cover applied epochs;
     - ``fold_strategy`` and ``write_on`` count applied epochs by the
       fold that ran (``fold.strategy``) and where the merge wrote
-      (``merge_phases.write_on``).
+      (``merge_phases.write_on``); ``compact_on`` counts the epochs that
+      auto-compacted by where the compaction folded (``driver``/``tasks``).
     """
     out: dict = {
         "epochs_applied": 0,
@@ -414,6 +401,7 @@ def fold_lineage(records: list[dict]) -> dict:
         "bucket_high_water": {},
         "fold_strategy": {},
         "write_on": {},
+        "compact_on": {},
     }
     last_quarantined: dict = {}
     for r in records:
@@ -425,6 +413,7 @@ def fold_lineage(records: list[dict]) -> dict:
         for field, value in (
             ("fold_strategy", (r.get("fold") or {}).get("strategy")),
             ("write_on", (r.get("merge_phases") or {}).get("write_on")),
+            ("compact_on", r.get("compact_on")),
         ):
             if value is not None:
                 out[field][value] = out[field].get(value, 0) + 1
@@ -1079,7 +1068,7 @@ class CdcPipeline:
         )
         elapsed = time.monotonic() - t0
         compacted: list[int] | None = None
-        compact_sec = None
+        compact_sec = compact_on = None
         if applied and auto_compact_delta_files:
             # driver-side manifest probe, no Spark job: buckets at/over
             # the delta-file threshold fold now (tombstones retained —
@@ -1095,6 +1084,7 @@ class CdcPipeline:
                     purge_tombstones=False, buckets=over
                 )
                 compact_sec = round(time.monotonic() - t_c, 4)
+                compact_on = table.last_compact_on
         expired_files = None
         expire_sec = None
         if applied and auto_expire is not None:
@@ -1128,6 +1118,7 @@ class CdcPipeline:
             "merge_phases": merge_phases(table) if applied else None,
             "compacted_buckets": compacted,
             "compact_sec": compact_sec,
+            "compact_on": compact_on,
             "expired_files": expired_files,
             "expire_sec": expire_sec,
             "events_per_sec": round(n / elapsed, 1)

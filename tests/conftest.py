@@ -41,7 +41,8 @@ def spark_discovery(monkeypatch):
 def spark_write(monkeypatch):
     """Keep every merge-on-read batch on the Spark fold and write: no
     batch is collected whole and written from the driver, as for a batch
-    past the whole-batch line but inside the narrow one."""
+    past the whole-batch line but inside the narrow one. Every
+    compaction reads, folds and writes through Spark too."""
     from sap_spark.plans.lake import LakeTable
 
     monkeypatch.setattr(LakeTable, "driver_write_schema", lambda self, user: None)

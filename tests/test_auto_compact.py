@@ -255,3 +255,34 @@ def test_selective_compact_scans_only_requested_buckets(spark, tmpdir_path):
     assert rewritten == [target]
     # the probe saw at most the requested subset, never the whole table
     assert all(set(c) <= {target} for c in probed), probed
+
+
+# The compaction cases above again with every merge and every compaction
+# folded and written by Spark (the ``spark_write`` fixture); above, small
+# ones fold on the driver.
+
+
+def test_auto_compact_bounds_delta_files_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_auto_compact_bounds_delta_files_and_matches_oracle(spark, tmpdir_path)
+
+
+def test_compact_keep_tombstones_gate_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_compact_keep_tombstones_preserves_version_gate(spark, tmpdir_path)
+
+
+def test_compact_keep_tombstones_noop_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    test_compact_keep_tombstones_is_observably_noop(spark, tmpdir_path)
+
+
+def test_compact_history_on_spark_write(spark, tmpdir_path, spark_write):
+    test_compact_commit_self_describes_in_history(spark, tmpdir_path)
+
+
+def test_selective_compact_on_spark_write(spark, tmpdir_path, spark_write):
+    test_selective_compact_scans_only_requested_buckets(spark, tmpdir_path)

@@ -241,3 +241,11 @@ def test_mor_write_amplification_is_batch_sized_on_spark_write(
     spark, tmpdir_path, spark_write
 ):
     test_mor_write_amplification_is_batch_sized(spark, tmpdir_path)
+
+
+def test_mor_pipeline_and_compaction_on_spark_write(
+    spark, tmpdir_path, spark_write
+):
+    """The MOR/COW/oracle equivalence and its compaction, with every merge
+    and the compaction folded and written by Spark."""
+    test_mor_pipeline_equals_cow_and_oracle(spark, tmpdir_path)

@@ -467,3 +467,83 @@ def test_crash_after_driver_write_before_commit(spark, tmpdir_path, seed):
         .orderBy("repo", "path").toPandas().reset_index(drop=True)
     )
     assert still.equals(expected)
+
+
+@pytest.mark.parametrize("seed", [4, 13])
+def test_crash_between_driver_compaction_and_commit(spark, tmpdir_path, seed):
+    """An auto-compaction folded on the driver dies after pyarrow wrote
+    its base files and before its manifest commit. The table is left as
+    it was plus unreferenced files; the resumed pipeline converges to the
+    oracle fold and compacts again later; expiry sweeps the debris."""
+    from sap_spark.plans.lake import data_file_key, scan_data_files
+
+    rng = random.Random(seed)
+    events = gen_change_events(
+        spark, n_events=2000, n_keys=200, events_per_token=250,
+        skew=3.0, rocancel_rate=0.05, dup_rate=0.05,
+    ).cache()
+    expected = fold_to_frame(events.toPandas())
+    log_dir = f"{tmpdir_path}/log"
+    write_change_log(events, log_dir)
+    table = LakeTable.create(
+        spark, f"{tmpdir_path}/repos", TARGET_SCHEMA,
+        key_columns=["repo", "path"], num_buckets=4, merge_mode="mor",
+    )
+    real_commit = LakeTable._commit
+    crashed: list[int] = []
+
+    def commit_or_crash(self, manifest, op=None):
+        if (op or {}).get("type") == "compact" and (
+            len(crashed) < MAX_CRASHES and rng.random() < 0.6
+        ):
+            assert self.last_compact_on == "driver"
+            written = {
+                data_file_key(e["path"])
+                for _, es in self.bucket_entries(manifest=manifest) for e in es
+            } - {data_file_key(e["path"]) for _, es in self.bucket_entries() for e in es}
+            crashed.append(len(written))
+            raise RuntimeError("chaos: crash before the compaction commit")
+        return real_commit(self, manifest, op)
+
+    LakeTable._commit = commit_or_crash
+    attempts = 0
+    try:
+        while True:
+            attempts += 1
+            assert attempts <= MAX_ATTEMPTS, "chaos run did not converge"
+            pipe = CdcPipeline(
+                spark, CFG, LakeTable(spark, table.path), log_dir,
+                checkpoint_dir=f"{tmpdir_path}/ckpt",
+                max_files_per_trigger=1, auto_compact_delta_files=2,
+                pipeline_id=f"compact-chaos-{seed}",
+            )
+            try:
+                pipe.run_available_now(timeout_sec=600)
+                break
+            except Exception as exc:  # noqa: BLE001 — must be OUR crash
+                assert "chaos:" in str(exc), f"non-injected failure: {exc!r}"
+            LakeTable(spark, table.path).read().count()
+    finally:
+        LakeTable._commit = real_commit
+    assert crashed and all(crashed), "the schedule never crashed a compaction"
+
+    def unreferenced() -> set:
+        live = LakeTable(spark, table.path)
+        return set(scan_data_files(table.path)) - {
+            data_file_key(e["path"]) for _, es in live.bucket_entries() for e in es
+        }
+
+    final = LakeTable(spark, table.path)
+    assert len(unreferenced()) >= sum(crashed)
+    got = final.read().orderBy("repo", "path").toPandas().reset_index(drop=True)
+    assert got.equals(expected), f"seed={seed}: {len(crashed)} crashes"
+    compacted = [r for r in pipe.lineage() if r.get("compacted_buckets")]
+    assert compacted and {r["compact_on"] for r in compacted} == {"driver"}
+
+    final.expire_snapshots(keep_last=1)
+    assert not unreferenced()
+    still = (
+        LakeTable(spark, table.path).read()
+        .orderBy("repo", "path").toPandas().reset_index(drop=True)
+    )
+    assert still.equals(expected)
