@@ -2022,20 +2022,19 @@ class LakeTable:
         )
         parts = {False: [], True: []}  # by "the bucket has delta files"
         for b, entries in self.bucket_entries(buckets):
+            folds = any(e.get("kind") == "delta" for e in entries)
             for e in entries:
                 got = pq.read_table(
                     e["path"], partitioning=None, coerce_int96_timestamp_unit="us"
                 )
                 cols = [
-                    got[f.name].cast(f.type, safe=False)
+                    got[f.name].cast(f.type)
                     if f.name in got.column_names
                     else pa.nulls(got.num_rows, f.type)
                     for f in target
                 ]
                 cols.append(pa.array(np.full(got.num_rows, int(b), np.int32)))
-                parts[any(e.get("kind") == "delta" for e in entries)].append(
-                    pa.Table.from_arrays(cols, schema=schema)
-                )
+                parts[folds].append(pa.Table.from_arrays(cols, schema=schema))
         empty = schema.empty_table()
         base = pa.concat_tables([empty, *parts[False]])
         rows = normalize_float_keys(

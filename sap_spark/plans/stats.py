@@ -147,9 +147,9 @@ def collect_parquet_stats(path: str, columns: "list[str]", pf=None) -> dict:
                 continue
             try:
                 lo, hi = _encode_bound(st.min), _encode_bound(st.max)
-            except Exception:  # noqa: BLE001 — one column, not the file
-                # pyarrow cannot decode some bounds (the int-backed
-                # decimals Spark writes): that column is unbounded, the
+            except NotImplementedError:
+                # pyarrow cannot decode the bounds of the int-backed
+                # decimals Spark writes: that column is unbounded, the
                 # file's other columns keep theirs
                 lo = hi = None
             if lo is None or hi is None:

@@ -212,7 +212,8 @@ def test_mor_write_amplification_is_batch_sized(spark, tmpdir_path):
 
 
 # The tests above write each small merge-on-read epoch from the driver
-# (pyarrow delta files); these run them again on the Spark fold and write.
+# (pyarrow delta files) and fold small compactions there; these run them
+# again on the Spark fold, write and compaction.
 
 
 def test_mor_pipeline_equals_cow_and_oracle_on_spark_write(
@@ -241,11 +242,3 @@ def test_mor_write_amplification_is_batch_sized_on_spark_write(
     spark, tmpdir_path, spark_write
 ):
     test_mor_write_amplification_is_batch_sized(spark, tmpdir_path)
-
-
-def test_mor_pipeline_and_compaction_on_spark_write(
-    spark, tmpdir_path, spark_write
-):
-    """The MOR/COW/oracle equivalence and its compaction, with every merge
-    and the compaction folded and written by Spark."""
-    test_mor_pipeline_equals_cow_and_oracle(spark, tmpdir_path)
